@@ -604,7 +604,17 @@ def decode_jpeg(data: bytes) -> Dict[str, Any]:
     (h, w, 3) RGB. Valid-but-unsupported modes — progressive (SOF2),
     arithmetic coding, >8-bit precision, 4-component CMYK, or streams
     with no scan data (the MJPEG header stub) — return real header
-    dimensions with ``pixels=None``; only corrupt streams raise."""
+    dimensions with ``pixels=None``; only corrupt streams raise, and
+    always ``ValueError``: a lookup of an undeclared Huffman or
+    quantisation table, a short DRI/SOF segment or a short component
+    spec is reported as one."""
+    try:
+        return _decode_jpeg(data)
+    except (KeyError, IndexError, struct.error) as e:
+        raise ValueError(f"JPEG: malformed stream ({e!r})") from e
+
+
+def _decode_jpeg(data: bytes) -> Dict[str, Any]:
     if data[:3] != b"\xff\xd8\xff":
         raise ValueError("not a JPEG")
     if _PIL:
@@ -734,6 +744,13 @@ def _decode_baseline_scan(
         raise ValueError("JPEG: bad sampling factors")
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
+    # every block costs at least 2 bits (a DC code and an EOB code), so
+    # a frame header declaring more blocks than the scan could hold is
+    # corrupt; without this check a damaged SOF (up to 65535² pixels)
+    # would decode hours of zero-fed blocks
+    n_blocks = mcux * mcuy * sum(c["h"] * c["v"] for c in comps)
+    if 2 * n_blocks > 8 * (len(data) - scan_pos):
+        raise ValueError("JPEG: scan too short for the frame size")
     tabs = []
     coefs = []  # flat python lists of zigzag coefficients, MCU order
     for (cs, td, ta), comp in zip(scan, comps):

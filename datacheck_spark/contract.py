@@ -18,6 +18,7 @@ class syntax is not RE2's.
 
 from __future__ import annotations
 
+from pathlib import Path
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,7 +52,9 @@ def _q(name: str, oracle: str | None = None):
 # SQL oracle. Pinned to the correctness gate's sf0.01 inputs
 # (media_features is sf-independent); tools/check_contract.py treats
 # them as rows-only at any other scale factor.
-GOLDEN_DIR = "/root/repo/.contract_cache/golden"
+#: fixture caches live in the checkout this module belongs to
+CONTRACT_CACHE = Path(__file__).resolve().parent.parent / ".contract_cache"
+GOLDEN_DIR = str(CONTRACT_CACHE / "golden")
 GOLDEN_PINNED_SF = "sf0.01"
 GOLDEN_QUERIES = (
     "minhash_near_dup_docs",
@@ -1189,7 +1192,7 @@ def asof_join_events(spark, sf_dir):
 #: the first transcript query; both the Spark queries AND the DuckDB
 #: oracles read this file, so the rollup/violation logic is what gets
 #: verified (VERDICT r1 next-round item 1).
-TRANSCRIPTS_CACHE = "/root/repo/.contract_cache/transcripts_200x10"
+TRANSCRIPTS_CACHE = str(CONTRACT_CACHE / "transcripts_200x10")
 
 
 def transcripts_table(spark: SparkSession) -> DataFrame:
@@ -1715,7 +1718,7 @@ def quality_grade_docs(spark, sf_dir):
 #: pure-Python writes (no Spark), materialized by entry() and lazily by
 #: the query; includes same-named files in different subdirectories to
 #: pin the relative-path keying.
-DIRSCAN_CACHE = "/root/repo/.contract_cache/dirscan"
+DIRSCAN_CACHE = str(CONTRACT_CACHE / "dirscan")
 
 
 def ensure_dirscan_files() -> str:
@@ -1812,7 +1815,7 @@ def embedding_near_dup_exact(spark, sf_dir):
 
 
 #: standalone reader fixtures (committed): an envelope .json and a CSV
-FILES_CACHE = "/root/repo/.contract_cache/files"
+FILES_CACHE = str(CONTRACT_CACHE / "files")
 
 
 def ensure_file_fixtures() -> str:

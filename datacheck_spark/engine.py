@@ -406,6 +406,7 @@ class ValidationEngine:
                 result.anomalies = A.detect_anomalies(
                     annotated.select(*[c for c in df.columns]),
                     cols=data_cols,
+                    total=result.total_samples,
                 )
                 result.anomaly_count = sum(
                     a["outlier_count"] for a in result.anomalies.values()

@@ -144,30 +144,6 @@ def repetitive_flag(texts: pd.Series) -> pd.Series:
     return pd.Series(vals, index=texts.index)
 
 
-def _max_multiplicity(arr: Column) -> Column:
-    """Highest multiplicity of any element in a string array —
-    ``Counter(arr).most_common(1)[0][1]`` — computed natively as the
-    longest run in the sorted array (O(k log k), stays in codegen)."""
-    sorted_arr = F.array_sort(arr)
-    acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
-    )
-
-    def step(acc, x):
-        run = F.when(
-            acc["prev"].isNotNull() & (x == acc["prev"]), acc["run"] + 1
-        ).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-        )
-
-    return F.aggregate(sorted_arr, acc0, step, lambda acc: acc["best"])
-
-
 # Java regex \s is ASCII-only ([ \t\n\x0B\f\r]); Python str.strip()
 # strips the full Unicode whitespace set (str.isspace() == True).
 PY_WHITESPACE_CLASS = (
@@ -176,18 +152,14 @@ PY_WHITESPACE_CLASS = (
 )
 
 
-def _py_strip(col: Column) -> Column:
+def py_strip(col: Column) -> Column:
     """Python ``str.strip()`` equivalent (full Unicode whitespace set —
-    Spark ``trim`` strips only ``' '``, Java ``\\s`` is ASCII-only)."""
+    Spark ``trim`` strips only ``' '``, Java ``\\s`` is ASCII-only); used
+    by the YAML compiler, fixer trim, and dedup n-grams for
+    ``str.strip()`` parity."""
     return F.regexp_replace(
         col, f"^{PY_WHITESPACE_CLASS}+|{PY_WHITESPACE_CLASS}+$", ""
     )
-
-
-def py_strip(col: Column) -> Column:
-    """Public alias for :func:`_py_strip` (used by the YAML compiler,
-    fixer trim, and dedup n-grams for ``str.strip()`` parity)."""
-    return _py_strip(col)
 
 
 #: every character Python's str.strip() removes, enumerated for
@@ -222,73 +194,20 @@ def py_blank(col: Column) -> Column:
     )
 
 
-def repetitive_flag_native(col: Column) -> Column:
-    """Native (codegen) port of the reference repetition predicate
-    (``text_rules.py:142-172``); True ⇒ repetitive.
-
-    Same semantics as ``_repetitive_one``: sentence mode (≥3 repeats of
-    one segment and > 30 % of segments) or 10-char-window mode
-    (> 50 % of windows and > 3) — but expressed with higher-order array
-    functions so the hot path never leaves the JVM. The pandas-UDF
-    variant remains available for byte-exact parity testing.
-    """
-    ln = F.length(col)
-    # cheap necessary condition: >= 3 segments requires >= 2 separator
-    # chars; translate is a char-map scan, so rows without sentence
-    # punctuation never pay for split/sort/aggregate
-    sep_count = ln - F.length(F.translate(col, "。！？\n.!?", ""))
-    segments = F.filter(
-        F.transform(F.split(col, "[。！？\\n.!?]+"), _py_strip),
-        lambda s: F.length(s) > 5,
-    )
-    n_seg = F.size(segments)
-    seg_top = _max_multiplicity(segments)
-    sentence_bad = F.when(
-        sep_count >= 2,
-        (n_seg >= 3)
-        & (seg_top >= 3)
-        & (seg_top.cast("double") / n_seg > 0.3),
-    ).otherwise(F.lit(False))
-
-    # windows: value[i:i+10] for i in range(0, len-10, 10); the whole
-    # branch lives under when(ln > 100) so sequence() never sees a
-    # negative range (CaseWhen evaluates branches conditionally).
-    windows = F.transform(
-        F.sequence(F.lit(0), ln - 11, F.lit(10)),
-        lambda i: F.substring(col, i + 1, 10),
-    )
-    n_win = F.size(windows)
-    win_top = _max_multiplicity(windows)
-    window_bad = F.when(
-        ln > 100,
-        (n_win > 0)
-        & (win_top.cast("double") / n_win > 0.5)
-        & (win_top > 3),
-    ).otherwise(F.lit(False))
-
-    return (
-        col.isNotNull()
-        & (ln >= 50)
-        & (F.coalesce(sentence_bad, F.lit(False)) | window_bad)
-    )
-
-
-def repetitive_clean(col: Column, native: bool = False) -> Column:
+def repetitive_clean(col: Column) -> Column:
     """True iff the column is not excessively repetitive.
 
-    Default is the Arrow-batched pandas UDF — the byte-exact reference
-    port — because it is MEASURED ~6x faster than the Column-expression
-    variant on the 8.36M-turn bench corpus (3.7s vs 23.5s full-table):
-    the higher-order-function tree (split → per-segment strip regex →
+    Runs the Arrow-batched pandas UDF — the byte-exact reference port —
+    because it is MEASURED faster than a Column-expression port of the
+    same predicate: ~6x on the 8.36M-turn corpus of round 4 (3.7s vs
+    23.5s full-table), and 12.4–14.6 vs 18.2–22.8 CPU seconds per warm
+    whole-table verdict on the ``perfbench`` transcripts table. The
+    higher-order-function tree (split → per-segment strip regex →
     array_sort → aggregate-with-struct, twice) is CodegenFallback, and
     its interpreted evaluation costs ~370µs per gated row, while
     Python's re.split + Counter costs ~4µs per row vectorized over
     Arrow batches. "UDFs are the slow path" inverts here: the
-    per-element interpreted expression machinery is the slower runtime.
-    ``native=True`` keeps the pure-Column variant (no Arrow dependency;
-    parity-fuzzed against the UDF and the reference)."""
-    if native:
-        return ~repetitive_flag_native(col)
+    per-element interpreted expression machinery is the slower runtime."""
     # JVM-side mask before the Arrow boundary: rows that cannot fire the
     # predicate (len < 50, or no sentence separators and len <= 100 —
     # the same necessary condition the UDF's internal gate re-checks)

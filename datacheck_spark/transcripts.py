@@ -12,8 +12,8 @@ ts timestamp)`` at 10^12 turns. This module provides:
   ``(conv_id, turn_idx)`` keys, and hot (skewed) conversations.
 - ``TranscriptChecker``: the fused rule suite + uniqueness + referential
   + anomaly pipeline over a transcripts DataFrame — the engine's
-  flagship end-to-end path used by ``__spark_entry__.entry`` and
-  ``bench.py``.
+  flagship end-to-end path used by ``__spark_entry__.entry`` and the
+  ``perfbench`` ``transcripts`` workload.
 
 Scale design: the generator emits ``conv_bucket`` (hash bucket of
 conv_id) so writes can be partitioned the way the north rule prescribes
@@ -539,9 +539,10 @@ def structure_violations(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 def structure_summary(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """One-row rollup of :func:`conversation_structure` (total
     conversations, failing conversations) — the cross-turn half of the
-    flagship suite; ``bench.py`` / ``bench_scaling.py`` fold this into
-    the timed headline job so the measured artifact is the north-rule
-    shape: per-row rules + cross-turn structure verdicts in one run."""
+    flagship suite; the ``perfbench`` ``transcripts`` workload runs it
+    with :meth:`TranscriptChecker.run` in each whole-table verdict, so
+    the measured operation is the north-rule shape: per-row rules +
+    cross-turn structure verdicts in one run."""
     return conversation_structure(df, ts_col=ts_col).agg(
         F.count(F.lit(1)).alias("conversations"),
         F.sum((~F.col("conv_pass")).cast("long")).alias("failing_convs"),

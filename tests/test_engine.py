@@ -1,6 +1,9 @@
 """Engine core tests — mirrors the reference's checker-core suite
 (`/root/reference/tests/test_checker.py`) goldens where applicable."""
 
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import Row
 
@@ -192,12 +195,22 @@ def test_failed_ids_bounded_at_scale(spark):
     assert res.rule_results["non_empty"]["failed"] == n // 2
 
 
-BENCH_CACHE = "/root/repo/.bench_cache/transcripts_c640000.parquet"
+def _large_table():
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    try:
+        from transcripts_table import table_path
+    finally:
+        sys.path.pop(0)
+    return table_path(640000)
+
+
+LARGE_TABLE = _large_table()
 
 
 @pytest.mark.skipif(
-    not __import__("os").path.isdir(BENCH_CACHE),
-    reason="bench transcript cache not generated",
+    not LARGE_TABLE.is_dir(),
+    reason="bench transcripts table absent; build it with "
+    "`python tools/transcripts_table.py 640000`",
 )
 def test_failed_ids_bounded_at_bench_scale(spark):
     """VERDICT r2 item 1 'done' criterion: failed-id collection over the
@@ -208,7 +221,7 @@ def test_failed_ids_bounded_at_bench_scale(spark):
     per failing rule."""
     from datacheck_spark.transcripts import TranscriptChecker
 
-    df = spark.read.parquet(BENCH_CACHE)
+    df = spark.read.parquet(str(LARGE_TABLE))
     checker = TranscriptChecker()
     engine = checker.engine
     rules = engine.compile(df)

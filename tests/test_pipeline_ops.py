@@ -1,12 +1,17 @@
 """Training-data pipeline ops: textstats, similarity search, multimodal
 plumbing, streaming validation."""
 
+import uuid
+
+import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row, functions as F
 
 from datacheck_spark import textstats as TS
 from datacheck_spark import similarity as SIM
 from datacheck_spark import multimodal as MM
+from datacheck_spark import codecs
 
 
 class TestTextStats:
@@ -110,6 +115,45 @@ class TestSimilarity:
         assert len(brute & ivf) >= len(brute) // 2
 
 
+def _jpeg_frame() -> bytes:
+    px = (np.arange(16 * 24 * 3).reshape(16, 24, 3) * 7 % 256).astype(np.uint8)
+    return codecs.encode_jpeg(px, quality=75)
+
+
+#: a cut (keep the first k bytes) or up to four byte overwrites
+_FRAME_MUTATION = st.one_of(
+    st.tuples(st.just("cut"), st.integers(0, 10**6)),
+    st.tuples(
+        st.just("set"),
+        st.lists(
+            st.tuples(st.integers(0, 10**6), st.integers(0, 255)),
+            min_size=1, max_size=4,
+        ),
+    ),
+)
+
+
+def _mutate(frame: bytes, mutation) -> bytes:
+    kind, arg = mutation
+    if kind == "cut":
+        return frame[: arg % len(frame)]
+    out = bytearray(frame)
+    for pos, val in arg:
+        out[pos % len(out)] = val
+    return bytes(out)
+
+
+def _expected_status(frame: bytes) -> str:
+    """The frame kernel's status, decided in the driver."""
+    if codecs.sniff_format(frame) != "jpeg":
+        return "header"
+    try:
+        d = codecs.decode_jpeg(frame)
+    except ValueError:
+        return "error"
+    return "header" if d["pixels"] is None else "ok"
+
+
 class TestMultimodal:
     def test_synthetic_media_and_features(self, spark):
         df = MM.synthetic_media(spark, n=30).cache()
@@ -200,6 +244,54 @@ class TestMultimodal:
             n_frames = (meta[mid]["duration_ms"] * 25) // 1000
             assert sorted(idxs) == list(range(0, n_frames, 25))
         df.unpersist()
+
+    @settings(max_examples=8, deadline=None)
+    @given(st.lists(_FRAME_MUTATION, min_size=1, max_size=12))
+    def test_sample_video_frames_malformed_frames(self, spark, mutations):
+        """Truncated or byte-mutated MJPEG frames give a status row,
+        never a failed task: the decoder reports every parse failure as
+        ValueError. The first four frames declare an empty DRI segment,
+        an undeclared Huffman table and a fourth component with no spec
+        (struct.error, KeyError and IndexError inside the parser), and
+        65535x65535 pixels for a scan of a few hundred bytes (which
+        would zero-feed blocks for hours)."""
+        base = _jpeg_frame()
+        sos, sof = base.find(b"\xff\xda"), base.find(b"\xff\xc0")
+        undeclared, short_comps, huge = (bytearray(base) for _ in range(3))
+        undeclared[sos + 8] = 0x33  # second component: tables 3/3
+        short_comps[sof + 9] = 4
+        huge[sof + 5 : sof + 9] = b"\xff\xff\xff\xff"
+        frames = [
+            base[:sos] + b"\xff\xdd\x00\x02" + base[sos:],
+            bytes(undeclared),
+            bytes(short_comps),
+            bytes(huge),
+        ] + [_mutate(base, m) for m in mutations]
+        rows = [
+            (f"v{i}", "video", bytearray(codecs.encode_avi(24, 16, 1, frame_payload=f)))
+            for i, f in enumerate(frames)
+        ]
+        df = spark.createDataFrame(rows, "media_id string, kind string, payload binary")
+        sc = spark.sparkContext
+        group = f"malformed-frames-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "malformed frame fuzz")
+        try:
+            got = {
+                r["media_id"]: r["decode_status"]
+                for r in MM.sample_video_frames(df, every_ms=40).collect()
+            }
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        stages = [
+            s for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        assert stages
+        assert sum(tracker.getStageInfo(s).numFailedTasks for s in stages) == 0
+        assert [got[f"v{i}"] for i in range(4)] == ["error"] * 4
+        for i, f in enumerate(frames):
+            assert got[f"v{i}"] == _expected_status(f), i
 
     def test_media_rules_fused(self, spark):
         from datacheck_spark.engine import ValidationEngine

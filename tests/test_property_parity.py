@@ -1,5 +1,5 @@
 """Property-based differential parity: generated adversarial strings
-run through our native Column expressions AND the reference package's
+run through our rule Columns AND the reference package's
 own predicates; verdicts must agree row-for-row.
 
 Each hypothesis example is a whole corpus (one Spark job per example)
@@ -68,7 +68,7 @@ def test_garbled_parity(spark, corpus):
 @settings(max_examples=5, deadline=None)
 @given(_CORPUS)
 def test_repetitive_parity(spark, corpus):
-    for t, got in _run(spark, corpus, T.repetitive_flag_native):
+    for t, got in _run(spark, corpus, lambda c: ~T.repetitive_clean(c)):
         expected = not ref_text.check_repetitive_text({"v": t}, {})
         assert got == expected, repr(t)[:80]
 

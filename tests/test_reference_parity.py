@@ -110,7 +110,7 @@ def test_text_rule_per_row_parity(spark):
         "i",
         T.pii_clean(F.col("t")).alias("pii"),
         T.garbled_clean(F.col("t")).alias("garbled"),
-        T.repetitive_flag_native(F.col("t")).alias("rep"),
+        (~T.repetitive_clean(F.col("t"))).alias("rep"),
     ).orderBy("i").collect()
     for row, t in zip(got, texts):
         sample = {"v": t}

@@ -64,13 +64,15 @@ class TestRepetitive:
          "Variety is the spice of life.", False),
     ]
 
-    def test_native_goldens(self, spark):
-        got = flags(spark, [c[0] for c in self.CASES], T.repetitive_flag_native)
+    def test_goldens(self, spark):
+        got = flags(
+            spark, [c[0] for c in self.CASES], lambda c: ~T.repetitive_clean(c)
+        )
         assert got == [c[1] for c in self.CASES]
 
-    def test_native_matches_python_port(self, spark):
-        """The codegen implementation must agree with the exact Python
-        port on every case (including generated transcripts)."""
+    def test_matches_python_port(self, spark):
+        """The rule column (JVM-side gate + Arrow UDF) must agree with
+        the exact Python port on every case."""
         texts = [c[0] for c in self.CASES] + [
             "ab. " * 30,                     # segments <= 5 chars -> filtered
             ("Hello world this is fine. " * 3) + "Unique tail sentence here.",
@@ -80,11 +82,11 @@ class TestRepetitive:
         df = spark.createDataFrame([Row(i=i, t=t) for i, t in enumerate(texts)])
         rows = df.select(
             "i",
-            T.repetitive_flag_native(F.col("t")).alias("native"),
+            (~T.repetitive_clean(F.col("t"))).alias("rep"),
         ).orderBy("i").collect()
         for r, t in zip(rows, texts):
             expected = T._repetitive_one(t)
-            assert bool(r["native"]) == expected, f"text={t!r:.60}"
+            assert r["rep"] == expected, f"text={t!r:.60}"
 
 
 class TestLanguage:
@@ -142,8 +144,9 @@ class TestNgrams:
 
 
 def test_repetitive_udf_gate_parity(spark):
-    """The vectorized pre-gate in repetitive_flag must be a NECESSARY
-    condition: UDF output == per-row reference port on boundary cases
+    """Both pre-gates — the JVM-side ``rlike`` mask in repetitive_clean
+    and the vectorized one inside repetitive_flag — must be NECESSARY
+    conditions: rule output == per-row reference port on boundary cases
     (len 49/50/100/101, exactly 1 vs 2 separators, CJK separators)."""
     from pyspark.sql import functions as F
 
@@ -160,7 +163,7 @@ def test_repetitive_udf_gate_parity(spark):
     df = spark.createDataFrame([(t,) for t in cases], "t string").coalesce(1)
     rows = df.select(
         "t",
-        F.coalesce(T.repetitive_flag(F.col("t")), F.lit(False)).alias("udf"),
+        (~T.repetitive_clean(F.col("t"))).alias("rep"),
     ).collect()
     for r in rows:
-        assert r["udf"] == T._repetitive_one(r["t"]), repr(r["t"])[:60]
+        assert r["rep"] == T._repetitive_one(r["t"]), repr(r["t"])[:60]

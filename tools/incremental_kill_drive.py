@@ -1,37 +1,46 @@
 """Kill-and-heal identity drive for incremental validation.
 
 Protocol (mirrors tools/resume_drive.py): a child process runs the
-initial incremental pass over the 8.36M-turn bench table with
-file_group_size=16 (4 groups) and is hard-killed at the WORST possible
-moment — after group 1's batch dir is fully written but BEFORE its
-manifest commit. The re-run must (a) treat group 0 as done, (b) heal
-the orphan batch=1 dir by overwriting it, and (c) end with a live
-violation view identical (order-insensitive xor hash + count) to a
-direct full-table run. Results recorded in BENCH/RESUME.md.
+initial incremental pass over the transcripts table of
+``tools/transcripts_table.py`` (64 files) with file_group_size=16
+(4 groups) and is hard-killed at the WORST possible moment — after
+group 1's batch dir is fully written but BEFORE its manifest commit.
+The re-run must (a) treat group 0 as done, (b) heal the orphan batch=1
+dir by overwriting it, and (c) end with a live violation view identical
+(order-insensitive xor hash + count) to a direct full-table run.
+Results recorded in BENCH/RESUME.md. Usage::
+
+    python tools/incremental_kill_drive.py N_CONVS
 """
 
+import argparse
 import json
 import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+TOOLS = Path(__file__).resolve().parent
+sys.path.insert(0, str(TOOLS))
+from transcripts_table import ensure_transcripts, spark_session  # noqa: E402
+
+ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+ap.add_argument("n_convs", type=int, help="conversations in the table")
+args = ap.parse_args()
+
+spark = spark_session("incremental-kill-drive")
+TPATH = ensure_transcripts(spark, args.n_convs)
 BASE = tempfile.mkdtemp(prefix="incr_drive_")
-TPATH = "/root/repo/.bench_cache/transcripts_v2_c640000.parquet"
 
 CHILD = f'''
 import os, sys
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
+sys.path.insert(0, {str(TOOLS)!r})
+from transcripts_table import spark_session
 from datacheck_spark.incremental import IncrementalValidator
 from datacheck_spark.transcripts import TranscriptChecker
 
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions","64")
-         .config("spark.ui.enabled","false")
-         .config("spark.driver.memory","16g").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+spark = spark_session("incremental-kill-drive-child")
 iv = IncrementalValidator({BASE!r}, checker=TranscriptChecker(include_repetitive=False),
                           file_group_size=16)
 orig = iv._save_state
@@ -58,20 +67,10 @@ print(
 )
 assert r.returncode == 137 and sorted(manifest["batches"]) == ["0"] and orphan
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
 
-from datacheck_spark.incremental import IncrementalValidator
-from datacheck_spark.transcripts import TranscriptChecker
-
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "64")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", "16g")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+from datacheck_spark.incremental import IncrementalValidator  # noqa: E402
+from datacheck_spark.transcripts import TranscriptChecker  # noqa: E402
 
 iv = IncrementalValidator(
     BASE, checker=TranscriptChecker(include_repetitive=False), file_group_size=16

@@ -1,22 +1,42 @@
-"""Kill-and-resume identity drive (mirrors round-1 evidence protocol)."""
-import json, os, subprocess, sys, tempfile
+"""Kill-and-resume identity drive for checkpointed violations.
 
-sys.path.insert(0, "/root/repo")
+A child process runs ``checkpointed_violations`` over the transcripts
+table of ``tools/transcripts_table.py`` (32 buckets, groups of 4) and is
+hard-killed right after the first group commits. The resumed run must
+end with a violation set identical (order-insensitive xor hash + count)
+to a direct full-table run. Usage::
+
+    python tools/resume_drive.py N_CONVS
+"""
+
+import argparse
+import json
+import os
+import subprocess
+import sys
+import tempfile
+from pathlib import Path
+
+TOOLS = Path(__file__).resolve().parent
+sys.path.insert(0, str(TOOLS))
+from transcripts_table import ensure_transcripts, spark_session  # noqa: E402
+
+ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+ap.add_argument("n_convs", type=int, help="conversations in the table")
+args = ap.parse_args()
+
+spark = spark_session("resume-drive")
+TPATH = ensure_transcripts(spark, args.n_convs)
 BASE = tempfile.mkdtemp(prefix="ckpt_drive_")
-TPATH = "/root/repo/.bench_cache/transcripts_v2_c640000.parquet"
 
 CHILD = f'''
 import os, sys
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
+sys.path.insert(0, {str(TOOLS)!r})
+from transcripts_table import spark_session
 import datacheck_spark.checkpoint as CK
 from datacheck_spark.transcripts import TranscriptChecker
 
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions","64")
-         .config("spark.ui.enabled","false")
-         .config("spark.driver.memory","16g").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+spark = spark_session("resume-drive-child")
 df = spark.read.parquet({TPATH!r})
 orig = CK.save_state
 calls = [0]
@@ -36,16 +56,11 @@ done_at_kill = sorted(int(b) for b, v in manifest["buckets"].items() if v.get("d
 print("child rc:", r.returncode, "buckets done at kill:", done_at_kill)
 
 # resume in-process
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-import datacheck_spark.checkpoint as CK
-from datacheck_spark.transcripts import TranscriptChecker
+from pyspark.sql import functions as F  # noqa: E402
 
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions","64")
-         .config("spark.ui.enabled","false")
-         .config("spark.driver.memory","16g").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+import datacheck_spark.checkpoint as CK  # noqa: E402
+from datacheck_spark.transcripts import TranscriptChecker  # noqa: E402
+
 df = spark.read.parquet(TPATH)
 state = CK.checkpointed_violations(df, TranscriptChecker(include_repetitive=False),
                                    BASE, n_buckets=32, group_size=4)
