@@ -33,7 +33,7 @@ import io
 import struct
 import wave
 import zlib
-from typing import Any, Dict, Optional
+from typing import Any, Dict, Optional, Tuple
 
 import numpy as np
 
@@ -625,7 +625,8 @@ def _decode_jpeg(data: bytes) -> Dict[str, Any]:
             "format": "jpeg",
             "width": img.width,
             "height": img.height,
-            "channels": bands,
+            # of the returned pixels: CMYK comes back converted to RGB
+            "channels": 1 if px.ndim == 2 else px.shape[2],
             "pixels": px,
         }
 
@@ -1167,38 +1168,59 @@ def encode_wav(
 # codecs remain header-level.
 
 
-def decode_avi_header(data: bytes) -> Dict[str, Any]:
-    """Parse the RIFF AVI main header ('avih') plus a frame-chunk count
-    from the 'movi' list — no frame decode, pure stdlib struct walk."""
+def _avi_walk(data: bytes) -> Tuple[Optional[bytes], list]:
+    """One RIFF AVI chunk walk: the 'avih' main header and the
+    ``(offset, size)`` spans of the first video stream's frame chunks,
+    in stream order. That stream's number is the position of the first
+    'strl' whose 'strh' type is 'vids' (stream 00 when no 'strh' exists
+    at all), and its frames are its '##dc'/'##db' chunks inside the
+    'movi' list (and its 'rec ' lists). Other streams and chunks outside
+    'movi' are not frames, so frame k is the k-th frame of one stream."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not a RIFF AVI container")
-
     avih = None
-    n_frame_chunks = 0
-    first_frame = None
-    pos = 12
+    stream_types: list = []  # 'strh' fccType per stream, in stream order
+    chunks: list = []  # (stream number, offset, size) of 'movi' chunks
     end = min(len(data), 8 + int.from_bytes(data[4:8], "little"))
 
-    def walk(lo: int, hi: int):
-        nonlocal avih, n_frame_chunks, first_frame
+    def walk(lo: int, hi: int, in_movi: bool):
+        nonlocal avih
         p = lo
         while p + 8 <= hi:
             cid = data[p : p + 4]
             size = int.from_bytes(data[p + 4 : p + 8], "little")
             body = p + 8
             if cid == b"LIST":
-                walk(body + 4, min(hi, body + size))
+                kind = data[body : body + 4]
+                walk(body + 4, min(hi, body + size), in_movi or kind == b"movi")
             elif cid == b"avih" and avih is None:
                 avih = data[body : body + min(size, 40)]
-            elif cid[2:4] in (b"dc", b"db", b"wb") and cid[:2].isdigit():
-                if first_frame is None and cid[2:4] != b"wb":
-                    first_frame = data[body : body + size]
-                n_frame_chunks += 1
+            elif cid == b"strh" and not in_movi:
+                stream_types.append(data[body : body + 4])
+            elif in_movi and cid[2:4] in (b"dc", b"db"):
+                chunks.append((cid[:2], body, size))
             p = body + size + (size & 1)  # chunks are word-aligned
 
-    walk(pos, end)
+    walk(12, end, False)
+    if not stream_types:
+        video = b"00"
+    elif b"vids" in stream_types:
+        video = b"%02d" % stream_types.index(b"vids")
+    else:
+        return avih, []
+    return avih, [(o, n) for s, o, n in chunks if s == video]
+
+
+def decode_avi_header(data: bytes) -> Dict[str, Any]:
+    """Parse the RIFF AVI main header ('avih') plus the frame count and
+    first frame of the first video stream (see :func:`_avi_walk`) — no
+    frame decode, pure stdlib struct walk."""
+    avih, frames = _avi_walk(data)
     if avih is None or len(avih) < 40:
         raise ValueError("no avih main header")
+    first_frame = (
+        data[frames[0][0] : frames[0][0] + frames[0][1]] if frames else None
+    )
     usec_per_frame = int.from_bytes(avih[0:4], "little")
     total_frames = int.from_bytes(avih[16:20], "little")
     width = int.from_bytes(avih[32:36], "little")
@@ -1215,7 +1237,7 @@ def decode_avi_header(data: bytes) -> Dict[str, Any]:
         "width": width,
         "height": height,
         "n_frames": total_frames,
-        "n_frame_chunks": n_frame_chunks,
+        "n_frame_chunks": len(frames),
         "fps": (1e6 / usec_per_frame) if usec_per_frame else 0.0,
         "duration_ms": int(round(total_frames * usec_per_frame / 1000)),
         "frame_width": frame_dims[0] if frame_dims else None,
@@ -1229,29 +1251,11 @@ def decode_avi_header(data: bytes) -> Dict[str, Any]:
 
 
 def avi_video_frames(data: bytes) -> list:
-    """All video-frame chunk payloads ('##dc'/'##db') from a RIFF AVI
-    'movi' list, in stream order — the frame-extraction kernel behind
-    frame sampling. Pure struct walk; each payload is one compressed
-    frame (MJPEG frames decode with :func:`decode_jpeg`)."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF AVI container")
-    frames: list = []
-    end = min(len(data), 8 + int.from_bytes(data[4:8], "little"))
-
-    def walk(lo: int, hi: int):
-        p = lo
-        while p + 8 <= hi:
-            cid = data[p : p + 4]
-            size = int.from_bytes(data[p + 4 : p + 8], "little")
-            body = p + 8
-            if cid == b"LIST":
-                walk(body + 4, min(hi, body + size))
-            elif cid[2:4] in (b"dc", b"db") and cid[:2].isdigit():
-                frames.append(data[body : body + size])
-            p = body + size + (size & 1)
-
-    walk(12, end)
-    return frames
+    """Frame chunk payloads of the first video stream (see
+    :func:`_avi_walk`), in stream order — the frame-extraction kernel
+    behind frame sampling. Pure struct walk; each payload is one
+    compressed frame (MJPEG frames decode with :func:`decode_jpeg`)."""
+    return [data[o : o + n] for o, n in _avi_walk(data)[1]]
 
 
 def encode_avi(

@@ -29,8 +29,10 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 # --- canonical content hash ----------------------------------------------
@@ -767,27 +769,119 @@ def embedding_near_duplicates(
 # --- keep-best near-dedup (connected components) --------------------------
 
 
+#: Most pair edges ``connected_components`` collects to the driver for
+#: in-process union-find; larger pair tables use pointer jumping. The
+#: bound is the driver's memory, not speed. On 4 cores, with 11-char
+#: string ids in clusters of 4, the driver path took 5.0 / 21.8 / 22.7
+#: / 50.7 s at 10^5 / 10^6 / 2x10^6 / 5x10^6 edges, pointer jumping
+#: 23.9 / 62.2 / 98.3 s up to 2x10^6 and 554 s at 10^7. The driver's
+#: Python peak grows by about 0.5 GB per 10^6 edges (0.6 GB at 10^6,
+#: 2.5 GB at 5x10^6); a whole pointer-jumping run peaked at 1.9-2.6
+#: GB (2 GiB JVM heap) at every size. So the driver path stops
+#: at 10^6, about 0.6 GB, well before the 5 GB that 10^7 would need.
+DRIVER_CC_MAX_EDGES = 1_000_000
+
+
+def _union_find(edges) -> Tuple[list, list]:
+    """(ids, components) over ``(a, b)`` edges in one pass: union by
+    smaller root keeps each root its component's minimum id. An edge
+    with a null endpoint joins nothing: its non-null end is a node, and
+    a single null node is labelled null."""
+    parent: Dict[Any, Any] = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    has_null = False
+    for a, b in edges:
+        if a is None or b is None:
+            has_null = True
+            for x in (a, b):
+                if x is not None:
+                    parent.setdefault(x, x)
+            continue
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    ids = list(parent)
+    comps = [find(x) for x in ids]
+    if has_null:
+        ids.append(None)
+        comps.append(None)
+    return ids, comps
+
+
+def _checkpoint_without_estimate(df: DataFrame) -> DataFrame:
+    """``localCheckpoint`` that also drops the size estimate of the plan
+    it cuts. A checkpoint keeps that estimate, and a propagation round
+    multiplies the estimates of its joins, so carried across rounds the
+    estimate's digit count grew about 4x per round: past round 8,
+    planning a round took longer than running it. Re-wrapping the
+    checkpointed rows on the JVM (no Python worker) starts every round
+    from the default estimate."""
+    ck = df.localCheckpoint()
+    jss = ck.sparkSession._jsparkSession
+    return DataFrame(
+        jss.createDataFrame(ck._jdf.javaRDD(), ck._jdf.schema()), ck.sparkSession
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 20,
 ) -> DataFrame:
-    """Connected components over an (id_a, id_b) pair table via
-    min-label propagation with pointer jumping.
+    """Connected components over an (id_a, id_b) pair table. Returns
+    (id, component), where component is the minimum id reachable from
+    the node and is typed like ``id_a`` (``id_b`` must share that type).
+    A null endpoint joins nothing: its partner keeps its own label and
+    the null node is labelled null.
 
-    Each round every node adopts the minimum label among itself and its
-    neighbors, then labels are pointer-jumped twice
-    (``component <- component[component]``), so the minimum travels a
-    multiplicatively growing distance per round: a duplicate chain of
-    diameter d converges in O(log d) rounds, not O(d) — ``max_iter=20``
-    covers diameters far beyond any real near-dup cluster (ADVICE r2:
-    plain propagation silently split chains longer than max_iter).
-    Convergence is verified by comparing labels across rounds; if the
-    loop exhausts ``max_iter`` without a fixed point a warning is
-    emitted rather than silently returning split components. Lineage
-    is truncated with ``localCheckpoint`` each round so the plan
-    doesn't grow quadratically. Returns (id, component) where component
-    is the minimum id reachable from the node.
+    The path adapts to the pair count. A ``limit`` collect takes at
+    most ``DRIVER_CC_MAX_EDGES + 1`` pairs to the driver:
+
+    - At most ``DRIVER_CC_MAX_EDGES`` edges: one union-find pass on the
+      driver, as the reference groups near-duplicates in-process. The
+      result is a ``LocalRelation`` built from a ``pyarrow.Table``. A
+      list of tuples (and pandas, when Arrow conversion is off) would
+      plan a Python-RDD ``LogicalRDD`` instead, whose evaluation starts
+      a second Python worker pool next to the Arrow-UDF one.
+    - Above it: distributed min-label propagation with pointer
+      jumping. The collected rows are dropped and the pair plan re-runs
+      once, when the edges are materialized. At 2x10^6 edges (a cheap
+      pair plan) that probe added 32 s, 101 CPU s and 0.4 GB of peak
+      memory to the 98 s of pointer jumping.
+
+    Pointer jumping, in the hook-and-shortcut scheme of Shiloach and
+    Vishkin: each round every edge (u, v) offers v's label to u and to
+    u's label (hooking) and every node adopts its minimum offer; then
+    labels are pointer-jumped twice (``component <- component[component]``).
+    Hooking lets a small label reach every node that points at u at
+    once. Without it, on a chain whose ids are not in path order, the
+    minimum spread about one hop per round: a 650-node chain with
+    shuffled ids was still split after 20 rounds. With it the chain
+    converges in 7 rounds, so ``max_iter=20`` covers diameters far
+    beyond any real near-dup cluster (ADVICE r2: plain propagation
+    silently split chains longer than max_iter). Convergence is
+    verified by comparing labels across rounds; if the loop exhausts
+    ``max_iter`` without a fixed point a warning is emitted rather than
+    silently returning split components. Lineage is truncated with a
+    checkpoint each round so the plan doesn't grow quadratically.
     """
+    rows = pairs.select("id_a", "id_b").limit(DRIVER_CC_MAX_EDGES + 1).collect()
+    if len(rows) <= DRIVER_CC_MAX_EDGES:
+        ids, comps = _union_find(rows)
+        t = pairs.schema["id_a"].dataType
+        return pairs.sparkSession.createDataFrame(
+            pa.table({"id": pa.array(ids), "component": pa.array(comps)}),
+            StructType([StructField("id", t), StructField("component", t)]),
+        )
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(
@@ -811,13 +905,25 @@ def connected_components(
     )
     converged = False
     for _ in range(max_iter):
-        neighbor_min = (
+        # each edge (u, v) offers v's label to u and to u's label
+        # (hooking): every node labelled u then learns it by pointer
+        # jumping, so a small label spreads from its origin's whole
+        # tree, not one hop per round
+        parents = labels.select(
+            F.col("id").alias("src"), F.col("component").alias("parent")
+        )
+        hooks = (
             edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("component").alias("nmin"))
+            .join(parents, "src")
+            .select(
+                F.explode(F.array("src", "parent")).alias("target"),
+                F.col("component").alias("offer"),
+            )
+            .groupBy("target")
+            .agg(F.min("offer").alias("nmin"))
         )
         updated = labels.join(
-            neighbor_min, labels.id == neighbor_min.src, "left"
+            hooks, labels.id == hooks.target, "left"
         ).select(
             "id",
             F.least(
@@ -841,7 +947,7 @@ def connected_components(
                     F.coalesce(F.col("__jcomp"), F.col("component")),
                 ).alias("component"),
             )
-        updated = updated.localCheckpoint()
+        updated = _checkpoint_without_estimate(updated)
         changed = (
             updated.alias("n")
             .join(labels.alias("o"), "id")
@@ -880,9 +986,10 @@ def near_dedup_keep_best(
     member per component (ties → smallest id). Rows in no pair are kept
     untouched.
 
-    One CC label propagation + one per-component arg-max window; at
-    10^12 rows the pair table (LSH output) is tiny relative to the
-    corpus, so the joins ride on the small side.
+    One ``connected_components`` (driver union-find unless the pair
+    table is large) + one per-component arg-max window; at 10^12 rows
+    the pair table (LSH output) is tiny relative to the corpus, so the
+    joins ride on the small side.
     """
     comp = connected_components(pairs, max_iter=max_iter)
     sid = F.col(id_col).cast("string")

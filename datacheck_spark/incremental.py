@@ -54,6 +54,7 @@ import tempfile
 from pathlib import Path
 from typing import Any, Dict, List, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -293,7 +294,10 @@ class IncrementalValidator:
     def live_violations(self, spark: SparkSession) -> DataFrame:
         """All committed violation rows filtered to the CURRENT file
         set: a broadcast semi-join on (src_file, batch) — replaced or
-        removed files' historical rows drop out without any rewrite."""
+        removed files' historical rows drop out without any rewrite.
+        The driver-built frames here come from Arrow, so they plan as a
+        ``LocalRelation``; a list would plan a Python-RDD scan, which
+        starts its own Python worker pool next to the Arrow-UDF one."""
         state = self.load_state()
         dirs = [
             self._batch_dir(int(b))
@@ -307,16 +311,20 @@ class IncrementalValidator:
             # nothing committed yet: empty frame with batch typed like
             # the real output; key-col types are unknowable here, so
             # they default to string (consistent once batches exist)
-            schema = ", ".join(
-                f"`{c}` int" if c == "batch" else f"`{c}` string"
+            return spark.createDataFrame(pa.table({
+                c: pa.array([], pa.int32() if c == "batch" else pa.string())
                 for c in cols
-            )
-            return spark.createDataFrame([], schema)
+            }))
         out = spark.read.parquet(*dirs)
+        files = state["files"]
         live = spark.createDataFrame(
-            [(p, int(m["batch"])) for p, m in state["files"].items()]
-            or [("", -1)],
-            "src_file string, batch int",
+            pa.table({
+                "src_file": pa.array(list(files) or [""], pa.string()),
+                "batch": pa.array(
+                    [int(m["batch"]) for m in files.values()] or [-1],
+                    pa.int32(),
+                ),
+            })
         )
         return out.join(
             F.broadcast(live), on=["src_file", "batch"], how="left_semi"

@@ -417,3 +417,100 @@ class TestAviFrameExtraction:
     def test_rejects_non_avi(self):
         with pytest.raises(ValueError):
             codecs.avi_video_frames(b"garbage")
+
+    def test_walk_keeps_movi_and_first_video_stream(self):
+        """A second video stream ('01dc'), an audio stream and frame
+        chunks outside the 'movi' LIST are not frames of the first
+        video stream; interleaving them would shift the fps-based
+        timestamps of frame sampling."""
+
+        def chunk(cid, body):
+            pad = b"\x00" * (len(body) & 1)
+            return cid + len(body).to_bytes(4, "little") + body + pad
+
+        base = codecs.encode_avi(32, 24, n_frames=1, frame_payload=b"x")
+        hdrl_len = 8 + int.from_bytes(base[16:20], "little")
+        hdrl = base[12 : 12 + hdrl_len]
+        movi = b"".join(
+            chunk(b"00dc", b"v0-%d" % i) + chunk(b"01dc", b"v1-%d" % i)
+            + chunk(b"01wb", b"audio") + chunk(b"00db", b"u0-%d" % i)
+            for i in range(3)
+        )
+        body = (
+            b"AVI " + hdrl
+            + chunk(b"LIST", b"INFO" + chunk(b"00dc", b"stray-in-list"))
+            + chunk(b"LIST", b"movi" + movi)
+            + chunk(b"00dc", b"stray-after-movi")
+        )
+        avi = b"RIFF" + len(body).to_bytes(4, "little") + body
+        assert codecs.avi_video_frames(avi) == [
+            b"v0-0", b"u0-0", b"v0-1", b"u0-1", b"v0-2", b"u0-2",
+        ]
+        hdr = codecs.decode_avi_header(avi)
+        assert hdr["first_frame"] == b"v0-0"
+        assert hdr["n_frame_chunks"] == 6
+
+    def test_first_video_stream_follows_strh_type(self):
+        """The video stream is the first 'strl' whose 'strh' type is
+        'vids', not stream 00: behind an audio stream 00 the frames are
+        the '01dc' chunks, and a file without a video stream has none."""
+
+        def chunk(cid, body):
+            pad = b"\x00" * (len(body) & 1)
+            return cid + len(body).to_bytes(4, "little") + body + pad
+
+        base = codecs.encode_avi(32, 24, n_frames=1, frame_payload=b"x")
+        avih = base[24 : 24 + 8 + 56]
+        vids_strl = base[24 + 8 + 56 : 20 + int.from_bytes(base[16:20], "little")]
+        auds_strl = chunk(b"LIST", b"strl" + chunk(b"strh", b"auds" + bytes(52)))
+        movi = chunk(b"LIST", b"movi" + b"".join(
+            chunk(b"00wb", b"audio") + chunk(b"00dc", b"not-video")
+            + chunk(b"01dc", b"f%d" % i)
+            for i in range(2)
+        ))
+
+        def avi(*strls):
+            hdrl = chunk(b"LIST", b"hdrl" + avih + b"".join(strls))
+            body = b"AVI " + hdrl + movi
+            return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+        two = avi(auds_strl, vids_strl)
+        assert codecs.avi_video_frames(two) == [b"f0", b"f1"]
+        assert codecs.decode_avi_header(two)["first_frame"] == b"f0"
+        audio_only = avi(auds_strl)
+        assert codecs.avi_video_frames(audio_only) == []
+        hdr = codecs.decode_avi_header(audio_only)
+        assert (hdr["first_frame"], hdr["n_frame_chunks"]) == (None, 0)
+
+
+class _StubPILImage:
+    """Stands in for ``PIL.Image``: ``open`` returns an image of one
+    mode whatever the bytes, so the Pillow path of ``decode_jpeg`` runs
+    without Pillow installed."""
+
+    def __init__(self, mode, width=5, height=4):
+        self.mode, self.width, self.height = mode, width, height
+
+    def open(self, _fp):
+        return self
+
+    def getbands(self):
+        return tuple(self.mode)
+
+    def convert(self, mode):
+        assert mode == "RGB"
+        return np.zeros((self.height, self.width, 3), np.uint8)
+
+    def __array__(self, dtype=None, copy=None):
+        return np.zeros((self.height, self.width), np.uint8)
+
+
+@pytest.mark.parametrize("mode, channels", [("CMYK", 3), ("L", 1), ("RGB", 3)])
+def test_pillow_path_channels_match_pixels(monkeypatch, mode, channels):
+    """On the Pillow path ``channels`` describes the returned pixels: a
+    CMYK JPEG comes back as RGB, so it reports 3, not 4 bands."""
+    monkeypatch.setattr(codecs, "_PIL", True)
+    monkeypatch.setattr(codecs, "_PILImage", _StubPILImage(mode))
+    d = codecs.decode_jpeg(b"\xff\xd8\xff\xe0 stub")
+    assert d["channels"] == channels
+    assert d["pixels"].shape[2:] == ((3,) if channels == 3 else ())

@@ -315,3 +315,24 @@ def test_many_file_table_bounded_groups(spark, tmp_path, checker):
     assert all(b["files"] <= 16 for b in st["batches"].values())
     full = checker.violations(spark.read.parquet(str(t)))
     assert _vset(iv.live_violations(spark)) == _vset(full)
+
+
+def test_local_frames_are_local_relations(spark, tmp_path, table, checker):
+    """The small driver-built frames (the live view before any commit,
+    the live-file frame of the live view, a small
+    ``connected_components`` result) are Arrow-built
+    ``LocalRelation``s, not Python-RDD ``LogicalRDD``s: evaluating one
+    of those starts a second Python worker pool."""
+    from datacheck_spark.dedup import connected_components
+
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
+    empty = iv.live_violations(spark)  # nothing committed yet
+    assert empty.count() == 0
+    assert dict(empty.dtypes)["batch"] == "int"
+    iv.run(spark, str(table))
+    pairs = spark.read.parquet(str(table)).select(
+        F.col("conv_id").alias("id_a"), F.col("conv_id").alias("id_b")
+    ).limit(3)
+    for df in (empty, iv.live_violations(spark), connected_components(pairs)):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan

@@ -1,7 +1,10 @@
 """Distribution stats, schema inference, coverage, dedup variants."""
 
+import random
+
 import pytest
 from pyspark.sql import Row, functions as F
+from pyspark.sql.types import IntegerType, StringType
 
 from datacheck_spark import stats as S
 from datacheck_spark import dedup as D
@@ -218,13 +221,14 @@ def test_connected_components_and_keep_best(spark):
     assert kept == ["b", "x", "z"]
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, monkeypatch):
     """A 600-node path (diameter ~600) must collapse to one component
     within the default max_iter=20 — pointer jumping gives O(log d)
     convergence where plain min-label propagation needed O(d) rounds
     and silently split the chain (ADVICE r2)."""
     from datacheck_spark.dedup import connected_components
 
+    monkeypatch.setattr(D, "DRIVER_CC_MAX_EDGES", 0)
     n = 600
     pairs = spark.createDataFrame(
         [(f"n{i:04d}", f"n{i+1:04d}") for i in range(n - 1)],
@@ -233,3 +237,98 @@ def test_connected_components_long_chain(spark):
     comp = connected_components(pairs)
     assert comp.select("component").distinct().count() == 1
     assert comp.count() == n
+
+
+def _bfs_components(edges):
+    """Plain-Python oracle for ``connected_components``: breadth-first
+    search from every unlabelled node, labelling with the component's
+    minimum id. An edge with a null endpoint links nothing; the null
+    node is labelled null."""
+    adj = {}
+    has_null = False
+    for a, b in edges:
+        if a is None or b is None:
+            has_null = True
+            for x in (a, b):
+                if x is not None:
+                    adj.setdefault(x, set())
+            continue
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    label = {}
+    for start in adj:
+        if start in label:
+            continue
+        seen, frontier = {start}, [start]
+        while frontier:
+            frontier = [y for x in frontier for y in adj[x] if y not in seen]
+            seen.update(frontier)
+        lo = min(seen)
+        label.update((x, lo) for x in seen)
+    out = set(label.items())
+    if has_null:
+        out.add((None, None))
+    return out
+
+
+def _random_graph(seed):
+    """Edges of a chain longer than 600 nodes, a star, small random
+    components, repeated and reversed pairs and self-loops, over node
+    numbers permuted so no component's minimum sits at a chain end."""
+    rng = random.Random(seed)
+    nodes = list(range(2000))
+    rng.shuffle(nodes)
+    it = iter(nodes)
+    chain = [next(it) for _ in range(650)]
+    edges = list(zip(chain, chain[1:]))
+    hub = next(it)
+    edges += [(hub, next(it)) for _ in range(40)]
+    for _ in range(30):
+        comp = [next(it) for _ in range(rng.randint(2, 6))]
+        edges += [(rng.choice(comp), rng.choice(comp)) for _ in range(len(comp) * 2)]
+        edges += list(zip(comp, comp[1:]))
+    edges += [(b, a) for a, b in rng.sample(edges, 50)]  # reversed
+    edges += rng.sample(edges, 50)  # repeated
+    edges += [(x, x) for x in rng.sample(chain, 5) + [next(it) for _ in range(5)]]
+    rng.shuffle(edges)
+    return edges
+
+
+def _cc_rows(spark, edges, dtype, monkeypatch, driver):
+    monkeypatch.setattr(
+        D, "DRIVER_CC_MAX_EDGES", 1_000_000 if driver else 0
+    )
+    ddl = dtype.simpleString()
+    pairs = spark.createDataFrame(edges, f"id_a {ddl}, id_b {ddl}")
+    comp = D.connected_components(pairs)
+    rows = [(r["id"], r["component"]) for r in comp.collect()]
+    return rows, comp.schema["component"].dataType
+
+
+@pytest.mark.parametrize(
+    "dtype", [StringType(), IntegerType()], ids=lambda t: t.simpleString()
+)
+def test_connected_components_paths_match_bfs(spark, monkeypatch, dtype):
+    """The driver union-find and the forced pointer-jumping path give
+    identical (id, component) rows, equal to a BFS oracle, with the
+    component typed like the ids. String ids are the decimal node
+    numbers, so their order differs from the int order."""
+    edges = _random_graph(11)
+    if dtype == StringType():
+        edges = [(str(a), str(b)) for a, b in edges]
+    driver, t_driver = _cc_rows(spark, edges, dtype, monkeypatch, True)
+    jumped, t_jumped = _cc_rows(spark, edges, dtype, monkeypatch, False)
+    assert len(driver) == len(set(driver)) == len(jumped)
+    assert set(driver) == set(jumped) == _bfs_components(edges)
+    assert t_driver == t_jumped == dtype
+
+
+def test_connected_components_null_endpoints(spark, monkeypatch):
+    """Both paths: a null endpoint links nothing, so its partner stays
+    a singleton, and the one null node is labelled null."""
+    edges = [(None, "q"), ("b", None), ("c", "b"), (None, None), ("b", "d")]
+    expected = {(None, None), ("q", "q"), ("b", "b"), ("c", "b"), ("d", "b")}
+    assert _bfs_components(edges) == expected
+    for driver in (True, False):
+        rows, _ = _cc_rows(spark, edges, StringType(), monkeypatch, driver)
+        assert sorted(rows, key=str) == sorted(expected, key=str)
