@@ -781,6 +781,10 @@ def embedding_near_duplicates(
 #: at 10^6, about 0.6 GB, well before the 5 GB that 10^7 would need.
 DRIVER_CC_MAX_EDGES = 1_000_000
 
+#: Most hook-and-jump rounds of the pointer-jumping path; see
+#: ``connected_components`` for the rounds real chains need.
+CC_MAX_ROUNDS = 20
+
 
 def _union_find(edges) -> Tuple[list, list]:
     """(ids, components) over ``(a, b)`` edges in one pass: union by
@@ -833,10 +837,7 @@ def _checkpoint_without_estimate(df: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over an (id_a, id_b) pair table. Returns
     (id, component), where component is the minimum id reachable from
     the node and is typed like ``id_a`` (``id_b`` must share that type).
@@ -866,13 +867,13 @@ def connected_components(
     once. Without it, on a chain whose ids are not in path order, the
     minimum spread about one hop per round: a 650-node chain with
     shuffled ids was still split after 20 rounds. With it the chain
-    converges in 7 rounds, so ``max_iter=20`` covers diameters far
-    beyond any real near-dup cluster (ADVICE r2: plain propagation
-    silently split chains longer than max_iter). Convergence is
-    verified by comparing labels across rounds; if the loop exhausts
-    ``max_iter`` without a fixed point a warning is emitted rather than
-    silently returning split components. Lineage is truncated with a
-    checkpoint each round so the plan doesn't grow quadratically.
+    converges in 7 rounds, well inside ``CC_MAX_ROUNDS`` (ADVICE r2:
+    plain propagation silently split chains longer than its round
+    cap). Convergence is verified by comparing labels across rounds;
+    if the loop exhausts ``CC_MAX_ROUNDS`` without a fixed point a
+    warning is emitted rather than silently returning split
+    components. Lineage is truncated with a checkpoint each round so
+    the plan doesn't grow quadratically.
     """
     rows = pairs.select("id_a", "id_b").limit(DRIVER_CC_MAX_EDGES + 1).collect()
     if len(rows) <= DRIVER_CC_MAX_EDGES:
@@ -904,7 +905,7 @@ def connected_components(
         .localCheckpoint()
     )
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # each edge (u, v) offers v's label to u and to u's label
         # (hooking): every node labelled u then learns it by pointer
         # jumping, so a small label spreads from its origin's whole
@@ -964,8 +965,7 @@ def connected_components(
 
         warnings.warn(
             "connected_components did not reach a fixed point in "
-            f"{max_iter} rounds; labels may split long chains — "
-            "raise max_iter",
+            f"{CC_MAX_ROUNDS} rounds; labels may split long chains",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -977,7 +977,6 @@ def near_dedup_keep_best(
     pairs: DataFrame,
     id_col: str,
     score_col: str,
-    max_iter: int = 20,
 ) -> DataFrame:
     """Near-duplicate removal keeping the best representative — the
     training-data dedup shape: given near-dup ``(id_a, id_b)`` pairs
@@ -991,7 +990,7 @@ def near_dedup_keep_best(
     the pair table (LSH output) is tiny relative to the corpus, so the
     joins ride on the small side.
     """
-    comp = connected_components(pairs, max_iter=max_iter)
+    comp = connected_components(pairs)
     sid = F.col(id_col).cast("string")
     tagged = df.join(
         comp.withColumnRenamed("id", "__cc_id"),

@@ -21,9 +21,14 @@ Outputs:
 
 Scale notes: the fused pass shuffles nothing; the summary agg is a
 single exchange of tiny partial-agg rows; violation collection is
-bounded by ``max_failed_ids``. Dataset-level extras (dup groups,
-distribution, anomalies) are separate single-shuffle jobs over the same
-(cached) annotated frame.
+bounded by ``max_failed_ids``. The summary agg carries, through
+``extra_aggs``, every aggregate whose form does not depend on the row
+count: ``check`` folds in the distribution stats, ``TranscriptChecker``
+its orphan-tool count. What does depend on it runs after that job with
+the total it produced: the anomaly percentiles are exact up to
+``anomaly.AUTO_EXACT_ROWS`` rows and Greenwald-Khanna sketches above.
+Dup groups, top-value histograms and outlier counts are further jobs
+over the same (cached) annotated frame.
 """
 
 from __future__ import annotations
@@ -373,8 +378,20 @@ class ValidationEngine:
         annotated = self.annotate(df, rules=rules)
         if persist:
             annotated = annotated.persist()
+        data = annotated.select(*df.columns)
         try:
-            result = self.summarize(annotated, rules, id_col=id_col)
+            # the distribution aggregates ride on the summary job; the
+            # anomaly percentiles cannot, as their form follows the
+            # row count that job produces
+            result = self.summarize(
+                annotated,
+                rules,
+                id_col=id_col,
+                extra_aggs=S.distribution_aggs(data, data_cols)
+                if compute_distribution
+                else None,
+            )
+            folded, result.extras = result.extras, {}
             if result.total_samples == 0:
                 return result
 
@@ -398,13 +415,13 @@ class ValidationEngine:
                 result.warning_count += len(result.near_duplicates)
 
             if compute_distribution:
-                result.distribution = S.compute_distribution(
-                    annotated.select(*[c for c in df.columns]), data_cols
+                result.distribution = S.distribution_from_values(
+                    data, data_cols, result.total_samples, folded
                 )
 
             if detect_anomalies:
                 result.anomalies = A.detect_anomalies(
-                    annotated.select(*[c for c in df.columns]),
+                    data,
                     cols=data_cols,
                     total=result.total_samples,
                 )
@@ -413,8 +430,16 @@ class ValidationEngine:
                 )
 
             if reference_df is not None:
+                ref_cols = data_cols or reference_df.columns
                 result.distribution["reference_comparison"] = (
-                    S.compare_distributions(df, reference_df, data_cols)
+                    S.compare_distribution_dicts(
+                        result.distribution
+                        or S.compute_distribution(data, data_cols),
+                        S.compute_distribution(
+                            reference_df,
+                            [c for c in ref_cols if c in reference_df.columns],
+                        ),
+                    )
                 )
             return result
         finally:

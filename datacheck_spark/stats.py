@@ -8,19 +8,18 @@ Reference semantics: ``_compute_distribution``
 
 All stats for all columns are computed in ONE ``df.agg`` pass (Spark's
 hash aggregate already does partial+final combine across executors —
-the treeAggregate shape BASELINE.json asks for). Top-k value histograms
-use one extra unpivot → groupBy → window job for *all* numeric columns
-together instead of a job per column.
-
-Scale: ``approx_distinct=True`` switches exact ``countDistinct`` to
-HyperLogLog ``approx_count_distinct`` for the 10^12-row path.
+the treeAggregate shape BASELINE.json asks for). ``distribution_aggs``
+hands those expressions to callers that already run an aggregation:
+``ValidationEngine.check`` runs them inside its rule summary. Top-k
+value histograms use one extra unpivot → groupBy → window job for
+*all* numeric columns together instead of a job per column.
 """
 
 from __future__ import annotations
 
 from typing import Any, Dict, List, Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -70,89 +69,100 @@ def _top_values(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
-        .orderBy("col", "rn")
         .collect()
     )
+    # at most k rows per column: ordered here, not by a global sort job
     out: Dict[str, Dict[float, int]] = {}
-    for r in top:
+    for r in sorted(top, key=lambda r: (r["col"], r["rn"])):
         out.setdefault(r["col"], {})[r["val"]] = r["cnt"]
     return out
 
 
-def compute_distribution(
-    df: DataFrame,
-    cols: Optional[Sequence[str]] = None,
-    approx_distinct: bool = False,
-    top_k: int = 10,
-) -> Dict[str, Any]:
-    """Per-field distribution stats (``checker.py:478-538``).
+def _is_number(dt) -> bool:
+    return isinstance(dt, NumericType) and not isinstance(dt, BooleanType)
 
-    Strings: length min/max/avg + unique count/ratio. Numbers: value
-    min/max/avg + top-k histogram. Booleans/complex: count + null_count
-    only (the reference ignores them beyond counting).
-    """
-    cols = list(cols or df.columns)
+
+def distribution_aggs(
+    df: DataFrame, cols: Optional[Sequence[str]] = None
+) -> Dict[str, Column]:
+    """The aggregate expressions of :func:`compute_distribution`, keyed
+    by name, for a caller to run in an aggregation of its own
+    (``ValidationEngine.check`` folds them into the rule summary).
+    None depends on the row count; the row count itself is the
+    caller's. No ``cols`` means every column."""
     dtypes = _dtype_map(df)
-    distinct = (
-        F.approx_count_distinct if approx_distinct else F.countDistinct
-    )
+    aggs: Dict[str, Column] = {}
+    for c in cols or df.columns:
+        aggs[f"null__{c}"] = F.sum(F.col(c).isNull().cast("long"))
+        if isinstance(dtypes[c], StringType):
+            aggs[f"lmin__{c}"] = F.min(F.length(c))
+            aggs[f"lmax__{c}"] = F.max(F.length(c))
+            aggs[f"lavg__{c}"] = F.avg(F.length(c))
+            aggs[f"uniq__{c}"] = F.countDistinct(c)
+            aggs[f"nn__{c}"] = F.count(c)
+        elif _is_number(dtypes[c]):
+            aggs[f"vmin__{c}"] = F.min(c)
+            aggs[f"vmax__{c}"] = F.max(c)
+            aggs[f"vavg__{c}"] = F.avg(c)
+    return aggs
 
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    string_cols, numeric_cols = [], []
-    for c in cols:
-        dt = dtypes[c]
-        aggs.append(
-            F.sum(F.col(c).isNull().cast("long")).alias(f"null__{c}")
-        )
-        if isinstance(dt, StringType):
-            string_cols.append(c)
-            aggs += [
-                F.min(F.length(c)).alias(f"lmin__{c}"),
-                F.max(F.length(c)).alias(f"lmax__{c}"),
-                F.avg(F.length(c)).alias(f"lavg__{c}"),
-                distinct(c).alias(f"uniq__{c}"),
-                F.count(c).alias(f"nn__{c}"),
-            ]
-        elif isinstance(dt, NumericType) and not isinstance(dt, BooleanType):
-            numeric_cols.append(c)
-            aggs += [
-                F.min(c).alias(f"vmin__{c}"),
-                F.max(c).alias(f"vmax__{c}"),
-                F.avg(c).alias(f"vavg__{c}"),
-            ]
-    row = df.agg(*aggs).collect()[0]
-    total = row["__total"]
 
+def distribution_from_values(
+    df: DataFrame,
+    cols: Optional[Sequence[str]],
+    total: int,
+    values: Dict[str, Any],
+) -> Dict[str, Any]:
+    """The per-field distribution dict from the row count and the
+    values of :func:`distribution_aggs` over the same ``cols``, plus
+    one top-values job over ``df`` for the numeric columns."""
     distribution: Dict[str, Any] = {"total": total, "fields": {}}
     if total == 0:
         return distribution
-
-    tops = _top_values(df, numeric_cols, k=top_k)
-
+    cols = cols or df.columns
+    dtypes = _dtype_map(df)
+    tops = _top_values(df, [c for c in cols if _is_number(dtypes[c])])
     for c in cols:
         fs: Dict[str, Any] = {
             "count": total,
-            "null_count": row[f"null__{c}"],
+            "null_count": values[f"null__{c}"],
         }
-        if c in string_cols and row[f"nn__{c}"] > 0:
+        if isinstance(dtypes[c], StringType) and values[f"nn__{c}"] > 0:
             fs["type"] = "string"
             fs["length_stats"] = {
-                "min": row[f"lmin__{c}"],
-                "max": row[f"lmax__{c}"],
-                "avg": row[f"lavg__{c}"],
+                "min": values[f"lmin__{c}"],
+                "max": values[f"lmax__{c}"],
+                "avg": values[f"lavg__{c}"],
             }
-            fs["unique_count"] = row[f"uniq__{c}"]
-            fs["unique_ratio"] = row[f"uniq__{c}"] / row[f"nn__{c}"]
-        elif c in numeric_cols and row[f"vavg__{c}"] is not None:
+            fs["unique_count"] = values[f"uniq__{c}"]
+            fs["unique_ratio"] = values[f"uniq__{c}"] / values[f"nn__{c}"]
+        elif _is_number(dtypes[c]) and values[f"vavg__{c}"] is not None:
             fs["type"] = "number"
             fs["value_stats"] = {
-                "min": row[f"vmin__{c}"],
-                "max": row[f"vmax__{c}"],
-                "avg": row[f"vavg__{c}"],
+                "min": values[f"vmin__{c}"],
+                "max": values[f"vmax__{c}"],
+                "avg": values[f"vavg__{c}"],
             }
             fs["value_distribution"] = tops.get(c, {})
         distribution["fields"][c] = fs
     return distribution
+
+
+def compute_distribution(
+    df: DataFrame, cols: Optional[Sequence[str]] = None
+) -> Dict[str, Any]:
+    """Per-field distribution stats (``checker.py:478-538``).
+
+    Strings: length min/max/avg + unique count/ratio. Numbers: value
+    min/max/avg + top-10 histogram. Booleans/complex: count + null_count
+    only (the reference ignores them beyond counting).
+    """
+    aggs = distribution_aggs(df, cols)
+    row = df.agg(
+        F.count(F.lit(1)).alias("__total"),
+        *[e.alias(name) for name, e in aggs.items()],
+    ).collect()[0]
+    return distribution_from_values(df, cols, row["__total"], row.asDict())
 
 
 def per_file_distributions(spark, paths, engine=None):
@@ -190,10 +200,22 @@ def compare_distributions(
 ) -> Dict[str, Any]:
     """Field-wise comparison of two distributions
     (``checker.py:540-588``)."""
-    sample_dist = compute_distribution(df, cols=[c for c in (cols or df.columns) if c in df.columns])
-    ref_dist = compute_distribution(
-        reference, cols=[c for c in (cols or reference.columns) if c in reference.columns]
+    return compare_distribution_dicts(
+        compute_distribution(
+            df, cols=[c for c in (cols or df.columns) if c in df.columns]
+        ),
+        compute_distribution(
+            reference,
+            cols=[c for c in (cols or reference.columns) if c in reference.columns],
+        ),
     )
+
+
+def compare_distribution_dicts(
+    sample_dist: Dict[str, Any], ref_dist: Dict[str, Any]
+) -> Dict[str, Any]:
+    """:func:`compare_distributions` over two :func:`compute_distribution`
+    results."""
     comparison: Dict[str, Any] = {
         "sample_count": sample_dist["total"],
         "reference_count": ref_dist["total"],

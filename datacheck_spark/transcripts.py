@@ -819,30 +819,12 @@ class TranscriptChecker:
                     & ~F.col("tool").isin(self.tool_vocab)
                 ).cast("long")
             )
-            extra_aggs = {"orphan_tools": orphan_expr}
-            # fold the anomaly per-field stats into the SAME summary
-            # aggregation (VERDICT r2 item 5: the separate count + stats
-            # jobs were pure fixed overhead at mid-size inputs).
-            # percentile_approx keeps the fold's aggregation state
-            # bounded at any scale; its Greenwald-Khanna sketch is
-            # exact below its accuracy window, so small-input reports
-            # are unchanged.
-            anomaly_targets = (
-                A._target_columns(annotated, ["__text_len", "turn_idx"])
-                if detect_anomalies
-                else []
-            )
-            if anomaly_targets:
-                for name, expr in A.stats_agg_exprs(
-                    anomaly_targets, exact_percentiles=False
-                ).items():
-                    extra_aggs[f"an_{name}"] = expr
             base = self.engine.summarize(
                 annotated,
                 rules,
                 id_col=None,
                 collect_failed_ids=False,
-                extra_aggs=extra_aggs,
+                extra_aggs={"orphan_tools": orphan_expr},
             )
             report = TranscriptCheckReport(
                 total_turns=base.total_samples,
@@ -880,19 +862,10 @@ class TranscriptChecker:
                 )
 
             if detect_anomalies:
-                stats = A.stats_from_values(
-                    anomaly_targets,
-                    {
-                        k[len("an_"):]: v
-                        for k, v in base.extras.items()
-                        if k.startswith("an_")
-                    },
-                )
                 raw = A.detect_anomalies(
                     annotated,
                     cols=["__text_len", "turn_idx"],
                     key_cols=["conv_id", "turn_idx"] if anomaly_keys else None,
-                    stats=stats,
                     total=base.total_samples,
                 )
                 # present the precomputed length under the reference's

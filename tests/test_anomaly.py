@@ -84,3 +84,17 @@ def test_fields_without_outliers_omitted(spark):
     )
     res = A.detect_anomalies(df)
     assert "b" not in res  # zero IQR -> no outliers -> omitted
+
+
+def test_percentile_form_follows_row_count(spark, monkeypatch):
+    """Exact linear-interpolation quartiles up to ``AUTO_EXACT_ROWS``
+    rows, Greenwald-Khanna above: the sketch answers with stored values
+    and does not interpolate."""
+    df = _df(spark, list(range(1, 12)) + [100])
+    st = A.compute_stats(df, "score")
+    assert (st["q1"], st["median"], st["q3"]) == (3.75, 6.5, 9.25)
+    monkeypatch.setattr(A, "AUTO_EXACT_ROWS", 0)
+    st = A.compute_stats(df, "score")
+    assert (st["q1"], st["median"], st["q3"]) == (3.0, 6.0, 9.0)
+    entry = A.detect_anomalies(df)["score"]
+    assert entry["bounds"] == {"lower": -6.0, "upper": 18.0}

@@ -152,6 +152,44 @@ def test_check_result_contract_shape(spark):
         assert key in d
 
 
+def test_check_folds_distribution_into_summary(spark):
+    """With every stage on, ``check`` gives what the standalone
+    ``compute_distribution`` and ``detect_anomalies`` give, and the
+    distribution aggregates it folds into the summary job change
+    neither its summary nor ``extras``."""
+    from datacheck_spark import anomaly as A
+    from datacheck_spark import stats as S
+
+    scores = [1, 1, 2, 2, 2, 3, 3, 4, 5, 5, 6, 250]
+    df = spark.createDataFrame(
+        [
+            Row(id=str(i), text=None if i % 4 == 0 else "sample " * (i + 1),
+                score=float(s))
+            for i, s in enumerate(scores)
+        ]
+    )
+    engine = ValidationEngine(schema=ValidationSchema())
+    result = engine.check(df)
+    data_cols = ["text", "score"]
+    assert result.distribution == S.compute_distribution(df, data_cols)
+    assert result.distribution["fields"]["text"]["null_count"] == 3
+    assert result.anomalies == A.detect_anomalies(df, cols=data_cols)
+    assert result.anomalies["score"]["outlier_count"] == 1
+    assert result.extras == {}
+    bare = engine.check(df, compute_distribution=False, detect_anomalies=False)
+    want = bare.to_dict()
+    want["anomaly_count"] = sum(
+        a["outlier_count"] for a in result.anomalies.values()
+    )
+    assert result.to_dict() == want
+
+    empty = engine.check(df.limit(0))
+    assert empty.total_samples == 0
+    assert empty.distribution == {}
+    assert empty.anomalies == {}
+    assert empty.extras == {}
+
+
 def test_failed_ids_bounded_at_scale(spark):
     """per_rule_failed_ids_df must pre-limit per partition (MapInPandas)
     before the final agg — no reducer buffers a rule's full failure set

@@ -223,7 +223,7 @@ def test_connected_components_and_keep_best(spark):
 
 def test_connected_components_long_chain(spark, monkeypatch):
     """A 600-node path (diameter ~600) must collapse to one component
-    within the default max_iter=20 — pointer jumping gives O(log d)
+    within ``CC_MAX_ROUNDS`` — pointer jumping gives O(log d)
     convergence where plain min-label propagation needed O(d) rounds
     and silently split the chain (ADVICE r2)."""
     from datacheck_spark.dedup import connected_components
@@ -237,6 +237,20 @@ def test_connected_components_long_chain(spark, monkeypatch):
     comp = connected_components(pairs)
     assert comp.select("component").distinct().count() == 1
     assert comp.count() == n
+
+
+def test_connected_components_warns_without_fixed_point(spark, monkeypatch):
+    """Pointer jumping that runs out of rounds before its labels settle
+    warns rather than returning split components silently."""
+    monkeypatch.setattr(D, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(D, "CC_MAX_ROUNDS", 1)
+    pairs = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i+1:03d}") for i in range(99)],
+        "id_a string, id_b string",
+    )
+    with pytest.warns(RuntimeWarning, match="fixed point in 1 rounds"):
+        comp = D.connected_components(pairs)
+    assert comp.select("component").distinct().count() > 1
 
 
 def _bfs_components(edges):

@@ -90,6 +90,30 @@ def test_verdicts_match_rule_columns(spark, transcripts):
         assert per_rule.get(rid, 0) == rr["failed"], rid
 
 
+def test_run_anomalies_match_detect_anomalies(spark):
+    """``run`` reports the same text-length and turn_idx anomalies as a
+    standalone ``detect_anomalies`` over the same rows: exact
+    linear-interpolation quartiles below ``AUTO_EXACT_ROWS``, where a
+    Greenwald-Khanna sketch would give median 6.0, not 6.5, for
+    lengths 1..11 and 100."""
+    from datacheck_spark import anomaly as A
+
+    texts = ["abcdefghijk"[:k] for k in range(1, 12)] + ["long turn " * 10]
+    df = spark.createDataFrame(
+        [("c0", i, "user", t, None) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    )
+    report = TranscriptChecker().run(df)
+    want = A.detect_anomalies(df, cols=["turn_idx", "text"])
+    entry = report.anomalies["text (长度)"]
+    assert entry["field_type"] == "length"
+    assert entry["outlier_count"] == 1
+    assert entry["stats"]["median"] == 6.5
+    assert entry["bounds"] == {"lower": -4.5, "upper": 17.5}
+    assert report.anomalies == want
+    assert report.anomaly_count == 1
+
+
 def test_checkpoint_resume(spark, transcripts, tmp_path):
     from datacheck_spark.checkpoint import (
         checkpointed_violations,
