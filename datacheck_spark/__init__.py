@@ -16,8 +16,9 @@ Design (see SURVEY.md §7):
   (``repetitive_text``) we use Arrow-vectorized pandas UDFs.
 - Built for 10^12-turn transcript tables: salted aggregation for hot
   conversations, broadcast anti-joins for referential checks, HLL
-  sketches for distinct counts, checkpoint/resume with per-partition
-  lineage.
+  sketches for distinct counts, and one resumable violation store
+  (``incremental.IncrementalValidator``) that validates only appended
+  files and resumes a killed run at its next file group.
 """
 
 __version__ = "0.1.0"

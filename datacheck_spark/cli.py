@@ -309,33 +309,35 @@ def cmd_drift(args) -> int:
 
 
 def cmd_transcripts(args) -> int:
-    """Full transcript validation over a parquet/Iceberg table with
-    optional checkpoint/resume — the production flagship job."""
+    """Full transcript validation over a parquet/Iceberg table with an
+    optional resumable violation store — the production flagship job.
+    ``--checkpoint DIR`` validates the files not yet in the store's
+    manifest (all of them on the first run, resuming by file group
+    after a kill; only appended or replaced files later)."""
     from datacheck_spark.transcripts import TranscriptChecker
-    from datacheck_spark.checkpoint import checkpointed_violations
 
     spark = _spark("datacheck-transcripts", args.master)
     checker = TranscriptChecker()
-    if args.incremental:
-        # validate only files appended since the last manifest; the
-        # full-table report is exactly what incremental mode avoids
+    if args.incremental and not args.checkpoint:
+        print("--incremental requires --checkpoint <dir>")
+        return 2
+    if args.checkpoint:
         from datacheck_spark.incremental import IncrementalValidator
 
-        if not args.checkpoint:
-            print("--incremental requires --checkpoint <dir>")
-            return 2
         iv = IncrementalValidator(
             args.checkpoint, rule_version=args.rule_version, checker=checker
         )
         out = iv.run(spark, args.data)
         out["trend"] = iv.batch_trend()
         print(json.dumps(out, ensure_ascii=False))
-        # gate on THIS run's appends only (historical flags stay
+    if args.incremental:
+        # gate on THIS run's batches only (historical flags stay
         # visible in trend but don't re-fail): z-degradation vs the
         # quality history when ≥2 prior batches exist, plus the same
         # absolute pass-rate floor the report path uses (--threshold;
         # error_row_rate counts distinct error-severity rows, the unit
-        # report pass_rate is defined in — warnings don't gate)
+        # report pass_rate is defined in — warnings don't gate); the
+        # full-table report is exactly what incremental mode avoids
         fresh = set(out["batches_written"])
         return 1 if any(
             t["flagged"] or (1.0 - t["error_row_rate"]) < args.threshold
@@ -343,19 +345,6 @@ def cmd_transcripts(args) -> int:
             if t["batch"] in fresh
         ) else 0
     df = spark.read.parquet(args.data)
-    if args.checkpoint:
-        state = checkpointed_violations(
-            df,
-            checker,
-            args.checkpoint,
-            rule_version=args.rule_version,
-            n_buckets=args.buckets,
-        )
-        print(
-            json.dumps(
-                {"completed_buckets": state.completed}, ensure_ascii=False
-            )
-        )
     report = checker.run(df)
     out = {
         "total_turns": report.total_turns,
@@ -849,7 +838,6 @@ def main(argv=None) -> int:
     t.add_argument("data")
     t.add_argument("--checkpoint")
     t.add_argument("--rule-version", default="v1")
-    t.add_argument("--buckets", type=int, default=32)
     t.add_argument("--threshold", type=float, default=0.0)
     t.add_argument("--incremental", action="store_true")
     t.add_argument(

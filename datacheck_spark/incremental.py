@@ -7,10 +7,10 @@ data files added since the last run and merges metrics, following the
 Iceberg data model exactly: data files are immutable — a commit ADDS
 and REMOVES whole files, never edits one in place (an Iceberg
 "incremental append scan" between two snapshot ids enumerates exactly
-the added files). Here the recursive parquet file listing IS the
-snapshot, fingerprinted by (path, size); on Iceberg the same manifest
-would key by the data-file paths in the snapshot's manifest list — the
-swap is confined to :func:`list_data_files`.
+the added files). Here the file listing of Spark's parquet reader IS
+the snapshot, fingerprinted by (path, size, mtime); on Iceberg the
+same manifest would key by the data-file paths in the snapshot's
+manifest list — the swap is confined to :func:`list_data_files`.
 
 Mechanics (all metadata is manifest-scale, never data-scale):
 
@@ -53,10 +53,12 @@ import re
 import tempfile
 from pathlib import Path
 from typing import Any, Dict, List, Optional
+from urllib.parse import unquote
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 INCR_MANIFEST = "incremental.json"
 
@@ -68,53 +70,89 @@ MAX_FILES_PER_GROUP = 4096
 _FILE_URI = re.compile(r"^file:/+")
 
 
-def _norm_path(p: str) -> str:
-    """Normalize a local path / file: URI to one canonical absolute
-    form shared by the manifest and ``_metadata.file_path``: the
-    scheme-stripped URI path. Spark reports file paths PERCENT-ENCODED
-    (``file:/a/space%20dir/...``) and ``Path.as_uri()`` encodes the
-    same way, so keys match for spaces/non-ASCII too; use
-    :func:`key_to_path` to get the real filesystem path back."""
-    uri = p if p.startswith("file:") else Path(p).resolve().as_uri()
-    return "/" + _FILE_URI.sub("", uri).lstrip("/")
+def _norm_path(uri: str) -> str:
+    """A data-file URI as Spark reports it (``inputFiles()``,
+    ``_metadata.file_path``) → manifest key: the same string with a
+    local file's ``file:`` scheme stripped (``/abs/p%20x``); remote
+    URIs (``s3a://…``, ``hdfs://…``) are kept whole. Spark quotes the
+    path the way ``java.net.URI`` does; :func:`key_to_path` undoes it."""
+    return _FILE_URI.sub("/", uri)
 
 
 def key_to_path(key: str) -> str:
-    """Manifest key (percent-encoded URI path) → filesystem path."""
-    from urllib.parse import unquote
-
+    """Manifest key (URI-quoted) → the path Spark or the OS opens."""
     return unquote(key)
 
 
-def _parquet_num_rows(path: str) -> int:
+def _hadoop_path(spark: SparkSession, key: str):
+    """A remote key as a Hadoop ``Path`` plus the session's Hadoop
+    configuration: the file's size, mtime and footer are then read
+    through the same filesystem client Spark's reader uses."""
+    jvm = spark._jvm
+    return (
+        jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(key)),
+        spark._jsc.hadoopConfiguration(),
+    )
+
+
+def _stat(spark: SparkSession, key: str) -> Dict[str, int]:
+    """(size, mtime_ns) fingerprint of one data file."""
+    if key.startswith("/"):
+        st = os.stat(key_to_path(key))
+        return {"size": st.st_size, "mtime": st.st_mtime_ns}
+    path, conf = _hadoop_path(spark, key)
+    st = path.getFileSystem(conf).getFileStatus(path)
+    return {"size": st.getLen(), "mtime": st.getModificationTime() * 10**6}
+
+
+def _parquet_num_rows(spark: SparkSession, key: str) -> int:
     """Exact row count from the parquet footer — metadata-scale, no
     data read (same discipline as :func:`list_data_files`)."""
-    import pyarrow.parquet as pq
+    if key.startswith("/"):
+        import pyarrow.parquet as pq
 
-    return pq.ParquetFile(path).metadata.num_rows
+        return pq.ParquetFile(key_to_path(key)).metadata.num_rows
+    path, conf = _hadoop_path(spark, key)
+    hadoop = spark._jvm.org.apache.parquet.hadoop
+    reader = hadoop.ParquetFileReader.open(
+        hadoop.util.HadoopInputFile.fromPath(path, conf)
+    )
+    try:
+        return reader.getRecordCount()
+    finally:
+        reader.close()
 
 
-def list_data_files(table_path: str) -> Dict[str, Dict[str, int]]:
-    """Current snapshot: {normalized data-file path: {size, mtime}}.
-    Driver-side recursive listing (metadata-scale). The fingerprint is
-    (size, mtime_ns) so an in-place rewrite that happens to keep the
-    byte size is still detected as a replacement. On Iceberg this is
-    the ONLY function to swap — enumerate the snapshot's data files
+def list_data_files(
+    spark: SparkSession, table_path: str
+) -> Dict[str, Dict[str, int]]:
+    """Current snapshot: {manifest key: {size, mtime}} of every data
+    file under ``table_path``, listed by Spark's own parquet file index
+    (metadata-scale: the given empty schema skips schema inference, so
+    no file is opened). The search is recursive, so appends landed in
+    plain subdirectories (``append_000/``) are found as well as
+    partition directories. It skips what the reader skips
+    (``_temporary/`` task output, ``.hidden/`` directories,
+    ``_SUCCESS``), takes local paths, ``file:`` URIs and remote tables
+    alike, and raises on a path that does not exist — before
+    :meth:`IncrementalValidator.run` changes any state. The fingerprint
+    is (size, mtime_ns) so an in-place rewrite that happens to keep
+    the byte size is still detected as a replacement. On Iceberg this
+    is the ONLY function to swap — enumerate the snapshot's data files
     instead (there the snapshot id itself is the fingerprint)."""
-    root = Path(table_path)
-    out: Dict[str, Dict[str, int]] = {}
-    for p in sorted(root.rglob("*.parquet")):
-        if p.name.startswith(("_", ".")):
-            continue
-        st = p.stat()
-        out[_norm_path(str(p))] = {"size": st.st_size, "mtime": st.st_mtime_ns}
-    return out
+    files = (
+        spark.read.schema(StructType())
+        .option("recursiveFileLookup", "true")
+        .parquet(table_path)
+        .inputFiles()
+    )
+    return {k: _stat(spark, k) for k in sorted(map(_norm_path, files))}
 
 
 class IncrementalValidator:
     """Validate only files appended since the last manifest.
 
-    ``checker`` needs ``engine`` + key columns like
+    ``checker`` needs ``engine`` + ``key_cols`` like
     :class:`~datacheck_spark.transcripts.TranscriptChecker` (the
     default); ``rule_version`` participates in lineage — bumping it
     discards the manifest so every file is revalidated under the new
@@ -126,7 +164,6 @@ class IncrementalValidator:
         base_path: str,
         rule_version: str = "v1",
         checker=None,
-        key_cols: Optional[List[str]] = None,
         file_group_size: int = 64,
     ):
         if checker is None:
@@ -136,7 +173,7 @@ class IncrementalValidator:
         self.base_path = str(base_path)
         self.rule_version = rule_version
         self.checker = checker
-        self.key_cols = list(key_cols or ["conv_id", "turn_idx"])
+        self.key_cols = list(checker.key_cols)
         # The only driver-side collect proportional to input (per-file
         # stats + footer row counts in _validate_group) is bounded by
         # the group size, so a full run over a 10^6-file table streams
@@ -182,7 +219,7 @@ class IncrementalValidator:
         committed batch per group — kill-and-rerun resumes at the next
         group), drop removed files from the live set."""
         state = self.load_state()
-        current = list_data_files(table_path)
+        current = list_data_files(spark, table_path)
 
         removed = [p for p in state["files"] if p not in current]
         replaced = [
@@ -262,7 +299,7 @@ class IncrementalValidator:
         # driver state here is bounded by the group size (clamped to
         # MAX_FILES_PER_GROUP): len(paths) footer reads and a
         # <=len(paths)-row collect below — never table-proportional
-        rows = {p: _parquet_num_rows(key_to_path(p)) for p in paths}
+        rows = {p: _parquet_num_rows(spark, p) for p in paths}
         # error_rows = distinct failing rows at ERROR severity — the
         # unit the report path's pass_rate gate counts in
         stats = {

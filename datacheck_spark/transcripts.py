@@ -216,8 +216,8 @@ def per_bucket_verdicts(
     conv_id hash bucket with totals, ERROR-failure count, pass rate,
     and the boolean verdict against ``threshold``. One partial+final
     aggregation over the already-annotated frame — at 10^12 turns this
-    is the per-partition quality scoreboard the checkpoint manifest
-    stores per bucket group."""
+    is the per-partition quality scoreboard, computed from the rows
+    alone (no manifest or store is read or written)."""
     return (
         annotated.groupBy(bucket_col)
         .agg(
@@ -254,8 +254,8 @@ def per_day_verdicts(
     ``utc_day_number=True`` keys days by the UTC epoch-day number
     (``floor(unix_seconds / 86400)`` as bigint) instead of
     ``to_date`` — a pure function of the timestamp instant,
-    independent of ``spark.sql.session.timeZone``, which is what the
-    checkpoint manifest and any cross-engine comparison should use.
+    independent of ``spark.sql.session.timeZone``, which is what a
+    stored verdict and any cross-engine comparison should use.
     The default DATE key follows the session timezone (the natural
     reporting surface).
 
@@ -757,6 +757,9 @@ class TranscriptChecker:
     single shuffle (or none).
     """
 
+    # the turn key: violation rows, duplicate keys and anomaly samples
+    key_cols = ("conv_id", "turn_idx")
+
     def __init__(
         self,
         schema: Optional[ValidationSchema] = None,
@@ -777,7 +780,7 @@ class TranscriptChecker:
         ordering — the exact violation-row contract. ``ordered=False``
         for order-insensitive stores (see ``engine.violations``)."""
         return self.engine.violations(
-            df, key_cols=["conv_id", "turn_idx"], ordered=ordered
+            df, key_cols=list(self.key_cols), ordered=ordered
         )
 
     def run(
@@ -839,7 +842,7 @@ class TranscriptChecker:
                 return report
 
             report.duplicate_keys = (
-                D.duplicate_key_rows(annotated, ["conv_id", "turn_idx"])
+                D.duplicate_key_rows(annotated, list(self.key_cols))
                 .agg(F.sum("dup_count"))
                 .collect()[0][0]
                 or 0
@@ -865,7 +868,7 @@ class TranscriptChecker:
                 raw = A.detect_anomalies(
                     annotated,
                     cols=["__text_len", "turn_idx"],
-                    key_cols=["conv_id", "turn_idx"] if anomaly_keys else None,
+                    key_cols=list(self.key_cols) if anomaly_keys else None,
                     total=base.total_samples,
                 )
                 # present the precomputed length under the reference's

@@ -313,3 +313,39 @@ def test_transcripts_daily_verdicts_cli(spark, tmp_path, capsys):
     for r in days:
         assert set(r) == {"ts_day", "total", "failed", "pass_rate", "passed"}
         assert r["passed"] == (r["pass_rate"] >= 0.95)
+
+
+def _readme_commands():
+    """Every ``python -m datacheck_spark.cli ...`` and ``.../cli.py ...``
+    command in README.md, ``\\`` continuations joined, as argv lists."""
+    import re
+    import shlex
+    from pathlib import Path
+
+    text = (Path(__file__).resolve().parent.parent / "README.md").read_text(
+        encoding="utf-8"
+    )
+    cmd = re.compile(r"(?:python3? -m datacheck_spark\.cli|\S*/cli\.py)\s+(.*)")
+    return [
+        shlex.split(m.group(1))
+        for line in text.replace("\\\n", " ").splitlines()
+        if (m := cmd.search(line))
+    ]
+
+
+def test_readme_commands_parse(monkeypatch):
+    """Each CLI command README documents parses and dispatches to its
+    subcommand: a removed or renamed option fails here, not on a
+    reader's cluster. The subcommands are stubbed; no Spark runs."""
+    from datacheck_spark import cli
+
+    called = []
+    for name in [n for n in vars(cli) if n.startswith("cmd_")]:
+        monkeypatch.setattr(
+            cli, name, lambda args, name=name: called.append(name) or 0
+        )
+    commands = _readme_commands()
+    assert {c[0] for c in commands} >= {"transcripts", "check", "suggest"}
+    for argv in commands:
+        assert cli.main(argv) == 0, argv
+        assert called.pop() == f"cmd_{argv[0]}", argv

@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 
 from datacheck_spark.incremental import (
     IncrementalValidator,
+    _norm_path,
+    _parquet_num_rows,
+    _stat,
     key_to_path,
     list_data_files,
 )
@@ -30,6 +33,11 @@ def _vset(df):
         (r["conv_id"], r["turn_idx"], r["rule_id"], r["observed"])
         for r in df.select("conv_id", "turn_idx", "rule_id", "observed").collect()
     }
+
+
+def _spark_keys(spark, table):
+    """The data files Spark's reader reads, as manifest keys."""
+    return {_norm_path(f) for f in spark.read.parquet(str(table)).inputFiles()}
 
 
 @pytest.fixture(scope="module")
@@ -95,7 +103,7 @@ def test_noop_rerun_writes_nothing(spark, tmp_path, table, checker):
 def test_removed_file_leaves_live_view(spark, tmp_path, table, checker):
     iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
     iv.run(spark, str(table))
-    victim = sorted(list_data_files(str(table)))[0]
+    victim = sorted(list_data_files(spark, str(table)))[0]
     os.remove(key_to_path(victim))
     out = iv.run(spark, str(table))
     assert out["removed_files"] == 1 and out["new_files"] == 0
@@ -144,6 +152,111 @@ def test_percent_encoded_paths_match(spark, tmp_path, checker):
     assert _vset(iv.live_violations(spark)) == _vset(full)
     # no-op rerun: keys stable across listing round-trips
     assert iv.run(spark, str(t))["new_files"] == 0
+
+
+def test_keys_match_spark_file_paths(spark, tmp_path, checker):
+    """Manifest keys equal Spark's ``_metadata.file_path`` for the
+    library's own partitioned layout (``conv_bucket=/ts_day=``) and for
+    directory names holding characters a URI path leaves literal
+    (``=+;@`` and non-ASCII) or quotes (``%``, ``#``, space), so every
+    file's violation rows reach the manifest and the live view."""
+    from datacheck_spark.transcripts import write_transcripts_partitioned
+
+    df = generate_transcripts(spark, n_convs=60, turns_per_conv=6, seed=7)
+    part = tmp_path / "partitioned"
+    write_transcripts_partitioned(df, str(part), n_buckets=4)
+    flat = tmp_path / "a=b+c;d@ü" / "transcripts"
+    _write(df, flat, n_files=2)
+    quoted = tmp_path / "p%41#~ x" / "transcripts"  # quoted: %, #, space
+    _write(df, quoted, n_files=1)
+    for i, t in enumerate((part, flat, quoted)):
+        iv = IncrementalValidator(str(tmp_path / f"ckpt{i}"), checker=checker)
+        out = iv.run(spark, str(t))
+        direct = checker.violations(spark.read.parquet(str(t)))
+        assert _vset(iv.live_violations(spark)) == _vset(direct), t
+        assert out["live"]["violations"] == direct.count() > 0, t
+        assert iv.run(spark, str(t))["new_files"] == 0, t
+        assert set(iv.load_state()["files"]) == _spark_keys(spark, t)
+
+
+def test_listing_skips_hidden_paths(spark, tmp_path, table, checker):
+    """The listing holds exactly the files Spark's reader reads: a
+    killed writer's ``_temporary/`` task output and a ``.hidden/``
+    directory are skipped, ``_``-prefixed partition directories
+    (holding ``=``) are not."""
+    import shutil
+
+    src = key_to_path(sorted(list_data_files(spark, str(table)))[0])
+    for sub in ("_temporary/0/task_0", ".hidden"):
+        (table / sub).mkdir(parents=True)
+        shutil.copy(src, table / sub)
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
+    out = iv.run(spark, str(table))
+    assert out["new_files"] == 3
+    full = spark.read.parquet(str(table))
+    assert set(iv.load_state()["files"]) == _spark_keys(spark, table)
+    assert out["live"]["rows"] == full.count()
+    assert _vset(iv.live_violations(spark)) == _vset(checker.violations(full))
+    part = tmp_path / "part"
+    full.withColumn("_k", F.lit(1)).write.partitionBy("_k").parquet(str(part))
+    assert set(list_data_files(spark, str(part))) == _spark_keys(spark, part)
+
+
+def test_listing_descends_into_plain_subdirectories(
+    spark, tmp_path, table, checker
+):
+    """An append landed in its own plain subdirectory (no ``=``, so not
+    a partition) is listed and validated with the table's other
+    files."""
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
+    iv.run(spark, str(table))
+    extra = generate_transcripts(spark, n_convs=10, turns_per_conv=4, seed=5)
+    extra = extra.withColumn("conv_id", F.concat(F.lit("x_"), F.col("conv_id")))
+    _write(extra, table / "append_000", n_files=1)
+    out = iv.run(spark, str(table))
+    assert out["new_files"] == 1
+    files = [key_to_path(k) for k in list_data_files(spark, str(table))]
+    full = spark.read.parquet(*files)
+    assert out["live"]["rows"] == full.count()
+    assert _vset(iv.live_violations(spark)) == _vset(checker.violations(full))
+
+
+def test_unlistable_path_raises_before_any_state_change(
+    spark, tmp_path, table, checker
+):
+    """A missing (mistyped, unmounted) table path raises from the
+    listing — in ``run`` and through ``transcripts --checkpoint`` —
+    before the manifest changes; a ``file:`` URI of the table lists
+    the same keys as its plain path, so it is a no-op rerun."""
+    from pyspark.errors import AnalysisException
+
+    from datacheck_spark.cli import main
+
+    ckpt = tmp_path / "ckpt"
+    iv = IncrementalValidator(str(ckpt), checker=checker)
+    iv.run(spark, str(table))
+    manifest = (ckpt / "incremental.json").read_bytes()
+    missing = str(tmp_path / "no_such_table")
+    with pytest.raises(AnalysisException):
+        iv.run(spark, missing)
+    with pytest.raises(AnalysisException):
+        main(["transcripts", missing, "--checkpoint", str(ckpt)])
+    assert (ckpt / "incremental.json").read_bytes() == manifest
+    assert iv.run(spark, table.as_uri())["new_files"] == 0
+    assert (ckpt / "incremental.json").read_bytes() == manifest
+
+
+def test_remote_file_metadata_through_hadoop(spark, table):
+    """Keys that are not local paths (``s3a://``, ``hdfs://``) get
+    their fingerprint and footer row count through Hadoop's filesystem
+    client; on a ``file:`` URI it agrees with the local route."""
+    for key in list_data_files(spark, str(table)):
+        local, remote = _stat(spark, key), _stat(spark, "file:" + key)
+        assert remote["size"] == local["size"]
+        assert abs(remote["mtime"] - local["mtime"]) < 10**6  # ms clock
+        assert _parquet_num_rows(spark, "file:" + key) == _parquet_num_rows(
+            spark, key
+        ) > 0
 
 
 def test_batch_trend_flags_bad_append(spark, tmp_path, table, checker):
@@ -262,7 +375,7 @@ def test_random_histories_preserve_identity(spark, tmp_path, checker):
     iv.run(spark, str(t))
     ops = ["add", "add", "remove", "compact", "add", "remove", "add"]
     for op in ops:
-        files = sorted(list_data_files(str(t)))
+        files = sorted(list_data_files(spark, str(t)))
         if op == "add" or (op == "remove" and len(files) <= 1):
             add_file()
         elif op == "remove":

@@ -7,8 +7,8 @@ datacheck_spark.zip cli.py <cmd> ...`` on a multi-executor cluster
 ``spark-submit`` binary from a scratch cwd with PYTHONPATH scrubbed, so
 the only source of the package — on the driver AND inside the executor
 pandas-UDF workers — is the ``--py-files`` archive. That proves the zip
-ships everything the job needs (rules, Arrow UDF kernels, checkpoint
-manifest code), not just the CLI shim.
+ships everything the job needs (rules, Arrow UDF kernels, violation
+store code), not just the CLI shim.
 """
 
 import json
@@ -111,25 +111,24 @@ def test_submit_strict_gate_exits_nonzero(deploy_dir):
 
 
 def test_submit_transcripts_flagship_with_checkpoint(spark, deploy_dir):
-    """The north-rule flagship: transcripts validation + checkpoint
-    lineage, deployed via --py-files."""
-    from datacheck_spark.transcripts import generate_transcripts
+    """The north-rule flagship: transcripts validation into the
+    resumable violation store, deployed via --py-files. The store's
+    line covers every data file and holds the direct run's violation
+    count; the full-table report follows."""
+    from datacheck_spark.transcripts import (
+        TranscriptChecker,
+        generate_transcripts,
+    )
 
     data = str(deploy_dir / "transcripts.parquet")
     generate_transcripts(spark, n_convs=200, turns_per_conv=5).write.parquet(
         data
     )
+    df = spark.read.parquet(data)
     ckpt = str(deploy_dir / "ckpt")
     proc = _submit(
         deploy_dir,
-        [
-            "transcripts",
-            data,
-            "--checkpoint",
-            ckpt,
-            "--buckets",
-            "8",
-        ],
+        ["transcripts", data, "--checkpoint", ckpt],
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -138,8 +137,12 @@ def test_submit_transcripts_flagship_with_checkpoint(spark, deploy_dir):
         for ln in proc.stdout.splitlines()
         if ln.startswith("{")
     ]
-    ckpt_line = next(ln for ln in lines if "completed_buckets" in ln)
-    assert len(ckpt_line["completed_buckets"]) == 8
+    store = next(ln for ln in lines if "live" in ln)
+    assert store["live"]["files"] == len(df.inputFiles())
+    assert store["live"]["violations"] == TranscriptChecker().violations(
+        df
+    ).count()
+    assert store["trend"]
     report_line = next(ln for ln in lines if "total_turns" in ln)
     assert report_line["total_turns"] > 0
     assert 0.0 < report_line["pass_rate"] <= 1.0

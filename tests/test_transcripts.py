@@ -1,5 +1,6 @@
 """Transcript generator + flagship pipeline tests, including exact
-planted-violation verdict checks and checkpoint/resume."""
+planted-violation verdict checks. The resumable violation store is
+tested in test_incremental.py."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -114,39 +115,6 @@ def test_run_anomalies_match_detect_anomalies(spark):
     assert report.anomaly_count == 1
 
 
-def test_checkpoint_resume(spark, transcripts, tmp_path):
-    from datacheck_spark.checkpoint import (
-        checkpointed_violations,
-        load_state,
-    )
-
-    checker = TranscriptChecker(include_repetitive=False)
-    base = str(tmp_path / "ckpt")
-    state = checkpointed_violations(
-        transcripts, checker, base, rule_version="v1", n_buckets=8,
-        group_size=3,
-    )
-    assert len(state.completed) == 8
-    total_1 = spark.read.parquet(base + "/violations").count()
-
-    # resume: nothing left to do; manifest unchanged; output identical
-    state2 = checkpointed_violations(
-        transcripts, checker, base, rule_version="v1", n_buckets=8,
-        group_size=3,
-    )
-    assert state2.completed == state.completed
-    total_2 = spark.read.parquet(base + "/violations").count()
-    assert total_1 == total_2
-
-    # direct violations (no checkpointing) must agree in count
-    direct = checker.violations(transcripts).count()
-    assert total_1 == direct
-
-    # rule-version bump invalidates lineage
-    state3 = load_state(base, "v2", "static")
-    assert state3.completed == []
-
-
 def test_contract_fixture_matches_generator(spark):
     """The committed contract fixture parquet must equal a fresh
     generate_transcripts run (the DuckDB oracles read the file; this
@@ -202,39 +170,6 @@ def test_partitioned_writer_layout_and_pruning(spark, tmp_path):
         .collect()
     )
     assert all(r["nb"] == 1 for r in per_conv)
-
-
-def test_checkpoint_resume_orc_source(spark, transcripts, tmp_path):
-    """Second-table-format twin of test_checkpoint_resume (VERDICT r2
-    item 6): the checkpoint contract is source-format-agnostic — the
-    same manifest lineage over an ORC copy of the table produces
-    violations identical to the parquet-sourced run, backing the
-    'Iceberg is a reader swap' claim at the API boundary."""
-    from datacheck_spark.checkpoint import checkpointed_violations
-
-    orc_path = str(tmp_path / "transcripts_orc")
-    transcripts.write.mode("overwrite").orc(orc_path)
-    orc_df = spark.read.orc(orc_path)
-
-    checker = TranscriptChecker(include_repetitive=False)
-    base = str(tmp_path / "ckpt_orc")
-    state = checkpointed_violations(
-        orc_df, checker, base, rule_version="v1", n_buckets=8, group_size=3,
-    )
-    assert len(state.completed) == 8
-
-    got = spark.read.parquet(base + "/violations")
-    direct = checker.violations(transcripts)
-    key = ["conv_id", "turn_idx", "rule_id", "observed"]
-    got_set = {tuple(r) for r in got.select(*key).collect()}
-    want_set = {tuple(r) for r in direct.select(*key).collect()}
-    assert got_set == want_set and len(got_set) > 0
-
-    # resume over the ORC source: manifest unchanged, nothing re-runs
-    state2 = checkpointed_violations(
-        orc_df, checker, base, rule_version="v1", n_buckets=8, group_size=3,
-    )
-    assert state2.completed == state.completed
 
 
 def test_conversation_structure_planted(spark):

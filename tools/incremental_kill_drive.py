@@ -1,8 +1,7 @@
 """Kill-and-heal identity drive for incremental validation.
 
-Protocol (mirrors tools/resume_drive.py): a child process runs the
-initial incremental pass over the transcripts table of
-``tools/transcripts_table.py`` (64 files) with file_group_size=16
+Protocol: a child process runs the initial incremental pass over the
+transcripts table of ``tools/transcripts_table.py`` (64 files) with file_group_size=16
 (4 groups) and is hard-killed at the WORST possible moment — after
 group 1's batch dir is fully written but BEFORE its manifest commit.
 The re-run must (a) treat group 0 as done, (b) heal the orphan batch=1

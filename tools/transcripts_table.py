@@ -2,9 +2,9 @@
 
 ``generate_transcripts`` (12 turns per conversation, 4 hot
 conversations at 100x) written as 64 parquet files under
-``.bench_cache/`` in the checkout. The crash-safety drives
-(``tools/resume_drive.py``, ``tools/incremental_kill_drive.py``) and the
-bench-scale engine test read it. Build it with::
+``.bench_cache/`` in the checkout. The crash-safety drive
+(``tools/incremental_kill_drive.py``) and the bench-scale engine test
+read it. Build it with::
 
     python tools/transcripts_table.py N_CONVS
 
