@@ -329,7 +329,11 @@ def call_tool(
         # verdicts (turn contiguity, role alternation, ts monotonicity)
         from pyspark.sql import functions as F
 
-        from datacheck_spark.transcripts import conversation_structure
+        from datacheck_spark.transcripts import (
+            _structure_rollup,
+            conversation_structure,
+            structure_violations,
+        )
 
         if args.get("path"):
             df = spark.read.parquet(args["path"])
@@ -358,29 +362,7 @@ def call_tool(
         out_df = conversation_structure(df, ts_col=ts_col).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        summary = (
-            out_df.agg(
-                F.count(F.lit(1)).alias("conversations"),
-                F.sum((~F.col("conv_pass")).cast("long")).alias("failing"),
-                F.sum((~F.col("contiguous")).cast("long")).alias(
-                    "non_contiguous"
-                ),
-                F.sum((~F.col("roles_alternate")).cast("long")).alias(
-                    "role_repeats"
-                ),
-                F.sum((~F.col("ts_monotonic")).cast("long")).alias(
-                    "ts_regressions"
-                ),
-                F.sum((~F.col("tool_turns_paired")).cast("long")).alias(
-                    "unpaired_tool_convs"
-                ),
-                F.sum((~F.col("no_empty_assistant")).cast("long")).alias(
-                    "empty_assistant_convs"
-                ),
-            )
-            .collect()[0]
-            .asDict()
-        )
+        summary = _structure_rollup(out_df).first().asDict()
         max_rows = int(args.get("max_return_rows", 1000))
         failing = [
             r.asDict()
@@ -389,8 +371,6 @@ def call_tool(
             .limit(max_rows)
             .collect()
         ]
-        from datacheck_spark.transcripts import structure_violations
-
         violations = [
             r.asDict()
             for r in structure_violations(df, ts_col=ts_col)

@@ -344,7 +344,11 @@ def cmd_transcripts(args) -> int:
             for t in out["trend"]
             if t["batch"] in fresh
         ) else 0
-    df = spark.read.parquet(args.data)
+    # every data file under the table, as the store lists it: appends
+    # landed in plain subdirectories (``append_000/``) are read too,
+    # and partition directories add no columns (``per_day_verdicts``
+    # derives its day from ``ts``)
+    df = spark.read.option("recursiveFileLookup", "true").parquet(args.data)
     report = checker.run(df)
     out = {
         "total_turns": report.total_turns,
@@ -356,25 +360,9 @@ def cmd_transcripts(args) -> int:
         "anomaly_count": report.anomaly_count,
     }
     if args.structure:
-        from pyspark.sql import functions as F
+        from datacheck_spark.transcripts import structure_summary
 
-        from datacheck_spark.transcripts import conversation_structure
-
-        sdf = conversation_structure(df)
-        row = sdf.agg(
-            F.count(F.lit(1)).alias("conversations"),
-            F.sum((~F.col("conv_pass")).cast("long")).alias("failing"),
-            F.sum((~F.col("contiguous")).cast("long")).alias(
-                "non_contiguous"
-            ),
-            F.sum((~F.col("roles_alternate")).cast("long")).alias(
-                "role_repeats"
-            ),
-            F.sum((~F.col("ts_monotonic")).cast("long")).alias(
-                "ts_regressions"
-            ),
-        ).collect()[0]
-        out["structure"] = row.asDict()
+        out["structure"] = structure_summary(df).first().asDict()
     if getattr(args, "conv_dedup", False):
         from pyspark.sql import functions as F
 

@@ -2220,7 +2220,7 @@ def daily_verdicts_transcripts(spark, sf_dir):
     a AS (
       SELECT conv_id,
              count(*)::BIGINT AS n_turns,
-             (min(turn_idx) = 0) AS starts,
+             COALESCE(min(turn_idx) = 0, TRUE) AS starts,
              (COALESCE(sum(dup_turn), 0) = 0) AS nodup,
              (COALESCE(sum(gap_turn), 0) = 0) AS nogap,
              (COALESCE(sum(role_repeat), 0) = 0) AS roles_alternate,
@@ -2243,7 +2243,9 @@ def conv_structure_transcripts(spark, sf_dir):
     """Cross-turn conversation-structure verdicts (contiguous turn_idx,
     role alternation, ts monotonicity) — batch rules a per-row pass
     cannot express; oracle re-derives every flag with DuckDB window
-    functions under the same stable turn ordering."""
+    functions under the same stable turn ordering, and the start of
+    the turn sequence as ``min(turn_idx) = 0`` (vacuous when every
+    turn_idx is null) rather than through the ``turn_start`` rule."""
     from datacheck_spark.transcripts import conversation_structure
 
     df = transcripts_table(spark)
@@ -2267,9 +2269,14 @@ def conv_structure_transcripts(spark, sf_dir):
       )
     )
     SELECT conv_id, turn_idx, rule_id, observed FROM (
-      SELECT conv_id, turn_idx, 'duplicate_turn' AS rule_id,
-             'turn_idx ' || turn_idx || ' repeats' AS observed,
-             (prev_idx IS NOT NULL AND turn_idx = prev_idx) AS hit
+      SELECT conv_id, turn_idx, 'turn_start' AS rule_id,
+             'first turn_idx ' || turn_idx || ' (expected 0)' AS observed,
+             (prev_idx IS NULL AND turn_idx <> 0) AS hit
+      FROM o
+      UNION ALL
+      SELECT conv_id, turn_idx, 'duplicate_turn',
+             'turn_idx ' || turn_idx || ' repeats',
+             (prev_idx IS NOT NULL AND turn_idx = prev_idx)
       FROM o
       UNION ALL
       SELECT conv_id, turn_idx, 'turn_gap',

@@ -355,7 +355,6 @@ class ValidationEngine:
         compute_distribution: bool = True,
         detect_anomalies: bool = True,
         reference_df: Optional[DataFrame] = None,
-        persist: bool = True,
     ) -> CheckResult:
         """Full check pipeline mirroring ``DataChecker.check``
         (``checker.py:78-181``): fused rules → summary; then dup groups,
@@ -375,9 +374,7 @@ class ValidationEngine:
         )
 
         rules = self.compile(df)
-        annotated = self.annotate(df, rules=rules)
-        if persist:
-            annotated = annotated.persist()
+        annotated = self.annotate(df, rules=rules).persist()
         data = annotated.select(*df.columns)
         try:
             # the distribution aggregates ride on the summary job; the
@@ -443,5 +440,4 @@ class ValidationEngine:
                 )
             return result
         finally:
-            if persist:
-                annotated.unpersist()
+            annotated.unpersist()

@@ -49,16 +49,6 @@ def orphan_rows(
     return non_null.join(dim_sel, on=list(fact_keys), how="left_anti")
 
 
-def orphan_count(
-    fact: DataFrame,
-    fact_keys: Union[str, Sequence[str]],
-    dim: DataFrame,
-    dim_keys: Union[str, Sequence[str], None] = None,
-    broadcast_dim: Optional[bool] = None,
-) -> int:
-    return orphan_rows(fact, fact_keys, dim, dim_keys, broadcast_dim).count()
-
-
 def referential_report(
     fact: DataFrame,
     fact_keys: Union[str, Sequence[str]],

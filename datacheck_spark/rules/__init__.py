@@ -6,5 +6,4 @@ from datacheck_spark.rules.compiler import (  # noqa: F401
     get_sft_ruleset,
     get_preference_ruleset,
     get_annotation_ruleset,
-    get_transcript_ruleset,
 )

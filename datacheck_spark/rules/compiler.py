@@ -535,55 +535,6 @@ def get_annotation_ruleset() -> RuleSet:
     return rs
 
 
-def get_transcript_ruleset(
-    roles: Optional[Sequence[str]] = None,
-) -> RuleSet:
-    """Production ruleset for the transcripts table (BASELINE.json
-    ``input_hint``): structural checks on (conv_id, turn_idx, role, text)
-    plus the default text-quality rules, all fused into one pass.
-    """
-    from datacheck_spark.schema import TRANSCRIPT_ROLES
-
-    roles = list(roles or TRANSCRIPT_ROLES)
-    rs = RuleSet("transcript")
-
-    def _key_present(df, schema):
-        return CompiledRule(
-            "key_present",
-            "conv_id/turn_idx present",
-            Severity.ERROR,
-            F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull(),
-            F.concat_ws(
-                "/",
-                F.coalesce(F.col("conv_id"), F.lit("∅")),
-                F.coalesce(F.col("turn_idx").cast("string"), F.lit("∅")),
-            ),
-        )
-
-    def _role_valid(df, schema):
-        return CompiledRule(
-            "role_valid",
-            "role in vocabulary",
-            Severity.ERROR,
-            F.col("role").isNotNull() & F.col("role").isin(roles),
-            F.col("role"),
-        )
-
-    def _turn_idx_nonneg(df, schema):
-        return CompiledRule(
-            "turn_idx_nonneg",
-            "turn_idx >= 0",
-            Severity.ERROR,
-            F.col("turn_idx").isNull() | (F.col("turn_idx") >= 0),
-            F.col("turn_idx").cast("string"),
-        )
-
-    rs.add_rule(RuleDef("key_present", "conv_id/turn_idx present", Severity.ERROR, _key_present))
-    rs.add_rule(RuleDef("role_valid", "role in vocabulary", Severity.ERROR, _role_valid))
-    rs.add_rule(RuleDef("turn_idx_nonneg", "turn_idx >= 0", Severity.ERROR, _turn_idx_nonneg))
-    return rs
-
-
 # --- YAML rule compiler (reference rules.py:223-339, §2.3) ----------------
 
 

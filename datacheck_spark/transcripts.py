@@ -24,6 +24,7 @@ data — only aggregate rows and bounded violation samples.
 from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 from typing import Any, Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datacheck_spark.schema import Severity, TRANSCRIPT_ROLES, ValidationSchema
-from datacheck_spark.engine import ValidationEngine, HAS_ERROR, RULE_PREFIX
+from datacheck_spark.engine import ValidationEngine, HAS_ERROR
 from datacheck_spark.rules.compiler import (
     CompiledRule,
     RuleDef,
@@ -275,22 +276,133 @@ def per_day_verdicts(
     )
 
 
+#: the columns of :func:`structure_summary` after ``conversations``:
+#: how many conversations fail each verdict
+_ROLLUP = (
+    ("failing", "conv_pass"),
+    ("non_contiguous", "contiguous"),
+    ("role_repeats", "roles_alternate"),
+    ("ts_regressions", "ts_monotonic"),
+    ("unpaired_tool_convs", "tool_turns_paired"),
+    ("empty_assistant_convs", "no_empty_assistant"),
+)
+
+
+def _structure_rules(df: DataFrame, ts_col: str):
+    """The cross-turn rules, each written once: the text-free slim
+    frame (see :func:`_structure_slim_cols`) with the previous turn's
+    turn_idx, role and ts from ONE lag window on (conv_id; turn_idx,
+    role, ts), and a list of ``(rule_id, verdict, condition,
+    observed)`` over that frame, where ``verdict`` names the column of
+    :func:`conversation_structure` that the rule fails.
+
+    Every rule anchors at one turn; a pair rule anchors at the LATER
+    turn of the offending pair and ``observed`` records the prev→cur
+    values. ``turn_start`` fires on the first non-null turn_idx of a
+    conversation when it is not 0 (nulls sort first, so that is the
+    one row whose ``prev_idx`` is null and ``turn_idx`` is not).
+    Conditions may be null; a null condition has not fired."""
+    w = Window.partitionBy("conv_id").orderBy(
+        F.col("turn_idx").asc(), F.col("role").asc(), F.col(ts_col).asc()
+    )
+    # each lag computed once, however many rules read it
+    framed = df.select(*_structure_slim_cols(df, ts_col)).select(
+        "*",
+        F.lag("turn_idx").over(w).alias("__prev_idx"),
+        F.lag("role").over(w).alias("__prev_role"),
+        F.lag(ts_col).over(w).alias("__prev_ts"),
+    )
+    prev_idx, prev_role, prev_ts = (
+        F.col("__prev_idx"), F.col("__prev_role"), F.col("__prev_ts")
+    )
+    idx, role, ts = F.col("turn_idx"), F.col("role"), F.col(ts_col)
+
+    def obs(*parts):
+        return F.concat_ws(
+            "", *[F.lit(p) if isinstance(p, str) else p for p in parts]
+        )
+
+    return framed, [
+        (
+            "turn_start",
+            "contiguous",
+            prev_idx.isNull() & (idx != 0),
+            obs("first turn_idx ", idx.cast("string"), " (expected 0)"),
+        ),
+        (
+            "duplicate_turn",
+            "contiguous",
+            prev_idx.isNotNull() & (idx == prev_idx),
+            obs("turn_idx ", idx.cast("string"), " repeats"),
+        ),
+        (
+            "turn_gap",
+            "contiguous",
+            prev_idx.isNotNull() & (idx > prev_idx + 1),
+            obs(
+                "prev turn_idx ", prev_idx.cast("string"), " -> ",
+                idx.cast("string"),
+            ),
+        ),
+        (
+            "role_repeat",
+            "roles_alternate",
+            prev_role.isNotNull() & (role == prev_role),
+            obs("role ", role, " repeats"),
+        ),
+        (
+            "ts_regression",
+            "ts_monotonic",
+            prev_ts.isNotNull() & (ts < prev_ts),
+            obs("ts ", ts.cast("string"), " < prev ", prev_ts.cast("string")),
+        ),
+        (
+            "unpaired_tool_turn",
+            "tool_turns_paired",
+            (role == "tool")
+            & ~F.coalesce(prev_role == "assistant", F.lit(False)),
+            obs("tool turn follows ", F.coalesce(prev_role, F.lit("start"))),
+        ),
+        (
+            "empty_assistant_turn",
+            "no_empty_assistant",
+            F.col("__empty"),
+            obs(
+                "assistant text blank (len ",
+                F.coalesce(F.col("__tlen").cast("string"), F.lit("null")),
+                ")",
+            ),
+        ),
+    ]
+
+
 def conversation_structure(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Per-conversation structural verdicts over multi-turn transcripts
-    (cross-turn rules the per-row fused pass cannot express):
+    (cross-turn rules the per-row fused pass cannot express). Each
+    verdict is true when none of its rules of
+    :func:`structure_violations` fired in the conversation:
 
     - ``contiguous``: turn_idx runs 0..n-1 with no gaps or duplicates
+      (``turn_start``, ``duplicate_turn``, ``turn_gap``)
     - ``roles_alternate``: no two consecutive turns share a role
+      (``role_repeat``)
     - ``ts_monotonic``: timestamps never regress along the turn order
+      (``ts_regression``)
     - ``tool_turns_paired``: every ``tool``-role turn directly follows
-      an ``assistant`` turn (a tool result with no assistant call
-      before it is an orphaned tool turn — the cross-turn counterpart
-      of the tool-NAME referential check in :class:`TranscriptChecker`)
+      an ``assistant`` turn (``unpaired_tool_turn``; a tool result with
+      no assistant call before it is an orphaned tool turn — the
+      cross-turn counterpart of the tool-NAME referential check in
+      :class:`TranscriptChecker`)
     - ``no_empty_assistant``: no ``assistant`` turn has null or
-      whitespace-only text (an empty completion is a training-data
-      defect even where blank user/tool turns might be tolerated)
-    - ``conv_pass``: all of the above
+      whitespace-only text (``empty_assistant_turn``; an empty
+      completion is a training-data defect even where blank user/tool
+      turns might be tolerated)
+    - ``conv_pass``: all of the above, i.e. the conversation has no
+      violation row
 
+    So every failing verdict has a violation row, and verdicts are
+    never null: a conversation whose every turn_idx is null is
+    ``contiguous`` (no rule can fire on a null turn_idx).
     ``no_empty_assistant`` needs the ``text`` column; when absent the
     flag is trivially true so the output schema is stable.
 
@@ -317,74 +429,32 @@ def conversation_structure(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     At 10^12 turns this runs per conv_bucket partition exactly like
     the fused rule pass.
     """
-    slim = df.select(*_structure_slim_cols(df, ts_col))
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(), F.col("role").asc(), F.col(ts_col).asc()
-    )
-    prev_idx = F.lag("turn_idx").over(w)
-    prev_role = F.lag("role").over(w)
-    prev_ts = F.lag(ts_col).over(w)
-    cur_idx, cur_role, cur_ts = (
-        F.col("turn_idx"), F.col("role"), F.col(ts_col)
-    )
-    unpaired = (cur_role == "tool") & ~F.coalesce(
-        prev_role == "assistant", F.lit(False)
-    )
-    flags = slim.select(
+    framed, rules = _structure_rules(df, ts_col)
+    flags = framed.select(
         "conv_id",
-        "turn_idx",
-        (prev_idx.isNotNull() & (cur_idx == prev_idx))
-        .cast("int").alias("__dup_turn"),
-        (prev_idx.isNotNull() & (cur_idx > prev_idx + 1))
-        .cast("int").alias("__gap_turn"),
-        (prev_role.isNotNull() & (cur_role == prev_role))
-        .cast("int").alias("__role_repeat"),
-        (prev_ts.isNotNull() & (cur_ts < prev_ts))
-        .cast("int").alias("__ts_regress"),
-        F.coalesce(unpaired, F.lit(False))
-        .cast("int").alias("__unpaired_tool"),
-        F.col("__empty").cast("int").alias("__empty_asst"),
+        *[F.coalesce(c, F.lit(False)).alias(rid) for rid, _, c, _ in rules],
     )
+    by_verdict: Dict[str, List[Column]] = {}
+    for rid, verdict, _, _ in rules:
+        by_verdict.setdefault(verdict, []).append(F.col(rid))
     agg = flags.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
-        (F.min("turn_idx") == 0).alias("__starts"),
-        (F.coalesce(F.sum("__dup_turn"), F.lit(0)) == 0).alias("__nodup"),
-        (F.coalesce(F.sum("__gap_turn"), F.lit(0)) == 0).alias("__nogap"),
-        (F.coalesce(F.sum("__role_repeat"), F.lit(0)) == 0).alias(
-            "roles_alternate"
-        ),
-        (F.coalesce(F.sum("__ts_regress"), F.lit(0)) == 0).alias(
-            "ts_monotonic"
-        ),
-        (F.coalesce(F.sum("__unpaired_tool"), F.lit(0)) == 0).alias(
-            "tool_turns_paired"
-        ),
-        (F.coalesce(F.sum("__empty_asst"), F.lit(0)) == 0).alias(
-            "no_empty_assistant"
-        ),
+        *[
+            (~F.bool_or(reduce(Column.__or__, fired))).alias(verdict)
+            for verdict, fired in by_verdict.items()
+        ],
     )
-    contiguous = F.col("__starts") & F.col("__nodup") & F.col("__nogap")
     return agg.select(
         "conv_id",
         "n_turns",
-        contiguous.alias("contiguous"),
-        "roles_alternate",
-        "ts_monotonic",
-        "tool_turns_paired",
-        "no_empty_assistant",
-        (
-            contiguous
-            & F.col("roles_alternate")
-            & F.col("ts_monotonic")
-            & F.col("tool_turns_paired")
-            & F.col("no_empty_assistant")
-        ).alias("conv_pass"),
+        *by_verdict,
+        reduce(Column.__and__, map(F.col, by_verdict)).alias("conv_pass"),
     )
 
 
 def _structure_slim_cols(df: DataFrame, ts_col: str) -> list:
-    """Narrow pre-shuffle projection for the structure passes:
-    ``(conv_id, turn_idx, role, ts, __empty[, __tlen])`` — the text
+    """Narrow pre-shuffle projection for the structure rules:
+    ``(conv_id, turn_idx, role, ts, __empty, __tlen)`` — the text
     payload is reduced to the empty-assistant boolean (and its length,
     for violation ``observed`` strings) before the conv_id exchange,
     so the window sort never ships document bytes."""
@@ -408,102 +478,36 @@ def _structure_slim_cols(df: DataFrame, ts_col: str) -> list:
     ]
 
 
-
 def structure_violations(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Per-turn violation rows for the cross-turn structure rules, in
     the engine's violation-row shape ``(conv_id, turn_idx, rule_id,
     observed)`` (north rule: "violation rows (conv_id, turn_idx,
     rule_id, observed)").
 
-    Rules: ``turn_gap`` (turn_idx jumps by >1), ``duplicate_turn``
-    (same turn_idx as the previous row), ``role_repeat`` (same role as
+    Rules: ``turn_start`` (the first non-null turn_idx is not 0),
+    ``duplicate_turn`` (same turn_idx as the previous row),
+    ``turn_gap`` (turn_idx jumps by >1), ``role_repeat`` (same role as
     the previous turn), ``ts_regression`` (timestamp earlier than the
     previous turn), ``unpaired_tool_turn`` (a ``tool`` turn whose
     previous turn is not an ``assistant`` turn), ``empty_assistant_turn``
     (an ``assistant`` turn with null/whitespace-only text). Each pair
     rule anchors at the LATER turn of the offending pair; ``observed``
-    records the prev→cur values.
+    records the prev→cur values. A conversation fails a verdict of
+    :func:`conversation_structure` exactly when it has a row here for
+    one of that verdict's rules: both are built from the one rule list
+    of ``_structure_rules``.
 
     Same single text-free shuffle shape as
-    :func:`conversation_structure` — one lag window over (conv_id,
-    stable (turn_idx, role, ts) order) on the narrow pre-shuffle
-    projection, then a filter; the output is ∝ violation rate, not
-    input size. The emitted row multiset is order-deterministic for
-    the same reason the verdicts are (see
+    :func:`conversation_structure` — the lag window on the narrow
+    pre-shuffle projection, then a filter; the output is ∝ violation
+    rate, not input size. The emitted row multiset is
+    order-deterministic for the same reason the verdicts are (see
     :func:`conversation_structure`): every ``observed`` string is
     built from turn_idx/role/ts/text-length, all invariant across
     (turn_idx, role)-tie arrangements under the ts tie-break.
     """
-    df = df.select(*_structure_slim_cols(df, ts_col))
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(), F.col("role").asc(), F.col(ts_col).asc()
-    )
-    prev_idx = F.lag("turn_idx").over(w)
-    prev_role = F.lag("role").over(w)
-    prev_ts = F.lag(ts_col).over(w)
-    cur_idx, cur_role, cur_ts = (
-        F.col("turn_idx"), F.col("role"), F.col(ts_col)
-    )
-    checks = [
-        (
-            "duplicate_turn",
-            prev_idx.isNotNull() & (cur_idx == prev_idx),
-            F.concat_ws(
-                "", F.lit("turn_idx "), cur_idx.cast("string"),
-                F.lit(" repeats"),
-            ),
-        ),
-        (
-            "turn_gap",
-            prev_idx.isNotNull() & (cur_idx > prev_idx + 1),
-            F.concat_ws(
-                "", F.lit("prev turn_idx "), prev_idx.cast("string"),
-                F.lit(" -> "), cur_idx.cast("string"),
-            ),
-        ),
-        (
-            "role_repeat",
-            prev_role.isNotNull() & (cur_role == prev_role),
-            F.concat_ws(
-                "", F.lit("role "), cur_role, F.lit(" repeats"),
-            ),
-        ),
-        (
-            "ts_regression",
-            prev_ts.isNotNull() & (cur_ts < prev_ts),
-            F.concat_ws(
-                "", F.lit("ts "), cur_ts.cast("string"),
-                F.lit(" < prev "), prev_ts.cast("string"),
-            ),
-        ),
-    ]
-    unpaired = (cur_role == "tool") & ~F.coalesce(
-        prev_role == "assistant", F.lit(False)
-    )
-    checks.append(
-        (
-            "unpaired_tool_turn",
-            F.coalesce(unpaired, F.lit(False)),
-            F.concat_ws(
-                "", F.lit("tool turn follows "),
-                F.coalesce(prev_role, F.lit("start")),
-            ),
-        )
-    )
-    checks.append(
-        (
-            "empty_assistant_turn",
-            F.col("__empty"),
-            F.concat_ws(
-                "", F.lit("assistant text blank (len "),
-                F.coalesce(
-                    F.col("__tlen").cast("string"), F.lit("null")
-                ),
-                F.lit(")"),
-            ),
-        )
-    )
-    flagged = df.select(
+    framed, rules = _structure_rules(df, ts_col)
+    flagged = framed.select(
         "conv_id",
         "turn_idx",
         F.filter(
@@ -516,7 +520,7 @@ def structure_violations(df: DataFrame, ts_col: str = "ts") -> DataFrame:
                             obs.alias("observed"),
                         ),
                     )
-                    for rid, cond, obs in checks
+                    for rid, _, cond, obs in rules
                 ]
             ),
             lambda s: s.isNotNull(),
@@ -536,17 +540,32 @@ def structure_violations(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     )
 
 
+def _structure_rollup(verdicts: DataFrame) -> DataFrame:
+    """One-row rollup of a :func:`conversation_structure` frame: the
+    number of conversations and, per :data:`_ROLLUP` column, how many
+    fail that verdict."""
+    return verdicts.agg(
+        F.count(F.lit(1)).alias("conversations"),
+        *[
+            F.sum((~F.col(verdict)).cast("long")).alias(name)
+            for name, verdict in _ROLLUP
+        ],
+    )
+
+
 def structure_summary(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """One-row rollup of :func:`conversation_structure` (total
-    conversations, failing conversations) — the cross-turn half of the
-    flagship suite; the ``perfbench`` ``transcripts`` workload runs it
+    """One-row rollup of :func:`conversation_structure`:
+    ``conversations``, then ``failing`` (any verdict false),
+    ``non_contiguous``, ``role_repeats``, ``ts_regressions``,
+    ``unpaired_tool_convs`` and ``empty_assistant_convs`` (the
+    conversations failing each verdict). The CLI's ``transcripts
+    --structure`` prints it and the API's
+    ``check_conversation_structure`` returns the same rollup as its
+    ``summary``. The ``perfbench`` ``transcripts`` workload runs it
     with :meth:`TranscriptChecker.run` in each whole-table verdict, so
     the measured operation is the north-rule shape: per-row rules +
     cross-turn structure verdicts in one run."""
-    return conversation_structure(df, ts_col=ts_col).agg(
-        F.count(F.lit(1)).alias("conversations"),
-        F.sum((~F.col("conv_pass")).cast("long")).alias("failing_convs"),
-    )
+    return _structure_rollup(conversation_structure(df, ts_col=ts_col))
 
 
 #: fingerprint field separator / null marker (control chars that the
@@ -636,89 +655,61 @@ def transcript_rule_defs() -> List[RuleDef]:
     (the reference applies text rules to every string field of a
     sample; for transcripts the sample's content IS the text column)."""
 
-    def _key_present(df, schema):
-        return CompiledRule(
-            "key_present",
-            "conv_id/turn_idx present",
-            Severity.ERROR,
-            F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull(),
-        )
+    def rule(rule_id, name, severity, passed, observed=None):
+        """A rule written once: ``passed(schema)`` and ``observed()``
+        build its Columns when the rule set is compiled."""
 
-    def _turn_nonneg(df, schema):
-        return CompiledRule(
-            "turn_idx_nonneg",
-            "turn_idx >= 0",
-            Severity.ERROR,
-            F.col("turn_idx").isNull() | (F.col("turn_idx") >= 0),
-            F.col("turn_idx").cast("string"),
-        )
+        def build(df, schema):
+            return CompiledRule(
+                rule_id, name, severity, passed(schema),
+                observed() if observed else None,
+            )
 
-    def _role_valid(df, schema):
-        return CompiledRule(
-            "role_valid",
-            "role in vocabulary",
-            Severity.ERROR,
-            F.col("role").isNotNull() & F.col("role").isin(TRANSCRIPT_ROLES),
-            F.col("role"),
-        )
+        return RuleDef(rule_id, name, severity, build)
 
-    def _text_non_empty(df, schema):
-        c = F.col("text")
-        return CompiledRule(
-            "text_non_empty",
-            "text non-empty",
-            Severity.ERROR,
-            c.isNotNull() & ~T.py_blank(c),
-            F.substring(c, 1, 80),
-        )
-
-    def _text_length(df, schema):
-        c = F.col("text")
-        return CompiledRule(
-            "text_length_bounds",
-            "text length bounds",
-            Severity.WARNING,
-            c.isNull()
-            | F.length(c).between(schema.min_length, schema.max_length),
-            F.length(c).cast("string"),
-        )
-
-    def _pii(df, schema):
-        return CompiledRule(
-            "pii_detection",
-            "PII in text",
-            Severity.WARNING,
-            T.pii_clean(F.col("text")),
-            F.substring(F.col("text"), 1, 80),
-        )
-
-    def _garbled(df, schema):
-        return CompiledRule(
-            "garbled_text",
-            "garbled text",
-            Severity.WARNING,
-            T.garbled_clean(F.col("text")),
-            F.substring(F.col("text"), 1, 80),
-        )
-
-    def _repetitive(df, schema):
-        return CompiledRule(
-            "repetitive_text",
-            "repetitive text",
-            Severity.WARNING,
-            T.repetitive_clean(F.col("text")),
-            F.substring(F.col("text"), 1, 80),
-        )
+    def head():
+        return F.substring(F.col("text"), 1, 80)
 
     return [
-        RuleDef("key_present", "conv_id/turn_idx present", Severity.ERROR, _key_present),
-        RuleDef("turn_idx_nonneg", "turn_idx >= 0", Severity.ERROR, _turn_nonneg),
-        RuleDef("role_valid", "role in vocabulary", Severity.ERROR, _role_valid),
-        RuleDef("text_non_empty", "text non-empty", Severity.ERROR, _text_non_empty),
-        RuleDef("text_length_bounds", "text length bounds", Severity.WARNING, _text_length),
-        RuleDef("pii_detection", "PII in text", Severity.WARNING, _pii),
-        RuleDef("garbled_text", "garbled text", Severity.WARNING, _garbled),
-        RuleDef("repetitive_text", "repetitive text", Severity.WARNING, _repetitive),
+        rule(
+            "key_present", "conv_id/turn_idx present", Severity.ERROR,
+            lambda s: F.col("conv_id").isNotNull()
+            & F.col("turn_idx").isNotNull(),
+        ),
+        rule(
+            "turn_idx_nonneg", "turn_idx >= 0", Severity.ERROR,
+            lambda s: F.col("turn_idx").isNull() | (F.col("turn_idx") >= 0),
+            lambda: F.col("turn_idx").cast("string"),
+        ),
+        rule(
+            "role_valid", "role in vocabulary", Severity.ERROR,
+            lambda s: F.col("role").isNotNull()
+            & F.col("role").isin(TRANSCRIPT_ROLES),
+            lambda: F.col("role"),
+        ),
+        rule(
+            "text_non_empty", "text non-empty", Severity.ERROR,
+            lambda s: F.col("text").isNotNull() & ~T.py_blank(F.col("text")),
+            head,
+        ),
+        rule(
+            "text_length_bounds", "text length bounds", Severity.WARNING,
+            lambda s: F.col("text").isNull()
+            | F.length("text").between(s.min_length, s.max_length),
+            lambda: F.length("text").cast("string"),
+        ),
+        rule(
+            "pii_detection", "PII in text", Severity.WARNING,
+            lambda s: T.pii_clean(F.col("text")), head,
+        ),
+        rule(
+            "garbled_text", "garbled text", Severity.WARNING,
+            lambda s: T.garbled_clean(F.col("text")), head,
+        ),
+        rule(
+            "repetitive_text", "repetitive text", Severity.WARNING,
+            lambda s: T.repetitive_clean(F.col("text")), head,
+        ),
     ]
 
 
@@ -750,14 +741,16 @@ class TranscriptChecker:
     """End-to-end transcript validation: ONE cached scan feeding
     (a) the fused rule projection + summary agg,
     (b) uniqueness on (conv_id, turn_idx),
-    (c) referential tool check (broadcast anti-join),
+    (c) the orphan-tool check, a conditional sum over the tool
+        vocabulary folded into (a),
     (d) text-length anomaly detection.
 
     This is the job shape the north rule prescribes; each consumer is a
     single shuffle (or none).
     """
 
-    # the turn key: violation rows, duplicate keys and anomaly samples
+    # the turn key: violation rows, duplicate keys and the incremental
+    # store's row identity
     key_cols = ("conv_id", "turn_idx")
 
     def __init__(
@@ -784,38 +777,26 @@ class TranscriptChecker:
         )
 
     def run(
-        self,
-        df: DataFrame,
-        tools_df: Optional[DataFrame] = None,
-        detect_anomalies: bool = True,
-        anomaly_keys: bool = False,
-        persist: bool = True,
+        self, df: DataFrame, detect_anomalies: bool = True
     ) -> TranscriptCheckReport:
-        """``anomaly_keys=True`` additionally collects a bounded sample
-        of offending (conv_id, turn_idx) keys per anomalous field — two
-        extra filter+sort jobs; off by default (counts and bounds are
-        enough for the report; full rows live in the violations
-        table)."""
         from datacheck_spark import anomaly as A
         from datacheck_spark import dedup as D
-        from datacheck_spark import referential as R
 
         rules = self.engine.compile(df)
         annotated = self.engine.annotate(df, rules=rules)
         # after the fused pass only the text LENGTH is consumed (anomaly)
         # — dropping the text payload shrinks the persisted frame ~4×
-        slim = annotated.withColumn(
-            "__text_len", F.length("text").cast("double")
-        ).drop("text")
-        if persist:
-            slim = slim.persist()
-        annotated = slim
+        annotated = (
+            annotated.withColumn(
+                "__text_len", F.length("text").cast("double")
+            )
+            .drop("text")
+            .persist()
+        )
         try:
-            # the orphan-tool referential check broadcasts a tiny
-            # vocabulary, so it folds into the SAME summary aggregation
-            # as a conditional sum — one job fewer per run; the general
-            # anti-join (referential.orphan_count) remains the path for
-            # large dimension tables
+            # the orphan-tool check broadcasts a tiny vocabulary, so it
+            # folds into the SAME summary aggregation as a conditional
+            # sum — no separate join job
             orphan_expr = F.sum(
                 (
                     F.col("tool").isNotNull()
@@ -837,6 +818,7 @@ class TranscriptChecker:
                 error_count=base.error_count,
                 warning_count=base.warning_count,
                 rule_results=base.rule_results,
+                orphan_tools=int(base.extras.get("orphan_tools") or 0),
             )
             if base.total_samples == 0:
                 return report
@@ -848,27 +830,10 @@ class TranscriptChecker:
                 or 0
             )
 
-            if tools_df is None:
-                # vocabulary-sized dimension: the orphan count came out
-                # of the summary agg above (no separate join job)
-                report.orphan_tools = int(
-                    base.extras.get("orphan_tools") or 0
-                )
-            else:
-                # arbitrary dimension table: broadcast/SMJ anti-join
-                report.orphan_tools = R.orphan_count(
-                    annotated.where(F.col("tool").isNotNull()),
-                    "tool",
-                    tools_df,
-                    "tool_name",
-                    broadcast_dim=True,
-                )
-
             if detect_anomalies:
                 raw = A.detect_anomalies(
                     annotated,
                     cols=["__text_len", "turn_idx"],
-                    key_cols=list(self.key_cols) if anomaly_keys else None,
                     total=base.total_samples,
                 )
                 # present the precomputed length under the reference's
@@ -883,5 +848,4 @@ class TranscriptChecker:
                 )
             return report
         finally:
-            if persist:
-                annotated.unpersist()
+            annotated.unpersist()

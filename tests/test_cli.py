@@ -3,6 +3,8 @@
 
 import json
 
+from pyspark.sql import functions as F
+
 from datacheck_spark.cli import main
 
 
@@ -313,6 +315,43 @@ def test_transcripts_daily_verdicts_cli(spark, tmp_path, capsys):
     for r in days:
         assert set(r) == {"ts_day", "total", "failed", "pass_rate", "passed"}
         assert r["passed"] == (r["pass_rate"] >= 0.95)
+
+
+def test_transcripts_cli_report_reads_what_the_store_lists(
+    spark, tmp_path, capsys
+):
+    """`transcripts --checkpoint` and the full-table report that
+    follows it read the same files: on a table whose append landed in
+    a plain subdirectory (``base/``, ``append_000/``) and on a
+    ``write_transcripts_partitioned`` table, the report's total_turns
+    equals the store's live rows."""
+    from datacheck_spark.transcripts import (
+        generate_transcripts,
+        write_transcripts_partitioned,
+    )
+
+    df = generate_transcripts(spark, n_convs=60, turns_per_conv=4)
+    n_turns = df.count()
+    flat = tmp_path / "flat"
+    df.where(F.col("conv_bucket") < 16).write.parquet(str(flat / "base"))
+    df.where(F.col("conv_bucket") >= 16).write.parquet(
+        str(flat / "append_000")
+    )
+    part = tmp_path / "part"
+    write_transcripts_partitioned(df, str(part), n_buckets=4)
+    for table in (flat, part):
+        ckpt = tmp_path / f"ckpt_{table.name}"
+        rc = main(["transcripts", str(table), "--checkpoint", str(ckpt)])
+        lines = [
+            json.loads(ln)
+            for ln in capsys.readouterr().out.splitlines()
+            if ln.startswith("{")
+        ]
+        assert rc in (0, 1), table
+        store = next(ln for ln in lines if "live" in ln)
+        report = next(ln for ln in lines if "total_turns" in ln)
+        assert store["live"]["rows"] == n_turns, table
+        assert report["total_turns"] == store["live"]["rows"], table
 
 
 def _readme_commands():

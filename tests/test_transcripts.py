@@ -243,27 +243,32 @@ def test_conversation_structure_planted(spark):
 
 
 def test_conversation_structure_plan_shape(spark, transcripts):
-    """Plan invariants: ONE conv_id exchange shared by the lag window
-    and the per-conversation agg, and the window sort is TEXT-FREE —
-    the text payload is reduced to the __empty boolean before the
-    exchange, so document bytes never ship through the shuffle."""
+    """Plan invariants of the verdicts, the violation rows and the
+    rollup: ONE conv_id exchange (shared by the lag window and the
+    per-conversation agg), and the window sort is TEXT-FREE — the text
+    payload is reduced to the __empty boolean before the exchange, so
+    document bytes never ship through the shuffle."""
     import re
 
-    from datacheck_spark.transcripts import conversation_structure
-
-    plan = (
-        conversation_structure(transcripts)
-        ._jdf.queryExecution().executedPlan().toString()
+    from datacheck_spark.transcripts import (
+        conversation_structure,
+        structure_summary,
+        structure_violations,
     )
-    assert plan.count("Exchange hashpartitioning(conv_id") == 1, plan
-    # the stable order is (turn_idx, role, ts) — no text in the sort
-    assert re.search(
-        r"Window \[[^\]]*\], \[conv_id#\d+\], "
-        r"\[turn_idx#\d+ ASC NULLS FIRST, role#\d+ ASC NULLS FIRST, "
-        r"ts#\d+ ASC NULLS FIRST\]",
-        plan,
-    ), plan
-    assert not re.search(r"Sort \[[^\]]*text#", plan), plan
+
+    for fn in (conversation_structure, structure_violations, structure_summary):
+        plan = fn(transcripts)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning(conv_id") == 1, (
+            fn.__name__, plan,
+        )
+        # the stable order is (turn_idx, role, ts) — no text in the sort
+        assert re.search(
+            r"Window \[[^\]]*\], \[conv_id#\d+\], "
+            r"\[turn_idx#\d+ ASC NULLS FIRST, role#\d+ ASC NULLS FIRST, "
+            r"ts#\d+ ASC NULLS FIRST\]",
+            plan,
+        ), (fn.__name__, plan)
+        assert not re.search(r"Sort \[[^\]]*text#", plan), (fn.__name__, plan)
 
 
 def test_conversation_structure_tie_determinism(spark):
@@ -306,14 +311,18 @@ def test_conversation_structure_tie_determinism(spark):
     assert got["cln"]["conv_pass"] and got["cln"]["n_turns"] == 2
 
 
-def test_conversation_structure_differential_fuzz(spark):
-    """Seeded random conversations (gaps, duplicate idx, null roles/ts,
-    shuffled row order) vs a pure-Python model of the same semantics —
-    guards the tie-break ordering and three-valued NULL logic."""
+_TURN_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp"
+)
+
+
+def _fuzz_rows():
+    """The seeded structure corpus: 200 random conversations (gaps,
+    duplicate idx, null roles/text/ts, same-key rows with differing
+    text/ts) in shuffled row order."""
     import datetime as dt
     import random
-
-    from datacheck_spark.transcripts import conversation_structure
 
     rng = random.Random(20260818)
     t0 = dt.datetime(2026, 1, 1)
@@ -356,11 +365,19 @@ def test_conversation_structure_differential_fuzz(spark):
                 ))
         rows.extend(conv_rows)
     rng.shuffle(rows)  # input order must not matter
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    )
+    return rows
+
+
+def test_conversation_structure_differential_fuzz(spark):
+    """Seeded random conversations (gaps, duplicate idx, null roles/ts,
+    shuffled row order) vs a pure-Python model of the same semantics —
+    guards the tie-break ordering and three-valued NULL logic."""
+    import datetime as dt
+
+    from datacheck_spark.transcripts import conversation_structure
+
+    rows = _fuzz_rows()
+    df = spark.createDataFrame(rows, _TURN_SCHEMA)
     got = {r["conv_id"]: r.asDict() for r in conversation_structure(df).collect()}
 
     # pure-Python model (same stable order + SQL three-valued logic)
@@ -413,6 +430,144 @@ def test_conversation_structure_differential_fuzz(spark):
             and exp["no_empty_assistant"]
         )
         assert got[cid] == exp, (cid, got[cid], exp, rs)
+
+
+def test_structure_verdicts_match_violation_rows(spark):
+    """Verdicts and violation rows come from one rule list: on the fuzz
+    corpus plus a conversation starting at turn 1, a verdict is False
+    exactly when the conversation has a violation row for one of that
+    verdict's rules, and ``conv_pass`` is False exactly when it has any
+    row. A conversation whose every turn_idx is null is contiguous (no
+    rule fires on a null turn_idx); one whose first non-null turn_idx
+    is 1 gets a ``turn_start`` row there."""
+    import datetime as dt
+
+    from datacheck_spark.transcripts import (
+        conversation_structure,
+        structure_violations,
+    )
+
+    t0 = dt.datetime(2026, 1, 1)
+    rows = _fuzz_rows() + [
+        ("late", 1, "user", "hi", None, t0),
+        ("late", 2, "assistant", "yo", None, t0),
+        ("nul", None, "user", "hi", None, t0),
+        ("nul", None, "assistant", "yo", None, t0),
+        ("nul1", None, "user", "hi", None, t0),
+        ("nul1", 1, "assistant", "yo", None, t0),
+    ]
+    df = spark.createDataFrame(rows, _TURN_SCHEMA)
+    verdicts = {
+        r["conv_id"]: r.asDict() for r in conversation_structure(df).collect()
+    }
+    violations = structure_violations(df).collect()
+    fired = {cid: set() for cid in verdicts}
+    for r in violations:
+        fired[r["conv_id"]].add(r["rule_id"])
+    rules_of = {
+        "contiguous": {"turn_start", "duplicate_turn", "turn_gap"},
+        "roles_alternate": {"role_repeat"},
+        "ts_monotonic": {"ts_regression"},
+        "tool_turns_paired": {"unpaired_tool_turn"},
+        "no_empty_assistant": {"empty_assistant_turn"},
+    }
+    for cid, v in verdicts.items():
+        for verdict, rids in rules_of.items():
+            assert v[verdict] is (not fired[cid] & rids), (cid, verdict, fired[cid])
+        assert v["conv_pass"] is (not fired[cid]), (cid, fired[cid])
+    assert fired["late"] == {"turn_start"}
+    assert verdicts["nul"]["contiguous"] is True
+    assert verdicts["nul"]["conv_pass"] is True
+    assert fired["nul1"] == {"turn_start"}
+    (late,) = [
+        r for r in violations
+        if r["rule_id"] == "turn_start" and r["conv_id"] == "late"
+    ]
+    assert (late["turn_idx"], late["observed"]) == (
+        1, "first turn_idx 1 (expected 0)"
+    )
+
+
+def test_structure_oracles(spark, tmp_path, monkeypatch):
+    """``conv_structure_transcripts`` and
+    ``structure_violations_transcripts`` equal their DuckDB oracles,
+    order-insensitively, on the committed contract fixture and on a
+    planted table (the fuzz corpus plus late-starting and null-turn_idx
+    conversations, with whole-second timestamps)."""
+    import datetime as dt
+
+    duckdb = pytest.importorskip("duckdb")
+    from datacheck_spark import contract as C
+
+    def norm(v):
+        return v.isoformat() if hasattr(v, "isoformat") else v
+
+    def rows(records):
+        return sorted(
+            (tuple(norm(x) for x in r) for r in records),
+            key=lambda t: tuple((x is None, str(x)) for x in t),
+        )
+
+    def check(glob):
+        """Both queries against their oracles over ``glob``; returns
+        the violation rows."""
+        con = duckdb.connect()
+        con.sql("SET TimeZone = 'UTC'")
+        for name in ("conv_structure_transcripts",
+                     "structure_violations_transcripts"):
+            got = C.queries()[name](spark, None)
+            sql = C.oracle_sql()[name].replace(C._TRANSCRIPTS_GLOB, glob)
+            rel = con.sql(sql)
+            assert got.columns == rel.columns, name
+            want = rows(rel.fetchall())
+            assert rows(got.collect()) == want, (name, glob)
+        return want
+
+    # the fixture's planted duplicate keys give violation rows
+    assert check(C._TRANSCRIPTS_GLOB)
+
+    t0 = dt.datetime(2026, 1, 1)
+    planted = _fuzz_rows() + [
+        ("late", 1, "user", "hi", None, t0),
+        ("late", 2, "assistant", "", None, t0 + dt.timedelta(seconds=1)),
+        ("nul", None, "user", "hi", None, t0),
+        ("nul", None, "tool", "x", "tool_0", t0),
+        ("nul1", None, "user", "hi", None, t0),
+        ("nul1", 1, "user", "yo", None, t0),
+    ]
+    table = tmp_path / "planted"
+    spark.createDataFrame(planted, _TURN_SCHEMA).coalesce(1).write.parquet(
+        str(table)
+    )
+    monkeypatch.setattr(
+        C, "transcripts_table", lambda spark: spark.read.parquet(str(table))
+    )
+    viol = check(f"{table}/*.parquet")
+    assert {r[2] for r in viol} >= {
+        "turn_start", "duplicate_turn", "turn_gap", "role_repeat",
+        "ts_regression", "unpaired_tool_turn", "empty_assistant_turn",
+    }
+
+
+def test_api_structure_uses_the_one_rollup(spark, tmp_path):
+    """The API tool ``check_conversation_structure`` returns
+    ``structure_summary`` of its input as its summary, and its failing
+    conversations are exactly those with a violation row."""
+    from datacheck_spark import api
+    from datacheck_spark.transcripts import structure_summary
+
+    path = str(tmp_path / "fuzz")
+    spark.createDataFrame(_fuzz_rows(), _TURN_SCHEMA).write.parquet(path)
+    out = api.call_tool(
+        spark,
+        "check_conversation_structure",
+        {"path": path, "max_return_rows": 100000},
+    )
+    df = spark.read.parquet(path)
+    assert out["summary"] == structure_summary(df).first().asDict()
+    failing = {r["conv_id"] for r in out["failing_conversations"]}
+    assert len(failing) == out["summary"]["failing"] > 0
+    assert failing == {r["conv_id"] for r in out["violations"]}
 
 
 def test_structure_violations_planted(spark):

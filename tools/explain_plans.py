@@ -196,34 +196,64 @@ def main():
         ],
     )
 
-    # 8b. conversation-structure verdicts: ONE text-free hash exchange
-    # on conv_id shared by the lag window and the per-conversation agg
-    # (text reduces to the __empty boolean before the shuffle; ties
-    # order by ts, so no payload tie-break is needed)
+    # 8b. conversation-structure verdicts, violation rows and rollup
+    # (one rule list): ONE text-free hash exchange on conv_id shared by
+    # the lag window and the per-conversation agg (text reduces to the
+    # __empty boolean before the shuffle; ties order by ts, so no
+    # payload tie-break is needed)
     import re as _re
 
-    from datacheck_spark.transcripts import conversation_structure
+    from datacheck_spark.transcripts import (
+        conversation_structure,
+        structure_summary,
+        structure_violations,
+    )
+
+    # formatted mode puts the partitioning on an Arguments: line, not
+    # inline after "Exchange" — count the conv_id hash on its own
+    text_free_sort = (
+        "window sort is text-free (turn_idx, role, ts)",
+        lambda p: bool(_re.search(
+            r"\], \[conv_id#\d+\], "
+            r"\[turn_idx#\d+ ASC NULLS FIRST, "
+            r"role#\d+ ASC NULLS FIRST, "
+            r"ts#\d+ ASC NULLS FIRST\]", p))
+        and not _re.search(r"text#\d+ ASC", p),
+    )
     add(
         "conversation structure (window + agg, text-free exchange)",
         conversation_structure(tr),
         [
-            # formatted mode puts the partitioning on an Arguments:
-            # line, not inline after "Exchange" — count nodes and the
-            # conv_id hash separately
             (
                 "agg reuses the window's conv_id partitioning",
                 lambda p: len(_re.findall(r"\(\d+\) Exchange", p)) == 1
                 and p.count("hashpartitioning(conv_id") == 1,
             ),
+            text_free_sort,
+        ],
+    )
+    add(
+        "structure violation rows (window + unpivot, text-free exchange)",
+        structure_violations(tr),
+        [
             (
-                "window sort is text-free (turn_idx, role, ts)",
-                lambda p: bool(_re.search(
-                    r"\], \[conv_id#\d+\], "
-                    r"\[turn_idx#\d+ ASC NULLS FIRST, "
-                    r"role#\d+ ASC NULLS FIRST, "
-                    r"ts#\d+ ASC NULLS FIRST\]", p))
-                and not _re.search(r"text#\d+ ASC", p),
+                "one exchange, on conv_id",
+                lambda p: len(_re.findall(r"\(\d+\) Exchange", p)) == 1
+                and p.count("hashpartitioning(conv_id") == 1,
             ),
+            text_free_sort,
+        ],
+    )
+    add(
+        "structure rollup (verdicts + one-row agg)",
+        structure_summary(tr),
+        [
+            (
+                "one conv_id exchange, then the single-partition final agg",
+                lambda p: p.count("hashpartitioning(conv_id") == 1
+                and len(_re.findall(r"\(\d+\) Exchange", p)) == 2,
+            ),
+            text_free_sort,
         ],
     )
 
