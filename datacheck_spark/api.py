@@ -1,5 +1,6 @@
-"""Tool-call API surface: the reference's 11 MCP tools (plus two
-beyond-reference tools) as one dispatcher.
+"""Tool-call API surface: 19 tools as one dispatcher — the
+reference's 11 registered MCP tools, the 4 more its README describes
+and 4 beyond-reference tools.
 
 Reference: ``mcp_server.py:30-277`` registers 11 tools; ``call_tool``
 (``mcp_server.py:279-832``) dispatches to the engine. Here the same
@@ -14,13 +15,17 @@ check_drift, check_leakage, check_bias, check_coverage — plus the set
 its README additionally describes (README.md:372-384):
 compare_datasets, calculate_contribution, generate_report,
 diff_reports; beyond-reference: diagnose_skew (``skew.py``),
-suggest_rules (``suggest.py``). Path arguments (``data_path`` etc.)
-follow the reference; inline ``samples`` stay supported everywhere.
+suggest_rules (``suggest.py``), check_conversation_structure and
+dedup_conversations (``transcripts.py``). Path arguments
+(``data_path``, ``path``, ...) follow the reference and are opened by
+``sources.load_data``, as in the CLI; inline ``samples`` stay
+supported everywhere. A ``ruleset`` outside
+``rules.compiler.RULESET_NAMES`` raises ``ValueError``.
 """
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, List
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,8 +43,9 @@ def _df_for(
     path_key: str = "data_path",
 ):
     """Resolve a tool input to (df, embedded_schema): the reference's
-    MCP tools are PATH-based (``mcp_server.py:30-277``); inline
-    ``samples`` remain supported for transport-light callers."""
+    MCP tools are PATH-based (``mcp_server.py:30-277``) and a path is
+    opened by ``sources.load_data``; inline ``samples`` remain
+    supported for transport-light callers."""
     if args.get(path_key):
         from datacheck_spark import sources as SRC
 
@@ -55,40 +61,33 @@ def call_tool(
     data and let transports render)."""
     from datacheck_spark.engine import ValidationEngine
     from datacheck_spark.schema import ValidationSchema
-    from datacheck_spark.rules.compiler import (
-        RuleSet,
-        get_annotation_ruleset,
-        get_preference_ruleset,
-        get_sft_ruleset,
-    )
+    from datacheck_spark.rules.compiler import resolve_ruleset
 
     args = arguments or {}
 
-    def engine_for(ruleset_name: Optional[str], schema_dict) -> ValidationEngine:
-        rs = {
-            "sft": get_sft_ruleset,
-            "preference": get_preference_ruleset,
-            "annotation": get_annotation_ruleset,
-        }.get(ruleset_name or "default", RuleSet)()
+    def engine_for(schema_dict=None, schema_path=None) -> ValidationEngine:
+        """The engine for ``args["ruleset"]`` and the schema file at
+        ``schema_path`` (else ``schema_dict``)."""
+        schema = (
+            ValidationSchema.from_file(schema_path)
+            if schema_path
+            else ValidationSchema.from_dict(schema_dict)
+        )
         return ValidationEngine(
-            ruleset=rs, schema=ValidationSchema.from_dict(schema_dict or {})
+            ruleset=resolve_ruleset(args.get("ruleset")), schema=schema
         )
 
     if name == "check_data_quality":
         df, embedded = _df_for(spark, args)
-        schema_dict = args.get("schema") or embedded
-        if args.get("schema_path"):
-            import json as _json
-
-            with open(args["schema_path"], "r", encoding="utf-8") as f:
-                schema_dict = _json.load(f)
         if args.get("sample_count") or args.get("sample_rate"):
             from datacheck_spark import sources as SRC
 
             df, _ = SRC.sample_df(
                 df, args.get("sample_count"), args.get("sample_rate")
             )
-        engine = engine_for(args.get("ruleset"), schema_dict)
+        engine = engine_for(
+            args.get("schema") or embedded, args.get("schema_path")
+        )
         return engine.check(df).to_dict()
 
     if name == "infer_schema":
@@ -212,8 +211,7 @@ def call_tool(
         from datacheck_spark.report import to_markdown, to_json_report
 
         df = _df_from_samples(spark, args.get("samples", []))
-        engine = engine_for(args.get("ruleset"), args.get("schema"))
-        result = engine.check(df)
+        result = engine_for(args.get("schema")).check(df)
         fmt = args.get("format", "markdown")
         if fmt == "json":
             return to_json_report(result)
@@ -227,14 +225,11 @@ def call_tool(
         }
 
     if name == "diagnose_skew":
-        # beyond-reference 12th tool: pre-shuffle hot-key/salt report
+        # beyond-reference tool: pre-shuffle hot-key/salt report
         # (skew.py) over request samples or a table path
         from datacheck_spark.skew import diagnose_key_skew, partition_profile
 
-        if args.get("path"):
-            df = spark.read.parquet(args["path"])
-        else:
-            df = _df_from_samples(spark, args.get("samples", []))
+        df, _ = _df_for(spark, args, path_key="path")
         keys = args.get("key_fields") or []
         if not keys:
             raise ValueError("diagnose_skew requires key_fields")
@@ -275,19 +270,10 @@ def call_tool(
     if name == "batch_check_directory":
         from datacheck_spark import sources as SRC
 
-        engine = engine_for(args.get("ruleset"), None)
-        if args.get("schema_path"):
-            import json as _json
-
-            with open(args["schema_path"], "r", encoding="utf-8") as f:
-                engine = ValidationEngine(
-                    ruleset=engine.ruleset,
-                    schema=ValidationSchema.from_dict(_json.load(f)),
-                )
         return SRC.check_directory(
             spark,
             args["directory"],
-            engine=engine,
+            engine=engine_for(schema_path=args.get("schema_path")),
             patterns=SRC.split_patterns(args.get("pattern")),
         )
 
@@ -309,15 +295,12 @@ def call_tool(
         return out
 
     if name == "suggest_rules":
-        # beyond-reference 13th tool: profile → suggested validation
+        # beyond-reference tool: profile → suggested validation
         # config (suggest.py) over request samples or a table path;
         # output feeds check_data_quality's rules config / YAML compiler
         from datacheck_spark.suggest import suggest_rules
 
-        if args.get("path"):
-            df = spark.read.parquet(args["path"])
-        else:
-            df = _df_from_samples(spark, args.get("samples", []))
+        df, _ = _df_for(spark, args, path_key="path")
         return suggest_rules(
             df,
             enum_max_uniques=int(args.get("enum_max_uniques", 20)),
@@ -325,7 +308,7 @@ def call_tool(
         )
 
     if name == "check_conversation_structure":
-        # beyond-reference 14th tool: cross-turn transcript structure
+        # beyond-reference tool: cross-turn transcript structure
         # verdicts (turn contiguity, role alternation, ts monotonicity)
         from pyspark.sql import functions as F
 
@@ -335,10 +318,7 @@ def call_tool(
             structure_violations,
         )
 
-        if args.get("path"):
-            df = spark.read.parquet(args["path"])
-        else:
-            df = _df_from_samples(spark, args.get("samples", []))
+        df, _ = _df_for(spark, args, path_key="path")
         for required in ("conv_id", "turn_idx"):
             if required not in df.columns:
                 raise ValueError(
@@ -387,52 +367,36 @@ def call_tool(
         }
 
     if name == "dedup_conversations":
-        # beyond-reference 19th tool: conversation-LEVEL exact dedup —
+        # beyond-reference tool: conversation-LEVEL exact dedup —
         # groups of conversations whose entire ordered turn content is
         # identical (fingerprint = md5 over sorted per-turn md5s; ts
         # excluded so re-logged copies still match)
+        from pyspark.sql import functions as F
+
         from datacheck_spark.transcripts import (
+            conversation_dedup_summary,
             conversation_duplicates,
-            conversation_fingerprint,
         )
 
-        if args.get("path"):
-            df = spark.read.parquet(args["path"])
-        else:
-            df = _df_from_samples(spark, args.get("samples", []))
+        df, _ = _df_for(spark, args, path_key="path")
         for required in ("conv_id", "turn_idx"):
             if required not in df.columns:
                 raise ValueError(
                     f"dedup_conversations requires a '{required}' column"
                 )
-        from pyspark import StorageLevel
-        from pyspark.sql import functions as F
-
-        max_ids = int(args.get("max_ids", 5))
         max_rows = int(args.get("max_return_rows", 1000))
-        groups_df = conversation_duplicates(df, max_ids=max_ids).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        # one-row rollup over ALL groups (the returned list is capped)
-        tot = groups_df.agg(
-            F.count(F.lit(1)).alias("g"),
-            F.coalesce(F.sum("n_convs"), F.lit(0)).alias("d"),
-        ).first()
         groups = [
             r.asDict()
-            for r in groups_df.orderBy(
-                F.col("n_convs").desc(), "conv_fp"
-            ).limit(max_rows).collect()
+            for r in conversation_duplicates(
+                df, max_ids=int(args.get("max_ids", 5))
+            )
+            .orderBy(F.col("n_convs").desc(), "conv_fp")
+            .limit(max_rows)
+            .collect()
         ]
-        groups_df.unpersist()
-        n_convs = conversation_fingerprint(df).count()
         return {
-            "summary": {
-                "conversations": n_convs,
-                "duplicate_groups": int(tot["g"]),
-                "duplicate_conversations": int(tot["d"]),
-                "removable_conversations": int(tot["d"]) - int(tot["g"]),
-            },
+            # the rollup covers ALL groups; the returned list is capped
+            "summary": conversation_dedup_summary(df).first().asDict(),
             "duplicate_groups": groups,
         }
 

@@ -36,43 +36,24 @@ def _spark(app: str, master: Optional[str] = None):
 def cmd_check(args) -> int:
     from datacheck_spark import sources as SRC
     from datacheck_spark.engine import ValidationEngine
-    from datacheck_spark.rules.compiler import (
-        RuleSet,
-        get_annotation_ruleset,
-        get_preference_ruleset,
-        get_sft_ruleset,
-        ruleset_from_yaml,
-    )
+    from datacheck_spark.rules.compiler import resolve_ruleset
     from datacheck_spark.report import gate, save_report, to_markdown
     from datacheck_spark.schema import ValidationSchema
 
     spark = _spark("datacheck-check", args.master)
-    if args.rules_file:
-        ruleset = ruleset_from_yaml(args.rules_file)
-    elif args.ruleset == "sft":
-        ruleset = get_sft_ruleset()
-    elif args.ruleset == "preference":
-        ruleset = get_preference_ruleset()
-    elif args.ruleset == "annotation":
-        ruleset = get_annotation_ruleset()
-    else:
-        # "llm" = builtin rules + the llm_quality judge rule merged in
-        # after the fused pass (reference rules.py:478-498); "default"
-        # = builtins only
-        ruleset = RuleSet()
-
-    schema = ValidationSchema()
-    if args.schema:
-        with open(args.schema, "r", encoding="utf-8") as f:
-            schema = ValidationSchema.from_dict(json.load(f))
-
-    from pathlib import Path
+    # "llm" = builtin rules + the llm_quality judge rule merged in after
+    # the fused pass (reference rules.py:478-498)
+    ruleset = resolve_ruleset(args.ruleset, args.rules_file)
+    schema = (
+        ValidationSchema.from_file(args.schema)
+        if args.schema
+        else ValidationSchema()
+    )
 
     engine = ValidationEngine(ruleset=ruleset, schema=schema)
     paths = list(args.data) if isinstance(args.data, list) else [args.data]
     args.data = paths[0]
-    p = Path(args.data)
-    if len(paths) > 1 or p.is_dir():
+    if len(paths) > 1 or SRC.is_batch_directory(args.data):
         if len(paths) > 1:
             # pre-commit hook surface: explicit changed-file list.
             # Flags that only apply to directory discovery or
@@ -129,11 +110,7 @@ def cmd_check(args) -> int:
             return 1
         return 0
 
-    if p.suffix.lower() == ".parquet" or args.input_format == "parquet":
-        df = spark.read.parquet(args.data)
-        embedded = {}
-    else:
-        df, embedded = SRC.load_data(spark, args.data)
+    df, embedded = SRC.load_data(spark, args.data)
     if embedded and not args.schema:
         schema = ValidationSchema.from_dict(embedded)
         engine = ValidationEngine(ruleset=ruleset, schema=schema)
@@ -298,11 +275,12 @@ def cmd_suggest(args) -> int:
 
 
 def cmd_drift(args) -> int:
+    from datacheck_spark import sources as SRC
     from datacheck_spark.drift import drift_report
 
     spark = _spark("datacheck-drift", args.master)
-    a = spark.read.parquet(args.data_a)
-    b = spark.read.parquet(args.data_b)
+    a, _ = SRC.load_data(spark, args.data_a)
+    b, _ = SRC.load_data(spark, args.data_b)
     rep = drift_report(a, b)
     print(json.dumps(rep, indent=2, ensure_ascii=False, default=str))
     return 0
@@ -314,6 +292,7 @@ def cmd_transcripts(args) -> int:
     ``--checkpoint DIR`` validates the files not yet in the store's
     manifest (all of them on the first run, resuming by file group
     after a kill; only appended or replaced files later)."""
+    from datacheck_spark import sources as SRC
     from datacheck_spark.transcripts import TranscriptChecker
 
     spark = _spark("datacheck-transcripts", args.master)
@@ -348,7 +327,7 @@ def cmd_transcripts(args) -> int:
     # landed in plain subdirectories (``append_000/``) are read too,
     # and partition directories add no columns (``per_day_verdicts``
     # derives its day from ``ts``)
-    df = spark.read.option("recursiveFileLookup", "true").parquet(args.data)
+    df, _ = SRC.load_data(spark, args.data)
     report = checker.run(df)
     out = {
         "total_turns": report.total_turns,
@@ -363,23 +342,12 @@ def cmd_transcripts(args) -> int:
         from datacheck_spark.transcripts import structure_summary
 
         out["structure"] = structure_summary(df).first().asDict()
-    if getattr(args, "conv_dedup", False):
-        from pyspark.sql import functions as F
+    if args.conv_dedup:
+        from datacheck_spark.transcripts import conversation_dedup_summary
 
-        from datacheck_spark.transcripts import conversation_duplicates
-
-        drow = conversation_duplicates(df).agg(
-            F.count(F.lit(1)).alias("duplicate_groups"),
-            F.coalesce(F.sum("n_convs"), F.lit(0)).alias(
-                "duplicate_conversations"
-            ),
-        ).collect()[0]
-        out["conversation_dedup"] = {
-            "duplicate_groups": int(drow["duplicate_groups"]),
-            "duplicate_conversations": int(
-                drow["duplicate_conversations"]
-            ),
-        }
+        out["conversation_dedup"] = (
+            conversation_dedup_summary(df).first().asDict()
+        )
     if getattr(args, "daily_verdicts", False):
         from datacheck_spark.transcripts import per_day_verdicts
 
@@ -427,10 +395,7 @@ def cmd_pack(args) -> int:
     from datacheck_spark.packing import assign_packs, pack_stats
 
     spark = _spark("datacheck-pack", args.master)
-    if args.data.endswith(".parquet"):
-        df = spark.read.parquet(args.data)
-    else:
-        df, _ = SRC.load_data(spark, args.data)
+    df, _ = SRC.load_data(spark, args.data)
     packed = assign_packs(
         df, args.token_col, budget=args.budget, order_col=args.order_col
     )
@@ -457,22 +422,9 @@ def cmd_pack(args) -> int:
 
 def cmd_rules(args) -> int:
     """List the rules of a ruleset (reference ``cli.py`` rules cmd)."""
-    from datacheck_spark.rules.compiler import (
-        RuleSet,
-        get_annotation_ruleset,
-        get_preference_ruleset,
-        get_sft_ruleset,
-        ruleset_from_yaml,
-    )
+    from datacheck_spark.rules.compiler import resolve_ruleset
 
-    if args.rules_file:
-        rs = ruleset_from_yaml(args.rules_file)
-    else:
-        rs = {
-            "sft": get_sft_ruleset,
-            "preference": get_preference_ruleset,
-            "annotation": get_annotation_ruleset,
-        }.get(args.ruleset, RuleSet)()
+    rs = resolve_ruleset(args.ruleset, args.rules_file)
     for rd in rs.rules.values():
         state = "on " if rd.enabled else "off"
         print(f"[{state}] {rd.severity.value:8} {rd.rule_id}: {rd.name}")
@@ -557,18 +509,17 @@ def cmd_stream(args) -> int:
     successor of the reference's watch mode (``cli.py:500-598``, a
     debounced re-run loop): readStream → fused rules → violations sink
     + console pass-rate windows."""
+    from datacheck_spark import sources as SRC
     from datacheck_spark import streaming as ST
 
     spark = _spark("datacheck-stream", args.master)
-    schema = spark.read.parquet(args.data).schema \
-        if args.format == "parquet" else None
-    if schema is None:
-        import json as _json
+    if args.format == "parquet":
+        schema = SRC.load_data(spark, args.data)[0].schema
+    else:
+        from pyspark.sql.types import StructType
 
         with open(args.schema_file, "r", encoding="utf-8") as f:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(_json.load(f))
+            schema = StructType.fromJson(json.load(f))
     annotated = ST.stream_validate(spark, args.data, schema, fmt=args.format)
     q = ST.start_violations_sink(
         annotated,
@@ -596,17 +547,12 @@ def cmd_contribute(args) -> int:
     from datacheck_spark.schema import ValidationSchema
 
     spark = _spark("datacheck-contribute", args.master)
-    p = Path(args.responses)
-    if p.suffix.lower() == ".parquet":
-        df, embedded = spark.read.parquet(args.responses), {}
-    else:
-        df, embedded = SRC.load_data(spark, args.responses)
-    schema = ValidationSchema()
-    if args.schema:
-        with open(args.schema, "r", encoding="utf-8") as f:
-            schema = ValidationSchema.from_dict(json.load(f))
-    elif embedded:
-        schema = ValidationSchema.from_dict(embedded)
+    df, embedded = SRC.load_data(spark, args.responses)
+    schema = (
+        ValidationSchema.from_file(args.schema)
+        if args.schema
+        else ValidationSchema.from_dict(embedded)
+    )
 
     contribs = calculate_contributions(
         df, schema=schema, dataset_created_at=args.created_at
@@ -647,7 +593,7 @@ def cmd_watch(args) -> int:
     """Debounced re-check on file change (reference ``cli.py:500-598``).
 
     The reference uses watchdog; this container has no inotify
-    dependency, so the watcher polls mtimes of supported files — the
+    dependency, so the watcher polls the mtimes of the watched files — the
     debounce/re-run semantics are the same. For continuous production
     validation prefer ``stream`` (Structured Streaming, exactly-once
     sink); watch is the interactive dev loop."""
@@ -656,29 +602,20 @@ def cmd_watch(args) -> int:
 
     from datacheck_spark import sources as SRC
     from datacheck_spark.engine import ValidationEngine
-    from datacheck_spark.rules.compiler import (
-        RuleSet,
-        get_annotation_ruleset,
-        get_preference_ruleset,
-        get_sft_ruleset,
-    )
-
+    from datacheck_spark.rules.compiler import resolve_ruleset
     from datacheck_spark.schema import ValidationSchema
 
     spark = _spark("datacheck-watch", args.master)
-    ruleset = {
-        "sft": get_sft_ruleset,
-        "preference": get_preference_ruleset,
-        "annotation": get_annotation_ruleset,
-    }.get(args.ruleset, RuleSet)()
+    ruleset = resolve_ruleset(args.ruleset)
     if args.ruleset == "llm":
         # the dev loop re-checks on every save; run the builtin rules
         # here and point at `check --ruleset llm` for judged runs
         print("watch: using builtin rules; run `check --ruleset llm` for LLM judging")
-    schema = ValidationSchema()
-    if getattr(args, "schema", None):
-        with open(args.schema, "r", encoding="utf-8") as f:
-            schema = ValidationSchema.from_dict(json.load(f))
+    schema = (
+        ValidationSchema.from_file(args.schema)
+        if args.schema
+        else ValidationSchema()
+    )
     engine = ValidationEngine(ruleset=ruleset, schema=schema)
     path = Path(args.data)
 
@@ -688,13 +625,12 @@ def cmd_watch(args) -> int:
                 str(f): f.stat().st_mtime
                 for f in sorted(path.rglob("*"))
                 if f.is_file()
-                and f.suffix.lower() in SRC.SUPPORTED_EXTENSIONS
             }
         return {str(path): path.stat().st_mtime if path.exists() else 0}
 
     def run_check():
         try:
-            if path.is_dir():
+            if SRC.is_batch_directory(str(path)):
                 out = SRC.check_directory(spark, str(path), engine=engine)
                 print(
                     f"checked {out.get('total_files', 0)} files: "
@@ -736,6 +672,8 @@ def cmd_watch(args) -> int:
 
 
 def main(argv=None) -> int:
+    from datacheck_spark.rules.compiler import RULESET_NAMES
+
     ap = argparse.ArgumentParser(prog="datacheck-spark")
     ap.add_argument("--master", default=None)
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -745,7 +683,7 @@ def main(argv=None) -> int:
     # (one invocation, N files) — a single path keeps the original
     # file-or-directory semantics
     c.add_argument("data", nargs="+")
-    c.add_argument("--ruleset", default="default")
+    c.add_argument("--ruleset", choices=RULESET_NAMES, default="default")
     c.add_argument("--rules-file")
     c.add_argument("-s", "--schema")
     # None = markdown on stdout, extension-detected on -o saves;
@@ -755,7 +693,6 @@ def main(argv=None) -> int:
         "-f", "--format",
         choices=("markdown", "json", "html"), default=None,
     )
-    c.add_argument("--input-format", default=None)
     c.add_argument("--threshold", type=float, default=0.5)
     c.add_argument("--strict", action="store_true")
     c.add_argument("--sample", type=int, default=None)
@@ -808,7 +745,7 @@ def main(argv=None) -> int:
     sg.set_defaults(fn=cmd_suggest)
 
     r = sub.add_parser("rules")
-    r.add_argument("--ruleset", default="default")
+    r.add_argument("--ruleset", choices=RULESET_NAMES, default="default")
     r.add_argument("--rules-file")
     r.set_defaults(fn=cmd_rules)
 
@@ -861,7 +798,7 @@ def main(argv=None) -> int:
     w = sub.add_parser("watch")
     w.add_argument("data")
     w.add_argument("-s", "--schema")
-    w.add_argument("--ruleset", default="default")
+    w.add_argument("--ruleset", choices=RULESET_NAMES, default="default")
     w.add_argument("--debounce", type=float, default=1.0)
     w.add_argument("--timeout", type=float, default=0)
     w.add_argument("--max-checks", type=int, default=0)

@@ -18,7 +18,6 @@ scales like any other input.
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 from typing import Optional
 
@@ -68,8 +67,7 @@ def check_from_datarecipe(
         return CheckResult(
             success=False, error=f"Schema not found: {schema_path}"
         )
-    with open(schema_path, "r", encoding="utf-8") as f:
-        schema = ValidationSchema.from_dict(json.load(f))
+    schema = ValidationSchema.from_file(str(schema_path))
 
     resolved = resolve_data_path(analysis_dir, data_path)
     if resolved is None:

@@ -436,7 +436,6 @@ def near_duplicate_pairs_lsh(
     ngram_n: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
-    persist_base: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash banding + exact Jaccard
     verification — the 10^12-row replacement for the O(n²) join.
@@ -483,10 +482,9 @@ def near_duplicate_pairs_lsh(
     # without persistence each consumer re-runs the n-gram walk over
     # the full corpus. MEMORY_AND_DISK spills rather than OOMs at
     # scale; the ContextCleaner unpersists once the frame is GC'd.
-    if persist_base:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
     band_entries = base.select(
         "__id",
         F.explode(

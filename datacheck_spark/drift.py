@@ -11,8 +11,8 @@ distance distributed (one groupBy on value + one cumulative window);
 ``psi`` computes the Population Stability Index over quantile bins
 derived from the reference side. Both avoid collecting row data — only
 bin/step tables sized by distinct values (KS) or bin count (PSI) are
-shuffled. For 10^12-row inputs, pass ``approx_bins`` to pre-bin KS into
-a bounded histogram first (t-digest-style bounded sketch).
+shuffled. KS orders the distinct values globally, which is fine up to
+~millions of distinct values.
 """
 
 from __future__ import annotations
@@ -137,15 +137,13 @@ def ks_statistic(
     a: DataFrame,
     b: DataFrame,
     col: str,
-    approx_bins: Optional[int] = None,
 ) -> float:
     """Exact two-sample Kolmogorov–Smirnov distance, distributed.
 
     Plan: union both sides tagged, groupBy value (one shuffle) counting
     per-side occurrences, then a cumulative-sum window ordered by value
     and max |ECDF_a − ECDF_b|. The window is a single global ordering —
-    fine up to ~millions of *distinct* values; pass ``approx_bins`` to
-    quantile-bin first (bounded histogram sketch) at extreme scale.
+    fine up to ~millions of *distinct* values.
     """
     va = a.select(F.col(col).cast("double").alias("v")).where(
         F.col("v").isNotNull()
@@ -156,18 +154,6 @@ def ks_statistic(
     na, nb = va.count(), vb.count()
     if na == 0 or nb == 0:
         return 0.0
-
-    if approx_bins:
-        edges = va.unionAll(vb).approxQuantile(
-            "v", [i / approx_bins for i in range(1, approx_bins)], 1e-4
-        )
-        edges = sorted(set(edges))
-        # quantile-bin via when-chain (bounded, codegen-friendly)
-        expr = F.lit(len(edges))
-        for i in range(len(edges) - 1, -1, -1):
-            expr = F.when(F.col("v") <= edges[i], F.lit(i)).otherwise(expr)
-        va = va.select(expr.alias("v"))
-        vb = vb.select(expr.alias("v"))
 
     tagged = va.select("v", F.lit(1).alias("__a"), F.lit(0).alias("__b")).unionAll(
         vb.select("v", F.lit(0).alias("__a"), F.lit(1).alias("__b"))
@@ -246,44 +232,11 @@ def psi(
     return float(total)
 
 
-def drift_report_sketch(
-    a: DataFrame,
-    b: DataFrame,
-    numeric_cols: Sequence[str],
-    compression: int = 100,
-    bins: int = 10,
-) -> Dict[str, Any]:
-    """KS/PSI from per-partition t-digest sketches (the north_star's
-    literal prescription): each side builds one mergeable digest per
-    column (constant state per partition, Arrow-vectorized), and the
-    statistics come from the merged digests — no exact global sort or
-    second scan. Use at 10^12-row scale; ``drift_report`` computes the
-    exact variants for parity-scale data."""
-    from datacheck_spark.tdigest import (
-        column_tdigest,
-        ks_from_digests,
-        psi_from_digests,
-    )
-
-    out: Dict[str, Any] = {"fields": {}, "method": "tdigest"}
-    for c in numeric_cols:
-        da = column_tdigest(a, c, compression)
-        db = column_tdigest(b, c, compression)
-        out["fields"][c] = {
-            "ks": round(ks_from_digests(da, db), 6),
-            "psi": round(psi_from_digests(da, db, bins=bins), 6),
-            "count_a": da.total_weight,
-            "count_b": db.total_weight,
-        }
-    return out
-
-
 def drift_report(
     a: DataFrame,
     b: DataFrame,
     numeric_cols: Optional[Sequence[str]] = None,
     bins: int = 10,
-    ks_approx_bins: Optional[int] = None,
 ) -> Dict[str, Any]:
     """Summary deltas + KS/PSI per numeric column (the north_star
     extension; summary part is reference-parity)."""
@@ -299,7 +252,7 @@ def drift_report(
     for c in cols:
         report["fields"].setdefault(c, {})
         report["fields"][c]["ks"] = round(
-            ks_statistic(a, b, c, approx_bins=ks_approx_bins), 6
+            ks_statistic(a, b, c), 6
         )
         report["fields"][c]["psi"] = round(psi(a, b, c, bins=bins), 6)
     return report

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from typing import Any, Dict, List, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -60,6 +60,17 @@ def _token_set(col):
     )
 
 
+def _first_match(pairs: DataFrame) -> DataFrame:
+    """Keep one train match per test row: the lowest train id, a
+    deterministic stand-in for the reference's first-in-order match."""
+    w = Window.partitionBy("test_id").orderBy("train_id")
+    return (
+        pairs.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def near_leakage_pairs(
     train: DataFrame,
     test: DataFrame,
@@ -69,19 +80,16 @@ def near_leakage_pairs(
     threshold: float = 0.9,
     max_train: int = 5000,
     max_test: int = 500,
-    first_match_only: bool = True,
 ) -> DataFrame:
     """Near-duplicate leakage: token-set Jaccard in [threshold, 1.0)
     (``mcp_server.py:680-684`` — exact matches are excluded, they belong
     to the exact check). Caps preserved as config; at scale switch to
     ``dedup.near_duplicate_pairs_lsh`` over the two sides.
 
-    Returns (test_id, train_id, sim); with ``first_match_only`` keeps
-    one train match per test row (lowest train id — deterministic
-    stand-in for the reference's first-in-order match).
+    Returns (test_id, train_id, sim), one train match per test row
+    (see :func:`_first_match`).
     """
     from datacheck_spark.dedup import jaccard
-    from pyspark.sql import Window
 
     tr = (
         train.select(
@@ -108,14 +116,7 @@ def near_leakage_pairs(
         )
         .where((F.col("sim") >= threshold) & (F.col("sim") < 1.0))
     )
-    if first_match_only:
-        w = Window.partitionBy("test_id").orderBy("train_id")
-        pairs = (
-            pairs.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    return pairs
+    return _first_match(pairs)
 
 
 def near_leakage_pairs_lsh(
@@ -127,7 +128,6 @@ def near_leakage_pairs_lsh(
     threshold: float = 0.9,
     num_hashes: int = 64,
     bands: int = 16,
-    first_match_only: bool = True,
 ) -> DataFrame:
     """Banded MinHash twin of :func:`near_leakage_pairs` — the uncapped
     scale path: one (band, bucket) exchange instead of the train×test
@@ -139,8 +139,6 @@ def near_leakage_pairs_lsh(
     exact path on any realistic input (the contract query's oracle IS
     the exact-pair SQL). Returns (test_id, train_id, sim).
     """
-    from pyspark.sql import Window
-
     from datacheck_spark.dedup import jaccard, minhash_signature
 
     rows_per_band = num_hashes // bands
@@ -200,14 +198,7 @@ def near_leakage_pairs_lsh(
         )
         .where((F.col("sim") >= threshold) & (F.col("sim") < 1.0))
     )
-    if first_match_only:
-        w = Window.partitionBy("test_id").orderBy("train_id")
-        pairs = (
-            pairs.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    return pairs
+    return _first_match(pairs)
 
 
 def check_leakage(

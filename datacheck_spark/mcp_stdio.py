@@ -8,7 +8,7 @@ protocol surface needed for a tools server is small:
 - ``initialize``                → capabilities + serverInfo
 - ``notifications/initialized`` → (notification, no response)
 - ``ping``                      → {}
-- ``tools/list``                → the 17 tool descriptors
+- ``tools/list``                → the 19 tool descriptors (``api.TOOLS``)
 - ``tools/call``                → dispatch to ``api.call_tool``
 
 Reference parity: ``mcp_server.py:837-844`` serves the first 11 tools

@@ -758,3 +758,31 @@ def ruleset_from_yaml(path: str) -> RuleSet:
     from pathlib import Path
 
     return ruleset_from_config(config, name=Path(path).stem)
+
+
+# --- ruleset names (reference cli.py --ruleset, mcp_server.py ruleset) ----
+
+#: the one name → preset map. ``llm`` compiles the builtins; ``check
+#: --ruleset llm`` adds its judge rule after the fused pass.
+_PRESETS: Dict[str, Callable[[], RuleSet]] = {
+    "default": RuleSet,
+    "llm": RuleSet,
+    "sft": get_sft_ruleset,
+    "preference": get_preference_ruleset,
+    "annotation": get_annotation_ruleset,
+}
+RULESET_NAMES = tuple(_PRESETS)
+
+
+def resolve_ruleset(
+    name: Optional[str] = None, rules_file: Optional[str] = None
+) -> RuleSet:
+    """The RuleSet a ruleset name (None = ``default``) and an optional
+    YAML ``rules_file`` stand for; the file wins over the name. An
+    unknown name raises ``ValueError`` naming the valid ones."""
+    name = name or "default"
+    if name not in _PRESETS:
+        raise ValueError(
+            f"unknown ruleset {name!r}; valid: {', '.join(RULESET_NAMES)}"
+        )
+    return ruleset_from_yaml(rules_file) if rules_file else _PRESETS[name]()

@@ -14,6 +14,7 @@ ts timestamp)``.
 from __future__ import annotations
 
 import enum
+import json
 from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional
 
@@ -96,6 +97,13 @@ class ValidationSchema:
             max_length=constraints.get("max_length", 100000),
             scoring_rubric=d.get("scoring_rubric", []),
         )
+
+    @classmethod
+    def from_file(cls, path: str) -> "ValidationSchema":
+        """Read a schema JSON file (the ``--schema`` / ``schema_path``
+        argument of every command and tool)."""
+        with open(path, "r", encoding="utf-8") as f:
+            return cls.from_dict(json.load(f))
 
     @property
     def valid_scores(self) -> set:

@@ -213,20 +213,3 @@ def ivf_topk(
         .where(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
     )
-
-
-def pairwise_within_threshold(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """All pairs with cosine ≥ threshold via cell-bucketed self-join —
-    the embedding near-dup sweep (delegates to dedup module)."""
-    from datacheck_spark.dedup import embedding_near_duplicates
-
-    return embedding_near_duplicates(
-        df, vec_col, id_col, threshold=threshold, lsh_planes=planes, seed=seed
-    )

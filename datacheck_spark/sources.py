@@ -30,20 +30,29 @@ SUPPORTED_EXTENSIONS = {".json", ".jsonl", ".csv"}  # checker.py:41
 def load_data(
     spark: SparkSession, path: str
 ) -> Tuple[DataFrame, Dict[str, Any]]:
-    """Load one data file, detecting format by extension
-    (``checker.py:183-218``). Returns (df, embedded_schema)."""
-    p = Path(path)
-    suffix = p.suffix.lower()
+    """Open one dataset — the way every command and tool opens a path.
+    Returns (df, embedded_schema).
+
+    ``.jsonl``, ``.csv``, ``.orc`` and ``.json`` paths are read by
+    extension (``checker.py:183-218``). Any other path is a parquet
+    table read the way ``incremental.list_data_files`` lists one
+    (``recursiveFileLookup``): a ``.parquet`` file, a directory at any
+    depth (``base/`` + ``append_k/``) or an ``s3a:``/``hdfs:`` URI.
+    Partition directories (``k=v/``) add no columns."""
+    suffix = Path(path).suffix.lower()
     if suffix == ".jsonl":
         return spark.read.json(path), {}
     if suffix == ".csv":
         # all-string typing preserved (reference DictReader semantics)
         return spark.read.csv(path, header=True, inferSchema=False), {}
-    if suffix == ".parquet":
-        return spark.read.parquet(path), {}
     if suffix == ".orc":
         # columnar beyond-reference format (Spark-native, typed)
         return spark.read.orc(path), {}
+    if suffix != ".json":
+        return (
+            spark.read.option("recursiveFileLookup", "true").parquet(path),
+            {},
+        )
     # .json: list or envelope; the envelope/schema sidecar is read on
     # the driver (it is metadata-scale, not data-scale)
     with open(path, "r", encoding="utf-8") as f:
@@ -59,6 +68,25 @@ def load_data(
     return df, schema
 
 
+def _supported_files(root: Path, patterns: Optional[List[str]] = None):
+    """The JSON/JSONL/CSV files under ``root`` a batch check reads."""
+    return sorted(
+        f
+        for pat in (patterns or [f"*{e}" for e in SUPPORTED_EXTENSIONS])
+        for f in root.rglob(pat)
+        if f.is_file() and f.suffix.lower() in SUPPORTED_EXTENSIONS
+    )
+
+
+def is_batch_directory(path: str) -> bool:
+    """True when ``path`` is a local directory holding JSON/JSONL/CSV
+    files: ``check``/``watch`` then check it file by file
+    (:func:`check_directory`, reference ``checker.py:280-365``). Any
+    other path is one dataset opened by :func:`load_data`."""
+    root = Path(path)
+    return root.is_dir() and bool(_supported_files(root))
+
+
 def load_glob(
     spark: SparkSession,
     dir_path: str,
@@ -71,14 +99,7 @@ def load_glob(
     JSONL and JSON-list files go through one ``spark.read.json``; CSVs
     through one ``spark.read.csv``; the union is by column name.
     """
-    root = Path(dir_path)
-    files = sorted(
-        f
-        for pat in (patterns or [f"*{e}" for e in SUPPORTED_EXTENSIONS])
-        for f in root.rglob(pat)
-        if f.is_file() and f.suffix.lower() in SUPPORTED_EXTENSIONS
-    )
-    return load_file_list(spark, files)
+    return load_file_list(spark, _supported_files(Path(dir_path), patterns))
 
 
 def load_file_list(spark: SparkSession, files: Sequence[Path]) -> DataFrame:

@@ -210,8 +210,8 @@ def drift_monitor_batch_fn(
     """``foreachBatch`` function comparing each micro-batch's
     distribution of ``value_col`` against a fixed baseline t-digest.
 
-    The per-batch digest is the same mergeable bounded-state sketch the
-    batch drift path uses (``tdigest.column_tdigest``: ≤ 2×compression
+    The per-batch digest is a mergeable bounded-state sketch
+    (``tdigest.column_tdigest``: ≤ 2×compression
     doubles per partition regardless of batch size), so the monitor's
     memory is constant at any throughput. Each batch emits one result
     dict — ``{batch_id, n, ks, psi, drifted}`` — to ``on_result``
@@ -257,8 +257,9 @@ def start_drift_monitor(
     KS/PSI against a fixed baseline digest (built offline with
     ``tdigest.column_tdigest`` over the reference dataset).
 
-    The streaming analogue of ``drift.drift_report_sketch`` — drift on
-    arriving data without ever holding more than the sketch state.
+    KS/PSI come from the merged digests (``tdigest.ks_from_digests``,
+    ``psi_from_digests``) — drift on arriving data without ever holding
+    more than the sketch state.
     """
     return (
         stream_df.writeStream.foreachBatch(

@@ -646,6 +646,32 @@ def conversation_duplicates(
     ).select("conv_fp", "n_convs", "n_turns", "conv_ids")
 
 
+def conversation_dedup_summary(df: DataFrame) -> DataFrame:
+    """One-row rollup of conversation-level exact dedup over every
+    conversation: ``conversations``, ``duplicate_groups`` (fingerprints
+    shared by more than one conversation), ``duplicate_conversations``
+    (the conversations in those groups) and ``removable_conversations``
+    (all but one per group). The CLI's ``transcripts --conv-dedup``
+    prints it and the API's ``dedup_conversations`` returns it as its
+    ``summary``."""
+    sizes = (
+        conversation_fingerprint(df)
+        .groupBy("conv_fp")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    dup = F.col("n") > 1
+    return sizes.agg(
+        F.coalesce(F.sum("n"), F.lit(0)).alias("conversations"),
+        F.count(F.when(dup, 1)).alias("duplicate_groups"),
+        F.coalesce(F.sum(F.when(dup, F.col("n"))), F.lit(0)).alias(
+            "duplicate_conversations"
+        ),
+    ).withColumn(
+        "removable_conversations",
+        F.col("duplicate_conversations") - F.col("duplicate_groups"),
+    )
+
+
 # --- flagship pipeline ----------------------------------------------------
 
 

@@ -74,6 +74,50 @@ def test_unknown_tool_raises(spark):
         tool_api.call_tool(spark, "nope", {})
 
 
+def test_unknown_ruleset_raises(spark):
+    """A ``ruleset`` outside ``RULESET_NAMES`` raises, naming the valid
+    ones, instead of silently running the builtins."""
+    for tool in ("check_data_quality", "generate_report"):
+        with pytest.raises(ValueError, match="sfT.*default, llm, sft"):
+            tool_api.call_tool(
+                spark, tool, {"samples": SAMPLES, "ruleset": "sfT"}
+            )
+    out = tool_api.call_tool(
+        spark, "check_data_quality", {"samples": SAMPLES, "ruleset": "sft"}
+    )
+    assert "instruction_quality" in out["rule_results"]
+
+
+def test_path_tools_read_every_row_of_an_appended_table(
+    spark, appended_table
+):
+    """Every ``path``/``data_path`` tool opens a ``base/`` +
+    ``append_000/`` table through ``sources.load_data``: every row."""
+    from pyspark.sql import functions as F
+
+    path, df = appended_table
+    n_rows = df.count()
+    n_convs = df.select("conv_id").distinct().count()
+
+    def call(name, **args):
+        return tool_api.call_tool(spark, name, args)
+
+    assert call("infer_schema", data_path=path)["sample_count"] == n_rows
+    assert call("check_coverage", data_path=path)["total_samples"] == n_rows
+    skew = call("diagnose_skew", path=path, key_fields=["conv_id"])
+    assert skew["key_skew"]["total_rows"] == n_rows
+    structure = call("check_conversation_structure", path=path)
+    assert structure["summary"]["conversations"] == n_convs
+    dedup = call("dedup_conversations", path=path)
+    assert dedup["summary"]["conversations"] == n_convs
+    (bucket,) = [
+        r for r in call("suggest_rules", path=path)["rules"]
+        if r["field"] == "conv_bucket" and r["check"] == "number_range"
+    ]
+    lo, hi = df.agg(F.min("conv_bucket"), F.max("conv_bucket")).first()
+    assert (bucket["min"], bucket["max"]) == (lo, hi)
+
+
 def test_http_server_round_trip(spark):
     from datacheck_spark.server import serve
 

@@ -3,6 +3,7 @@
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from datacheck_spark.cli import main
@@ -290,7 +291,113 @@ def test_transcripts_conv_dedup_cli(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc in (0, 1)
     d = out["conversation_dedup"]
-    assert d == {"duplicate_groups": 0, "duplicate_conversations": 0}
+    assert d == {
+        "conversations": 60,
+        "duplicate_groups": 0,
+        "duplicate_conversations": 0,
+        "removable_conversations": 0,
+    }
+
+
+def test_conv_dedup_cli_and_api_print_one_summary(spark, tmp_path, capsys):
+    """`transcripts --conv-dedup` and the API's ``dedup_conversations``
+    print the same rollup (``transcripts.conversation_dedup_summary``)
+    on one table: a, b identical; c, d, e identical; f unique."""
+    import datetime as dt
+
+    from datacheck_spark import api
+
+    t0 = dt.datetime(2026, 1, 1)
+
+    def conv(cid, reply):
+        return [
+            (cid, 0, "user", "hello there", None, t0),
+            (cid, 1, "assistant", reply, None, t0),
+        ]
+
+    rows = [
+        turn
+        for cid, reply in [("a", "hi"), ("b", "hi"), ("c", "yo"),
+                           ("d", "yo"), ("e", "yo"), ("f", "hey")]
+        for turn in conv(cid, reply)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    table = tmp_path / "t"
+    df.where(F.col("conv_id") < "d").write.parquet(str(table / "base"))
+    df.where(F.col("conv_id") >= "d").write.parquet(str(table / "append_000"))
+    rc = main(["transcripts", str(table), "--conv-dedup"])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc in (0, 1)
+    expected = {
+        "conversations": 6,
+        "duplicate_groups": 2,
+        "duplicate_conversations": 5,
+        "removable_conversations": 3,
+    }
+    assert out["conversation_dedup"] == expected
+    tool = api.call_tool(spark, "dedup_conversations", {"path": str(table)})
+    assert tool["summary"] == expected
+    assert sorted(g["conv_ids"] for g in tool["duplicate_groups"]) == [
+        "a,b", "c,d,e",
+    ]
+
+
+def test_check_parquet_directory_strict(spark, tmp_path, capsys):
+    """`check DIR --strict` on a Spark-written parquet directory (the
+    README's `check data.parquet` loop) checks every row as one
+    dataset: a planted blank text fails the gate."""
+    rows = [(str(i), f"an ordinary sentence number {i}") for i in range(9)]
+    rows.append(("9", "   "))
+    data = tmp_path / "data.parquet"
+    spark.createDataFrame(rows, "id string, text string").repartition(
+        3
+    ).write.parquet(str(data))
+    report = tmp_path / "report.json"
+    rc = main(["check", str(data), "-f", "json", "--strict",
+               "-o", str(report)])
+    capsys.readouterr()
+    assert rc == 1
+    summary = json.loads(report.read_text())["summary"]
+    assert summary["total_samples"] == 10
+    assert summary["failed_samples"] == 1
+
+
+def test_infer_suggest_drift_read_every_row_of_an_appended_table(
+    spark, appended_table, capsys
+):
+    """`infer`, `suggest` and `drift` open a ``base/`` +
+    ``append_000/`` table the way the store lists it: every row."""
+    path, df = appended_table
+    n = df.count()
+    assert main(["infer", path]) == 0
+    assert json.loads(capsys.readouterr().out)["sample_count"] == n
+    assert main(["suggest", path, "--format", "json"]) == 0
+    rules = json.loads(capsys.readouterr().out)["rules"]
+    (bucket,) = [
+        r for r in rules
+        if r["field"] == "conv_bucket" and r["check"] == "number_range"
+    ]
+    lo, hi = df.agg(F.min("conv_bucket"), F.max("conv_bucket")).first()
+    assert (bucket["min"], bucket["max"]) == (lo, hi)
+    assert main(["drift", path, path]) == 0
+    rep = json.loads(capsys.readouterr().out)
+    assert rep["count_a"] == rep["count_b"] == n
+
+
+def test_check_rejects_an_unknown_ruleset(tmp_path, capsys):
+    """`--ruleset` takes only the names ``resolve_ruleset`` knows; a
+    typo is a usage error, not a silent builtin run."""
+    data = tmp_path / "a.jsonl"
+    data.write_text(json.dumps({"id": "1", "text": "ok"}) + "\n")
+    for argv in (["check", str(data)], ["rules"], ["watch", str(data)]):
+        with pytest.raises(SystemExit) as exc:
+            main(argv + ["--ruleset", "sfT"])
+        assert exc.value.code == 2
+        assert "sfT" in capsys.readouterr().err
 
 
 def test_transcripts_daily_verdicts_cli(spark, tmp_path, capsys):

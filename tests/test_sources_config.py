@@ -244,6 +244,71 @@ def test_preset_rulesets(spark):
     assert "non_empty" not in res3.rule_results  # disabled in preset
 
 
+
+def test_resolve_ruleset(tmp_path):
+    """One resolver: each name to its preset, ``llm`` to the builtins
+    (its judge rule runs after the fused pass), a rules file over the
+    name, and an unknown name raises naming the valid ones."""
+    from datacheck_spark.rules.compiler import RULESET_NAMES, resolve_ruleset
+
+    assert RULESET_NAMES == ("default", "llm", "sft", "preference", "annotation")
+    assert resolve_ruleset().name == "default"
+    assert resolve_ruleset("llm").name == "default"
+    for name in ("sft", "preference", "annotation"):
+        assert resolve_ruleset(name).name == name
+    rules = tmp_path / "mine.yaml"
+    rules.write_text("rules:\n  - field: text\n    check: non_empty\n")
+    assert resolve_ruleset("sft", str(rules)).name == "mine"
+    with pytest.raises(ValueError, match="'sfT'; valid: default, llm"):
+        resolve_ruleset("sfT")
+
+
+def test_schema_from_file(tmp_path):
+    p = tmp_path / "schema.json"
+    p.write_text(json.dumps(
+        {"fields": [{"name": "text"}], "constraints": {"max_length": 9}}
+    ))
+    schema = ValidationSchema.from_file(str(p))
+    assert [f.name for f in schema.fields] == ["text"]
+    assert schema.max_length == 9
+
+
+def test_load_data_opens_parquet_tables_recursively(spark, tmp_path):
+    """Any path without a .json/.jsonl/.csv/.orc suffix is a parquet
+    table read recursively: a single file, a directory of
+    subdirectories, and a hive-partitioned directory — whose partition
+    values (``k=0/``) are NOT columns, as in the incremental store."""
+    df = spark.createDataFrame(
+        [(i, i % 2, f"t{i}") for i in range(6)], "id int, k int, text string"
+    )
+    hive = tmp_path / "hive.parquet"
+    df.coalesce(1).write.partitionBy("k").parquet(str(hive))
+    back, schema = SRC.load_data(spark, str(hive))
+    assert schema == {}
+    assert back.columns == ["id", "text"]
+    assert sorted(r["id"] for r in back.collect()) == list(range(6))
+    (one,) = (hive / "k=0").glob("*.parquet")
+    assert SRC.load_data(spark, str(one))[0].count() == 3
+    nested = tmp_path / "t"
+    df.where("k = 0").write.parquet(str(nested / "base"))
+    df.where("k = 1").write.parquet(str(nested / "append_000" / "x"))
+    assert SRC.load_data(spark, str(nested))[0].count() == 6
+
+
+def test_is_batch_directory(spark, tmp_path):
+    """``check``/``watch`` check a directory file by file only when it
+    holds JSON/JSONL/CSV files; a parquet directory is one dataset."""
+    jd = tmp_path / "j"
+    (jd / "sub").mkdir(parents=True)
+    (jd / "sub" / "a.csv").write_text("id\n1\n")
+    pq = tmp_path / "p"
+    spark.range(3).write.parquet(str(pq))
+    assert SRC.is_batch_directory(str(jd))
+    assert not SRC.is_batch_directory(str(pq))
+    assert not SRC.is_batch_directory(str(jd / "sub" / "a.csv"))
+    assert not SRC.is_batch_directory(str(tmp_path / "missing"))
+
+
 def test_sample_deterministic(spark):
     from datacheck_spark.sources import sample_deterministic
 

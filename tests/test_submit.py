@@ -84,8 +84,6 @@ def test_submit_check_clean_parquet(deploy_dir):
         [
             "check",
             "/root/testdata/sf0.001/documents.parquet",
-            "--input-format",
-            "parquet",
             "-f",
             "json",
             "-o",
