@@ -1,5 +1,4 @@
-"""Real media codecs over binary columns, stdlib-only with an optional
-Pillow fast path.
+"""Real media codecs over binary columns, stdlib + numpy only.
 
 This container ships no image/audio libraries, so the decoders here are
 implemented against the PUBLIC file-format specs with the standard
@@ -22,9 +21,6 @@ library + numpy:
 
 Encoders for PNG / BMP / JPEG / WAV exist so synthetic test media are
 REAL files round-tripped through the decoders, not look-alike bytes.
-
-If Pillow is importable it replaces the stdlib image pixel decode
-(``_PIL`` flag); the pure paths remain the tested fallback.
 """
 
 from __future__ import annotations
@@ -36,14 +32,6 @@ import zlib
 from typing import Any, Dict, Optional, Tuple
 
 import numpy as np
-
-try:  # optional dependency — never required
-    from PIL import Image as _PILImage
-
-    _PIL = True
-except ImportError:  # pragma: no cover - environment dependent
-    _PILImage = None
-    _PIL = False
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -145,10 +133,6 @@ def decode_png(data: bytes) -> Dict[str, Any]:
         "channels": int(channels) if channels else None,
         "pixels": None,
     }
-    if _PIL:
-        img = _PILImage.open(io.BytesIO(data))
-        out["pixels"] = np.asarray(img)
-        return out
     if bitd == 8 and interlace == 0 and color in (0, 2, 6) and idat:
         out["pixels"] = _png_unfilter(zlib.decompress(idat), w, h, channels)
     return out
@@ -599,15 +583,15 @@ def _jpeg_header_only(w, h, nc):
 
 
 def decode_jpeg(data: bytes) -> Dict[str, Any]:
-    """Full baseline JPEG pixel decode (pure numpy/stdlib; Pillow fast
-    path when importable). Returns ``pixels`` as uint8 (h, w) gray or
-    (h, w, 3) RGB. Valid-but-unsupported modes — progressive (SOF2),
-    arithmetic coding, >8-bit precision, 4-component CMYK, or streams
-    with no scan data (the MJPEG header stub) — return real header
-    dimensions with ``pixels=None``; only corrupt streams raise, and
-    always ``ValueError``: a lookup of an undeclared Huffman or
-    quantisation table, a short DRI/SOF segment or a short component
-    spec is reported as one."""
+    """Full baseline JPEG pixel decode (pure numpy/stdlib). Returns
+    ``pixels`` as uint8 (h, w) gray or (h, w, 3) RGB. Valid-but-
+    unsupported modes — progressive (SOF2), arithmetic coding, >8-bit
+    precision, 4-component CMYK, or streams with no scan data (the
+    MJPEG header stub) — return real header dimensions with
+    ``pixels=None``; only corrupt streams raise, and always
+    ``ValueError``: a lookup of an undeclared Huffman or quantisation
+    table, a short DRI/SOF segment or a short component spec is
+    reported as one."""
     try:
         return _decode_jpeg(data)
     except (KeyError, IndexError, struct.error) as e:
@@ -617,19 +601,6 @@ def decode_jpeg(data: bytes) -> Dict[str, Any]:
 def _decode_jpeg(data: bytes) -> Dict[str, Any]:
     if data[:3] != b"\xff\xd8\xff":
         raise ValueError("not a JPEG")
-    if _PIL:
-        img = _PILImage.open(io.BytesIO(data))
-        bands = len(img.getbands())
-        px = np.asarray(img if bands == 1 else img.convert("RGB"))
-        return {
-            "format": "jpeg",
-            "width": img.width,
-            "height": img.height,
-            # of the returned pixels: CMYK comes back converted to RGB
-            "channels": 1 if px.ndim == 2 else px.shape[2],
-            "pixels": px,
-        }
-
     qt: Dict[int, np.ndarray] = {}
     huff_dc: Dict[int, Any] = {}
     huff_ac: Dict[int, Any] = {}

@@ -1014,7 +1014,7 @@ def media_features(spark, sf_dir):
     """Multimodal: synthetic media table with REAL PNG/BMP/JPEG/WAV/
     AVI-MJPEG payloads → Arrow-batched mapInPandas decode + feature
     extraction (pure stdlib+numpy codecs incl. the full baseline JPEG
-    decoder; Pillow optional; only unknown containers take the
+    decoder; only unknown containers take the
     declared stub path). Golden-checked (binary payloads aren't
     DuckDB-queryable); decode correctness is round-trip-proven in
     tests/test_codecs.py and metadata-vs-decoded consistency in

@@ -5,8 +5,7 @@ Training-data pipeline op (task brief): images/audio/video travel as
 / resize / frame-sampling run as Arrow-batched ``mapInPandas`` stages.
 
 Decode is REAL for PNG / BMP / JPEG (stdlib+numpy pixel decode — JPEG
-through the pure baseline codec in ``datacheck_spark.codecs``; Pillow
-is an optional fast path), WAV (stdlib PCM decode), and AVI
+through the pure baseline codec in ``datacheck_spark.codecs``), WAV (stdlib PCM decode), and AVI
 containers (RIFF avih header: dims, frame count, fps, duration, PLUS
 full pixel decode of MJPEG frames — ``sample_video_frames`` is the
 executed frame-sampling kernel). Rows whose payload only reaches

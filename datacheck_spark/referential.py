@@ -48,32 +48,3 @@ def orphan_rows(
         non_null = non_null.where(F.col(k).isNotNull())
     return non_null.join(dim_sel, on=list(fact_keys), how="left_anti")
 
-
-def referential_report(
-    fact: DataFrame,
-    fact_keys: Union[str, Sequence[str]],
-    dim: DataFrame,
-    dim_keys: Union[str, Sequence[str], None] = None,
-    broadcast_dim: Optional[bool] = None,
-    sample_keys: int = 20,
-) -> dict:
-    """Summary dict: orphan count + a bounded sample of orphan keys."""
-    if isinstance(fact_keys, str):
-        fact_keys = [fact_keys]
-    orphans = orphan_rows(fact, fact_keys, dim, dim_keys, broadcast_dim)
-    total = fact.count()
-    n = orphans.count()
-    sample = [
-        tuple(r) if len(fact_keys) > 1 else r[0]
-        for r in orphans.select(*fact_keys)
-        .distinct()
-        .orderBy(*fact_keys)
-        .limit(sample_keys)
-        .collect()
-    ]
-    return {
-        "total_rows": total,
-        "orphan_rows": n,
-        "orphan_rate": round(n / total, 6) if total else 0.0,
-        "sample_orphan_keys": sample,
-    }

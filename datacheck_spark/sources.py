@@ -34,13 +34,14 @@ def load_data(
     Returns (df, embedded_schema).
 
     ``.jsonl``, ``.csv``, ``.orc`` and ``.json`` paths are read by
-    extension (``checker.py:183-218``). Any other path is a parquet
-    table read the way ``incremental.list_data_files`` lists one
+    extension (``checker.py:183-218``); a ``.json`` directory (as
+    Spark writes one) is line-delimited JSON. Any other path is a
+    parquet table read the way ``incremental.list_data_files`` lists one
     (``recursiveFileLookup``): a ``.parquet`` file, a directory at any
     depth (``base/`` + ``append_k/``) or an ``s3a:``/``hdfs:`` URI.
     Partition directories (``k=v/``) add no columns."""
     suffix = Path(path).suffix.lower()
-    if suffix == ".jsonl":
+    if suffix == ".jsonl" or (suffix == ".json" and Path(path).is_dir()):
         return spark.read.json(path), {}
     if suffix == ".csv":
         # all-string typing preserved (reference DictReader semantics)
@@ -82,9 +83,15 @@ def is_batch_directory(path: str) -> bool:
     """True when ``path`` is a local directory holding JSON/JSONL/CSV
     files: ``check``/``watch`` then check it file by file
     (:func:`check_directory`, reference ``checker.py:280-365``). Any
-    other path is one dataset opened by :func:`load_data`."""
+    other path is one dataset opened by :func:`load_data`, and so is a
+    directory whose own name carries a supported suffix: Spark writes
+    ``out.jsonl`` as a directory of part files."""
     root = Path(path)
-    return root.is_dir() and bool(_supported_files(root))
+    return (
+        root.is_dir()
+        and root.suffix.lower() not in SUPPORTED_EXTENSIONS
+        and bool(_supported_files(root))
+    )
 
 
 def load_glob(

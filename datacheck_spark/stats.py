@@ -264,45 +264,58 @@ def _infer_type_name(dt) -> str:
     return "string"
 
 
-def infer_schema(
-    df: DataFrame,
-    enum_max_uniques: int = 10,
-    approx_distinct: Optional[bool] = None,
-) -> Dict[str, Any]:
+def _confirm_enums(
+    df: DataFrame, estimates: Dict[str, int], enum_max_uniques: int
+) -> Dict[str, List[Any]]:
+    """Exactly confirmed enums among the columns of ``estimates``
+    (column -> HLL distinct estimate), the one enum decision of
+    :func:`infer_schema` and ``suggest.profile_columns``.
+
+    A column is a candidate when its estimate is in
+    (0, 2 x ``enum_max_uniques``]: HLL error is a few percent, never
+    2x, so an over-estimate cannot hide a true enum. One job collects
+    the sorted value set of every candidate, sliced to
+    ``enum_max_uniques + 1`` values so an under-estimate cannot ship an
+    unbounded set to the driver; a column is an enum iff that slice
+    holds 1..``enum_max_uniques`` values, which proves the true
+    distinct count. No candidates, no job."""
+    candidates = [
+        c for c, n in estimates.items() if 0 < n <= 2 * enum_max_uniques
+    ]
+    if not candidates:
+        return {}
+    row = df.agg(
+        *[
+            F.slice(
+                F.sort_array(F.collect_set(c)), 1, enum_max_uniques + 1
+            ).alias(c)
+            for c in candidates
+        ]
+    ).collect()[0]
+    return {
+        c: list(row[c])
+        for c in candidates
+        if 0 < len(row[c]) <= enum_max_uniques
+    }
+
+
+def infer_schema(df: DataFrame, enum_max_uniques: int = 10) -> Dict[str, Any]:
     """Infer a validation schema (``checker.py:590-674``).
 
-    At most TWO jobs in the default size-aware mode (a third separate
-    ``count`` was pure job-latency overhead and is folded into job 1):
+    At most TWO jobs at any size:
 
     - Job 1 fuses the row count, per-column non-null counts, string
-      length min/max/avg, numeric min/max and HLL distinct sketches —
-      every term map-side combinable, bounded state at 10^12 rows.
-    - Job 2 depends on size. At or below ``anomaly.AUTO_EXACT_ROWS``
-      (known from job 1) it fuses exact ``countDistinct`` with a
-      slice-bounded ``sort_array(collect_set)`` per numeric column —
-      exact oracle parity, and ``collect_set`` state is bounded by the
-      row cap. Above it, candidacy comes from the job-1 sketches with
-      a 2x margin, and job 2 collects slice-bounded value sets only
-      for those candidates, emitting an enum only after exact
-      confirmation (set length <= enum_max_uniques) — so an HLL error
-      in either direction can neither hide a true enum nor emit an
-      over-wide one. Job 2 is skipped when there are no candidates.
-
-    ``approx_distinct``: None (default) = the size-aware switch above;
-    True forces sketch mode; False forces exact ``countDistinct`` —
-    above the row cap that is a third job (countDistinct cannot fuse
-    with the unbounded collect_set there), the documented cost of
-    demanding exactness past the auto-exact threshold.
+      length min/max/avg, numeric min/max and an HLL distinct sketch
+      per numeric column — every term map-side combinable, bounded
+      state at 10^12 rows.
+    - Job 2 is :func:`_confirm_enums` over the numeric columns: the
+      sketches pick candidates, one slice-bounded ``collect_set`` per
+      candidate confirms them exactly, so an enum is emitted exactly
+      when the column has 1..``enum_max_uniques`` distinct values.
+      Skipped when there are no candidates.
     """
-    from datacheck_spark.anomaly import AUTO_EXACT_ROWS
-
     dtypes = _dtype_map(df)
-    numeric_cols = [
-        c
-        for c in df.columns
-        if isinstance(dtypes[c], NumericType)
-        and not isinstance(dtypes[c], BooleanType)
-    ]
+    numeric_cols = [c for c in df.columns if _is_number(dtypes[c])]
     aggs = [F.count(F.lit(1)).alias("__total")]
     for c in df.columns:
         dt = dtypes[c]
@@ -317,73 +330,15 @@ def infer_schema(
             aggs += [
                 F.min(c).alias(f"vmin__{c}"),
                 F.max(c).alias(f"vmax__{c}"),
-                F.approx_count_distinct(c).alias(f"happrox__{c}"),
+                F.approx_count_distinct(c).alias(f"uniq__{c}"),
             ]
     row = df.agg(*aggs).collect()[0]
     total = row["__total"]
     if total == 0:
         return {"fields": {}, "sample_count": 0}
-    if approx_distinct is None:
-        approx_distinct = total > AUTO_EXACT_ROWS
-
-    uniq: Dict[str, int] = {}
-    enums: Dict[str, List[Any]] = {}
-    if not approx_distinct and numeric_cols:
-        fuse_enums = total <= AUTO_EXACT_ROWS
-        aggs2 = [
-            F.countDistinct(c).alias(f"uniq__{c}") for c in numeric_cols
-        ]
-        if fuse_enums:
-            aggs2 += [
-                F.slice(
-                    F.sort_array(F.collect_set(c)),
-                    1,
-                    enum_max_uniques + 1,
-                ).alias(f"set__{c}")
-                for c in numeric_cols
-            ]
-        row2 = df.agg(*aggs2).collect()[0]
-        uniq = {c: row2[f"uniq__{c}"] for c in numeric_cols}
-        if fuse_enums:
-            enums = {
-                c: list(row2[f"set__{c}"])
-                for c in numeric_cols
-                if 0 < uniq[c] <= enum_max_uniques
-            }
-            fuse_enums_done = True
-        else:
-            fuse_enums_done = False
-    else:
-        uniq = {c: row[f"happrox__{c}"] for c in numeric_cols}
-        fuse_enums_done = False
-
-    if not fuse_enums_done:
-        # Mirrors suggest.profile_columns: in sketch mode ``uniq`` is an
-        # HLL estimate, so (a) candidacy uses a 2x margin (an
-        # over-estimate must not hide a true <=N enum), (b) the
-        # collect_set emission is slice-bounded (an under-estimate must
-        # not ship an unbounded set to the driver), and (c) the enum is
-        # only emitted after EXACT confirmation: the bounded slice of
-        # the full set proves the true distinct count iff its length
-        # stays <= enum_max_uniques.
-        bar = enum_max_uniques * (2 if approx_distinct else 1)
-        enum_candidates = [c for c in numeric_cols if 0 < uniq[c] <= bar]
-        if enum_candidates:
-            erow = df.agg(
-                *[
-                    F.slice(
-                        F.sort_array(F.collect_set(c)),
-                        1,
-                        enum_max_uniques + 1,
-                    ).alias(c)
-                    for c in enum_candidates
-                ]
-            ).collect()[0]
-            enums = {
-                c: list(erow[c])
-                for c in enum_candidates
-                if 0 < len(erow[c]) <= enum_max_uniques
-            }
+    enums = _confirm_enums(
+        df, {c: row[f"uniq__{c}"] for c in numeric_cols}, enum_max_uniques
+    )
 
     fields: Dict[str, Any] = {}
     for c in df.columns:
@@ -401,11 +356,7 @@ def infer_schema(
             field_def["min_length"] = row[f"lmin__{c}"]
             field_def["max_length"] = row[f"lmax__{c}"]
             field_def["avg_length"] = round(row[f"lavg__{c}"])
-        if (
-            isinstance(dt, NumericType)
-            and not isinstance(dt, BooleanType)
-            and nn
-        ):
+        if c in numeric_cols and nn:
             field_def["min_value"] = row[f"vmin__{c}"]
             field_def["max_value"] = row[f"vmax__{c}"]
             if c in enums:
@@ -416,22 +367,18 @@ def infer_schema(
 
 
 def check_coverage(
-    df: DataFrame,
-    cols: Optional[Sequence[str]] = None,
-    approx_distinct: bool = True,
+    df: DataFrame, cols: Optional[Sequence[str]] = None
 ) -> Dict[str, Any]:
     """Field coverage analysis (``mcp_server.py:784-829``): presence %,
     non-empty %, distinct counts, plus cross-field averages.
 
     DataFrame reading of "presence": non-null (key presence is static).
-    Distinct counts use HLL sketches by default — no 10k cap needed
-    (the reference caps exact sets at 10000, ``mcp_server.py:806-807``).
+    ``distinct_values`` is an HLL estimate (``approx_count_distinct``),
+    so no 10k cap is needed (the reference caps exact sets at 10000,
+    ``mcp_server.py:806-807``).
     """
     cols = list(cols or df.columns)
     dtypes = _dtype_map(df)
-    distinct = (
-        F.approx_count_distinct if approx_distinct else F.countDistinct
-    )
     aggs = [F.count(F.lit(1)).alias("__total")]
     for c in cols:
         aggs.append(F.count(c).alias(f"nn__{c}"))
@@ -442,7 +389,7 @@ def check_coverage(
         else:
             nonempty = F.col(c).isNotNull().cast("long")
         aggs.append(F.sum(nonempty).alias(f"ne__{c}"))
-        aggs.append(distinct(c).alias(f"uniq__{c}"))
+        aggs.append(F.approx_count_distinct(c).alias(f"uniq__{c}"))
     row = df.agg(*aggs).collect()[0]
     total = row["__total"]
     out: Dict[str, Any] = {"total_samples": total, "fields": {}}

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from datacheck_spark.engine import ValidationEngine, HAS_ERROR, RULE_PREFIX
+from datacheck_spark.engine import ValidationEngine, RULE_PREFIX
 
 
 def stream_validate(
@@ -57,32 +57,6 @@ def streaming_dedup(
     return (
         df.withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(list(keys))
-    )
-
-
-def windowed_pass_rates(
-    annotated: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "5 minutes",
-) -> DataFrame:
-    """Watermarked tumbling-window pass rates — late rows beyond the
-    watermark are dropped deterministically (the streaming analogue of
-    the batch summary agg)."""
-    return (
-        annotated.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window))
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum((~F.col(HAS_ERROR)).cast("long")).alias("passed"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "total",
-            "passed",
-            (F.col("passed") / F.col("total")).alias("pass_rate"),
-        )
     )
 
 

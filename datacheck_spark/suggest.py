@@ -14,34 +14,34 @@ flagged the data's issues in the first place.)
 
 Scale shape: ONE full-scan aggregation job computes every per-column
 statistic (map-side partial aggregation, no shuffle beyond the final
-single-row agg), plus one tiny follow-up job that ``collect_set``s ONLY
-the columns whose distinct count already qualified them as enum
-candidates — its state is bounded by ``enum_max_uniques`` actual
-values per column. Distinct counts come from HyperLogLog sketches at
-every scale; enum candidacy is confirmed EXACTLY by the follow-up's
-true set size behind a generous (2×) sketch prefilter, so sketch error
-can never change which enums are emitted.
+single-row agg), with HyperLogLog sketches for the distinct counts,
+plus at most one tiny follow-up job, ``stats._confirm_enums`` (shared
+with ``stats.infer_schema``), that collects slice-bounded value sets
+for the string columns whose sketch makes them enum candidates (2×
+margin). The true set size decides, so sketch error can never change
+which enums are emitted.
 """
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, List
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BooleanType, NumericType, StringType
 
 from datacheck_spark.rules import text as T
+from datacheck_spark.stats import _confirm_enums
 
 # a column this complete is suggested as required (presence is static
 # in a fixed-schema DataFrame; this mirrors infer_schema's 95% bar)
 REQUIRED_THRESHOLD = 0.95
 
 
-def profile_agg_frame(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
+def profile_agg_frame(df: DataFrame) -> DataFrame:
     """The single full-scan aggregation behind :func:`profile_columns`:
-    one row with every per-column statistic (plan invariant in PLANS.md:
-    one scan, partial+final combine, no extra shuffle)."""
-    distinct = F.approx_count_distinct if approx_distinct else F.countDistinct
+    one row with every per-column statistic, distinct counts as HLL
+    sketches (plan invariant in PLANS.md: one scan, partial+final
+    combine, no extra shuffle)."""
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     aggs: List[Any] = [F.count(F.lit(1)).alias("__total")]
     for c in df.columns:
@@ -52,7 +52,7 @@ def profile_agg_frame(df: DataFrame, approx_distinct: bool = False) -> DataFrame
                 F.sum(T.py_blank(F.col(c)).cast("long")).alias(f"blank__{c}"),
                 F.min(F.length(c)).alias(f"lmin__{c}"),
                 F.max(F.length(c)).alias(f"lmax__{c}"),
-                distinct(c).alias(f"uniq__{c}"),
+                F.approx_count_distinct(c).alias(f"uniq__{c}"),
                 # JSON-payload detection: non-null values failing to parse
                 F.sum(
                     (
@@ -65,85 +65,43 @@ def profile_agg_frame(df: DataFrame, approx_distinct: bool = False) -> DataFrame
             aggs += [
                 F.min(c).alias(f"vmin__{c}"),
                 F.max(c).alias(f"vmax__{c}"),
-                distinct(c).alias(f"uniq__{c}"),
+                F.approx_count_distinct(c).alias(f"uniq__{c}"),
             ]
     return df.agg(*aggs)
 
 
-def profile_columns(
-    df: DataFrame,
-    enum_max_uniques: int = 20,
-    approx_distinct: Optional[bool] = None,
-) -> Dict[str, Any]:
+def profile_columns(df: DataFrame, enum_max_uniques: int = 20) -> Dict[str, Any]:
     """One-pass per-column profile powering :func:`suggest_rules`.
 
     Returns ``{"total": n, "columns": {col: {stats...}}}`` where string
-    columns carry ``non_null, blank, len_min, len_max, distinct`` and
-    numeric (non-boolean) columns carry ``non_null, min, max,
-    distinct``; every other type carries ``non_null`` only.
+    columns carry ``non_null, blank, non_json, len_min, len_max,
+    distinct`` (plus ``enum_values`` for a confirmed enum) and numeric
+    (non-boolean) columns carry ``non_null, min, max, distinct``; every
+    other type carries ``non_null`` only.
 
-    Job count: the sketch-mode full-scan aggregation ALWAYS runs first
-    (HLL distinct — bounded state at any scale) with the row total
-    riding along as ``__total``, so no separate ``df.count()`` job;
-    then ONE tiny follow-up collects slice-bounded value sets for the
-    HLL-prefiltered enum candidates (skipped when there are none).
-    ``distinct`` in the returned stats is the HLL estimate except for
-    confirmed enum columns, where it is the exact set size — enum
-    candidacy itself is EXACT because the prefilter is generous (2×
-    margin) and the true set size makes the decision.
-    ``approx_distinct=False`` forces exact ``countDistinct`` in the
-    first agg (caller accepts the Expand cost).
+    Jobs: :func:`profile_agg_frame` (the row total rides along as
+    ``__total``, so no separate ``df.count()`` job), then
+    ``stats._confirm_enums`` over the string columns (skipped when no
+    sketch makes one a candidate). ``distinct`` is the HLL estimate,
+    except for confirmed enum columns, where it is the exact set size.
+    Enums are decided by the true set size, never by the sketch alone.
     """
-    auto = approx_distinct is None
     dtypes = {f.name: f.dataType for f in df.schema.fields}
-    row = profile_agg_frame(
-        df, approx_distinct=True if auto else approx_distinct
-    ).collect()[0]
+    row = profile_agg_frame(df).collect()[0]
     total = row["__total"]
     out: Dict[str, Any] = {"total": total, "columns": {}}
     if total == 0:
         return out
 
-    uniq_cols = [
-        c
-        for c in df.columns
-        if isinstance(dtypes[c], StringType)
-        or (
-            isinstance(dtypes[c], NumericType)
-            and not isinstance(dtypes[c], BooleanType)
-        )
-    ]
-    uniq: Dict[str, int] = {c: row[f"uniq__{c}"] for c in uniq_cols}
-    enums: Dict[str, List[str]] = {}
-    # Enum candidacy is the ONLY consumer that needs exactness, and it
-    # is made exact by CONFIRMATION, not by exact counting: a generous
-    # HLL prefilter (2× margin — sketch error is a few %, never 2×)
-    # picks candidate strings, one tiny agg collects their
-    # slice-bounded value sets, and the true set size decides. This
-    # skips countDistinct/collect_set over high-cardinality payload
-    # columns entirely (an Expand + a 100k-string agg buffer measured
-    # as the whole pipeline's hot spot); profile `distinct` for
-    # non-candidates is the HLL estimate (documented).
-    candidates = [
-        c
-        for c in uniq_cols
-        if isinstance(dtypes[c], StringType)
-        and 0 < (uniq[c] or 0) <= 2 * enum_max_uniques
-    ]
-    if candidates:
-        row2 = df.agg(
-            *[
-                F.slice(
-                    F.sort_array(F.collect_set(c)), 1, enum_max_uniques + 1
-                ).alias(f"set__{c}")
-                for c in candidates
-            ]
-        ).collect()[0]
-        for c in candidates:
-            vals = list(row2[f"set__{c}"])
-            if 0 < len(vals) <= enum_max_uniques:
-                enums[c] = vals
-                uniq[c] = len(vals)  # exact for confirmed enums
+    enums = _confirm_enums(
+        df,
+        {
+            c: row[f"uniq__{c}"]
+            for c in df.columns
+            if isinstance(dtypes[c], StringType)
+        },
+        enum_max_uniques,
+    )
 
     for c in df.columns:
         dt = dtypes[c]
@@ -153,13 +111,14 @@ def profile_columns(
             st["non_json"] = row[f"nonjson__{c}"] or 0
             st["len_min"] = row[f"lmin__{c}"]
             st["len_max"] = row[f"lmax__{c}"]
-            st["distinct"] = uniq[c]
+            st["distinct"] = row[f"uniq__{c}"]
             if c in enums:
                 st["enum_values"] = enums[c]
+                st["distinct"] = len(enums[c])
         elif isinstance(dt, NumericType) and not isinstance(dt, BooleanType):
             st["min"] = row[f"vmin__{c}"]
             st["max"] = row[f"vmax__{c}"]
-            st["distinct"] = uniq[c]
+            st["distinct"] = row[f"uniq__{c}"]
         out["columns"][c] = st
     return out
 
@@ -198,7 +157,6 @@ def suggest_rules(
     df: DataFrame,
     enum_max_uniques: int = 20,
     required_threshold: float = REQUIRED_THRESHOLD,
-    approx_distinct: Optional[bool] = None,
     name: str = "suggested",
 ) -> Dict[str, Any]:
     """Suggest a validation config from observed data.
@@ -219,13 +177,12 @@ def suggest_rules(
       observed min when complete and min ≥ 1; ``json_valid`` when
       complete and every value parses as JSON (a payload column);
       ``enum`` of the sorted observed values when complete and
-      distinct ≤ ``enum_max_uniques``.
+      distinct ≤ ``enum_max_uniques`` (an exact count: HLL only picks
+      the candidates, see :func:`profile_columns`).
     - numerics: ``number_range`` over the observed [min, max]
       (compiler passes nulls, so safe at any completeness).
     """
-    prof = profile_columns(
-        df, enum_max_uniques=enum_max_uniques, approx_distinct=approx_distinct
-    )
+    prof = profile_columns(df, enum_max_uniques=enum_max_uniques)
     total = prof["total"]
     rules: List[Dict[str, Any]] = []
     if total == 0:

@@ -366,6 +366,34 @@ def test_check_parquet_directory_strict(spark, tmp_path, capsys):
     assert summary["failed_samples"] == 1
 
 
+@pytest.mark.parametrize("name", ["out.jsonl", "out.json"])
+def test_check_spark_written_json_directory_strict(
+    spark, tmp_path, capsys, name
+):
+    """A directory named like a JSON file, as ``write_jsonl`` leaves
+    it, is one dataset: `check DIR --strict` reads all its rows and the
+    blank responses fail the gate."""
+    from datacheck_spark import sources as SRC
+
+    rows = [
+        (str(i), f"question number {i}", "" if i % 2 else f"answer {i}")
+        for i in range(6)
+    ]
+    data = tmp_path / name
+    SRC.write_jsonl(
+        spark.createDataFrame(rows, "id string, instruction string, "
+                                    "response string"),
+        str(data),
+    )
+    assert not SRC.is_batch_directory(str(data))
+    report = tmp_path / "report.json"
+    rc = main(["check", str(data), "-f", "json", "--strict",
+               "-o", str(report)])
+    capsys.readouterr()
+    assert rc == 1
+    assert json.loads(report.read_text())["summary"]["total_samples"] == 6
+
+
 def test_infer_suggest_drift_read_every_row_of_an_appended_table(
     spark, appended_table, capsys
 ):

@@ -118,8 +118,6 @@ class TestJpegHeader:
             + b"\x03"
         )
         data = b"\xff\xd8" + app0 + sof0
-        if codecs._PIL:
-            pytest.skip("Pillow path parses full streams only")
         d = codecs.decode_jpeg_header(data)
         assert (d["width"], d["height"], d["channels"]) == (64, 48, 3)
 
@@ -308,8 +306,6 @@ class TestJpegFullCodec:
     @pytest.mark.parametrize("sub", ["444", "420"])
     @pytest.mark.parametrize("ri", [0, 3])
     def test_rgb_roundtrip(self, sub, ri):
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         px = _gradient_rgb(29, 37)  # non-multiple-of-8 dims
         enc = codecs.encode_jpeg(
             px, quality=92, subsampling=sub, restart_interval=ri
@@ -322,8 +318,6 @@ class TestJpegFullCodec:
         assert _psnr(px, d["pixels"]) > (35 if sub == "444" else 24)
 
     def test_gray_roundtrip(self):
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         g = (np.add.outer(np.arange(31) * 3, np.arange(22) * 5) % 256).astype(
             np.uint8
         )
@@ -335,8 +329,6 @@ class TestJpegFullCodec:
     def test_solid_color_near_exact(self):
         """A solid block has only a DC coefficient — quantization error
         is bounded by one code step, a semi-analytic correctness check."""
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         solid = np.full((24, 24, 3), (90, 160, 40), dtype=np.uint8)
         d = codecs.decode_jpeg(codecs.encode_jpeg(solid, quality=95))
         err = np.abs(d["pixels"].astype(int) - solid.astype(int)).max()
@@ -355,8 +347,6 @@ class TestJpegFullCodec:
         """MJPEG convention: frames carry no DHT — the decoder installs
         the Annex K standard tables and must decode bit-identically to
         the stream that declares the same tables explicitly."""
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         px = _gradient_rgb(24, 32)
         enc = codecs.encode_jpeg(px, quality=90)
         stripped = _strip_segments(enc, {0xC4})
@@ -366,8 +356,6 @@ class TestJpegFullCodec:
         assert np.array_equal(d0["pixels"], d1["pixels"])
 
     def test_progressive_falls_back_to_header(self):
-        if codecs._PIL:
-            pytest.skip("Pillow decodes progressive streams")
         enc = bytearray(codecs.encode_jpeg(_gradient_rgb(16, 16)))
         i = enc.find(b"\xff\xc0")
         enc[i + 1] = 0xC2  # SOF0 -> SOF2 (progressive)
@@ -376,15 +364,11 @@ class TestJpegFullCodec:
         assert (d["width"], d["height"], d["channels"]) == (16, 16, 3)
 
     def test_header_stub_decodes_header_only(self):
-        if codecs._PIL:
-            pytest.skip("stub has no scan for Pillow either")
         d = codecs.decode_jpeg(codecs.encode_jpeg_header_stub(64, 32))
         assert d["pixels"] is None
         assert (d["width"], d["height"]) == (64, 32)
 
     def test_truncated_scan_degrades_not_crashes(self):
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         enc = codecs.encode_jpeg(_gradient_rgb(24, 32), quality=90)
         sos = enc.find(b"\xff\xda")
         cut = enc[: sos + (len(enc) - sos) // 2]
@@ -401,8 +385,6 @@ class TestJpegFullCodec:
 
 class TestAviFrameExtraction:
     def test_video_frames_walk_and_decode(self):
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         px = _gradient_rgb(24, 32)
         frame = codecs.encode_jpeg(px, quality=88)
         avi = codecs.encode_avi(32, 24, n_frames=7, fps=25,
@@ -481,36 +463,3 @@ class TestAviFrameExtraction:
         assert codecs.avi_video_frames(audio_only) == []
         hdr = codecs.decode_avi_header(audio_only)
         assert (hdr["first_frame"], hdr["n_frame_chunks"]) == (None, 0)
-
-
-class _StubPILImage:
-    """Stands in for ``PIL.Image``: ``open`` returns an image of one
-    mode whatever the bytes, so the Pillow path of ``decode_jpeg`` runs
-    without Pillow installed."""
-
-    def __init__(self, mode, width=5, height=4):
-        self.mode, self.width, self.height = mode, width, height
-
-    def open(self, _fp):
-        return self
-
-    def getbands(self):
-        return tuple(self.mode)
-
-    def convert(self, mode):
-        assert mode == "RGB"
-        return np.zeros((self.height, self.width, 3), np.uint8)
-
-    def __array__(self, dtype=None, copy=None):
-        return np.zeros((self.height, self.width), np.uint8)
-
-
-@pytest.mark.parametrize("mode, channels", [("CMYK", 3), ("L", 1), ("RGB", 3)])
-def test_pillow_path_channels_match_pixels(monkeypatch, mode, channels):
-    """On the Pillow path ``channels`` describes the returned pixels: a
-    CMYK JPEG comes back as RGB, so it reports 3, not 4 bands."""
-    monkeypatch.setattr(codecs, "_PIL", True)
-    monkeypatch.setattr(codecs, "_PILImage", _StubPILImage(mode))
-    d = codecs.decode_jpeg(b"\xff\xd8\xff\xe0 stub")
-    assert d["channels"] == channels
-    assert d["pixels"].shape[2:] == ((3,) if channels == 3 else ())

@@ -56,22 +56,20 @@ def test_infer_schema(mixed_df):
 
 
 def test_infer_schema_sketch_mode_enum_confirmation(spark):
-    """Sketch mode must (a) still find true enums via the 2x HLL
+    """Enum inference must (a) still find true enums via the 2x HLL
     prefilter and (b) never emit an over-wide enum: a 15-distinct
     column falls inside the 2x candidate bar but must be rejected by
     the exact slice-bounded confirmation."""
     rows = [Row(id=str(i), small=float(i % 5), wide=float(i % 15))
             for i in range(600)]
-    schema = S.infer_schema(
-        spark.createDataFrame(rows), approx_distinct=True
-    )
+    schema = S.infer_schema(spark.createDataFrame(rows))
     f = schema["fields"]
     assert f["small"]["enum"] == [0.0, 1.0, 2.0, 3.0, 4.0]
     assert "enum" not in f["wide"]
 
 
 def test_coverage(mixed_df):
-    cov = S.check_coverage(mixed_df, approx_distinct=False)
+    cov = S.check_coverage(mixed_df)
     assert cov["total_samples"] == 20
     assert cov["fields"]["note"]["presence_rate"] == pytest.approx(0.75)
     assert cov["fields"]["name"]["distinct_values"] == 3

@@ -95,7 +95,7 @@ def test_enum_confirmed_exactly_in_sketch_mode(spark):
     df = spark.range(1000).select(
         (F.col("id") % 3).cast("string").alias("k")
     )
-    cfg = suggest_rules(df, approx_distinct=True)
+    cfg = suggest_rules(df)
     assert _rules_by_key(cfg)[("k", "enum")]["values"] == ["0", "1", "2"]
 
 
@@ -228,3 +228,37 @@ def test_suggestions_table_shape(spark, mixed_df):
     assert rows[("score", "number_range")]["p2"] == 9.0
     assert rows[("cat", "enum")]["vals"] == "a,b"
     assert len(rows) == len(cfg["rules"])
+
+
+def test_profiler_oracles(spark):
+    """``schema_inference_docs`` and ``suggest_rules_events`` (HLL
+    candidacy, exact enum confirmation) equal their DuckDB oracles,
+    order-insensitively, on the sf0.01 contract tables."""
+    from pathlib import Path
+
+    from test_ann_recall import SF_DIR
+
+    duckdb = pytest.importorskip("duckdb")
+    if not Path(SF_DIR).is_dir():
+        pytest.skip(f"{SF_DIR} absent")
+    from datacheck_spark import contract as C
+
+    def rows(records):
+        return sorted(
+            (
+                tuple(round(x, 6) if isinstance(x, float) else x for x in r)
+                for r in records
+            ),
+            key=lambda t: tuple((x is None, str(x)) for x in t),
+        )
+
+    con = duckdb.connect()
+    for t in ("documents", "events"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    for name in ("schema_inference_docs", "suggest_rules_events"):
+        got = C.queries()[name](spark, SF_DIR)
+        rel = con.sql(C.oracle_sql()[name])
+        assert got.columns == rel.columns, name
+        want = rows(rel.fetchall())
+        assert want, name
+        assert rows(got.collect()) == want, name

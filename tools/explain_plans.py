@@ -377,19 +377,14 @@ def main():
         ],
     )
 
-    # 12. rule-suggestion profile: every per-column stat rides ONE
-    # full-scan aggregation (partial+final), not one job per column.
-    # approx_distinct=True is the at-scale shape (the AUTO_EXACT_ROWS
-    # switch picks it above 100k rows; the exact path trades extra
-    # expand/exchange steps for oracle parity at test scale only).
+    # 12. rule-suggestion profile: every per-column stat, HLL distinct
+    # counts included, rides ONE full-scan aggregation (partial+final),
+    # not one job per column.
     from datacheck_spark.suggest import profile_agg_frame
 
     add(
-        "rule-suggestion profile agg (events, at-scale approx path)",
-        profile_agg_frame(
-            spark.read.parquet(f"{sf_dir}/events.parquet"),
-            approx_distinct=True,
-        ),
+        "rule-suggestion profile agg (events, HLL distinct counts)",
+        profile_agg_frame(spark.read.parquet(f"{sf_dir}/events.parquet")),
         [
             ("partial+final combine", lambda p: "partial_" in p),
             ("one scan", lambda p: p.count("Scan parquet") <= 2),
