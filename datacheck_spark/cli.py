@@ -97,10 +97,12 @@ def cmd_check(args) -> int:
         else:
             print(batch_to_markdown(out))
         # reference exit semantics (cli.py:109-116): strict fails on any
-        # error/warning; otherwise EVERY file must clear the threshold
+        # error/warning, and on a batch that read no file at all;
+        # otherwise EVERY file must clear the threshold
         if args.strict and (
             out.get("total_error_count", 0) > 0
             or out.get("total_warning_count", 0) > 0
+            or out.get("total_files", 0) == 0
         ):
             return 1
         if any(

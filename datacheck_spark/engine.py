@@ -12,7 +12,8 @@ Outputs:
 - ``annotate(df)``: df + one boolean ``__rule_<id>`` column per rule +
   ``__has_error`` (sample verdict: only ERROR severity fails a sample,
   ``checker.py:113-137``).
-- ``violations(df)``: long-form violation rows
+- ``violations(df)``: the unpivot of ``annotate(df, with_observed=True)``,
+  long-form violation rows
   ``(*key_cols, rule_id, rule_name, severity, observed)`` under stable
   key ordering — the ``(conv_id, turn_idx, rule_id, observed)`` contract
   of BASELINE.json.
@@ -117,7 +118,9 @@ class ValidationEngine:
         """Add one boolean pass-column per rule plus the sample verdict.
 
         This is the single fused projection — all rule expressions
-        evaluate in one codegen stage over the scan.
+        evaluate in one codegen stage over the scan. A frame that
+        already holds these columns is returned as is (the violation
+        store observes counts on it before :meth:`violations`).
         """
         rules = rules if rules is not None else self.compile(df)
         cols: Dict[str, Column] = {}
@@ -125,6 +128,8 @@ class ValidationEngine:
             cols[RULE_PREFIX + r.rule_id] = r.passed
             if with_observed and r.observed is not None:
                 cols[OBS_PREFIX + r.rule_id] = r.observed.cast("string")
+        if {HAS_ERROR, *cols} <= set(df.columns):
+            return df
         error_fails = [
             ~F.col(RULE_PREFIX + r.rule_id)
             for r in rules
@@ -147,38 +152,40 @@ class ValidationEngine:
         rules: Optional[List[CompiledRule]] = None,
         ordered: bool = True,
     ) -> DataFrame:
-        """Long-form violation rows, stably ordered by the key columns.
+        """Long-form violation rows, stably ordered by the key columns:
+        the unpivot of ``annotate(df, with_observed=True)``, one row per
+        failed rule (``df`` may already be that annotated frame).
 
-        One pass: fused rule projection → array-of-structs for failed
-        rules → ``explode``. No shuffle except the final global sort.
-        ``ordered=False`` swaps it for ``sortWithinPartitions``: a
-        global ``orderBy`` under a WRITE costs a second full pass (the
-        range partitioner's sampling job re-runs the fused rule
-        projection — measured 96s vs 45s on the 8.36M-turn bench
-        table), so the violation store (``IncrementalValidator``, whose
-        identity checks are order-insensitive) opts out; the
-        user-facing parity contract keeps the stable global order.
+        Narrow: array-of-structs over the pass-columns → ``explode``.
+        No shuffle except the final global sort. ``ordered=False`` swaps
+        it for ``sortWithinPartitions``: a global ``orderBy`` under a
+        WRITE costs a second full pass (the range partitioner's sampling
+        job re-runs the fused rule projection — measured 96s vs 45s on
+        the 8.36M-turn bench table), so the violation store
+        (``IncrementalValidator``, whose identity checks are
+        order-insensitive) opts out; the user-facing parity contract
+        keeps the stable global order.
         """
         rules = rules if rules is not None else self.compile(df)
-        entries = []
-        for r in rules:
-            obs = (
-                r.observed.cast("string")
-                if r.observed is not None
-                else F.lit(None).cast("string")
+        annotated = self.annotate(df, with_observed=True, rules=rules)
+        null_obs = F.lit(None).cast("string")
+        entries = [
+            F.when(
+                ~F.col(RULE_PREFIX + r.rule_id),
+                F.struct(
+                    F.lit(r.rule_id).alias("rule_id"),
+                    F.lit(r.name).alias("rule_name"),
+                    F.lit(r.severity.value).alias("severity"),
+                    (
+                        F.col(OBS_PREFIX + r.rule_id)
+                        if r.observed is not None
+                        else null_obs
+                    ).alias("observed"),
+                ),
             )
-            entries.append(
-                F.when(
-                    ~r.passed,
-                    F.struct(
-                        F.lit(r.rule_id).alias("rule_id"),
-                        F.lit(r.name).alias("rule_name"),
-                        F.lit(r.severity.value).alias("severity"),
-                        obs.alias("observed"),
-                    ),
-                )
-            )
-        out = df.select(
+            for r in rules
+        ]
+        out = annotated.select(
             *key_cols,
             F.explode(F.array_compact(F.array(*entries))).alias("__v"),
         ).select(*key_cols, "__v.*")

@@ -14,12 +14,14 @@ manifest list — the swap is confined to :func:`list_data_files`.
 
 Mechanics (all metadata is manifest-scale, never data-scale):
 
-- New files are validated in file groups; each group's violation rows
-  land in their own ``violations/batch=N`` directory written with
-  overwrite semantics, so a job killed after the write but before the
-  manifest commit is healed by the re-run overwriting the same batch
-  dir (the manifest's ``next_batch`` only advances on commit, and
-  readers only read committed batches).
+- New files are validated in groups of :data:`FILE_GROUP_SIZE`, each
+  ONE Spark job after its schema read: the write of its violation rows
+  to their own ``violations/batch=N`` directory, on which the
+  manifest's per-file counts are observed (``DataFrame.observe``). The
+  directory is written with overwrite semantics, so a job killed after
+  the write but before the manifest commit is healed by the re-run
+  overwriting the same batch dir (the manifest's ``next_batch`` only
+  advances on commit, and readers only read committed batches).
 - Each violation row carries ``(src_file, batch)``; the live view
   broadcast-semi-joins committed batch output against the manifest's
   current file set, so a removed (or replaced) file's historical rows
@@ -52,20 +54,23 @@ import os
 import re
 import tempfile
 from pathlib import Path
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, List, Optional, Tuple
 from urllib.parse import unquote
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from datacheck_spark.engine import HAS_ERROR, RULE_PREFIX
+
 INCR_MANIFEST = "incremental.json"
 
-# Upper bound on files validated (and collected) per committed batch —
-# keeps every driver-side structure in _validate_group at metadata
-# scale no matter how file_group_size is configured.
-MAX_FILES_PER_GROUP = 4096
+#: Files validated per committed batch. It bounds every driver-side
+#: structure of a group (its file list, its observed per-file counts)
+#: at metadata scale, so a full run over a 10^6-file table streams
+#: through ceil(10^6 / 64) bounded batches.
+FILE_GROUP_SIZE = 64
 
 _FILE_URI = re.compile(r"^file:/+")
 
@@ -84,43 +89,18 @@ def key_to_path(key: str) -> str:
     return unquote(key)
 
 
-def _hadoop_path(spark: SparkSession, key: str):
-    """A remote key as a Hadoop ``Path`` plus the session's Hadoop
-    configuration: the file's size, mtime and footer are then read
-    through the same filesystem client Spark's reader uses."""
-    jvm = spark._jvm
-    return (
-        jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(key)),
-        spark._jsc.hadoopConfiguration(),
-    )
-
-
 def _stat(spark: SparkSession, key: str) -> Dict[str, int]:
-    """(size, mtime_ns) fingerprint of one data file."""
+    """(size, mtime_ns) fingerprint of one data file; a remote key
+    (``s3a://…``, ``hdfs://…``) is stat-ed through the same Hadoop
+    filesystem client Spark's reader uses."""
     if key.startswith("/"):
         st = os.stat(key_to_path(key))
         return {"size": st.st_size, "mtime": st.st_mtime_ns}
-    path, conf = _hadoop_path(spark, key)
-    st = path.getFileSystem(conf).getFileStatus(path)
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(key))
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    st = fs.getFileStatus(path)
     return {"size": st.getLen(), "mtime": st.getModificationTime() * 10**6}
-
-
-def _parquet_num_rows(spark: SparkSession, key: str) -> int:
-    """Exact row count from the parquet footer — metadata-scale, no
-    data read (same discipline as :func:`list_data_files`)."""
-    if key.startswith("/"):
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(key_to_path(key)).metadata.num_rows
-    path, conf = _hadoop_path(spark, key)
-    hadoop = spark._jvm.org.apache.parquet.hadoop
-    reader = hadoop.ParquetFileReader.open(
-        hadoop.util.HadoopInputFile.fromPath(path, conf)
-    )
-    try:
-        return reader.getRecordCount()
-    finally:
-        reader.close()
 
 
 def list_data_files(
@@ -164,7 +144,6 @@ class IncrementalValidator:
         base_path: str,
         rule_version: str = "v1",
         checker=None,
-        file_group_size: int = 64,
     ):
         if checker is None:
             from datacheck_spark.transcripts import TranscriptChecker
@@ -174,14 +153,6 @@ class IncrementalValidator:
         self.rule_version = rule_version
         self.checker = checker
         self.key_cols = list(checker.key_cols)
-        # The only driver-side collect proportional to input (per-file
-        # stats + footer row counts in _validate_group) is bounded by
-        # the group size, so a full run over a 10^6-file table streams
-        # through ceil(10^6 / group) bounded batches instead of one
-        # 10^6-entry collect. Clamp so a caller config can't undo that.
-        self.file_group_size = max(
-            1, min(int(file_group_size), MAX_FILES_PER_GROUP)
-        )
 
     # --- manifest -----------------------------------------------------
 
@@ -239,8 +210,8 @@ class IncrementalValidator:
             self._save_state(state)
 
         batches_written = []
-        for i in range(0, len(new), self.file_group_size):
-            group = new[i : i + self.file_group_size]
+        for i in range(0, len(new), FILE_GROUP_SIZE):
+            group = new[i : i + FILE_GROUP_SIZE]
             batch = int(state["next_batch"])
             per_file = self._validate_group(spark, group, batch)
             for p in group:
@@ -269,62 +240,70 @@ class IncrementalValidator:
     def _validate_group(
         self, spark: SparkSession, paths: List[str], batch: int
     ) -> Dict[str, Dict[str, Any]]:
-        """Validate one group of files into its batch dir; returns
-        per-file {rows, violations, error_rows}. Rules are compiled
-        against the data schema WITHOUT the src_file column so
-        dataset-level rules (non_empty over all string columns, ...)
-        see exactly the schema a full run sees.
+        """Validate one group of files into its batch dir in ONE Spark
+        job, the write (after the group's schema read); returns per-file
+        {rows, violations, error_rows}, observed on that write:
+        ``error_rows`` counts the rows failing an ERROR-severity rule,
+        the unit of the report's ``failed_turns``."""
+        frame, observed = self._group_frame(spark, paths, batch)
+        # overwrite heals a previous killed run's uncommitted batch dir
+        frame.write.mode("overwrite").parquet(self._batch_dir(batch))
+        stride = len(paths) + 1
+        out = {p: {"rows": 0, "violations": 0, "error_rows": 0} for p in paths}
+        for b in observed.get["counts"] or ():
+            flags, pos = divmod(int(b["x"]), stride)
+            if b["x"] != int(b["x"]) or pos == 0:
+                raise RuntimeError(f"observed per-file counts not exact: {b}")
+            failed, has_error = divmod(flags, 2)
+            n, c = int(b["y"]), out[paths[pos - 1]]
+            c["rows"] += n
+            c["violations"] += failed * n
+            c["error_rows"] += has_error * n
+        return out
 
-        Exactly ONE data scan per group (the violations write): row
-        counts come from the parquet footers driver-side, and the
-        violation/error-row metrics aggregate the just-written batch
-        output (violation-scale, not data-scale)."""
+    def _group_frame(
+        self, spark: SparkSession, paths: List[str], batch: int
+    ) -> Tuple[DataFrame, Observation]:
+        """The violation rows of one file group and the ``Observation``
+        their write fills with each file's counts. Rules are compiled
+        against the data schema WITHOUT the src_file column so
+        dataset-level rules (non_empty over all string columns, ...) see
+        exactly the schema a full run sees. The observed node sits below
+        the unpivot with no exchange in the plan, so each partition's
+        metrics merge once, in the write's single stage."""
+        engine = self.checker.engine
         base = spark.read.parquet(*[key_to_path(p) for p in paths])
-        rules = self.checker.engine.compile(base)
-        df = base.withColumn(
-            "src_file",
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
+        rules = engine.compile(base)
+        src = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+        annotated = engine.annotate(
+            base.withColumn("src_file", src), with_observed=True, rules=rules
+        )
+        # One histogram keyed by (failed rules, has error, file
+        # position): histogram_numeric keeps one exact bin per key while
+        # keys do not outnumber bins (checked in _validate_group), at
+        # O(log bins) a row; a count_if per file costs O(files) a row
+        # (twice the write's CPU on a 64-file group).
+        stride = len(paths) + 1
+        pos = F.array_position(F.array(*map(F.lit, paths)), F.col("src_file"))
+        failed = sum(
+            F.when(~F.col(RULE_PREFIX + r.rule_id), 1).otherwise(0) for r in rules
+        )
+        key = (failed * 2 + F.when(F.col(HAS_ERROR), 1).otherwise(0)) * stride
+        bins = F.lit(stride * 2 * (len(rules) + 1))
+        observed = Observation()
+        counted = annotated.observe(
+            observed,
+            F.histogram_numeric((key + pos).cast("double"), bins).alias("counts"),
         )
         # order-insensitive store: ordered=False avoids the global
         # sort's range-sampling job re-running the fused rule pass
-        v = self.checker.engine.violations(
-            df,
-            key_cols=self.key_cols + ["src_file"],
+        frame = engine.violations(
+            counted,
+            self.key_cols + ["src_file"],
             rules=rules,
             ordered=False,
         ).withColumn("batch", F.lit(batch))
-        # overwrite heals a previous killed run's uncommitted batch dir
-        v.write.mode("overwrite").parquet(self._batch_dir(batch))
-
-        # driver state here is bounded by the group size (clamped to
-        # MAX_FILES_PER_GROUP): len(paths) footer reads and a
-        # <=len(paths)-row collect below — never table-proportional
-        rows = {p: _parquet_num_rows(spark, p) for p in paths}
-        # error_rows = distinct failing rows at ERROR severity — the
-        # unit the report path's pass_rate gate counts in
-        stats = {
-            r["src_file"]: r
-            for r in spark.read.parquet(self._batch_dir(batch))
-            .groupBy("src_file")
-            .agg(
-                F.count("*").alias("n"),
-                F.countDistinct(
-                    F.when(
-                        F.col("severity") == "error",
-                        F.struct(*self.key_cols),
-                    )
-                ).alias("err_rows"),
-            )
-            .collect()
-        }
-        return {
-            p: {
-                "rows": int(rows.get(p, 0)),
-                "violations": int(stats[p]["n"]) if p in stats else 0,
-                "error_rows": int(stats[p]["err_rows"]) if p in stats else 0,
-            }
-            for p in paths
-        }
+        return frame, observed
 
     # --- live view ------------------------------------------------------
 
@@ -435,9 +414,14 @@ class IncrementalValidator:
         if not state["batches"]:
             return self.summary(state)
         target = int(state["next_batch"])
-        live = self.live_violations(spark).withColumn("batch", F.lit(target))
+        written = Observation()
+        live = (
+            self.live_violations(spark)
+            .withColumn("batch", F.lit(target))
+            .observe(written, F.count(F.lit(1)).alias("n"))
+        )
         live.write.mode("overwrite").parquet(self._batch_dir(target))
-        n = spark.read.parquet(self._batch_dir(target)).count()
+        n = written.get["n"]
 
         old = [int(b) for b in state["batches"]]
         for p in state["files"].values():

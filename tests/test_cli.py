@@ -394,6 +394,31 @@ def test_check_spark_written_json_directory_strict(
     assert json.loads(report.read_text())["summary"]["total_samples"] == 6
 
 
+def test_check_strict_fails_when_no_file_was_read(spark, tmp_path, capsys):
+    """A batch `check DIR` that skips every file (here Spark's JSON-lines
+    part files, which the batch check reads as whole-file JSON) reports
+    `total_files: 0`; under `--strict` that run fails."""
+    from datacheck_spark import sources as SRC
+
+    rows = [
+        (str(i), f"question number {i}", "" if i % 2 else f"answer {i}")
+        for i in range(6)
+    ]
+    data = tmp_path / "outdir"
+    SRC.write_jsonl(
+        spark.createDataFrame(rows, "id string, instruction string, "
+                                    "response string"),
+        str(data),
+    )
+    assert SRC.is_batch_directory(str(data))
+    rc = main(["check", str(data), "-f", "json", "--strict"])
+    out = json.loads(capsys.readouterr().out)
+    assert out["total_files"] == 0 and out["skipped_files"]
+    assert rc == 1
+    assert main(["check", str(data), "-f", "json"]) == 0
+    capsys.readouterr()
+
+
 def test_infer_suggest_drift_read_every_row_of_an_appended_table(
     spark, appended_table, capsys
 ):

@@ -12,10 +12,10 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from datacheck_spark import incremental
 from datacheck_spark.incremental import (
     IncrementalValidator,
     _norm_path,
-    _parquet_num_rows,
     _stat,
     key_to_path,
     list_data_files,
@@ -122,10 +122,11 @@ def test_rule_version_bump_revalidates_everything(spark, tmp_path, table, checke
     assert out["new_files"] == 3  # lineage mismatch -> full revalidation
 
 
-def test_compact_preserves_live_view(spark, tmp_path, table, checker):
-    iv = IncrementalValidator(
-        str(tmp_path / "ckpt"), checker=checker, file_group_size=1
-    )
+def test_compact_preserves_live_view(
+    spark, tmp_path, table, checker, monkeypatch
+):
+    monkeypatch.setattr(incremental, "FILE_GROUP_SIZE", 1)
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
     iv.run(spark, str(table))  # 3 batches (one per file)
     assert len(iv.load_state()["batches"]) == 3
     before = _vset(iv.live_violations(spark))
@@ -248,23 +249,21 @@ def test_unlistable_path_raises_before_any_state_change(
 
 def test_remote_file_metadata_through_hadoop(spark, table):
     """Keys that are not local paths (``s3a://``, ``hdfs://``) get
-    their fingerprint and footer row count through Hadoop's filesystem
-    client; on a ``file:`` URI it agrees with the local route."""
+    their fingerprint through Hadoop's filesystem client; on a
+    ``file:`` URI it agrees with the local route."""
     for key in list_data_files(spark, str(table)):
         local, remote = _stat(spark, key), _stat(spark, "file:" + key)
         assert remote["size"] == local["size"]
         assert abs(remote["mtime"] - local["mtime"]) < 10**6  # ms clock
-        assert _parquet_num_rows(spark, "file:" + key) == _parquet_num_rows(
-            spark, key
-        ) > 0
 
 
-def test_batch_trend_flags_bad_append(spark, tmp_path, table, checker):
+def test_batch_trend_flags_bad_append(
+    spark, tmp_path, table, checker, monkeypatch
+):
     """A batch whose violation rate jumps against history is flagged —
     from manifest metrics alone (no Spark job)."""
-    iv = IncrementalValidator(
-        str(tmp_path / "ckpt"), checker=checker, file_group_size=1
-    )
+    monkeypatch.setattr(incremental, "FILE_GROUP_SIZE", 1)
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
     iv.run(spark, str(table))  # 3 similar-quality batches
     # append an all-blank batch: ~100% non_empty violation rate
     bad = (
@@ -347,16 +346,17 @@ def test_schema_evolution_appended_column(spark, tmp_path, table, checker):
     assert _vset(iv.live_violations(spark)) == _vset(full)
 
 
-def test_random_histories_preserve_identity(spark, tmp_path, checker):
+def test_random_histories_preserve_identity(
+    spark, tmp_path, checker, monkeypatch
+):
     """State-machine check: under a random add/remove/compact history
     the live view equals a from-scratch run after EVERY step."""
     import random
 
     rng = random.Random(1234)
     t = tmp_path / "tbl"
-    iv = IncrementalValidator(
-        str(tmp_path / "ckpt"), checker=checker, file_group_size=2
-    )
+    monkeypatch.setattr(incremental, "FILE_GROUP_SIZE", 2)
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
     next_id = [0]
 
     def add_file():
@@ -387,38 +387,30 @@ def test_random_histories_preserve_identity(spark, tmp_path, checker):
         assert _vset(iv.live_violations(spark)) == _vset(full), op
 
 
-def test_group_commit_resume(spark, tmp_path, table, checker):
+def test_group_commit_resume(spark, tmp_path, table, checker, monkeypatch):
     """A killed run resumes at the next uncommitted group: simulate by
-    running with file_group_size=1 and checking per-group manifest
+    running with a group size of 1 and checking per-group manifest
     commits exist after each batch."""
-    iv = IncrementalValidator(
-        str(tmp_path / "ckpt"), checker=checker, file_group_size=1
-    )
+    monkeypatch.setattr(incremental, "FILE_GROUP_SIZE", 1)
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
     out = iv.run(spark, str(table))
     assert out["batches_written"] == [0, 1, 2]
     st = iv.load_state()
     assert {m["batch"] for m in st["files"].values()} == {0, 1, 2}
 
 
-def test_many_file_table_bounded_groups(spark, tmp_path, checker):
+def test_many_file_table_bounded_groups(
+    spark, tmp_path, checker, monkeypatch
+):
     """A full run over a many-file table streams through bounded
-    groups: per-batch driver collects stay at group size, the manifest
+    groups: per-batch observed counts stay at group size, the manifest
     records every file, and the live view equals a from-scratch run."""
-    from datacheck_spark.incremental import MAX_FILES_PER_GROUP
-
     t = tmp_path / "many"
     df = generate_transcripts(spark, n_convs=120, turns_per_conv=4, seed=13)
     _write(df, t, n_files=96)
 
-    # config clamp: an unbounded group size cannot undo the bound
-    iv_huge = IncrementalValidator(
-        str(tmp_path / "ckpt0"), checker=checker, file_group_size=10**9
-    )
-    assert iv_huge.file_group_size == MAX_FILES_PER_GROUP
-
-    iv = IncrementalValidator(
-        str(tmp_path / "ckpt"), checker=checker, file_group_size=16
-    )
+    monkeypatch.setattr(incremental, "FILE_GROUP_SIZE", 16)
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
     out = iv.run(spark, str(t))
     assert out["new_files"] == 96
     assert out["batches_written"] == list(range(6))  # ceil(96/16)
@@ -449,3 +441,68 @@ def test_local_frames_are_local_relations(spark, tmp_path, table, checker):
     for df in (empty, iv.live_violations(spark), connected_components(pairs)):
         plan = df._jdf.queryExecution().analyzed().toString()
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_error_rows_count_failing_rows(spark, tmp_path, checker):
+    """A file's ``error_rows`` is the number of rows failing an ERROR
+    rule, the unit of ``TranscriptChecker.run(...).failed_turns``: two
+    failing rows sharing one (conv_id, turn_idx) and two failing rows
+    whose keys are null count as four rows, not as two distinct keys."""
+    from datetime import datetime
+
+    ts = datetime(2026, 1, 1)
+    df = spark.createDataFrame(
+        [
+            ("c1", 0, "user", "hello there", None, ts),
+            ("c1", 1, "user", "   ", None, ts),
+            ("c1", 1, "robot", "a fine answer", None, ts),
+            (None, None, "user", "who am i", None, ts),
+            (None, None, "assistant", "nobody", None, ts),
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    t = tmp_path / "one_file"
+    _write(df, t, n_files=1)
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
+    iv.run(spark, str(t))
+    (m,) = iv.load_state()["files"].values()
+    report = checker.run(spark.read.parquet(str(t)), detect_anomalies=False)
+    assert m["error_rows"] == report.failed_turns == 4
+    assert m["rows"] == 5
+    assert m["violations"] == iv.live_violations(spark).count()
+
+
+def test_group_is_one_write_job(spark, tmp_path, table, checker):
+    """One file group runs at most 2 Spark jobs, its schema read and
+    the write of its violation rows, and every file of the group gets
+    its counts from that write: zeros, not nulls, for a clean file."""
+    from datetime import datetime
+
+    clean = spark.createDataFrame(
+        [("ok", 0, "user", "hello there", None, datetime(2026, 1, 1))],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    _write(clean, table / "clean", n_files=1)
+    paths = sorted(list_data_files(spark, str(table)))
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
+    sc = spark.sparkContext
+    sc.setJobGroup("incremental-group-guard", "one file group")
+    try:
+        counts = iv._validate_group(spark, paths, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("incremental-group-guard")
+    assert 1 <= len(jobs) <= 2, jobs
+    assert set(counts) == set(paths)
+    for p in paths:
+        assert all(type(counts[p][k]) is int for k in counts[p]), counts[p]
+    assert [counts[p] for p in paths if "/clean/" in p] == [
+        {"rows": 1, "violations": 0, "error_rows": 0}
+    ]
+    full = spark.read.parquet(*[key_to_path(p) for p in paths])
+    assert sum(m["rows"] for m in counts.values()) == full.count()
+    assert sum(m["violations"] for m in counts.values()) == (
+        spark.read.parquet(iv._batch_dir(0)).count()
+    )

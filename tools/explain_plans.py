@@ -140,14 +140,55 @@ def main():
         ],
     )
 
-    # 6. violations unpivot stays narrow until the final sort
-    viols = engine.violations(docs.select("doc_id", "text"), key_cols=["doc_id"])
+    # 6. violation rows: the unpivot of the annotated frame stays
+    # narrow until the final sort
+    doc_rules = engine.compile(docs.select("doc_id", "text"))
+    viols = engine.violations(
+        engine.annotate(
+            docs.select("doc_id", "text"), with_observed=True, rules=doc_rules
+        ),
+        ["doc_id"],
+        rules=doc_rules,
+    )
     add(
-        "violations unpivot + stable ordering",
+        "violations unpivot over annotate + stable ordering",
         viols,
         [
             ("generate/explode present", lambda p: "Generate" in p),
             ("sort for stable ordering", lambda p: "Sort" in p),
+        ],
+    )
+
+    # 6b. the violation store's group write: per-file counts observed
+    # in the write's single stage (a CollectMetrics node over one scan,
+    # no exchange, so each partition's metrics merge once)
+    import re as _re
+
+    from datacheck_spark.incremental import (
+        IncrementalValidator,
+        list_data_files,
+    )
+    from datacheck_spark.transcripts import TranscriptChecker
+
+    tr_path = ROOT / ".contract_cache" / "transcripts_200x10" / "data.parquet"
+    # only the plan is built: nothing is written under the store path
+    store = IncrementalValidator(
+        str(tr_path.parent / "store"),
+        checker=TranscriptChecker(include_repetitive=False),
+    )
+    group, _ = store._group_frame(
+        spark, sorted(list_data_files(spark, str(tr_path))), 0
+    )
+    add(
+        "violation store group write (observed per-file counts)",
+        group,
+        [
+            ("CollectMetrics node", lambda p: "CollectMetrics" in p),
+            (
+                "one parquet scan",
+                lambda p: len(_re.findall(r"\(\d+\) Scan parquet", p)) == 1,
+            ),
+            ("no exchange", lambda p: "Exchange" not in p),
         ],
     )
 

@@ -1,8 +1,8 @@
 """Kill-and-heal identity drive for incremental validation.
 
 Protocol: a child process runs the initial incremental pass over the
-transcripts table of ``tools/transcripts_table.py`` (64 files) with file_group_size=16
-(4 groups) and is hard-killed at the WORST possible moment — after
+transcripts table of ``tools/transcripts_table.py`` (64 files) with
+``incremental.FILE_GROUP_SIZE`` set to 16 (4 groups) and is hard-killed at the WORST possible moment — after
 group 1's batch dir is fully written but BEFORE its manifest commit.
 The re-run must (a) treat group 0 as done, (b) heal the orphan batch=1
 dir by overwriting it, and (c) end with a live violation view identical
@@ -36,12 +36,13 @@ CHILD = f'''
 import os, sys
 sys.path.insert(0, {str(TOOLS)!r})
 from transcripts_table import spark_session
+from datacheck_spark import incremental
 from datacheck_spark.incremental import IncrementalValidator
 from datacheck_spark.transcripts import TranscriptChecker
 
 spark = spark_session("incremental-kill-drive-child")
-iv = IncrementalValidator({BASE!r}, checker=TranscriptChecker(include_repetitive=False),
-                          file_group_size=16)
+incremental.FILE_GROUP_SIZE = 16
+iv = IncrementalValidator({BASE!r}, checker=TranscriptChecker(include_repetitive=False))
 orig = iv._save_state
 calls = [0]
 def dying_save(state):
@@ -68,11 +69,13 @@ assert r.returncode == 137 and sorted(manifest["batches"]) == ["0"] and orphan
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from datacheck_spark import incremental  # noqa: E402
 from datacheck_spark.incremental import IncrementalValidator  # noqa: E402
 from datacheck_spark.transcripts import TranscriptChecker  # noqa: E402
 
+incremental.FILE_GROUP_SIZE = 16
 iv = IncrementalValidator(
-    BASE, checker=TranscriptChecker(include_repetitive=False), file_group_size=16
+    BASE, checker=TranscriptChecker(include_repetitive=False)
 )
 out = iv.run(spark, TPATH)
 print("healed run:", {k: out[k] for k in ("new_files", "batches_written")})
