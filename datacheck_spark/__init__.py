@@ -12,8 +12,8 @@ Design (see SURVEY.md §7):
   as ONE fused projection pass (whole-stage codegen), not a per-row loop.
 - Dataset-level operators (dedup, stats, anomaly, drift) are single
   ``groupBy``/``agg`` jobs with partial+final combine across executors.
-- Per-row Python is avoided; where semantics are irreducible
-  (``repetitive_text``) we use Arrow-vectorized pandas UDFs.
+- No rule runs per-row Python: ``repetitive_text``'s ``Counter`` tests
+  are exact array/regex Column expressions too (``rules.text``).
 - Built for 10^12-turn transcript tables: salted aggregation for hot
   conversations, broadcast anti-joins for referential checks, HLL
   sketches for distinct counts, and one resumable violation store

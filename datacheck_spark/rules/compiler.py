@@ -3,8 +3,7 @@
 This is the heart of the engine (SURVEY.md §2.2/§2.3): every rule the
 reference interprets per-row (``/root/reference/src/datacheck/rules.py``)
 compiles here to a Catalyst expression, so the whole rule suite runs as
-ONE fused whole-stage-codegen projection over the scan — no per-row
-Python (except the opt-in ``repetitive_text`` pandas UDF).
+ONE fused projection over the scan — no per-row Python, no Python UDF.
 
 A ``RuleSet`` holds *builders* ``(df, schema) -> CompiledRule`` because
 several rules are shaped by the DataFrame's own schema (e.g. "every

@@ -7,10 +7,11 @@ Semantics mirror the reference's ``text_rules.py``
   compatible as written, so they run JVM-side via ``rlike``.
 - Garbled detection ``text_rules.py:121-136`` — control/replacement chars
   > 1 % of length, or a 3+-run of U+00C0–U+00FF; strings < 5 chars skip.
-- Repetitive text ``text_rules.py:142-172`` — sentence- and window-level
-  ``Counter`` logic is irreducible per-row Python ⇒ Arrow-vectorized
-  pandas UDF (the only Python in the hot path, and only when this rule
-  is enabled).
+- Repetitive text ``text_rules.py:142-172`` — the sentence- and
+  window-level ``Counter`` tests as one exact Column expression: sorted
+  segment and window arrays, a backreference run test and a majority
+  test; ``_repetitive_one`` is the plain-Python oracle the tests hold it
+  to. No rule here runs Python.
 - Language detection ``text_rules.py:32-94`` — per-script ``regexp_count``
   tallies, dominant-language argmax with first-in-order tie-break, 2-dp
   rounded confidence, fields > 10 chars only.
@@ -21,13 +22,10 @@ Everything here returns *pass* columns: True ⇒ the row passes the rule.
 from __future__ import annotations
 
 from functools import reduce
-from typing import List, Optional, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, StringType
 
 # --- PII (text_rules.py:99-104) ------------------------------------------
 
@@ -122,34 +120,13 @@ def _repetitive_one(value) -> bool:
     return False
 
 
-@pandas_udf(BooleanType())
-def repetitive_flag(texts: pd.Series) -> pd.Series:
-    """Arrow-batched repetition detector; True ⇒ repetitive.
-
-    Vectorized pre-gate (C-speed pandas str ops): the predicate can
-    only fire for strings of length ≥ 50 that have ≥ 2 sentence
-    separators (sentence mode needs ≥ 3 segments) or length > 100
-    (window mode), so the per-row Python port runs on the ~1 % of rows
-    that pass the gate instead of the whole batch."""
-    import numpy as np
-
-    s = texts.fillna("")
-    n = s.str.len()
-    gate = (n >= 50) & ((s.str.count(r"[。！？\n.!?]") >= 2) | (n > 100))
-    vals = np.zeros(len(s), dtype=bool)
-    idx = np.flatnonzero(gate.to_numpy())
-    if idx.size:
-        arr = s.to_numpy()
-        vals[idx] = [_repetitive_one(arr[i]) for i in idx]
-    return pd.Series(vals, index=texts.index)
-
-
 # Java regex \s is ASCII-only ([ \t\n\x0B\f\r]); Python str.strip()
 # strips the full Unicode whitespace set (str.isspace() == True).
-PY_WHITESPACE_CLASS = (
-    "[\\s\\u001c-\\u001f\\u0085\\u00a0\\u1680\\u2000-\\u200a"
-    "\\u2028\\u2029\\u202f\\u205f\\u3000]"
+PY_WHITESPACE_MEMBERS = (
+    "\\s\\u001c-\\u001f\\u0085\\u00a0\\u1680\\u2000-\\u200a"
+    "\\u2028\\u2029\\u202f\\u205f\\u3000"
 )
+PY_WHITESPACE_CLASS = f"[{PY_WHITESPACE_MEMBERS}]"
 
 
 def py_strip(col: Column) -> Column:
@@ -194,34 +171,75 @@ def py_blank(col: Column) -> Column:
     )
 
 
-def repetitive_clean(col: Column) -> Column:
-    """True iff the column is not excessively repetitive.
+#: one segment of the reference's ``re.split(r"[。！？\n.!?]+")``,
+#: Python-stripped, longer than 5 characters, in a text whose CJK
+#: separators have become ``\n``: it starts and ends on a non-whitespace
+#: character and runs over no separator, so the greedy middle backs off
+#: only over trailing whitespace. A segment whose strip is 5 characters
+#: or shorter has no substring that matches.
+SENTENCE_SEGMENT = (
+    f"[^\\n.!?{PY_WHITESPACE_MEMBERS}][^\\n.!?]{{4,}}"
+    f"[^\\n.!?{PY_WHITESPACE_MEMBERS}]"
+)
+#: the reference's windows ``value[i:i+10]`` for ``i`` in
+#: ``range(0, len - 10, 10)``: aligned 10-character chunks that are
+#: followed by at least one more character
+WINDOW = "(?s).{10}(?=.)"
 
-    Runs the Arrow-batched pandas UDF — the byte-exact reference port —
-    because it is MEASURED faster than a Column-expression port of the
-    same predicate: ~6x on the 8.36M-turn corpus of round 4 (3.7s vs
-    23.5s full-table), and 12.4–14.6 vs 18.2–22.8 CPU seconds per warm
-    whole-table verdict on the ``perfbench`` transcripts table. The
-    higher-order-function tree (split → per-segment strip regex →
-    array_sort → aggregate-with-struct, twice) is CodegenFallback, and
-    its interpreted evaluation costs ~370µs per gated row, while
-    Python's re.split + Counter costs ~4µs per row vectorized over
-    Arrow batches. "UDFs are the slow path" inverts here: the
-    per-element interpreted expression machinery is the slower runtime."""
-    # JVM-side mask before the Arrow boundary: rows that cannot fire the
-    # predicate (len < 50, or no sentence separators and len <= 100 —
-    # the same necessary condition the UDF's internal gate re-checks)
-    # are sent as NULL, so Arrow ships no string bytes for them (~99 %
-    # of the bench corpus; the text payload, not the Python compute, is
-    # the transfer cost at scale). NULL ⇒ fillna("") ⇒ len 0 ⇒ False in
-    # the UDF — identical semantics, parity-fuzzed.
+
+def repetitive_clean(col: Column) -> Column:
+    """True iff the column is not excessively repetitive: the exact
+    :func:`_repetitive_one` as one codegen-able JVM expression (array
+    and regex functions, no lambda: a higher-order function would drop
+    the whole rule projection out of whole-stage codegen).
+
+    - Sentence mode: of ``n`` stripped segments longer than 5
+      characters, the top count fires when it is at least 3 and over
+      30 % of ``n``, i.e. at least ``k = max(3, floor(3n / 10) + 1)``.
+      Sorted and joined by ``"\\n"`` (which no segment holds), the
+      segments then hold a run of ``k`` equal lines, found by a
+      backreference.
+    - Window mode: of ``m >= 10`` aligned windows (length > 100), the top
+      count fires when it is over half of ``m`` (and so over 3). Sorted,
+      such a majority covers the middle position ``floor(m / 2)``, so
+      only the window there is a candidate, and it fires iff the window
+      ``floor(m / 2)`` places after its first occurrence equals it.
+
+    The length and separator gates null each mode's input on rows that
+    cannot fire it, so the array work runs on gated rows only. Each
+    array sits outside any CaseWhen branch, so Spark's common
+    subexpression elimination builds it once per row."""
     ln = F.length(col)
-    # "two separator chars anywhere" as an early-exit regex — the
-    # translate-count equivalent allocates a stripped copy of every
-    # string (measured 4x slower on the bench corpus)
-    two_seps = col.rlike("(?s)[。！？\\n.!?].*[。！？\\n.!?]")
-    gate = (ln >= 50) & (two_seps | (ln > 100))
-    return ~F.coalesce(repetitive_flag(F.when(gate, col)), F.lit(False))
+    # re.split treats every separator alike, so the CJK ones become
+    # "\n": a byte search that copies nothing where none occurs. Every
+    # class the regex engine then tests character by character is a
+    # Latin-1 bitmap; a class with other members goes through a chain of
+    # predicates, about 10x slower per character.
+    ascii_seps = reduce(
+        lambda c, sep: F.replace(c, F.lit(sep), F.lit("\n")), "。！？", col
+    )
+    sentences = F.when(
+        (ln >= 50) & ascii_seps.rlike("(?s)[\\n.!?].*[\\n.!?]"), ascii_seps
+    )
+    segments = F.regexp_extract_all(sentences, F.lit(SENTENCE_SEGMENT), 0)
+    k_minus_1 = F.greatest(F.lit(2), F.floor(F.size(segments) * 3 / 10))
+    run_of_k = F.concat(
+        F.lit("(?:^|\n)([^\n]*+)(?:\n\\1){"),
+        k_minus_1.cast("string"),
+        F.lit("}(?![^\n])"),
+    )
+    sentence_hit = F.rlike(
+        F.array_join(F.sort_array(segments), "\n"), run_of_k
+    )
+    windows = F.sort_array(
+        F.regexp_extract_all(F.when(ln > 100, col), F.lit(WINDOW), 0)
+    )
+    half = F.floor(F.size(windows) / 2).cast("int")
+    middle = F.get(windows, half)
+    window_hit = (
+        F.get(windows, F.array_position(windows, middle) + half - 1) == middle
+    )
+    return ~F.coalesce(sentence_hit | window_hit, F.lit(False))
 
 
 # --- Language detection (text_rules.py:32-94) ----------------------------

@@ -39,8 +39,10 @@ def load_data(
     parquet table read the way ``incremental.list_data_files`` lists one
     (``recursiveFileLookup``): a ``.parquet`` file, a directory at any
     depth (``base/`` + ``append_k/``) or an ``s3a:``/``hdfs:`` URI.
-    Partition directories (``k=v/``) add no columns."""
-    suffix = Path(path).suffix.lower()
+    Partition directories (``k=v/``) add no columns. A directory Spark
+    wrote (it holds ``_SUCCESS``) is read by its part files' format,
+    whatever its own name."""
+    suffix = _dataset_suffix(path)
     if suffix == ".jsonl" or (suffix == ".json" and Path(path).is_dir()):
         return spark.read.json(path), {}
     if suffix == ".csv":
@@ -79,17 +81,36 @@ def _supported_files(root: Path, patterns: Optional[List[str]] = None):
     )
 
 
+def _spark_written(root: Path) -> bool:
+    """A local directory holding Spark's ``_SUCCESS`` marker."""
+    return (root / "_SUCCESS").is_file()
+
+
+def _dataset_suffix(path: str) -> str:
+    """The suffix :func:`load_data` reads ``path`` by: for a directory
+    Spark wrote, that of its part files (``part-*.json`` of
+    ``write_jsonl(df, "out")``), else its own."""
+    root = Path(path)
+    if _spark_written(root):
+        parts = {f.suffix.lower() for f in root.glob("part-*")}
+        if len(parts) == 1:
+            return parts.pop()
+    return root.suffix.lower()
+
+
 def is_batch_directory(path: str) -> bool:
     """True when ``path`` is a local directory holding JSON/JSONL/CSV
     files: ``check``/``watch`` then check it file by file
     (:func:`check_directory`, reference ``checker.py:280-365``). Any
     other path is one dataset opened by :func:`load_data`, and so is a
-    directory whose own name carries a supported suffix: Spark writes
-    ``out.jsonl`` as a directory of part files."""
+    directory Spark wrote: one holding its ``_SUCCESS`` marker, or one
+    whose own name carries a supported suffix (``out.jsonl`` is a
+    directory of part files)."""
     root = Path(path)
     return (
         root.is_dir()
         and root.suffix.lower() not in SUPPORTED_EXTENSIONS
+        and not _spark_written(root)
         and bool(_supported_files(root))
     )
 

@@ -395,10 +395,23 @@ def test_check_spark_written_json_directory_strict(
 
 
 def test_check_strict_fails_when_no_file_was_read(spark, tmp_path, capsys):
-    """A batch `check DIR` that skips every file (here Spark's JSON-lines
-    part files, which the batch check reads as whole-file JSON) reports
-    `total_files: 0`; under `--strict` that run fails."""
+    """A batch `check DIR` that skips every file (here unparseable
+    `.json` files) reports `total_files: 0`; under `--strict` that run
+    fails. A directory Spark wrote (it holds `_SUCCESS`) is no batch:
+    `check` reads it as one dataset, every row."""
     from datacheck_spark import sources as SRC
+
+    bad = tmp_path / "unparseable"
+    bad.mkdir()
+    for name in ("a.json", "b.json"):
+        (bad / name).write_text("{not json", encoding="utf-8")
+    assert SRC.is_batch_directory(str(bad))
+    rc = main(["check", str(bad), "-f", "json", "--strict"])
+    out = json.loads(capsys.readouterr().out)
+    assert out["total_files"] == 0 and out["skipped_files"]
+    assert rc == 1
+    assert main(["check", str(bad), "-f", "json"]) == 0
+    capsys.readouterr()
 
     rows = [
         (str(i), f"question number {i}", "" if i % 2 else f"answer {i}")
@@ -410,13 +423,12 @@ def test_check_strict_fails_when_no_file_was_read(spark, tmp_path, capsys):
                                     "response string"),
         str(data),
     )
-    assert SRC.is_batch_directory(str(data))
-    rc = main(["check", str(data), "-f", "json", "--strict"])
-    out = json.loads(capsys.readouterr().out)
-    assert out["total_files"] == 0 and out["skipped_files"]
-    assert rc == 1
+    assert not SRC.is_batch_directory(str(data))
     assert main(["check", str(data), "-f", "json"]) == 0
-    capsys.readouterr()
+    out = json.loads(capsys.readouterr().out)
+    assert out["summary"]["total_samples"] == 6
+    failed = out["rule_results"]["non_empty"]["failed_samples"]
+    assert sorted(failed) == ["1", "3", "5"]
 
 
 def test_infer_suggest_drift_read_every_row_of_an_appended_table(

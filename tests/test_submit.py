@@ -6,9 +6,10 @@ datacheck_spark.zip cli.py <cmd> ...`` on a multi-executor cluster
 ``datacheck = datacheck.cli:main``). These tests run the REAL
 ``spark-submit`` binary from a scratch cwd with PYTHONPATH scrubbed, so
 the only source of the package — on the driver AND inside the executor
-pandas-UDF workers — is the ``--py-files`` archive. That proves the zip
-ships everything the job needs (rules, Arrow UDF kernels, violation
-store code), not just the CLI shim.
+Python workers (the failed-id take-k, a ``mapInPandas`` that runs when a
+check has failing rows) — is the ``--py-files`` archive. That proves the
+zip ships everything the job needs (rules, the failed-id kernel,
+violation store code), not just the CLI shim.
 """
 
 import json
@@ -76,8 +77,10 @@ def _submit(deploy_dir, cli_args, timeout=240):
 
 
 def test_submit_check_clean_parquet(deploy_dir):
-    """check over real parquet: exit 0, report written, the Arrow-UDF
-    rule (repetitive_text) executed on zip-shipped executor code."""
+    """check over real parquet: exit 0, report written, every rule of
+    the default suite reported. All of them are JVM expressions and all
+    500 rows pass, so this check starts no executor Python worker; the
+    strict-gate test below runs the zip's code in one."""
     report = deploy_dir / "report.json"
     proc = _submit(
         deploy_dir,
@@ -94,12 +97,14 @@ def test_submit_check_clean_parquet(deploy_dir):
     data = json.loads(report.read_text())
     assert data["summary"]["total_samples"] == 500
     assert data["summary"]["pass_rate"] == "100.0%"
-    assert "repetitive_text" in data["rule_results"]  # pandas-UDF rule ran
+    assert "repetitive_text" in data["rule_results"]  # last builtin rule
 
 
 def test_submit_strict_gate_exits_nonzero(deploy_dir):
     """CI gating travels through spark-submit: --strict + a planted
-    PII warning must surface as a nonzero process exit."""
+    PII warning must surface as a nonzero process exit. The failing row
+    sends the failed-id take-k (``mapInPandas``) to executor Python
+    workers, which import the package from the zip."""
     dirty = deploy_dir / "dirty.jsonl"
     rows = [{"id": str(i), "text": f"clean row {i}"} for i in range(9)]
     rows.append({"id": "9", "text": "contact alice@example.com now"})

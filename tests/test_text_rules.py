@@ -2,6 +2,7 @@
 cases, evaluated through Spark Columns over small DataFrames."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row, functions as F
 
 from datacheck_spark.rules import text as T
@@ -71,8 +72,8 @@ class TestRepetitive:
         assert got == [c[1] for c in self.CASES]
 
     def test_matches_python_port(self, spark):
-        """The rule column (JVM-side gate + Arrow UDF) must agree with
-        the exact Python port on every case."""
+        """The rule column must agree with the exact Python port on
+        every case."""
         texts = [c[0] for c in self.CASES] + [
             "ab. " * 30,                     # segments <= 5 chars -> filtered
             ("Hello world this is fine. " * 3) + "Unique tail sentence here.",
@@ -143,27 +144,121 @@ class TestNgrams:
         assert rows[1]["j"] == pytest.approx(0.0)
 
 
-def test_repetitive_udf_gate_parity(spark):
-    """Both pre-gates — the JVM-side ``rlike`` mask in repetitive_clean
-    and the vectorized one inside repetitive_flag — must be NECESSARY
-    conditions: rule output == per-row reference port on boundary cases
-    (len 49/50/100/101, exactly 1 vs 2 separators, CJK separators)."""
-    from pyspark.sql import functions as F
-
-    seg = "abcdef"  # len 6 > 5
-    cases = [
-        None, "", "x" * 49, "x" * 50, "x" * 100, "x" * 101,
-        ("y" * 10 + ". ") * 10,             # many separators, repeated
-        (seg + ". ") * 3 + "z" * 30,        # 3 identical segments
-        (seg + "。") * 6,                    # CJK separator
-        seg + ". " + seg + " tail " + "q" * 40,  # 1 separator only
-        "This is repeated. " * 50,
-        "ab. " * 30,                        # segments too short (<=5)
+# test_property_parity.py's fragments plus the whitespace, emoji and CJK
+# separator characters the column port treats specially
+_REPETITION_FRAGMENTS = st.sampled_from(
+    [
+        "hello world", "a@b.co", "13812345678", "+1-23456",
+        "110101199001011234", "\x00\x01", "\ufffd", "ÀÁÂÃ",
+        "。句子内容比较长一些。", "This is repeated. ", "xxxxxxxxxx",
+        "short", " ", "\n", "!?.", "これはにほんご", "한국어입니다",
+        "Это текст", "ألف باء", "0123456789", "a", ".",
+        "\u3000", "\xa0", "\x1c", "\U0001f600", "。", "！", "？",
     ]
-    df = spark.createDataFrame([(t,) for t in cases], "t string").coalesce(1)
-    rows = df.select(
-        "t",
-        (~T.repetitive_clean(F.col("t"))).alias("rep"),
-    ).collect()
-    for r in rows:
-        assert r["rep"] == T._repetitive_one(r["t"]), repr(r["t"])[:60]
+)
+_PIECES = st.lists(_REPETITION_FRAGMENTS, min_size=0, max_size=30).map("".join)
+# a unit repeated up to 12 times around free text reaches both modes'
+# thresholds from either side
+_REPEATED = st.builds(
+    lambda head, unit, times, tail: head + unit * times + tail,
+    _PIECES,
+    st.lists(_REPETITION_FRAGMENTS, min_size=1, max_size=4).map("".join),
+    st.integers(min_value=1, max_value=12),
+    _PIECES,
+)
+_REPETITION_CORPUS = st.lists(
+    st.one_of(_PIECES, _REPEATED), min_size=1, max_size=40
+)
+
+
+def _repetitive_flags(spark, texts):
+    df = spark.createDataFrame([(t,) for t in texts], "t string").coalesce(1)
+    return [
+        (r["t"], r["rep"])
+        for r in df.select(
+            "t", (~T.repetitive_clean(F.col("t"))).alias("rep")
+        ).collect()
+    ]
+
+
+@settings(max_examples=25, deadline=None)
+@given(_REPETITION_CORPUS)
+def test_repetitive_matches_oracle_property(spark, corpus):
+    """The Column expression equals the plain-Python oracle on generated
+    corpora (the reference-parity modules skip without the reference
+    package; this one does not)."""
+    for t, got in _repetitive_flags(spark, corpus):
+        assert got == T._repetitive_one(t), repr(t)[:120]
+
+
+def _windows(*chunks: str, tail: str = "") -> str:
+    """Aligned 10-character windows, then ``tail``: at most one
+    sentence separator, so only window mode can fire."""
+    assert all(len(c) == 10 for c in chunks)
+    return "".join(chunks) + tail
+
+
+def _other(i: int) -> str:
+    return f"other{i:05d}"
+
+
+def _sentences(*segments: str) -> str:
+    """Under 101 characters here, so only sentence mode can fire."""
+    return ". ".join(segments) + "."
+
+
+def _distinct(n: int) -> list:
+    return [f"seg_{i:02d}" for i in range(n)]
+
+
+# (text, repetitive) at each threshold of the reference predicate
+REPETITION_BOUNDARIES = [
+    # 3 equal segments: 3/9 > 0.3 fires, 3/10 does not
+    (_sentences(*["same_1"] * 3, *_distinct(6)), True),
+    (_sentences(*["same_1"] * 3, *_distinct(7)), False),
+    # top count 3 against 4 among n = 10
+    (_sentences(*["same_1"] * 4, *_distinct(6)), True),
+    # fewer than 3 equal segments never fires, whatever the share
+    (_sentences(*["the same sentence here"] * 2, "a different one"), False),
+    (_sentences(*["the same sentence here"] * 3), True),
+    # stripped segment length 5 is dropped, 6 is counted
+    ("  abcde  ." * 6, False),
+    ("  abcdef  ." * 6, True),
+    ("\u3000abcdef\xa0。" * 6, True),
+    ("\u3000abcde\xa0！" * 7, False),
+    # the repeated window sorts before the others, then after them
+    *(
+        case
+        for x in ("a" * 10, "z" * 10)
+        for case in [
+            # even m = 10: 5 equal windows is not a majority, 6 is
+            (_windows(*[x] * 5, *map(_other, range(5)), tail="."), False),
+            (_windows(*[x] * 6, *map(_other, range(4)), tail="."), True),
+            # odd m = 11: 5 equal windows is not a majority, 6 is
+            (_windows(*[x] * 5, *map(_other, range(6)), tail="."), False),
+            (_windows(*[x] * 6, *map(_other, range(5)), tail="."), True),
+            # length 110: the 11th chunk is not a window, so it cannot
+            # tip the count; one more character makes it one
+            (_windows(*[x] * 5, *map(_other, range(5)), x), False),
+            (_windows(*[x] * 5, *map(_other, range(5)), x, tail="."), True),
+        ]
+    ),
+    # one separator gives at most 2 segments
+    ("abcdef. abcdef tail " + "q" * 30, False),
+    ("abcdef. abcdef。abcdef. tail " + "q" * 30, True),
+    # below length 50 nothing fires
+    ("x" + ". same_1" * 6, False),
+    ("xx" + ". same_1" * 6, True),
+    # length 100 has no window mode; 101 does
+    ("y" * 100, False),
+    ("y" * 101, True),
+    ("y" * 49, False),
+    (None, False),
+]
+
+
+def test_repetitive_boundaries(spark):
+    got = dict(_repetitive_flags(spark, [t for t, _ in REPETITION_BOUNDARIES]))
+    for t, expected in REPETITION_BOUNDARIES:
+        assert T._repetitive_one(t) is expected, repr(t)
+        assert got[t] is expected, repr(t)

@@ -56,6 +56,22 @@ def test_planted_violations_detected(spark, transcripts):
     assert 0.9 < report.pass_rate < 1.0
 
 
+def test_rule_suite_plans_no_python(transcripts):
+    """The full suite, repetitive_text included, is JVM expressions:
+    the violation rows plan no Python evaluation node, so the job
+    starts no Python worker."""
+    plan = (
+        TranscriptChecker()
+        .violations(transcripts)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Project" in plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+        assert node not in plan
+
+
 def test_violation_rows_ordered_and_exact(spark, transcripts):
     checker = TranscriptChecker(include_repetitive=False)
     v = checker.violations(transcripts).collect()

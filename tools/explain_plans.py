@@ -171,11 +171,9 @@ def main():
     from datacheck_spark.transcripts import TranscriptChecker
 
     tr_path = ROOT / ".contract_cache" / "transcripts_200x10" / "data.parquet"
-    # only the plan is built: nothing is written under the store path
-    store = IncrementalValidator(
-        str(tr_path.parent / "store"),
-        checker=TranscriptChecker(include_repetitive=False),
-    )
+    # only the plan is built: nothing is written under the store path;
+    # the full rule suite, repetitive_text included
+    store = IncrementalValidator(str(tr_path.parent / "store"))
     group, _ = store._group_frame(
         spark, sorted(list_data_files(spark, str(tr_path))), 0
     )
@@ -218,17 +216,44 @@ def main():
         ],
     )
 
-    # 8. transcript fused pass is regex-free for the blank test
+    # 8. transcript fused pass: all 8 rules in ONE Project, every node in
+    # one whole-stage codegen stage, no Python evaluation node
+    # (repetitive_text is a JVM expression), and the blank test via the
+    # translate char map (no strip regex)
     from datacheck_spark.transcripts import TranscriptChecker
     tr = spark.read.parquet(
         str(ROOT / ".contract_cache" / "transcripts_200x10" / "data.parquet")
     )
-    t_annotated = TranscriptChecker(include_repetitive=False).annotated(tr)
+    t_annotated = TranscriptChecker().annotated(tr)
+    rule_ids = [r.rule_id for r in TranscriptChecker().engine.compile(tr)]
+
+    def _one_rule_projection(p: str) -> bool:
+        # an Output list may span lines: the blank test's char map holds
+        # line breaks
+        outputs = _re.findall(
+            r"\(\d+\) Project [^\n]*\nOutput (.*?)\nInput ", p, _re.S
+        )
+        holders = [o for o in outputs if " AS __rule_" in o]
+        return len(rule_ids) == 8 and len(holders) == 1 and all(
+            f" AS __rule_{rid}#" in holders[0] for rid in rule_ids
+        )
+
     add(
-        "transcript fused pass (7 rules, one projection)",
+        "transcript fused pass (8 rules, one projection)",
         t_annotated,
         [
             ("no shuffle (narrow pass)", lambda p: "Exchange" not in p),
+            ("all 8 rules in one Project", _one_rule_projection),
+            (
+                "no Python evaluation node",
+                lambda p: "ArrowEvalPython" not in p
+                and "BatchEvalPython" not in p,
+            ),
+            (
+                "one whole-stage codegen stage",
+                lambda p: set(_re.findall(r"\[codegen id : (\d+)\]", p))
+                == {"1"},
+            ),
             (
                 "blank test via translate char map (no strip regex)",
                 lambda p: "translate" in p.lower()
