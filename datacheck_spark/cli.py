@@ -509,8 +509,9 @@ def cmd_compare(args) -> int:
 def cmd_stream(args) -> int:
     """Continuous validation of arriving files — the Spark-first
     successor of the reference's watch mode (``cli.py:500-598``, a
-    debounced re-run loop): readStream → fused rules → violations sink
-    + console pass-rate windows."""
+    debounced re-run loop): readStream → the engine's violation rows
+    per micro-batch → parquet sink. The query is stopped on return
+    (``--timeout`` elapsed, or an interrupt)."""
     from datacheck_spark import sources as SRC
     from datacheck_spark import streaming as ST
 
@@ -522,16 +523,18 @@ def cmd_stream(args) -> int:
 
         with open(args.schema_file, "r", encoding="utf-8") as f:
             schema = StructType.fromJson(json.load(f))
-    annotated = ST.stream_validate(spark, args.data, schema, fmt=args.format)
     q = ST.start_violations_sink(
-        annotated,
+        ST.stream_validate(spark, args.data, schema, fmt=args.format),
         args.key_cols.split(","),
         args.output,
         args.checkpoint,
         trigger_seconds=args.trigger_seconds,
     )
     print(f"streaming validation started: {q.id}; writing {args.output}")
-    q.awaitTermination(args.timeout if args.timeout > 0 else None)
+    try:
+        q.awaitTermination(args.timeout if args.timeout > 0 else None)
+    finally:
+        q.stop()
     return 0
 
 
@@ -597,7 +600,7 @@ def cmd_watch(args) -> int:
     The reference uses watchdog; this container has no inotify
     dependency, so the watcher polls the mtimes of the watched files — the
     debounce/re-run semantics are the same. For continuous production
-    validation prefer ``stream`` (Structured Streaming, exactly-once
+    validation prefer ``stream`` (Structured Streaming, checkpointed
     sink); watch is the interactive dev loop."""
     import time
     from pathlib import Path

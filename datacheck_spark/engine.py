@@ -93,6 +93,20 @@ class CheckResult:
         }
 
 
+def _unpivot(
+    df: DataFrame, keep: Sequence, entries: Sequence[Column]
+) -> DataFrame:
+    """One ``(*keep, __v)`` row per non-null entry: ``entries`` are
+    ``CASE WHEN failed THEN value END`` columns. ``explode`` of the
+    plain array followed by a null filter keeps Generate, Filter and
+    Project in one whole-stage codegen stage; dropping the nulls
+    inside the array (``array_compact``, a ``filter`` lambda) is
+    CodegenFallback and would run them interpreted."""
+    return df.select(*keep, F.explode(F.array(*entries)).alias("__v")).where(
+        F.col("__v").isNotNull()
+    )
+
+
 class ValidationEngine:
     """Compile a RuleSet against DataFrames and run validations."""
 
@@ -156,12 +170,15 @@ class ValidationEngine:
         the unpivot of ``annotate(df, with_observed=True)``, one row per
         failed rule (``df`` may already be that annotated frame).
 
-        Narrow: array-of-structs over the pass-columns → ``explode``.
-        No shuffle except the final global sort. ``ordered=False`` swaps
-        it for ``sortWithinPartitions``: a global ``orderBy`` under a
-        WRITE costs a second full pass (the range partitioner's sampling
-        job re-runs the fused rule projection — measured 96s vs 45s on
-        the 8.36M-turn bench table), so the violation store
+        Narrow: one ``CASE WHEN failed THEN struct END`` per rule,
+        unpivoted by :func:`_unpivot` in the annotate pass's codegen
+        stage. The violation store and the streaming sink write these
+        rows. No shuffle except the final global sort.
+        ``ordered=False`` swaps it for ``sortWithinPartitions``: a
+        global ``orderBy`` under a WRITE costs a second full pass (the
+        range partitioner's sampling job re-runs the fused rule
+        projection — measured 96s vs 45s on the 8.36M-turn bench
+        table), so the violation store
         (``IncrementalValidator``, whose identity checks are
         order-insensitive) opts out; the user-facing parity contract
         keeps the stable global order.
@@ -185,10 +202,9 @@ class ValidationEngine:
             )
             for r in rules
         ]
-        out = annotated.select(
-            *key_cols,
-            F.explode(F.array_compact(F.array(*entries))).alias("__v"),
-        ).select(*key_cols, "__v.*")
+        out = _unpivot(annotated, key_cols, entries).select(
+            *key_cols, "__v.*"
+        )
         if ordered:
             return out.orderBy(*key_cols, "rule_id")
         return out.sortWithinPartitions(*key_cols, "rule_id")
@@ -215,14 +231,6 @@ class ValidationEngine:
         Partitions stop reading early once every rule has its k ids.
         """
         rule_ids = [r.rule_id for r in rules]
-        failed_arr = F.array_compact(
-            F.array(
-                *[
-                    F.when(~F.col(RULE_PREFIX + r.rule_id), F.lit(r.rule_id))
-                    for r in rules
-                ]
-            )
-        )
 
         def _take_k_per_partition(batches):
             counts: Dict[str, int] = {}
@@ -241,11 +249,17 @@ class ValidationEngine:
                 ):
                     return  # every rule has its k ids: stop reading
 
-        exploded = annotated.select(
-            F.monotonically_increasing_id().alias("__ord"),
-            F.col(id_col).cast("string").alias("__id"),
-            F.explode(failed_arr).alias("rule_id"),
-        )
+        exploded = _unpivot(
+            annotated,
+            [
+                F.monotonically_increasing_id().alias("__ord"),
+                F.col(id_col).cast("string").alias("__id"),
+            ],
+            [
+                F.when(~F.col(RULE_PREFIX + r.rule_id), F.lit(r.rule_id))
+                for r in rules
+            ],
+        ).withColumnRenamed("__v", "rule_id")
         bounded = exploded.mapInPandas(
             _take_k_per_partition,
             schema="__ord long, __id string, rule_id string",

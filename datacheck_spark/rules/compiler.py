@@ -189,16 +189,12 @@ def _non_empty(df: DataFrame, schema: ValidationSchema):
     per_col = [
         F.col(c).isNull() | ~T.py_blank(F.col(c)) for c in cols
     ]
-    blank_cols = F.array_compact(
-        F.array(
-            *[
-                F.when(
-                    F.col(c).isNotNull() & T.py_blank(F.col(c)),
-                    F.lit(c),
-                )
-                for c in cols
-            ]
-        )
+    # array_join without a null replacement skips the nulls
+    blank_cols = F.array(
+        *[
+            F.when(F.col(c).isNotNull() & T.py_blank(F.col(c)), F.lit(c))
+            for c in cols
+        ]
     )
     return CompiledRule(
         "non_empty",

@@ -4,8 +4,7 @@ Beyond-the-reference op (the reference has no window functions at all —
 SURVEY §2.11); a training-data / clickstream pipeline staple. Batch
 implementation uses the lag + cumulative-sum window idiom (one shuffle,
 partitioned by the entity key — skew handled by AQE or `salted_agg` for
-per-entity rollups). The streaming analogue is
-``F.session_window`` in streaming.py-style jobs.
+per-entity rollups).
 """
 
 from __future__ import annotations

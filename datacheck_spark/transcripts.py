@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datacheck_spark.schema import Severity, TRANSCRIPT_ROLES, ValidationSchema
-from datacheck_spark.engine import ValidationEngine, HAS_ERROR
+from datacheck_spark.engine import ValidationEngine, HAS_ERROR, _unpivot
 from datacheck_spark.rules.compiler import (
     CompiledRule,
     RuleDef,
@@ -499,45 +499,28 @@ def structure_violations(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 
     Same single text-free shuffle shape as
     :func:`conversation_structure` — the lag window on the narrow
-    pre-shuffle projection, then a filter; the output is ∝ violation
-    rate, not input size. The emitted row multiset is
+    pre-shuffle projection, then the engine's null-dropping unpivot
+    (``engine._unpivot``, one codegen stage above the window); the
+    output is ∝ violation rate, not input size. The emitted row multiset is
     order-deterministic for the same reason the verdicts are (see
     :func:`conversation_structure`): every ``observed`` string is
     built from turn_idx/role/ts/text-length, all invariant across
     (turn_idx, role)-tie arrangements under the ts tie-break.
     """
     framed, rules = _structure_rules(df, ts_col)
-    flagged = framed.select(
-        "conv_id",
-        "turn_idx",
-        F.filter(
-            F.array(
-                *[
-                    F.when(
-                        F.coalesce(cond, F.lit(False)),
-                        F.struct(
-                            F.lit(rid).alias("rule_id"),
-                            obs.alias("observed"),
-                        ),
-                    )
-                    for rid, _, cond, obs in rules
-                ]
-            ),
-            lambda s: s.isNotNull(),
-        ).alias("__v"),
-    )
-    return (
-        flagged.where(F.size("__v") > 0)
-        .select(
-            "conv_id", "turn_idx", F.explode("__v").alias("__e")
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.col("__e.rule_id").alias("rule_id"),
-            F.col("__e.observed").alias("observed"),
-        )
-    )
+    return _unpivot(
+        framed,
+        ["conv_id", "turn_idx"],
+        [
+            F.when(
+                cond,
+                F.struct(
+                    F.lit(rid).alias("rule_id"), obs.alias("observed")
+                ),
+            )
+            for rid, _, cond, obs in rules
+        ],
+    ).select("conv_id", "turn_idx", "__v.rule_id", "__v.observed")
 
 
 def _structure_rollup(verdicts: DataFrame) -> DataFrame:

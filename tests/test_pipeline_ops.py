@@ -307,42 +307,58 @@ class TestMultimodal:
 
 class TestStreaming:
     def test_stream_validate_microbatch(self, spark, tmp_path):
-        import time
+        """The sink's rows, without ``batch_id``, are the batch engine's
+        violation rows of the same files (as a multiset)."""
+        from collections import Counter
 
         from datacheck_spark import streaming as ST
+        from datacheck_spark.engine import ValidationEngine
         from datacheck_spark.transcripts import generate_transcripts
 
         src = tmp_path / "in"
         out = tmp_path / "out"
-        ckpt = tmp_path / "ckpt"
-        df = generate_transcripts(spark, n_convs=50, turns_per_conv=5)
-        df.write.parquet(str(src))
-
-        annotated = ST.stream_validate(
-            spark, str(src), df.schema, fmt="parquet"
+        generate_transcripts(spark, n_convs=50, turns_per_conv=5).write.parquet(
+            str(src)
         )
+        static = spark.read.parquet(str(src))
+        keys = ["conv_id", "turn_idx"]
+
         q = ST.start_violations_sink(
-            annotated,
-            ["conv_id", "turn_idx"],
+            ST.stream_validate(spark, str(src), static.schema),
+            keys,
             str(out),
-            str(ckpt),
+            str(tmp_path / "ckpt"),
             trigger_seconds=1,
         )
         try:
-            deadline = time.time() + 60
-            while time.time() < deadline:
-                if q.lastProgress and q.lastProgress.get("numInputRows", 0) >= 0 and out.exists():
-                    files = list(out.glob("*.parquet"))
-                    if files:
-                        break
-                time.sleep(1)
+            q.processAllAvailable()
         finally:
             q.stop()
         got = spark.read.parquet(str(out))
-        assert got.count() > 0
-        assert set(["conv_id", "turn_idx", "rule_id", "batch_id"]).issubset(
-            set(got.columns)
+        want = ValidationEngine().violations(static, keys, ordered=False)
+        assert "batch_id" in got.columns
+        want_rows = Counter(map(tuple, want.collect()))
+        assert sum(want_rows.values()) > 0
+        assert Counter(map(tuple, got.select(*want.columns).collect())) == (
+            want_rows
         )
+
+    def test_cli_stream_stops_its_query(self, spark, tmp_path):
+        from datacheck_spark.cli import main
+        from datacheck_spark.transcripts import generate_transcripts
+
+        src = tmp_path / "in"
+        out = tmp_path / "out"
+        generate_transcripts(spark, n_convs=20, turns_per_conv=3).write.parquet(
+            str(src)
+        )
+        rc = main([
+            "stream", str(src), "-o", str(out),
+            "--checkpoint", str(tmp_path / "ckpt"),
+            "--trigger-seconds", "1", "--timeout", "5",
+        ])
+        assert rc == 0
+        assert spark.streams.active == []
 
 
 def test_frame_dims_consistency_rule(spark):

@@ -2,6 +2,8 @@
 planted-violation verdict checks. The resumable violation store is
 tested in test_incremental.py."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -56,20 +58,44 @@ def test_planted_violations_detected(spark, transcripts):
     assert 0.9 < report.pass_rate < 1.0
 
 
+def _executed_plan(df) -> str:
+    """The physical plan after a run, so an adaptive plan shows its
+    final whole-stage codegen stages."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_rule_suite_plans_no_python(transcripts):
     """The full suite, repetitive_text included, is JVM expressions:
     the violation rows plan no Python evaluation node, so the job
-    starts no Python worker."""
-    plan = (
-        TranscriptChecker()
-        .violations(transcripts)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    starts no Python worker. The unpivots of the store's violation
+    write and of the structure rows hold no lambda (CodegenFallback),
+    so their Generate runs in a whole-stage codegen stage."""
+    from datacheck_spark.transcripts import structure_violations
+
+    plan = _executed_plan(TranscriptChecker().violations(transcripts))
     assert "Project" in plan
     for node in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
         assert node not in plan
+    for df in (
+        TranscriptChecker().violations(transcripts, ordered=False),
+        structure_violations(transcripts),
+    ):
+        plan = _executed_plan(df)
+        # the fixture's cached plan has the generator's own
+        # explode(sequence(...)); an adaptive plan's initial part
+        # carries no codegen ids
+        unpivots = [
+            line
+            for line in plan.split("== Initial Plan ==")[0].splitlines()
+            if "Generate explode(" in line
+            and "Generate explode(sequence(" not in line
+        ]
+        assert unpivots and all(
+            re.search(r"\*\(\d+\) Generate ", line) for line in unpivots
+        ), plan
+        for lam in ("array_compact", "filter(", "lambdafunction"):
+            assert lam not in plan, lam
 
 
 def test_violation_rows_ordered_and_exact(spark, transcripts):
@@ -264,8 +290,6 @@ def test_conversation_structure_plan_shape(spark, transcripts):
     per-conversation agg), and the window sort is TEXT-FREE — the text
     payload is reduced to the __empty boolean before the exchange, so
     document bytes never ship through the shuffle."""
-    import re
-
     from datacheck_spark.transcripts import (
         conversation_structure,
         structure_summary,

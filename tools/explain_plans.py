@@ -140,37 +140,48 @@ def main():
         ],
     )
 
-    # 6. violation rows: the unpivot of the annotated frame stays
-    # narrow until the final sort
-    doc_rules = engine.compile(docs.select("doc_id", "text"))
-    viols = engine.violations(
-        engine.annotate(
-            docs.select("doc_id", "text"), with_observed=True, rules=doc_rules
-        ),
-        ["doc_id"],
-        rules=doc_rules,
-    )
+    # 6. violation rows: the unpivot of the annotated transcript frame
+    # stays narrow until the final sort. The plan holds no lambda
+    # (CodegenFallback), so the unpivot's Generate runs in a whole-stage
+    # codegen stage. Run first: an adaptive plan shows its codegen
+    # stages once it is final.
+    import re as _re
+
+    from datacheck_spark.transcripts import TranscriptChecker
+
+    tr_path = ROOT / ".contract_cache" / "transcripts_200x10" / "data.parquet"
+    tr = spark.read.parquet(str(tr_path))
+    viols = TranscriptChecker().violations(tr)
+    viols.collect()
     add(
         "violations unpivot over annotate + stable ordering",
         viols,
         [
             ("generate/explode present", lambda p: "Generate" in p),
             ("sort for stable ordering", lambda p: "Sort" in p),
+            (
+                "unpivot Generate in a whole-stage codegen stage",
+                lambda p: bool(
+                    _re.search(r"\(\d+\) Generate \[codegen id : \d+\]", p)
+                ),
+            ),
+            (
+                "no lambda (array_compact, filter) in the plan",
+                lambda p: not any(
+                    s in p for s in ("array_compact", "filter(", "lambdafunction")
+                ),
+            ),
         ],
     )
 
     # 6b. the violation store's group write: per-file counts observed
     # in the write's single stage (a CollectMetrics node over one scan,
     # no exchange, so each partition's metrics merge once)
-    import re as _re
-
     from datacheck_spark.incremental import (
         IncrementalValidator,
         list_data_files,
     )
-    from datacheck_spark.transcripts import TranscriptChecker
 
-    tr_path = ROOT / ".contract_cache" / "transcripts_200x10" / "data.parquet"
     # only the plan is built: nothing is written under the store path;
     # the full rule suite, repetitive_text included
     store = IncrementalValidator(str(tr_path.parent / "store"))
@@ -220,10 +231,6 @@ def main():
     # one whole-stage codegen stage, no Python evaluation node
     # (repetitive_text is a JVM expression), and the blank test via the
     # translate char map (no strip regex)
-    from datacheck_spark.transcripts import TranscriptChecker
-    tr = spark.read.parquet(
-        str(ROOT / ".contract_cache" / "transcripts_200x10" / "data.parquet")
-    )
     t_annotated = TranscriptChecker().annotated(tr)
     rule_ids = [r.rule_id for r in TranscriptChecker().engine.compile(tr)]
 
@@ -308,6 +315,10 @@ def main():
                 and p.count("hashpartitioning(conv_id") == 1,
             ),
             text_free_sort,
+            (
+                "no lambda (filter) in the unpivot",
+                lambda p: "filter(" not in p and "lambdafunction" not in p,
+            ),
         ],
     )
     add(
