@@ -30,6 +30,7 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -209,9 +210,7 @@ def char_ngrams(col: Column, n: int = 3) -> Column:
     # The lookahead walk advances by UTF-16 code unit, so rows with
     # astral-plane chars (surrogate pairs) would emit bogus grams
     # starting mid-pair; those rows (rare in real corpora) take the
-    # exact per-position path instead. Single-level lambdas only —
-    # nested lambdas break PythonUDF extraction when a signature UDF
-    # consumes this expression.
+    # exact per-position path instead.
     has_astral = t.rlike("[\\x{10000}-\\x{10FFFF}]")
     slow_grams = F.array_distinct(
         F.transform(
@@ -354,78 +353,83 @@ def near_duplicate_groups(
 # --- MinHash + LSH (scale path) ------------------------------------------
 
 
-def _minhash_params(num_hashes: int):
-    """Fixed-seed universal-hash coefficients (odd multiplier + offset
-    per hash), deterministic across runs and partitions."""
-    rng = np.random.default_rng(0xDA7AC4EC)
-    a = (
-        rng.integers(1, 2**62, size=num_hashes, dtype=np.uint64)
-        * np.uint64(2)
-        + np.uint64(1)
-    )
-    b = rng.integers(0, 2**62, size=num_hashes, dtype=np.uint64)
-    return a, b
-
-
-def _minhash_from_hashes(hashes: Column, num_hashes: int) -> Column:
-    """All ``num_hashes`` MinHash values from ONE per-row int64
-    token-hash array, vectorized with numpy over Arrow batches.
-
-    Same split as ``_simhash_from_hashes``: the token hashing is a
-    single JVM-side ``xxhash64`` walk; the per-hash minima use the
-    universal family h_i(x) = a_i·x + b_i (mod 2⁶⁴) over the already-
-    mixed base hash — one ``np.minimum.reduceat`` per hash function
-    instead of 64 interpreted Catalyst array traversals (the
-    higher-order ``transform`` is CodegenFallback, measured as the
-    dominant cost of the whole LSH pipeline).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    a_coef, b_coef = _minhash_params(num_hashes)
-    empty_sig = [np.iinfo(np.int64).max] * num_hashes
-
-    @pandas_udf("array<long>")
-    def _mins(harrs: pd.Series) -> pd.Series:
-        n = len(harrs)
-        lens = np.fromiter(
-            (0 if x is None else len(x) for x in harrs),
-            dtype=np.int64,
-            count=n,
+def _gram_hashes(
+    df: DataFrame, text_cols: Sequence[str], id_col: str, ngram_n: int = 3
+) -> DataFrame:
+    """``(__id, __gh)``: each row's distinct char n-grams hashed to int64
+    once (``xxhash64``), rows without a gram dropped. Set identity is
+    preserved (distinct grams → distinct hashes; a 64-bit collision
+    inside a few-hundred-gram set is ~1e-15), so the signatures and the
+    exact Jaccard verify both work on long arrays, which
+    ``array_intersect`` compares without per-element string hashing."""
+    text = F.concat_ws(" ", *[F.col(c) for c in text_cols])
+    return (
+        df.select(
+            F.col(id_col).cast("string").alias("__id"),
+            char_ngrams(text, ngram_n).alias("__g"),
         )
-        nonempty = np.flatnonzero(lens > 0)
-        out = [empty_sig] * n
-        if len(nonempty) == 0:
-            return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(harrs.iloc[i], dtype=np.int64) for i in nonempty]
-        ).astype(np.uint64)
-        ne_lens = lens[nonempty]
-        starts = np.zeros(len(nonempty), dtype=np.int64)
-        np.cumsum(ne_lens[:-1], out=starts[1:])
-        sig = np.empty((num_hashes, len(nonempty)), dtype=np.uint64)
-        for i in range(num_hashes):
-            hv = flat * a_coef[i] + b_coef[i]  # uint64 wraps mod 2^64
-            sig[i] = np.minimum.reduceat(hv, starts)
-        cols = sig.astype(np.int64).T  # (n_nonempty, num_hashes)
-        for j, i in enumerate(nonempty):
-            out[i] = cols[j].tolist()
-        return pd.Series(out)
-
-    return _mins(hashes)
+        .where(F.size("__g") > 0)
+        .select("__id", F.transform("__g", lambda g: F.xxhash64(g)).alias("__gh"))
+    )
 
 
-def minhash_signature(
-    grams: Column, num_hashes: int = 64
-) -> Column:
-    """MinHash signature (array<long>) over a string-array column.
+def minhash_signatures(hashed: DataFrame, num_hashes: int = 64) -> DataFrame:
+    """MinHash signatures ``(__id, __sig)`` of a ``(__id, __gh)`` frame
+    whose ``__gh`` is a non-empty int64 token-hash array per id.
 
-    Standard MinHash: sig[i] = min over tokens of hash_i(token), with
-    hash_i the universal family a_i·xxhash64(token)+b_i (mod 2⁶⁴) —
-    one native hash walk + an Arrow-vectorized numpy kernel (see
-    ``_minhash_from_hashes``).
+    ``__sig[i]`` is the minimum over the row's token hashes ``h`` of
+    ``xxhash64(h, i)``: a seeded hash family with no multiply, so it
+    holds under ANSI arithmetic. It is plain Spark SQL: the hashes are
+    exploded and one ``groupBy(__id)`` takes the ``num_hashes`` minima.
+    The aggregate combines map-side, so only ``(id, minima)`` rows cross
+    its exchange, both aggregate stages run in whole-stage codegen, and
+    no Python worker starts.
     """
-    hashes = F.transform(grams, lambda g: F.xxhash64(g))
-    return _minhash_from_hashes(hashes, num_hashes)
+    return (
+        hashed.select("__id", F.explode("__gh").alias("__x"))
+        .groupBy("__id")
+        .agg(
+            F.array(
+                *[F.min(F.xxhash64("__x", F.lit(i))) for i in range(num_hashes)]
+            ).alias("__sig")
+        )
+    )
+
+
+def minhash_bands(
+    hashed: DataFrame, num_hashes: int = 64, bands: int = 16
+) -> DataFrame:
+    """LSH band keys ``(__id, band, bucket)`` of a ``(__id, __gh)`` frame:
+    the signature of :func:`minhash_signatures` cut into ``bands`` slices
+    of ``num_hashes // bands`` minima, each slice hashed to one bucket.
+    Two ids sharing a ``(band, bucket)`` are an LSH candidate pair.
+
+    Only these slim keys go to the band exchange; callers re-attach
+    their token sets per candidate pair. The signature frame is
+    persisted (``MEMORY_AND_DISK``; the ContextCleaner unpersists it
+    once the frame is GC'd): both sides of a band self-join read it,
+    and unpersisted each re-ran the signature aggregate.
+    """
+    rows_per_band = num_hashes // bands
+    sig = minhash_signatures(hashed, num_hashes).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    return sig.select(
+        "__id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(
+                            F.slice("__sig", b * rows_per_band + 1, rows_per_band)
+                        ).alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("__id", "bb.band", "bb.bucket")
 
 
 def near_duplicate_pairs_lsh(
@@ -440,85 +444,38 @@ def near_duplicate_pairs_lsh(
     """Candidate near-dup pairs via MinHash banding + exact Jaccard
     verification — the 10^12-row replacement for the O(n²) join.
 
-    Shuffle profile: one exchange on (band_idx, band_hash) to form
-    candidate buckets, one self-join within buckets, then exact Jaccard
-    re-check of the (few) candidates. With 16 bands × 4 rows/band the
-    collision probability at sim=0.8 is ~0.99; at sim=0.5 it is ~0.1.
+    Shuffle profile: one exchange on ``__id`` for the signature
+    minima, one on (band, bucket) to form candidate buckets, one
+    self-join within buckets, then exact Jaccard re-check of the (few)
+    candidates. With 16 bands × 4 rows/band the collision probability
+    1 - (1 - sim⁴)¹⁶ is ~0.9998 at sim=0.8 and ~0.64 at sim=0.5.
 
     Returns (id_a, id_b, sim) with id_a < id_b, sim ≥ threshold.
     """
-    rows_per_band = num_hashes // bands
-    text = F.concat_ws(" ", *[F.col(c) for c in text_cols])
-    # the signature stage is the CPU hot spot: 64 higher-order
-    # `transform` expressions (CodegenFallback → interpreted) re-walk
-    # every gram array. Make sure it runs at cluster parallelism even
-    # when the input arrives as a handful of file splits.
+    # gram extraction is per-row regex work: make sure it runs at
+    # cluster parallelism even when the input arrives as a handful of
+    # file splits
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < parallelism:
         df = df.repartition(parallelism)
-    # Grams are hashed to int64 ONCE (the same xxhash64 walk the
-    # signature needs) and the string grams are dropped immediately:
-    # the persisted frame, the verify join's payload and the exact
-    # Jaccard all work on long arrays — set identity is preserved
-    # (distinct grams → distinct hashes; a 64-bit collision inside a
-    # few-hundred-gram set is ~1e-15) while array_intersect skips
-    # per-element string hashing and the cached rows shrink ~3×.
-    base = (
-        df.select(
-            F.col(id_col).cast("string").alias("__id"),
-            char_ngrams(text, ngram_n).alias("__g"),
-        )
-        .where(F.size("__g") > 0)
-        .select(
-            "__id",
-            F.transform("__g", lambda g: F.xxhash64(g)).alias("__gh"),
-        )
-        .withColumn(
-            "__sig", _minhash_from_hashes(F.col("__gh"), num_hashes)
-        )
+    # the gram hashes feed THREE consumers (the signatures and both
+    # verify-join sides); without persistence each one re-runs the
+    # n-gram walk over the full corpus. MEMORY_AND_DISK spills rather
+    # than OOMs at scale; the ContextCleaner unpersists once the frame
+    # is GC'd.
+    base = _gram_hashes(df, text_cols, id_col, ngram_n).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    # gram extraction is the pipeline's CPU hot spot and base feeds
-    # THREE consumers (band entries + both verify-join gram sides);
-    # without persistence each consumer re-runs the n-gram walk over
-    # the full corpus. MEMORY_AND_DISK spills rather than OOMs at
-    # scale; the ContextCleaner unpersists once the frame is GC'd.
-    from pyspark import StorageLevel
-
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    band_entries = base.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.slice(
-                                F.col("__sig"),
-                                b * rows_per_band + 1,
-                                rows_per_band,
-                            ).cast("string")
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("__id", "bb.band", "bb.bucket")
+    band_entries = minhash_bands(base, num_hashes, bands)
 
     # the bucket join and candidate dedup move ONLY (id, band, bucket):
     # carrying the gram arrays here would multiply the shuffle payload
     # by the band count (16×) and again by the candidate multiplicity —
     # at 10^12 rows that exchange, not the hashing, is the bottleneck.
     # Grams are re-attached once per deduped candidate pair instead
-    # (column pruning keeps the re-read of `base` to id+grams; the
-    # minhash signatures are not recomputed).
-    a = band_entries.select(
-        "band", "bucket", F.col("__id").alias("id_a")
-    )
-    b = band_entries.select(
-        "band", "bucket", F.col("__id").alias("id_b")
-    )
+    # (column pruning keeps the re-read of `base` to id+grams).
+    a = band_entries.select("band", "bucket", F.col("__id").alias("id_a"))
+    b = band_entries.select("band", "bucket", F.col("__id").alias("id_b"))
     candidates = (
         a.join(b, ["band", "bucket"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -528,22 +485,15 @@ def near_duplicate_pairs_lsh(
         # it to one partition — but each row fans out into an exact
         # Jaccard evaluation over two full gram arrays, which is CPU-
         # not byte-bound; spread the verify across the cluster
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "id_a"
-        )
+        .repartition(parallelism, "id_a")
     )
-    grams = base.select("__id", "__gh")
     verified = (
         candidates.join(
-            grams.select(
-                F.col("__id").alias("id_a"), F.col("__gh").alias("ga")
-            ),
+            base.select(F.col("__id").alias("id_a"), F.col("__gh").alias("ga")),
             "id_a",
         )
         .join(
-            grams.select(
-                F.col("__id").alias("id_b"), F.col("__gh").alias("gb")
-            ),
+            base.select(F.col("__id").alias("id_b"), F.col("__gh").alias("gb")),
             "id_b",
         )
         .select(

@@ -220,34 +220,21 @@ class ValidationEngine:
     ) -> DataFrame:
         """First ``k`` failing ids per rule, ``(rule_id, ids)`` rows.
 
-        Scale-bounded: a per-partition take-k (``mapInPandas`` carrying
-        only a ``rule_id -> count`` dict, vectorized per Arrow batch)
-        shrinks the exploded failure stream to at most
-        ``num_partitions * k`` rows per rule BEFORE the final
-        aggregation, so no reducer ever buffers a rule's full failure
-        set. ``__ord`` (monotonically_increasing_id: partition index in
-        the high bits) keeps first-k deterministic in row order —
-        identical output to an unbounded collect_list-then-slice.
-        Partitions stop reading early once every rule has its k ids.
+        Scale-bounded: ``row_number() over (partition by rule_id order by
+        __ord) <= k``, which Spark plans as a partial ``WindowGroupLimit``
+        on each input partition before the ``rule_id`` exchange and a
+        final one after it. At most ``num_partitions * k`` rows per rule
+        cross the exchange, so no reducer ever buffers a rule's full
+        failure set, and the final ``collect_list`` holds ``k`` ids.
+        ``__ord`` (monotonically_increasing_id: partition index in the
+        high bits) keeps first-k deterministic in row order — identical
+        output to an unbounded collect_list-then-slice. All of it is JVM
+        SQL: no Python worker starts. The partial limit sorts its
+        partition's failure rows (spillable) rather than stopping early,
+        and Spark plans it only for ``k`` up to
+        ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000).
         """
-        rule_ids = [r.rule_id for r in rules]
-
-        def _take_k_per_partition(batches):
-            counts: Dict[str, int] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                prior = pdf["rule_id"].map(counts).fillna(0).astype("int64")
-                within = pdf.groupby("rule_id").cumcount()
-                kept = pdf[(prior.values + within.values) < k]
-                for rid, c in pdf["rule_id"].value_counts().items():
-                    counts[rid] = counts.get(rid, 0) + int(c)
-                if len(kept):
-                    yield kept
-                if len(counts) == len(rule_ids) and all(
-                    counts[rid] >= k for rid in rule_ids
-                ):
-                    return  # every rule has its k ids: stop reading
+        from pyspark.sql import Window
 
         exploded = _unpivot(
             annotated,
@@ -260,19 +247,18 @@ class ValidationEngine:
                 for r in rules
             ],
         ).withColumnRenamed("__v", "rule_id")
-        bounded = exploded.mapInPandas(
-            _take_k_per_partition,
-            schema="__ord long, __id string, rule_id string",
+        first_k = F.row_number().over(
+            Window.partitionBy("rule_id").orderBy("__ord")
         )
-        return bounded.groupBy("rule_id").agg(
-            F.transform(
-                F.slice(
-                    F.sort_array(F.collect_list(F.struct("__ord", "__id"))),
-                    1,
-                    k,
-                ),
-                lambda s: s["__id"],
-            ).alias("ids")
+        return (
+            exploded.withColumn("__rn", first_k)
+            .where(F.col("__rn") <= k)
+            .groupBy("rule_id")
+            .agg(
+                F.sort_array(F.collect_list(F.struct("__ord", "__id")))
+                .getField("__id")
+                .alias("ids")
+            )
         )
 
     def summarize(
@@ -291,7 +277,11 @@ class ValidationEngine:
         increments its severity counter; only ERROR failures fail the
         sample. ``extra_aggs`` piggy-back additional aggregate
         expressions onto the SAME job (no extra scan); their values land
-        in ``result.extras`` keyed by name.
+        in ``result.extras`` keyed by name. With ``collect_failed_ids``
+        and an ``id_col``, two more jobs collect each rule's first
+        ``per_rule_failed_ids`` failing ids (:meth:`per_rule_failed_ids_df`)
+        and the ids of up to ``max_failed_ids`` rows failing an ERROR
+        rule. All three jobs run in the JVM, without a Python worker.
         """
         result = CheckResult()
         aggs = [F.count(F.lit(1)).alias("__total")]
@@ -337,15 +327,8 @@ class ValidationEngine:
 
         if collect_failed_ids and id_col and id_col in annotated.columns:
             # per-rule first-k failing ids (reference caps at 10,
-            # checker.py:154). Bounded at scale: a per-partition take-k
-            # (mapInPandas, vectorized, carries only a rule->count dict)
-            # shrinks the stream to <= num_partitions * k rows per rule
-            # BEFORE the final aggregation, so no reducer ever buffers a
-            # rule's full failure set (the old collect_list-then-slice
-            # held ~total_failures/num_rules ids per agg buffer).
-            # __ord = monotonically_increasing_id preserves row order
-            # (partition index in the high bits), keeping first-k
-            # deterministic and identical to the unbounded version.
+            # checker.py:154), bounded by a window limit before the
+            # final aggregation (see per_rule_failed_ids_df)
             per_rule = self.per_rule_failed_ids_df(
                 annotated, rules, id_col, k=per_rule_failed_ids
             ).collect()

@@ -130,67 +130,52 @@ def near_leakage_pairs_lsh(
     bands: int = 16,
 ) -> DataFrame:
     """Banded MinHash twin of :func:`near_leakage_pairs` — the uncapped
-    scale path: one (band, bucket) exchange instead of the train×test
-    cross join, candidates restricted to cross-side pairs, then the
-    SAME exact token-set Jaccard verification in [threshold, 1.0).
+    scale path: one (band, bucket) exchange of slim band keys
+    (``dedup.minhash_bands``, the signatures ``near_duplicate_pairs_lsh``
+    uses) instead of the train×test cross join, candidates restricted
+    to cross-side pairs, then the token sets re-attached per candidate
+    for the SAME exact token-set Jaccard verification in
+    [threshold, 1.0). Ids are the per-side row keys, so each side's ids
+    should be unique.
 
     With 16 bands × 4 rows/band the probability that a sim≥0.9 pair
     shares no band is (1 - 0.9^4)^16 ≈ 1e-8, so the output matches the
     exact path on any realistic input (the contract query's oracle IS
     the exact-pair SQL). Returns (test_id, train_id, sim).
     """
-    from datacheck_spark.dedup import jaccard, minhash_signature
+    from datacheck_spark.dedup import jaccard, minhash_bands
 
-    rows_per_band = num_hashes // bands
+    def tokens(df: DataFrame, id_col: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).cast("string").alias("__id"),
+            _token_set(F.col(text_col)).alias("__toks"),
+        ).where(F.size("__toks") > 0)
 
-    def prep(df: DataFrame, id_col: str):
-        base = (
-            df.select(
-                F.col(id_col).cast("string").alias("__id"),
-                _token_set(F.col(text_col)).alias("__toks"),
-            )
-            .where(F.size("__toks") > 0)
-            .withColumn(
-                "__sig", minhash_signature(F.col("__toks"), num_hashes)
-            )
+    def band_keys(toks: DataFrame, id_name: str) -> DataFrame:
+        hashed = toks.select(
+            "__id", F.transform("__toks", lambda t: F.xxhash64(t)).alias("__gh")
         )
-        return base.select(
-            "__id",
-            "__toks",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                F.slice(
-                                    F.col("__sig"),
-                                    b * rows_per_band + 1,
-                                    rows_per_band,
-                                ).cast("string")
-                            ).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("__id", "__toks", "bb.band", "bb.bucket")
+        return minhash_bands(hashed, num_hashes, bands).select(
+            "band", "bucket", F.col("__id").alias(id_name)
+        )
 
-    te = prep(test, test_id).select(
-        "band",
-        "bucket",
-        F.col("__id").alias("test_id"),
-        F.col("__toks").alias("te_toks"),
-    )
-    tr = prep(train, train_id).select(
-        "band",
-        "bucket",
-        F.col("__id").alias("train_id"),
-        F.col("__toks").alias("tr_toks"),
+    te = tokens(test, test_id)
+    tr = tokens(train, train_id)
+    candidates = (
+        band_keys(te, "test_id")
+        .join(band_keys(tr, "train_id"), ["band", "bucket"])
+        .select("test_id", "train_id")
+        .dropDuplicates(["test_id", "train_id"])
     )
     pairs = (
-        te.join(tr, ["band", "bucket"])
-        .dropDuplicates(["test_id", "train_id"])
+        candidates.join(
+            te.select(F.col("__id").alias("test_id"), F.col("__toks").alias("te_toks")),
+            "test_id",
+        )
+        .join(
+            tr.select(F.col("__id").alias("train_id"), F.col("__toks").alias("tr_toks")),
+            "train_id",
+        )
         .select(
             "test_id",
             "train_id",

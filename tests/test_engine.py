@@ -191,11 +191,17 @@ def test_check_folds_distribution_into_summary(spark):
 
 
 def test_failed_ids_bounded_at_scale(spark):
-    """per_rule_failed_ids_df must pre-limit per partition (MapInPandas)
-    before the final agg — no reducer buffers a rule's full failure set
-    — and still return the deterministic first-k in row order on a
-    multi-partition frame with a high failure rate."""
+    """per_rule_failed_ids_df must pre-limit per partition (a partial
+    WindowGroupLimit below the rule_id exchange) before the final agg —
+    no reducer buffers a rule's full failure set — with no Python node,
+    and still return the deterministic first-k in row order on a
+    multi-partition frame with a high failure rate, equal to an
+    unbounded collect_list-then-slice."""
+    import re
+
     from pyspark.sql import functions as F
+
+    from datacheck_spark.engine import RULE_PREFIX
 
     n = 200_000
     df = (
@@ -215,18 +221,36 @@ def test_failed_ids_bounded_at_scale(spark):
     rules = engine.compile(df)
     annotated = engine.annotate(df, rules=rules)
     bounded = engine.per_rule_failed_ids_df(annotated, rules, "id", k=10)
-    import io
-    from contextlib import redirect_stdout
+    got = {r["rule_id"]: list(r["ids"]) for r in bounded.collect()}
+    plan = bounded._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    exchange = re.search(r"Exchange hashpartitioning\(rule_id", final)
+    assert exchange, plan
+    assert "WindowGroupLimit" in final[exchange.end():], plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "PythonUDF"):
+        assert node not in plan, node
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        bounded.explain("formatted")
-    plan = buf.getvalue()
-    assert "MapInPandas" in plan, "per-partition take-k missing from plan"
+    # oracle: every failing (row order, id) per rule, sorted, sliced
+    ordered = annotated.select(
+        F.monotonically_increasing_id().alias("__ord"),
+        F.col("id"),
+        *[F.col(RULE_PREFIX + r.rule_id) for r in rules],
+    )
+    want = {}
+    for r in rules:
+        row = (
+            ordered.where(~F.col(RULE_PREFIX + r.rule_id))
+            .agg(F.sort_array(F.collect_list(F.struct("__ord", "id"))).alias("s"))
+            .collect()[0]
+        )
+        if row["s"]:
+            want[r.rule_id] = [s["id"] for s in row["s"][:10]]
+    assert got == want
+    assert "non_empty" in want
 
     res = engine.summarize(annotated, rules, id_col="id")
     ids = res.rule_results["non_empty"]["failed_samples"]
-    assert len(ids) == 10
+    assert ids == want["non_empty"]
     # first-k in row order: all from the earliest rows of the earliest
     # partitions, and every one an even id (the failing half)
     assert all(int(i) % 2 == 0 for i in ids)

@@ -156,6 +156,118 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert [(p["id_a"], p["id_b"]) for p in pairs] == [("1", "2")]
 
 
+def _py_ngrams(text, n=3):
+    """Plain-Python ``compute_ngrams``: strip + lower, code-point n-grams;
+    a non-empty text shorter than n is its own gram."""
+    t = text.strip().lower()
+    if len(t) < n:
+        return {t} if t else set()
+    return {t[i : i + n] for i in range(len(t) - n + 1)}
+
+
+def test_minhash_signature_oracle(spark):
+    """``sig[i]`` is the minimum over the doc's grams ``g`` of
+    ``xxhash64(xxhash64(g), i)``: the grams match a plain-Python n-gram
+    oracle (short texts, astral-plane characters, repeated grams), the
+    hashes come from a plain exploded select with no aggregate, and
+    Python reduces them, on a frame of four partitions."""
+    texts = {
+        "short": "ab",
+        "one": "Z",
+        "astral": "  \U0001F600\U0001F600ab\U0001F600 c\U00010348d ",
+        "repeat": "aaaaaaaaaaaaaaaa",
+        "cycle": "abcabcabcabcabcabc",
+        "mixed": "The quick brown fox jumps over the lazy dog",
+        "newline": "line one\nline two\nline one",
+        "exactly_n": "xyz",
+    }
+    df = spark.createDataFrame(
+        [Row(id=k, text=v) for k, v in texts.items()]
+    ).repartition(4)
+    hashed = D._gram_hashes(df, ["text"], "id")
+    sigs = {r["__id"]: r["__sig"] for r in D.minhash_signatures(hashed).collect()}
+    assert sorted(sigs) == sorted(texts)
+
+    grams = df.select(
+        F.col("id"), F.explode(D.char_ngrams(F.col("text"))).alias("g")
+    )
+    num_hashes = 64
+    rows = grams.select(
+        "id",
+        "g",
+        *[F.xxhash64(F.xxhash64("g"), F.lit(i)).alias(f"h{i}") for i in range(num_hashes)],
+    ).collect()
+    want = {}
+    seen = {}
+    for r in rows:
+        seen.setdefault(r["id"], set()).add(r["g"])
+        cur = want.setdefault(r["id"], [None] * num_hashes)
+        for i in range(num_hashes):
+            h = r[f"h{i}"]
+            cur[i] = h if cur[i] is None else min(cur[i], h)
+    assert seen == {k: _py_ngrams(v) for k, v in texts.items()}
+    assert sigs == want
+
+
+def test_minhash_lsh_pairs_equal_exact_pairs(spark):
+    """LSH pairs at threshold 0.8 equal the exact all-pairs result on a
+    small planted corpus: near copies (one word of 60 changed) are all
+    found, and looser copies (12 of 60 changed) fall on the side of 0.8
+    their exact Jaccard puts them."""
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = []
+    for d in range(40):
+        words = [rng.choice(vocab) for _ in range(60)]
+        rows.append(Row(id=f"d{d:02d}", text=" ".join(words)))
+        if d % 2 == 0:  # a near copy with one word changed
+            near = list(words)
+            near[rng.randrange(len(near))] = "edited"
+            rows.append(Row(id=f"d{d:02d}n", text=" ".join(near)))
+        if d % 5 == 0:  # a looser copy: 12 of 60 words changed
+            loose = list(words)
+            for j in rng.sample(range(len(loose)), 12):
+                loose[j] = rng.choice(vocab)
+            rows.append(Row(id=f"d{d:02d}l", text=" ".join(loose)))
+    df = spark.createDataFrame(rows).repartition(3)
+    exact = {
+        (r["id_a"], r["id_b"])
+        for r in D.near_duplicate_pairs_exact(df, ["text"], "id", threshold=0.8).collect()
+    }
+    lsh = {
+        (r["id_a"], r["id_b"])
+        for r in D.near_duplicate_pairs_lsh(df, ["text"], "id", threshold=0.8).collect()
+    }
+    assert len(exact) >= 20
+    assert lsh == exact
+
+
+def test_dedup_and_failed_id_plans_no_python(spark):
+    """Both MinHash-LSH paths and the per-rule failed-id take-k plan no
+    Python evaluation node, so none of them starts a Python worker."""
+    from datacheck_spark.engine import ValidationEngine
+    from datacheck_spark.leakage import near_leakage_pairs_lsh
+
+    df = spark.createDataFrame(
+        [Row(id=str(i), text=f"sample text number {i % 3} here") for i in range(12)]
+        + [Row(id="blank", text="")]
+    )
+    engine = ValidationEngine()
+    rules = engine.compile(df)
+    frames = [
+        D.near_duplicate_pairs_lsh(df, ["text"], "id", threshold=0.5),
+        near_leakage_pairs_lsh(df, df, "text", "id", "id", threshold=0.5),
+        engine.per_rule_failed_ids_df(
+            engine.annotate(df, rules=rules), rules, "id", k=3
+        ),
+    ]
+    for frame in frames:
+        frame.collect()
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "PythonUDF"):
+            assert node not in plan, (node, plan)
+
+
 def test_simhash_near_dups(spark):
     rows = [
         Row(id="1", text="The quick brown fox jumps over the lazy dog again and again"),

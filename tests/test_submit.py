@@ -5,11 +5,12 @@ datacheck_spark.zip cli.py <cmd> ...`` on a multi-executor cluster
 (reference runs as an installed console script, ``pyproject.toml``
 ``datacheck = datacheck.cli:main``). These tests run the REAL
 ``spark-submit`` binary from a scratch cwd with PYTHONPATH scrubbed, so
-the only source of the package — on the driver AND inside the executor
-Python workers (the failed-id take-k, a ``mapInPandas`` that runs when a
-check has failing rows) — is the ``--py-files`` archive. That proves the
-zip ships everything the job needs (rules, the failed-id kernel,
-violation store code), not just the CLI shim.
+the only source of the package on the driver is the ``--py-files``
+archive. That proves the zip ships everything the driver needs (rules,
+the failed-id take-k, violation store code), not just the CLI shim.
+``check`` and ``transcripts`` plan no Python evaluation node (the
+failed-id take-k is a window limit), so they start no executor Python
+worker: no test here exercises the zip inside executor Python any more.
 """
 
 import json
@@ -79,8 +80,7 @@ def _submit(deploy_dir, cli_args, timeout=240):
 def test_submit_check_clean_parquet(deploy_dir):
     """check over real parquet: exit 0, report written, every rule of
     the default suite reported. All of them are JVM expressions and all
-    500 rows pass, so this check starts no executor Python worker; the
-    strict-gate test below runs the zip's code in one."""
+    500 rows pass, so this check starts no executor Python worker."""
     report = deploy_dir / "report.json"
     proc = _submit(
         deploy_dir,
@@ -103,8 +103,8 @@ def test_submit_check_clean_parquet(deploy_dir):
 def test_submit_strict_gate_exits_nonzero(deploy_dir):
     """CI gating travels through spark-submit: --strict + a planted
     PII warning must surface as a nonzero process exit. The failing row
-    sends the failed-id take-k (``mapInPandas``) to executor Python
-    workers, which import the package from the zip."""
+    runs the failed-id take-k, a JVM window limit: this job starts no
+    executor Python worker, so it does not exercise the zip there."""
     dirty = deploy_dir / "dirty.jsonl"
     rows = [{"id": str(i), "text": f"clean row {i}"} for i in range(9)]
     rows.append({"id": "9", "text": "contact alice@example.com now"})

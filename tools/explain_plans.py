@@ -373,7 +373,41 @@ def main():
     )
 
     # 10. per-rule failed-ids: bounded per-partition take-k, never an
-    # unbounded collect_list over a rule's whole failure set
+    # unbounded collect_list over a rule's whole failure set. The
+    # window limit Spark plans for row_number() <= k runs partially on
+    # every input partition, below the rule_id exchange; the plan holds
+    # no Python evaluation node
+    def _partial_limit_before_exchange(p: str) -> bool:
+        # formatted plans print root-first: the final WindowGroupLimit
+        # sits above the rule_id exchange, the partial one below it, and
+        # the final collect_list aggregate above both
+        tree = p.split("\n\n")[0].split("== Initial Plan ==")[0]
+        ops = _re.findall(r"(\w+) \((\d+)\)", tree)
+        names = [o for o, _ in ops]
+        details = dict(
+            _re.findall(r"\n\((\d+)\) Exchange\s*\n(?:.*\n)*?Arguments: ([^\n]*)", p)
+        )
+        ex = [
+            i for i, (o, n) in enumerate(ops)
+            if o == "Exchange" and "hashpartitioning(rule_id" in details.get(n, "")
+        ]
+        if len(ex) != 1:
+            return False
+        above, below = names[: ex[0]], names[ex[0] + 1 :]
+        return (
+            "WindowGroupLimit" in above
+            and "WindowGroupLimit" in below
+            and any(a in above for a in ("ObjectHashAggregate", "SortAggregate"))
+            and "collect_list" in p
+        )
+
+    no_python = (
+        "no Python evaluation node",
+        lambda p: not any(
+            s in p
+            for s in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "PythonUDF")
+        ),
+    )
     rules = engine.compile(docs.select("doc_id", "text"))
     add(
         "per-rule failed ids (bounded take-k)",
@@ -385,38 +419,19 @@ def main():
         ),
         [
             (
-                "per-partition pre-limit (MapInPandas) before final agg",
-                lambda p: "MapInPandas" in p,
+                "partial WindowGroupLimit before the exchange",
+                _partial_limit_before_exchange,
             ),
-            (
-                # formatted plans print root-first, so the final agg
-                # appears ABOVE its MapInPandas input in the text
-                "no unbounded collect_list: agg input is the bounded stream",
-                lambda p: "MapInPandas" in p
-                and (
-                    "ObjectHashAggregate" in p or "SortAggregate" in p
-                )
-                and min(
-                    i
-                    for i in (
-                        p.find("ObjectHashAggregate"),
-                        p.find("SortAggregate"),
-                    )
-                    if i >= 0
-                )
-                < p.index("MapInPandas"),
-            ),
+            no_python,
         ],
     )
 
-    # 11. MinHash-LSH near-dup pairs: the band/bucket exchange must be
-    # slim (no gram arrays — payload would multiply by band count), the
-    # signature kernel must be Arrow-vectorized (not 64 interpreted
-    # higher-order transforms), and the exact-Jaccard verify must be
+    # 11. MinHash-LSH near-dup pairs: the signature and band/bucket
+    # exchanges must be slim (no gram arrays — payload would multiply by
+    # band count), the signatures are JVM aggregates (no Python
+    # evaluation node), and the exact-Jaccard verify must be
     # explicitly spread (AQE would coalesce the byte-tiny candidate
     # table onto one task even though each row is CPU-heavy)
-    import re as _re
-
     from datacheck_spark.dedup import near_duplicate_pairs_lsh
 
     def _shuffles_gram_free(p: str) -> bool:
@@ -443,10 +458,7 @@ def main():
                 "no shuffle exchange carries gram arrays",
                 _shuffles_gram_free,
             ),
-            (
-                "Arrow-vectorized signature kernel (no interpreted HOF fan-out)",
-                lambda p: "ArrowEvalPython" in p,
-            ),
+            no_python,
             (
                 "exact verify spread via explicit repartition",
                 lambda p: "REPARTITION_BY_NUM" in p,

@@ -9,8 +9,10 @@ parquet file under ``.contract_cache/golden/`` via ``DataFrame.toArrow``
 float64). The contract's oracle SQL then just reads the file back.
 
 Run after any INTENTIONAL change to these operators:
-    python tools/make_goldens.py [sf_dir]
-and commit the updated fixtures.
+    python tools/make_goldens.py [sf_dir [query ...]]
+and commit the updated fixtures. Name the queries whose operator
+changed: the others keep their files, so a golden that fails for an
+unexplained reason is not regenerated over.
 """
 
 from __future__ import annotations
@@ -31,6 +33,11 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else (
         f"/root/testdata/{contract.GOLDEN_PINNED_SF}"
     )
+    names = sys.argv[2:] or list(contract.GOLDEN_QUERIES)
+    unknown = sorted(set(names) - set(contract.GOLDEN_QUERIES))
+    if unknown:
+        sys.exit(f"not golden queries: {', '.join(unknown)}")
+
     out_dir = Path(contract.GOLDEN_DIR)
     out_dir.mkdir(parents=True, exist_ok=True)
 
@@ -44,7 +51,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = contract.queries()
-    for name in contract.GOLDEN_QUERIES:
+    for name in names:
         tbl = qs[name](spark, sf_dir).toArrow()
         dest = out_dir / f"{name}.parquet"
         pq.write_table(tbl, dest)
