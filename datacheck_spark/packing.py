@@ -146,7 +146,7 @@ def assign_packs(
     out = bdf.withColumn(
         "start_offset",
         F.coalesce(
-            offset_map.getItem(F.col(_BUCKET)).cast("long"), F.lit(0)
+            offset_map[F.col(_BUCKET)].cast("long"), F.lit(0)
         )
         + local_cum,
     ).withColumn(

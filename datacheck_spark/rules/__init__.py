@@ -1,7 +1,6 @@
 from datacheck_spark.rules.compiler import (  # noqa: F401
     CompiledRule,
     RuleSet,
-    compile_builtin_rules,
     ruleset_from_yaml,
     get_sft_ruleset,
     get_preference_ruleset,

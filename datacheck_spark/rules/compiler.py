@@ -5,10 +5,12 @@ reference interprets per-row (``/root/reference/src/datacheck/rules.py``)
 compiles here to a Catalyst expression, so the whole rule suite runs as
 ONE fused projection over the scan — no per-row Python, no Python UDF.
 
-A ``RuleSet`` holds *builders* ``(df, schema) -> CompiledRule`` because
-several rules are shaped by the DataFrame's own schema (e.g. "every
-string column is non-empty"). ``RuleSet.compile(df, schema)`` resolves
-them against a concrete DataFrame.
+A ``RuleSet`` holds ``RuleDef``s: a rule's id, name and severity,
+written once, and a *builder* ``(df, schema) -> (passed, observed)``
+returning the rule's Columns, because several rules are shaped by the
+DataFrame's own schema (e.g. "every string column is non-empty").
+``RuleSet.compile(df, schema)`` resolves them against a concrete
+DataFrame; it is the one place a ``CompiledRule`` is made.
 
 Row-dict → DataFrame semantic notes (documented deviations):
 
@@ -25,9 +27,9 @@ Row-dict → DataFrame semantic notes (documented deviations):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass
 from functools import reduce
-from typing import Any, Callable, Dict, List, Optional, Sequence
+from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -65,14 +67,23 @@ class CompiledRule:
     observed: Optional[Column] = None
 
 
-#: A builder resolves a rule against (df, schema); returning None means
-#: the rule does not apply to this DataFrame (treated as all-pass, like
-#: the reference's vacuous passes).
-RuleBuilder = Callable[[DataFrame, ValidationSchema], Optional[CompiledRule]]
+#: A rule's Columns: ``passed`` (null counts as failed) and the
+#: optional ``observed`` payload.
+RuleColumns = Tuple[Column, Optional[Column]]
+
+#: A builder resolves a rule against (df, schema) to its Columns;
+#: returning None means the rule does not apply to this DataFrame
+#: (treated as all-pass, like the reference's vacuous passes).
+RuleBuilder = Callable[[DataFrame, ValidationSchema], Optional[RuleColumns]]
 
 
 @dataclass
 class RuleDef:
+    """A rule written once (reference ``Rule``, ``rules.py:47-76``): its
+    id, name and severity, and a builder returning only its Columns
+    ``(passed, observed)``. A ``None`` builder is a dataset-level
+    placeholder that compiles to nothing."""
+
     rule_id: str
     name: str
     severity: Severity
@@ -106,28 +117,35 @@ class RuleSet:
     def compile(
         self, df: DataFrame, schema: Optional[ValidationSchema] = None
     ) -> List[CompiledRule]:
-        """Resolve all enabled rules against a DataFrame.
+        """Resolve all enabled rules against a DataFrame: each builder's
+        ``(passed, observed)`` Columns become a ``CompiledRule`` under
+        the id, name and severity of its ``RuleDef``.
 
         Disabled rules and rules without builders (dataset-level
         placeholders like ``no_duplicates``, ``rules.py:143-152``) are
         skipped; builders returning None are skipped (vacuous pass —
         they contribute no failures, identical outcome to an all-pass
-        column without wasting compute).
+        column without wasting compute). ``passed`` is made non-null
+        here, for every suite: a row the rule cannot decide (null)
+        fails, as a raising check fails in the reference
+        (``rules.py:69-76``), and downstream aggregation never sees
+        three-valued logic.
         """
         schema = schema or ValidationSchema()
         out: List[CompiledRule] = []
         for rd in self.get_enabled_rules():
-            if rd.builder is None:
-                continue
-            compiled = rd.builder(df, schema)
-            if compiled is not None:
-                # Guarantee non-null booleans so downstream aggregation
-                # never sees three-valued logic.
-                compiled = replace(
-                    compiled,
-                    passed=F.coalesce(compiled.passed, F.lit(False)),
+            built = rd.builder(df, schema) if rd.builder else None
+            if built is not None:
+                passed, observed = built
+                out.append(
+                    CompiledRule(
+                        rd.rule_id,
+                        rd.name,
+                        rd.severity,
+                        F.coalesce(passed, F.lit(False)),
+                        observed,
+                    )
                 )
-                out.append(compiled)
         return out
 
 
@@ -144,6 +162,17 @@ def string_columns(df: DataFrame, exclude: Sequence[str] = ()) -> List[str]:
 
 def _and_all(cols: List[Column]) -> Column:
     return reduce(lambda a, b: a & b, cols) if cols else F.lit(True)
+
+
+def _per_column(failures: List[Tuple[Column, Column]]) -> RuleColumns:
+    """A rule over several columns, each stated once as ``(failed,
+    label)``: the row passes when no column failed; ``observed`` joins
+    the failing columns' labels with commas (nulls skipped)."""
+    passed = _and_all([~failed for failed, _ in failures])
+    observed = F.concat_ws(
+        ",", *[F.when(failed, label) for failed, label in failures]
+    )
+    return passed, observed
 
 
 def _observed_text(df: DataFrame, limit: int = 120) -> Optional[Column]:
@@ -172,10 +201,9 @@ def _required_fields(df: DataFrame, schema: ValidationSchema):
         for f in schema.fields
         if f.required and f.name not in df.columns
     ]
-    passed = F.lit(not missing)
-    obs = F.lit(",".join(sorted(missing)) or None).cast("string")
-    return CompiledRule(
-        "required_fields", "required fields", Severity.ERROR, passed, obs
+    return (
+        F.lit(not missing),
+        F.lit(",".join(sorted(missing)) or None).cast("string"),
     )
 
 
@@ -186,22 +214,11 @@ def _non_empty(df: DataFrame, schema: ValidationSchema):
     cols = string_columns(df, exclude=("id", "metadata"))
     if not cols:
         return None
-    per_col = [
-        F.col(c).isNull() | ~T.py_blank(F.col(c)) for c in cols
-    ]
-    # array_join without a null replacement skips the nulls
-    blank_cols = F.array(
-        *[
-            F.when(F.col(c).isNotNull() & T.py_blank(F.col(c)), F.lit(c))
+    return _per_column(
+        [
+            (F.col(c).isNotNull() & T.py_blank(F.col(c)), F.lit(c))
             for c in cols
         ]
-    )
-    return CompiledRule(
-        "non_empty",
-        "non-empty fields",
-        Severity.ERROR,
-        _and_all(per_col),
-        F.array_join(blank_cols, ","),
     )
 
 
@@ -211,15 +228,9 @@ def _length_bounds(df: DataFrame, schema: ValidationSchema):
     cols = string_columns(df)
     if not cols:
         return None
-    per_col = [
-        F.col(c).isNull()
-        | F.length(F.col(c)).between(schema.min_length, schema.max_length)
-        for c in cols
-    ]
-    obs = F.concat_ws(
-        ",",
-        *[
-            F.when(
+    return _per_column(
+        [
+            (
                 F.col(c).isNotNull()
                 & ~F.length(F.col(c)).between(
                     schema.min_length, schema.max_length
@@ -227,14 +238,7 @@ def _length_bounds(df: DataFrame, schema: ValidationSchema):
                 F.concat(F.lit(f"{c}="), F.length(F.col(c)).cast("string")),
             )
             for c in cols
-        ],
-    )
-    return CompiledRule(
-        "length_bounds",
-        "length bounds",
-        Severity.WARNING,
-        _and_all(per_col),
-        obs,
+        ]
     )
 
 
@@ -272,13 +276,7 @@ def _format_valid(df: DataFrame, schema: ValidationSchema):
             per_field.append(F.col(f.name).isNotNull())
         else:
             per_field.append(F.lit(False))
-    return CompiledRule(
-        "format_valid",
-        "format valid",
-        Severity.ERROR,
-        _and_all(per_field),
-        None,
-    )
+    return _and_all(per_field), None
 
 
 SCORE_KEYS = ["score", "rating", "label", "grade"]  # rules.py:438
@@ -293,21 +291,14 @@ def _score_valid(df: DataFrame, schema: ValidationSchema):
     if not present:
         return None
     valid = [s for s in schema.valid_scores if s is not None]
-    per_key = [
-        F.col(k).isNull() | F.col(k).isin(valid) for k in present
-    ]
-    obs = F.concat_ws(
-        ",",
-        *[
-            F.when(
+    return _per_column(
+        [
+            (
                 F.col(k).isNotNull() & ~F.col(k).isin(valid),
                 F.concat(F.lit(f"{k}="), F.col(k).cast("string")),
             )
             for k in present
-        ],
-    )
-    return CompiledRule(
-        "score_valid", "score valid", Severity.ERROR, _and_all(per_key), obs
+        ]
     )
 
 
@@ -316,28 +307,15 @@ def _pii_detection(df: DataFrame, schema: ValidationSchema):
     cols = string_columns(df)
     if not cols:
         return None
-    passed = _and_all([T.pii_clean(F.col(c)) for c in cols])
-    obs = F.concat_ws(
-        ",",
-        *[
-            F.when(~T.pii_clean(F.col(c)), F.lit(c)) for c in cols
-        ],
-    )
-    return CompiledRule(
-        "pii_detection", "PII detection", Severity.WARNING, passed, obs
-    )
+    return _per_column([(~T.pii_clean(F.col(c)), F.lit(c)) for c in cols])
 
 
 def _garbled_text(df: DataFrame, schema: ValidationSchema):
     cols = string_columns(df)
     if not cols:
         return None
-    passed = _and_all([T.garbled_clean(F.col(c)) for c in cols])
-    return CompiledRule(
-        "garbled_text",
-        "garbled text",
-        Severity.WARNING,
-        passed,
+    return (
+        _and_all([T.garbled_clean(F.col(c)) for c in cols]),
         _observed_text(df),
     )
 
@@ -346,12 +324,8 @@ def _repetitive_text(df: DataFrame, schema: ValidationSchema):
     cols = string_columns(df)
     if not cols:
         return None
-    passed = _and_all([T.repetitive_clean(F.col(c)) for c in cols])
-    return CompiledRule(
-        "repetitive_text",
-        "repetitive text",
-        Severity.WARNING,
-        passed,
+    return (
+        _and_all([T.repetitive_clean(F.col(c)) for c in cols]),
         _observed_text(df),
     )
 
@@ -360,12 +334,8 @@ def _language_consistency(df: DataFrame, schema: ValidationSchema):
     cols = string_columns(df)
     if not cols:
         return None
-    passed = T.language_consistent([F.col(c) for c in cols])
-    return CompiledRule(
-        "language_consistency",
-        "language consistency",
-        Severity.INFO,
-        passed,
+    return (
+        T.language_consistent([F.col(c) for c in cols]),
         _observed_text(df),
     )
 
@@ -394,12 +364,6 @@ def builtin_rule_defs() -> List[RuleDef]:
     ]
 
 
-def compile_builtin_rules(
-    df: DataFrame, schema: Optional[ValidationSchema] = None
-) -> List[CompiledRule]:
-    return RuleSet().compile(df, schema)
-
-
 # --- preset rulesets (reference rules.py:450-578, §2.4) -------------------
 
 
@@ -414,29 +378,28 @@ def get_sft_ruleset() -> RuleSet:
     """default + instruction/response quality (``rules.py:450-475``)."""
     rs = RuleSet("sft")
 
-    def _instruction_quality(df, schema):
-        return CompiledRule(
+    def _min_length(name: str, n: int) -> RuleBuilder:
+        def build(df, schema):
+            text = _col_or_empty(df, name)
+            return F.length(text) >= n, text
+
+        return build
+
+    rs.add_rule(
+        RuleDef(
             "instruction_quality",
             "instruction quality",
             Severity.WARNING,
-            F.length(_col_or_empty(df, "instruction")) >= 10,
-            _col_or_empty(df, "instruction"),
+            _min_length("instruction", 10),
         )
-
-    def _response_quality(df, schema):
-        return CompiledRule(
+    )
+    rs.add_rule(
+        RuleDef(
             "response_quality",
             "response quality",
             Severity.WARNING,
-            F.length(_col_or_empty(df, "response")) >= 20,
-            _col_or_empty(df, "response"),
+            _min_length("response", 20),
         )
-
-    rs.add_rule(
-        RuleDef("instruction_quality", "instruction quality", Severity.WARNING, _instruction_quality)
-    )
-    rs.add_rule(
-        RuleDef("response_quality", "response quality", Severity.WARNING, _response_quality)
     )
     return rs
 
@@ -452,12 +415,7 @@ def get_preference_ruleset() -> RuleSet:
     def _different(df, schema):
         chosen = F.col("chosen") if "chosen" in df.columns else F.lit(None)
         rejected = F.col("rejected") if "rejected" in df.columns else F.lit(None)
-        return CompiledRule(
-            "chosen_rejected_different",
-            "chosen/rejected different",
-            Severity.ERROR,
-            ~chosen.eqNullSafe(rejected),
-        )
+        return ~chosen.eqNullSafe(rejected), None
 
     rs.add_rule(
         RuleDef(
@@ -489,38 +447,29 @@ def get_annotation_ruleset() -> RuleSet:
     for rid in ("non_empty", "length_bounds", "required_fields", "format_valid"):
         rs.enable_rule(rid, False)
 
-    def _task_id(df, schema):
-        return CompiledRule(
-            "annotation_task_id",
-            "annotation task id",
-            Severity.ERROR,
-            _truthy(df, "task_id"),
-        )
-
-    def _timestamp(df, schema):
-        return CompiledRule(
-            "annotation_timestamp",
-            "annotation timestamp",
-            Severity.WARNING,
-            _truthy(df, "annotated_at"),
-        )
-
     def _value_exists(df, schema):
         # reference checks key presence (rules.py:541-544); DataFrame
         # equivalent: any of the annotation columns is non-null.
         names = ["score", "choice", "choices", "text", "ranking"]
         present = [F.col(n).isNotNull() for n in names if n in df.columns]
         passed = reduce(lambda a, b: a | b, present) if present else F.lit(False)
-        return CompiledRule(
-            "annotation_value_exists",
-            "annotation value exists",
-            Severity.ERROR,
-            passed,
-        )
+        return passed, None
 
-    rs.add_rule(RuleDef("annotation_task_id", "annotation task id", Severity.ERROR, _task_id))
     rs.add_rule(
-        RuleDef("annotation_timestamp", "annotation timestamp", Severity.WARNING, _timestamp)
+        RuleDef(
+            "annotation_task_id",
+            "annotation task id",
+            Severity.ERROR,
+            lambda df, schema: (_truthy(df, "task_id"), None),
+        )
+    )
+    rs.add_rule(
+        RuleDef(
+            "annotation_timestamp",
+            "annotation timestamp",
+            Severity.WARNING,
+            lambda df, schema: (_truthy(df, "annotated_at"), None),
+        )
     )
     rs.add_rule(
         RuleDef(
@@ -730,15 +679,11 @@ def ruleset_from_config(
             _fn=field_name,
             _ct=check_type,
             _rd=dict(rule_def),
-            _rid=rule_id,
-            _nm=rule_name,
-            _sev=severity,
         ):
-            passed = _config_check_column(df, _fn, _ct, _rd)
             obs = (
                 F.col(_fn).cast("string") if _fn in df.columns else F.lit(None).cast("string")
             )
-            return CompiledRule(_rid, _nm, _sev, passed, obs)
+            return _config_check_column(df, _fn, _ct, _rd), obs
 
         rs.add_rule(RuleDef(rule_id, rule_name, severity, _builder, enabled))
     return rs

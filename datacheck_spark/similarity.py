@@ -20,14 +20,6 @@ from pyspark.sql import functions as F
 from datacheck_spark.dedup import cosine_similarity
 
 
-def _norm(v: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Dict, List, Optional, Sequence
+from typing import Any, Dict, List, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -209,65 +209,3 @@ def partition_profile(df: DataFrame) -> Dict[str, Any]:
         "mean_rows": mean,
         "imbalance": (rows["max_rows"] / mean) if mean else 0.0,
     }
-
-
-def auto_salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    partial_aggs: Sequence[Any],
-    final_aggs: Sequence[Any],
-    salt_threshold: float = 4.0,
-    max_buckets: Optional[int] = None,
-    sample_fraction: Optional[float] = None,
-):
-    """Skew-profiled two-phase aggregation: measure the key first, then
-    pick the salt fan-out ``dedup.salted_agg`` should use.
-
-    The profile costs one counting pass over ``df`` (or over a
-    ``sample_fraction`` of it — count *ratios* survive uniform
-    sampling, so the skew factor does too); at 10^12 rows that pass is
-    far cheaper than one mis-partitioned shuffle that strands a hot
-    key's entire row set on a single reducer. A key at most
-    ``salt_threshold``× its fair share aggregates unsalted (1 bucket —
-    the two-phase shape is kept so results are identical either way);
-    beyond it the fan-out is ``ceil(max_skew)`` capped at
-    ``max_buckets`` (default: the cluster parallelism — more buckets
-    than cores cannot help).
-
-    Returns ``(aggregated_df, SkewReport)`` so callers can log what
-    the profile saw and which fan-out was chosen.
-    """
-    from datacheck_spark.dedup import salted_agg
-
-    keys = list(keys)
-    probe = (
-        df.sample(fraction=sample_fraction, seed=42)
-        if sample_fraction
-        else df
-    )
-    rep = diagnose_key_skew(
-        probe, keys, top_k=1, salt_threshold=salt_threshold
-    )
-    if rep.total_rows and rep.max_skew >= salt_threshold:
-        cap = max_buckets or df.sparkSession.sparkContext.defaultParallelism
-        buckets = max(1, min(int(math.ceil(rep.max_skew)), cap))
-    else:
-        buckets = 1
-    return (
-        salted_agg(df, keys, buckets, partial_aggs, final_aggs),
-        rep,
-    )
-
-
-def suggest_shuffle_partitions(
-    total_rows: int,
-    avg_row_bytes: float,
-    target_partition_bytes: int = 128 * 1024 * 1024,
-    min_partitions: int = 1,
-) -> int:
-    """Shuffle-partition count that lands ~``target_partition_bytes``
-    per reducer (Spark's own file-split sizing heuristic, applied to
-    the shuffle side). At 10^12 rows this is what keeps reducer state
-    within executor memory; at test scale it collapses to a handful."""
-    total_bytes = total_rows * max(avg_row_bytes, 1.0)
-    return max(min_partitions, int(math.ceil(total_bytes / target_partition_bytes)))

@@ -33,11 +33,7 @@ from pyspark.sql.window import Window
 
 from datacheck_spark.schema import Severity, TRANSCRIPT_ROLES, ValidationSchema
 from datacheck_spark.engine import ValidationEngine, HAS_ERROR, _unpivot
-from datacheck_spark.rules.compiler import (
-    CompiledRule,
-    RuleDef,
-    RuleSet,
-)
+from datacheck_spark.rules.compiler import RuleDef, RuleSet
 from datacheck_spark.rules import text as T
 
 _WORDS = [
@@ -662,62 +658,61 @@ def transcript_rule_defs() -> List[RuleDef]:
     """Fused rule suite for the transcripts table: structural ERROR
     rules + text-quality WARNING rules scoped to the ``text`` column
     (the reference applies text rules to every string field of a
-    sample; for transcripts the sample's content IS the text column)."""
-
-    def rule(rule_id, name, severity, passed, observed=None):
-        """A rule written once: ``passed(schema)`` and ``observed()``
-        build its Columns when the rule set is compiled."""
-
-        def build(df, schema):
-            return CompiledRule(
-                rule_id, name, severity, passed(schema),
-                observed() if observed else None,
-            )
-
-        return RuleDef(rule_id, name, severity, build)
+    sample; for transcripts the sample's content IS the text column).
+    Each builder returns the rule's ``(passed, observed)`` Columns;
+    ``RuleSet.compile`` names them."""
 
     def head():
         return F.substring(F.col("text"), 1, 80)
 
     return [
-        rule(
+        RuleDef(
             "key_present", "conv_id/turn_idx present", Severity.ERROR,
-            lambda s: F.col("conv_id").isNotNull()
-            & F.col("turn_idx").isNotNull(),
+            lambda df, s: (
+                F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull(),
+                None,
+            ),
         ),
-        rule(
+        RuleDef(
             "turn_idx_nonneg", "turn_idx >= 0", Severity.ERROR,
-            lambda s: F.col("turn_idx").isNull() | (F.col("turn_idx") >= 0),
-            lambda: F.col("turn_idx").cast("string"),
+            lambda df, s: (
+                F.col("turn_idx").isNull() | (F.col("turn_idx") >= 0),
+                F.col("turn_idx").cast("string"),
+            ),
         ),
-        rule(
+        RuleDef(
             "role_valid", "role in vocabulary", Severity.ERROR,
-            lambda s: F.col("role").isNotNull()
-            & F.col("role").isin(TRANSCRIPT_ROLES),
-            lambda: F.col("role"),
+            lambda df, s: (
+                F.col("role").isNotNull() & F.col("role").isin(TRANSCRIPT_ROLES),
+                F.col("role"),
+            ),
         ),
-        rule(
+        RuleDef(
             "text_non_empty", "text non-empty", Severity.ERROR,
-            lambda s: F.col("text").isNotNull() & ~T.py_blank(F.col("text")),
-            head,
+            lambda df, s: (
+                F.col("text").isNotNull() & ~T.py_blank(F.col("text")),
+                head(),
+            ),
         ),
-        rule(
+        RuleDef(
             "text_length_bounds", "text length bounds", Severity.WARNING,
-            lambda s: F.col("text").isNull()
-            | F.length("text").between(s.min_length, s.max_length),
-            lambda: F.length("text").cast("string"),
+            lambda df, s: (
+                F.col("text").isNull()
+                | F.length("text").between(s.min_length, s.max_length),
+                F.length("text").cast("string"),
+            ),
         ),
-        rule(
+        RuleDef(
             "pii_detection", "PII in text", Severity.WARNING,
-            lambda s: T.pii_clean(F.col("text")), head,
+            lambda df, s: (T.pii_clean(F.col("text")), head()),
         ),
-        rule(
+        RuleDef(
             "garbled_text", "garbled text", Severity.WARNING,
-            lambda s: T.garbled_clean(F.col("text")), head,
+            lambda df, s: (T.garbled_clean(F.col("text")), head()),
         ),
-        rule(
+        RuleDef(
             "repetitive_text", "repetitive text", Severity.WARNING,
-            lambda s: T.repetitive_clean(F.col("text")), head,
+            lambda df, s: (T.repetitive_clean(F.col("text")), head()),
         ),
     ]
 
@@ -725,9 +720,8 @@ def transcript_rule_defs() -> List[RuleDef]:
 def get_transcript_rule_suite(include_repetitive: bool = True) -> RuleSet:
     rs = RuleSet("transcripts", load_builtins=False)
     for rd in transcript_rule_defs():
-        if rd.rule_id == "repetitive_text" and not include_repetitive:
-            continue
         rs.add_rule(rd)
+    rs.enable_rule("repetitive_text", include_repetitive)
     return rs
 
 

@@ -139,3 +139,36 @@ def test_workflow_example_invokes_gate():
     assert "datacheck-spark check" in wf
     assert "--threshold" in wf
     assert "quality-report.json" in wf
+
+
+def _lower_bounds(requirements):
+    """name -> lower-bound version tuple (``()`` when unpinned) of
+    ``name`` / ``name>=X.Y`` requirements; anything else is flagged."""
+    out = {}
+    for req in requirements:
+        m = re.fullmatch(r"([A-Za-z0-9_.\-]+)\s*(?:>=\s*([0-9.]+))?", req.strip())
+        assert m, f"unsupported requirement {req!r}"
+        low = m.group(2)
+        out[m.group(1).lower()] = tuple(map(int, low.split("."))) if low else ()
+    return out
+
+
+def test_hook_pins_agree_with_pyproject():
+    """A hook's ``additional_dependencies`` must admit no version the
+    package's own requirements exclude (``pyspark>=3.5`` against
+    ``pyspark>=4.0`` would install a Spark lacking ``Column.try_cast``
+    and ``F.try_parse_json``)."""
+    import tomllib
+
+    import yaml
+
+    declared = _lower_bounds(
+        tomllib.loads((ROOT / "pyproject.toml").read_text())["project"][
+            "dependencies"
+        ]
+    )
+    hooks = yaml.safe_load((ROOT / ".pre-commit-hooks.yaml").read_text())
+    for hook in hooks:
+        pins = _lower_bounds(hook.get("additional_dependencies", []))
+        for name, low in pins.items():
+            assert low >= declared.get(name, ()), (hook["id"], name, low)

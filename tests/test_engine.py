@@ -301,3 +301,69 @@ def test_failed_ids_bounded_at_bench_scale(spark):
     for rid, rr in failing.items():
         ids = rr["failed_samples"]
         assert 0 < len(ids) <= 10, (rid, len(ids))
+
+
+def test_every_suite_compiles_named_and_non_null(spark):
+    """Every rule suite compiles through ``RuleSet.compile``: each
+    compiled rule carries its ``RuleDef``'s id, name and severity, and
+    on a row of nulls every pass column is decided (non-null)."""
+    from datacheck_spark import multimodal as MM
+    from datacheck_spark.rules.compiler import (
+        get_annotation_ruleset,
+        get_preference_ruleset,
+        get_sft_ruleset,
+        ruleset_from_config,
+    )
+    from datacheck_spark.suggest import suggest_rules
+    from datacheck_spark.transcripts import get_transcript_rule_suite
+
+    ddl = (
+        "id string, instruction string, response string, score int, "
+        "chosen string, rejected string, task_id string, "
+        "annotated_at string, conv_id string, turn_idx int, role string, "
+        "text string, media_id string, kind string, payload binary, "
+        "width int, height int, duration_ms int, format string, "
+        "decode_status string, decoded_width int, decoded_height int, "
+        "duration_ms_decoded int, frame_width int, frame_height int"
+    )
+    full = (
+        "1", "What is AI?", "AI is artificial intelligence.", 3,
+        "yes", "no", "t1", "2024-01-01", "c1", 0, "user",
+        "hello there", "m1", "image", b"\x89PNG", 4, 4, None, "png",
+        "ok", 4, 4, None, None, None,
+    )
+    clean = spark.createDataFrame([full], ddl)
+    df = spark.createDataFrame([full, (None,) * len(full)], ddl)
+    schema = ValidationSchema.from_dict(
+        {
+            "fields": [
+                {"name": "instruction", "type": "text", "required": True},
+                {"name": "score", "type": "number"},
+            ],
+            "scoring_rubric": [{"score": 1}, {"score": 2}, {"score": 3}],
+        }
+    )
+    suites = {
+        "default": RuleSet(),
+        "sft": get_sft_ruleset(),
+        "preference": get_preference_ruleset(),
+        "annotation": get_annotation_ruleset(),
+        "suggested": ruleset_from_config(
+            suggest_rules(clean), load_builtins=False
+        ),
+        "transcripts": get_transcript_rule_suite(),
+        "media_integrity": MM.media_integrity_rules(),
+        "metadata_consistency": MM.metadata_consistency_rules(),
+    }
+    for name, ruleset in suites.items():
+        engine = ValidationEngine(ruleset=ruleset, schema=schema)
+        rules = engine.compile(df)
+        assert rules, name
+        for r in rules:
+            rd = ruleset.rules[r.rule_id]
+            assert (r.name, r.severity) == (rd.name, rd.severity), name
+        pass_cols = ["__rule_" + r.rule_id for r in rules]
+        rows = engine.annotate(df, rules=rules).select(*pass_cols).collect()
+        for row in rows:
+            nulls = [c for c in pass_cols if row[c] is None]
+            assert not nulls, (name, nulls)

@@ -1,6 +1,8 @@
 """Sequence packing (concat-and-chunk) tests: partition-count
 independence of the distributed prefix sum, chunk semantics, nulls."""
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,6 +78,16 @@ def test_null_tokens_and_bad_budget(spark):
     assert out == {"a": 0, "b": 0}  # null packs as 0 tokens
     with pytest.raises(ValueError):
         assign_packs(df, "tok", budget=0)
+
+
+def test_no_deprecated_column_key_lookup(spark):
+    """The offset lookup indexes the literal map with a Column key by
+    ``map[col]``; ``getItem(col)`` is deprecated with a FutureWarning."""
+    df = _mk(spark, n=50)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = assign_packs(df, "tok", budget=1000, num_partitions=2)
+    assert out.count() == 50
 
 
 def test_null_order_key_rejected(spark):

@@ -197,8 +197,8 @@ class TestMultimodal:
         joined = df.join(
             MM.extract_media_features(df).drop("kind"), "media_id"
         )
-        rules = MM.metadata_consistency_rules(joined)
-        engine = ValidationEngine()
+        engine = ValidationEngine(ruleset=MM.metadata_consistency_rules())
+        rules = engine.compile(joined)
         annotated = engine.annotate(joined, rules=rules)
         res = engine.summarize(annotated, rules, id_col="media_id")
         assert res.total_samples == 30
@@ -297,12 +297,32 @@ class TestMultimodal:
         from datacheck_spark.engine import ValidationEngine
 
         df = MM.synthetic_media(spark, n=30)
-        rules = MM.media_integrity_rules(df)
-        engine = ValidationEngine()
+        engine = ValidationEngine(ruleset=MM.media_integrity_rules())
+        rules = engine.compile(df)
         annotated = engine.annotate(df, rules=rules)
         res = engine.summarize(annotated, rules, id_col="media_id")
         assert res.total_samples == 30
         assert res.failed_samples == 0  # synthetic data is clean
+
+
+    def test_media_null_kind_fails_kind_known(self, spark):
+        """A row whose ``kind`` is null cannot be shown known: it fails
+        ``kind_known`` (an ERROR), as an undecidable check fails in the
+        reference."""
+        from datacheck_spark.engine import ValidationEngine
+
+        df = spark.createDataFrame(
+            [("m0", None, "image/png", b"\x89PNG", 4, 4, None)],
+            schema=MM.MEDIA_SCHEMA,
+        )
+        engine = ValidationEngine(ruleset=MM.media_integrity_rules())
+        rules = engine.compile(df)
+        res = engine.summarize(
+            engine.annotate(df, rules=rules), rules, id_col="media_id"
+        )
+        assert res.rule_results["kind_known"]["failed"] == 1
+        assert res.failed_samples == 1
+        assert res.failed_sample_ids == ["m0"]
 
 
 class TestStreaming:
@@ -383,13 +403,13 @@ def test_frame_dims_consistency_rule(spark):
     )
     df = good.unionByName(bad)
     joined = df.join(MM.extract_media_features(df).drop("kind"), "media_id")
-    rules = MM.metadata_consistency_rules(joined)
-    engine = ValidationEngine()
+    engine = ValidationEngine(ruleset=MM.metadata_consistency_rules())
+    rules = engine.compile(joined)
     annotated = engine.annotate(joined, rules=rules)
     res = engine.summarize(annotated, rules, id_col="media_id")
     # WARNING severity: flagged, not failed (error-row-rate gating)
     assert res.warning_count == 1 and res.failed_samples == 0
-    v = engine.violations(joined, key_cols=["media_id"], rules=rules).collect()
+    v = engine.violations(joined, key_cols=["media_id"]).collect()
     assert {(r["media_id"], r["rule_id"]) for r in v} == {
         ("m_bad", "frame_dims_match_header")
     }

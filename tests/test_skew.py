@@ -16,7 +16,6 @@ from datacheck_spark.skew import (
     hot_keys,
     key_count_profile,
     partition_profile,
-    suggest_shuffle_partitions,
 )
 from datacheck_spark.transcripts import generate_transcripts
 
@@ -92,54 +91,3 @@ def test_partition_profile_balance(spark):
     skewed = spark.range(0, 10000).repartition(8, (F.col("id") < 9000))
     sprof = partition_profile(skewed)
     assert sprof["imbalance"] > 2.0
-
-
-def test_auto_salted_agg_matches_plain_groupby(hot_df):
-    from datacheck_spark.skew import auto_salted_agg
-
-    out, rep = auto_salted_agg(
-        hot_df,
-        ["conv_id"],
-        partial_aggs=[
-            F.count(F.lit(1)).alias("__c"),
-            F.sum(F.length("text")).alias("__s"),
-        ],
-        final_aggs=[
-            F.sum("__c").alias("turns"),
-            F.sum("__s").alias("chars"),
-        ],
-    )
-    # the planted 100x-hot convs push max_skew far past the threshold
-    assert rep.max_skew > 20
-    expected = {
-        r["conv_id"]: (r["turns"], r["chars"])
-        for r in hot_df.groupBy("conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("turns"),
-            F.sum(F.length("text")).alias("chars"),
-        )
-        .collect()
-    }
-    got = {r["conv_id"]: (r["turns"], r["chars"]) for r in out.collect()}
-    assert got == expected
-
-
-def test_auto_salted_agg_uniform_stays_unsalted(spark):
-    from datacheck_spark.skew import auto_salted_agg
-
-    df = spark.range(0, 1000).withColumn("k", F.col("id") % 100)
-    out, rep = auto_salted_agg(
-        df,
-        ["k"],
-        partial_aggs=[F.count(F.lit(1)).alias("__c")],
-        final_aggs=[F.sum("__c").alias("cnt")],
-    )
-    assert rep.max_skew == pytest.approx(1.0)
-    assert out.count() == 100
-    assert {r["cnt"] for r in out.collect()} == {10}
-
-
-def test_suggest_shuffle_partitions():
-    # 10^9 rows x 200B = 200GB / 128MiB = ceil(1490.1) -> 1491 partitions
-    assert suggest_shuffle_partitions(10**9, 200) == 1491
-    assert suggest_shuffle_partitions(100, 200) == 1
