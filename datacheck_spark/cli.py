@@ -127,42 +127,29 @@ def cmd_check(args) -> int:
         # DATACHECK_LLM_PROVIDER=anthropic|openai for real judging.
         from pyspark.sql import functions as F
 
-        from datacheck_spark.llm_rules import with_llm_quality
+        from datacheck_spark import llm_rules
 
         idc = "id" if "id" in df.columns else "__llm_id"
-        d2 = df
-        if idc not in d2.columns:
-            d2 = d2.withColumn(
-                idc, F.monotonically_increasing_id().cast("string")
-            )
-        for c in ("instruction", "response"):
-            if c not in d2.columns:
-                d2 = d2.withColumn(c, F.lit(""))
-        judged = with_llm_quality(
-            d2,
+        defaults = {
+            idc: F.monotonically_increasing_id().cast("string"),
+            "instruction": F.lit(""),
+            "response": F.lit(""),
+        }
+        judged = llm_rules.with_llm_quality(
+            df.withColumns(
+                {c: v for c, v in defaults.items() if c not in df.columns}
+            ),
             idc,
             provider=os.environ.get("DATACHECK_LLM_PROVIDER", "mock"),
             model=os.environ.get("DATACHECK_LLM_MODEL"),
-        ).persist()  # two actions below: judge each row ONCE
-        agg = judged.agg(
-            F.count("*").alias("n"),
-            F.sum((~F.col("llm_quality_passed")).cast("long")).alias("f"),
-        ).collect()[0]
-        failed = int(agg["f"] or 0)
-        result.rule_results["llm_quality"] = {
-            "name": "LLM quality judge",
-            "passed": int(agg["n"]) - failed,
-            "failed": failed,
-            "severity": "info",
-            "failed_samples": [
-                str(r[idc])
-                for r in judged.where(~F.col("llm_quality_passed"))
-                .select(idc)
-                .limit(10)
-                .collect()
-            ],
-        }
-        result.info_count += failed
+        ).persist()  # the rollup and the failed ids: judge each row ONCE
+        judge = ValidationEngine(ruleset=llm_rules.llm_quality_ruleset())
+        rules = judge.compile(judged)
+        verdict = judge.summarize(
+            judge.annotate(judged, rules=rules), rules, id_col=idc
+        )
+        result.rule_results.update(verdict.rule_results)
+        result.info_count += verdict.info_count
         judged.unpersist()
     if args.output:
         # explicit -f wins over the output extension; without -f the

@@ -26,6 +26,7 @@ REAL files round-tripped through the decoders, not look-alike bytes.
 from __future__ import annotations
 
 import io
+import math
 import struct
 import wave
 import zlib
@@ -255,8 +256,8 @@ def decode_jpeg_header(data: bytes) -> Dict[str, Any]:
 _DCT_M = np.array(
     [
         [
-            (np.sqrt(1 / 8) if u == 0 else np.sqrt(2 / 8))
-            * np.cos((2 * x + 1) * u * np.pi / 16)
+            (math.sqrt(1 / 8) if u == 0 else math.sqrt(2 / 8))
+            * math.cos((2 * x + 1) * u * math.pi / 16)
             for x in range(8)
         ]
         for u in range(8)
@@ -264,10 +265,21 @@ _DCT_M = np.array(
 )
 
 #: 64x64 separable-DCT operators: row-major vec(A·X·B) = (A ⊗ Bᵀ)·vec(X),
-#: so the whole image IDCTs/FDCTs as ONE BLAS matmul over (n_blocks, 64)
-#: instead of n_blocks 8x8 einsums (measured ~30x on the transform step).
-_IDCT_K = np.kron(_DCT_M.T, _DCT_M.T)  # B = Mᵀ F M  -> b = f @ _IDCT_K.T
-_FDCT_K = np.kron(_DCT_M, _DCT_M)      # F = M B Mᵀ  -> f = b @ _FDCT_K.T
+#: so the whole image IDCTs/FDCTs as ONE matmul over (n_blocks, 64).
+#: Fixed point (scaled by 2**_K_BITS, int64): an exact integer matmul
+#: never reaches BLAS, whose per-CPU kernel would round a float one
+#: differently and flip rint on a gradient frame's quantisation ties.
+_K_BITS = 31
+#: fraction bits of the FDCT's samples (|f| < 2**(7 + 4 + 20 + 31))
+_SAMPLE_BITS = 20
+
+
+def _fixed(a: np.ndarray, bits: int = _K_BITS) -> np.ndarray:
+    return np.rint(a * 2.0**bits).astype(np.int64)
+
+
+_IDCT_K = _fixed(np.kron(_DCT_M.T, _DCT_M.T))  # b = f @ _IDCT_K.T
+_FDCT_K = _fixed(np.kron(_DCT_M, _DCT_M))  # f = b @ _FDCT_K.T
 
 #: zigzag position k -> natural (row-major) index, T.81 Figure A.6
 _JPEG_ZZ = np.array(
@@ -757,10 +769,13 @@ def _decode_baseline_scan(
             .transpose(0, 2, 1, 3, 4)
             .reshape(-1, 64)
         )
-        flat = flat * q  # dequant (zigzag order)
-        nat = np.zeros(flat.shape, dtype=np.float64)
+        # dequant (zigzag order); a valid stream's coefficients stay
+        # far inside ±2**15, which keeps a corrupt one's sums in int64
+        flat = np.clip(flat * q, -(2**15), 2**15)
+        nat = np.zeros(flat.shape, dtype=np.int64)
         nat[:, _JPEG_ZZ] = flat  # de-zigzag
-        px = nat @ _IDCT_K.T  # batched 8x8 IDCT as one matmul
+        # batched 8x8 IDCT as one exact integer matmul
+        px = (nat @ _IDCT_K.T) * 2.0**-_K_BITS
         plane = (
             px.reshape(nby, nbx, 8, 8)
             .transpose(0, 2, 1, 3)
@@ -843,7 +858,10 @@ def _fdct_blocks(plane: np.ndarray) -> np.ndarray:
         .astype(np.float64)
         - 128.0
     )
-    f = blocks @ _FDCT_K.T  # batched 8x8 FDCT as one matmul
+    # batched 8x8 FDCT as one exact integer matmul
+    f = (_fixed(blocks, _SAMPLE_BITS) @ _FDCT_K.T) * 2.0 ** -(
+        _SAMPLE_BITS + _K_BITS
+    )
     return f.reshape(nby, nbx, 64)[:, :, _JPEG_ZZ]
 
 

@@ -4,8 +4,9 @@ Reference lifecycle: ``DataChecker.check``
 (``/root/reference/src/datacheck/checker.py:78-181``) — a per-sample ×
 per-rule Python loop. Here the entire rule suite is ONE Catalyst
 projection of boolean columns over the scan (whole-stage codegen), and
-the result summary is ONE aggregation job with partial+final combine —
-the treeAggregate-shaped plan Spark's DataFrame agg already produces.
+every tally of its verdicts is ONE grouped aggregation, :func:`rollup`,
+with partial+final combine — the treeAggregate-shaped plan Spark's
+DataFrame agg already produces.
 
 Outputs:
 
@@ -17,6 +18,9 @@ Outputs:
   ``(*key_cols, rule_id, rule_name, severity, observed)`` under stable
   key ordering — the ``(conv_id, turn_idx, rule_id, observed)`` contract
   of BASELINE.json.
+- ``rollup(annotated, rules, by)``: the one verdict tally, read by
+  ``_counts``: ``summarize`` (no ``by``), the batch check, the
+  partition verdicts and the CLI's LLM judge all count through it.
 - ``check(df)``: a ``CheckResult`` matching the reference's
   machine-readable contract (``server/routers/check.py:73-87``).
 
@@ -46,6 +50,10 @@ from datacheck_spark.rules.compiler import CompiledRule, RuleSet
 RULE_PREFIX = "__rule_"
 OBS_PREFIX = "__obs_"
 HAS_ERROR = "__has_error"
+#: the per-rule fields of a violation row
+_VIOLATION_TYPE = (
+    "struct<rule_id:string,rule_name:string,severity:string,observed:string>"
+)
 
 
 @dataclass
@@ -105,6 +113,53 @@ def _unpivot(
     return df.select(*keep, F.explode(F.array(*entries)).alias("__v")).where(
         F.col("__v").isNotNull()
     )
+
+
+def rollup(
+    annotated: DataFrame,
+    rules: Sequence[CompiledRule],
+    by: Sequence[str] = (),
+    extra_aggs: Optional[Dict[str, Column]] = None,
+) -> DataFrame:
+    """The tally of an annotated frame's verdicts, one partial+final
+    aggregation: per ``by`` group (one row for no ``by``) ``__total``,
+    ``x_<name>`` per extra aggregate, ``f_<rule_id>`` per rule and
+    ``__failed`` (rows failing an ERROR rule)."""
+    aggs = [F.count(F.lit(1)).alias("__total")]
+    aggs += [e.alias(f"x_{name}") for name, e in (extra_aggs or {}).items()]
+    fails = [(~F.col(RULE_PREFIX + r.rule_id)).cast("long") for r in rules]
+    aggs += [F.sum(c).alias("f_" + r.rule_id) for c, r in zip(fails, rules)]
+    aggs.append(F.sum(F.col(HAS_ERROR).cast("long")).alias("__failed"))
+    return annotated.groupBy(*by).agg(*aggs)
+
+
+def _counts(row, rules: Sequence[CompiledRule]) -> CheckResult:
+    """A :func:`rollup` row → ``CheckResult`` counts: a failed rule
+    counts under its severity, only ERROR fails a sample
+    (``checker.py:126-137``); an empty group passes and lists no rule."""
+    total = row["__total"]
+    result = CheckResult(total_samples=total, pass_rate=1.0)
+    if total == 0:
+        return result
+    result.failed_samples = row["__failed"]
+    result.passed_samples = total - result.failed_samples
+    result.pass_rate = result.passed_samples / total
+    for r in rules:
+        failed = row["f_" + r.rule_id]
+        if r.severity == Severity.ERROR:
+            result.error_count += failed
+        elif r.severity == Severity.WARNING:
+            result.warning_count += failed
+        else:
+            result.info_count += failed
+        result.rule_results[r.rule_id] = {
+            "name": r.name,
+            "passed": total - failed,
+            "failed": failed,
+            "severity": r.severity.value,
+            "failed_samples": [],
+        }
+    return result
 
 
 class ValidationEngine:
@@ -201,7 +256,7 @@ class ValidationEngine:
                 ),
             )
             for r in rules
-        ]
+        ] or [F.lit(None).cast(_VIOLATION_TYPE)]  # no rule: zero rows
         out = _unpivot(annotated, key_cols, entries).select(
             *key_cols, "__v.*"
         )
@@ -271,59 +326,22 @@ class ValidationEngine:
         collect_failed_ids: bool = True,
         extra_aggs: Optional[Dict[str, Column]] = None,
     ) -> CheckResult:
-        """One aggregation job over the annotated frame → CheckResult.
+        """The :func:`rollup` of the annotated frame, collected, →
+        ``CheckResult`` (:func:`_counts`).
 
-        Severity triage per ``checker.py:126-137``: every failed rule
-        increments its severity counter; only ERROR failures fail the
-        sample. ``extra_aggs`` piggy-back additional aggregate
-        expressions onto the SAME job (no extra scan); their values land
-        in ``result.extras`` keyed by name. With ``collect_failed_ids``
+        ``extra_aggs`` piggy-back additional aggregate expressions onto
+        the SAME job (no extra scan); their values land in
+        ``result.extras`` keyed by name. With ``collect_failed_ids``
         and an ``id_col``, two more jobs collect each rule's first
         ``per_rule_failed_ids`` failing ids (:meth:`per_rule_failed_ids_df`)
         and the ids of up to ``max_failed_ids`` rows failing an ERROR
         rule. All three jobs run in the JVM, without a Python worker.
         """
-        result = CheckResult()
-        aggs = [F.count(F.lit(1)).alias("__total")]
-        for name, expr in (extra_aggs or {}).items():
-            aggs.append(expr.alias(f"x_{name}"))
-        for r in rules:
-            aggs.append(
-                F.sum((~F.col(RULE_PREFIX + r.rule_id)).cast("long")).alias(
-                    "f_" + r.rule_id
-                )
-            )
-        aggs.append(F.sum(F.col(HAS_ERROR).cast("long")).alias("__failed"))
-        row = annotated.agg(*aggs).collect()[0]
-        for name in (extra_aggs or {}):
-            result.extras[name] = row[f"x_{name}"]
-
-        total = row["__total"]
-        result.total_samples = total
-        if total == 0:
-            result.pass_rate = 1.0
+        row = rollup(annotated, rules, extra_aggs=extra_aggs).collect()[0]
+        result = _counts(row, rules)
+        result.extras = {n: row[f"x_{n}"] for n in extra_aggs or {}}
+        if result.total_samples == 0:
             return result
-
-        failed_samples = row["__failed"]
-        result.failed_samples = failed_samples
-        result.passed_samples = total - failed_samples
-        result.pass_rate = result.passed_samples / total
-
-        for r in rules:
-            failed = row["f_" + r.rule_id]
-            if r.severity == Severity.ERROR:
-                result.error_count += failed
-            elif r.severity == Severity.WARNING:
-                result.warning_count += failed
-            else:
-                result.info_count += failed
-            result.rule_results[r.rule_id] = {
-                "name": r.name,
-                "passed": total - failed,
-                "failed": failed,
-                "severity": r.severity.value,
-                "failed_samples": [],
-            }
 
         if collect_failed_ids and id_col and id_col in annotated.columns:
             # per-rule first-k failing ids (reference caps at 10,

@@ -51,11 +51,9 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import tempfile
 from pathlib import Path
 from typing import Any, Dict, List, Optional, Tuple
-from urllib.parse import unquote
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -63,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from datacheck_spark.engine import HAS_ERROR, RULE_PREFIX
+from datacheck_spark.sources import key_to_path, uri_key, uri_key_col
 
 INCR_MANIFEST = "incremental.json"
 
@@ -71,22 +70,6 @@ INCR_MANIFEST = "incremental.json"
 #: at metadata scale, so a full run over a 10^6-file table streams
 #: through ceil(10^6 / 64) bounded batches.
 FILE_GROUP_SIZE = 64
-
-_FILE_URI = re.compile(r"^file:/+")
-
-
-def _norm_path(uri: str) -> str:
-    """A data-file URI as Spark reports it (``inputFiles()``,
-    ``_metadata.file_path``) → manifest key: the same string with a
-    local file's ``file:`` scheme stripped (``/abs/p%20x``); remote
-    URIs (``s3a://…``, ``hdfs://…``) are kept whole. Spark quotes the
-    path the way ``java.net.URI`` does; :func:`key_to_path` undoes it."""
-    return _FILE_URI.sub("/", uri)
-
-
-def key_to_path(key: str) -> str:
-    """Manifest key (URI-quoted) → the path Spark or the OS opens."""
-    return unquote(key)
 
 
 def _stat(spark: SparkSession, key: str) -> Dict[str, int]:
@@ -126,7 +109,7 @@ def list_data_files(
         .parquet(table_path)
         .inputFiles()
     )
-    return {k: _stat(spark, k) for k in sorted(map(_norm_path, files))}
+    return {k: _stat(spark, k) for k in sorted(map(uri_key, files))}
 
 
 class IncrementalValidator:
@@ -274,7 +257,7 @@ class IncrementalValidator:
         engine = self.checker.engine
         base = spark.read.parquet(*[key_to_path(p) for p in paths])
         rules = engine.compile(base)
-        src = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+        src = uri_key_col(F.col("_metadata.file_path"))
         annotated = engine.annotate(
             base.withColumn("src_file", src), with_observed=True, rules=rules
         )

@@ -1,4 +1,4 @@
-"""LLM-judge quality rule: out-of-band enrichment, not a fused-pass rule.
+"""LLM-judge quality rule: out-of-band enrichment, then a one-rule suite.
 
 Reference: ``/root/reference/src/datacheck/llm_rules.py`` — an LLM
 scores 4 dimensions 1–5 (``llm_rules.py:7-22`` prompt), pass iff
@@ -9,8 +9,9 @@ Spark design (SURVEY §2.4 op 23): LLM calls are an external-service
 enrichment. They run as batched requests inside ``mapInPandas``
 partitions (one HTTP session per partition, N samples per call batch),
 producing a score column that joins back into the rule frame — NOT a
-per-row UDF in the fused pass. Without network/API keys (this sandbox)
-the deterministic ``mock`` provider scores by simple text heuristics so
+per-row UDF in the fused pass; :func:`llm_quality_ruleset` reads it as
+an INFO rule the engine tallies. Without network/API keys the
+deterministic ``mock`` provider scores by simple text heuristics so
 the full plumbing is testable.
 """
 
@@ -28,6 +29,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from datacheck_spark.rules.compiler import RuleDef, RuleSet
+from datacheck_spark.schema import Severity
 
 JUDGE_PROMPT = """Rate this instruction-response sample on 4 dimensions, 1-5 each:
 clarity (instruction is clear), relevance (response addresses it),
@@ -239,3 +243,14 @@ def with_llm_quality(
         "llm_quality_passed",
         F.coalesce(F.col("overall") >= min_score, F.lit(True)),
     )
+
+
+def llm_quality_ruleset() -> RuleSet:
+    """The judge's verdict as a one-rule suite: INFO ``llm_quality``
+    reads the ``llm_quality_passed`` column of :func:`with_llm_quality`."""
+    rs = RuleSet("llm", load_builtins=False)
+    rs.add_rule(RuleDef(
+        "llm_quality", "LLM quality judge", Severity.INFO,
+        lambda df, s: (F.col("llm_quality_passed"), None),
+    ))
+    return rs

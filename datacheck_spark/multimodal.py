@@ -18,7 +18,7 @@ stays exercisable. Each row reports its ``decode_status``
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -502,6 +502,20 @@ def metadata_consistency_rules() -> RuleSet:
     return rs
 
 
+def _video_frame(rng: np.random.Generator) -> Tuple[int, int, bytes]:
+    """A synthetic video row's dims and frame from its generator: a REAL
+    baseline JPEG of a gray gradient (encoded once, repeated per
+    frame), so frame sampling decodes actual pixels."""
+    w = 16 + int(rng.integers(0, 16)) * 2
+    h = 16 + int(rng.integers(0, 16)) * 2
+    px = (np.add.outer(np.arange(h) * 7, np.arange(w) * 11) % 256).astype(
+        np.uint8
+    )
+    return w, h, codecs.encode_jpeg(
+        np.repeat(px[:, :, None], 3, axis=2), quality=88
+    )
+
+
 def synthetic_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
     """Deterministic synthetic media table with REAL payloads: PNG,
     BMP and baseline-JPEG images (gradient pixels, true dims in
@@ -571,24 +585,10 @@ def synthetic_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
                         dur = 1000 + int(rng.integers(0, 10000))
                     else:
                         fps = 25
-                        w = 16 + int(rng.integers(0, 16)) * 2
-                        h = 16 + int(rng.integers(0, 16)) * 2
+                        w, h, frame = _video_frame(rng)
                         n_frames = 25 + int(rng.integers(0, 250))
-                        # frames are REAL baseline JPEGs at the true
-                        # dims (encoded once, repeated per frame), so
-                        # frame sampling decodes actual pixels and the
-                        # first-frame consistency check has real input
-                        fpx = (
-                            np.add.outer(
-                                np.arange(h) * 7, np.arange(w) * 11
-                            ) % 256
-                        ).astype(np.uint8)
                         payload = codecs.encode_avi(
-                            w, h, n_frames, fps=fps,
-                            frame_payload=codecs.encode_jpeg(
-                                np.repeat(fpx[:, :, None], 3, axis=2),
-                                quality=88,
-                            ),
+                            w, h, n_frames, fps=fps, frame_payload=frame
                         )
                         mime = "video/avi"
                         dur = int(round(n_frames * 1000 / fps))

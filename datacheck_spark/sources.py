@@ -18,13 +18,38 @@ instead of a driver loop.
 from __future__ import annotations
 
 import json
+import re
 from pathlib import Path
 from typing import Any, Dict, List, Optional, Sequence, Tuple
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SUPPORTED_EXTENSIONS = {".json", ".jsonl", ".csv"}  # checker.py:41
+
+#: a local file's scheme in the URIs Spark reports for the files it
+#: reads (``input_file_name()``, ``inputFiles()``,
+#: ``_metadata.file_path``): ``file:/abs/p%20x`` or ``file:///abs/p%20x``
+_FILE_SCHEME = "^file:/+"
+
+
+def uri_key(uri: str) -> str:
+    """A file URI as Spark reports it → its key: a local file's
+    ``file:`` scheme stripped (``/abs/p%20x``), remote URIs
+    (``s3a://…``) kept whole, the percent-encoding kept
+    (:func:`key_to_path` undoes it)."""
+    return re.sub(_FILE_SCHEME, "/", uri)
+
+
+def uri_key_col(uri: Column) -> Column:
+    """:func:`uri_key` as a Column expression."""
+    return F.regexp_replace(uri, _FILE_SCHEME, "/")
+
+
+def key_to_path(key: str) -> str:
+    """A :func:`uri_key` key → the path Spark or the OS opens."""
+    return unquote(key)
 
 
 def load_data(
@@ -158,26 +183,22 @@ def load_file_list(spark: SparkSession, files: Sequence[Path]) -> DataFrame:
     # unparseable file is skipped (reference checker.py:351-352), which
     # we surface as one corrupt "record" for the skip accounting.
     for jf in json_files:
-        # Tag with the RESOLVED absolute path: spark-read files get an
-        # absolute file: URI from input_file_name(), and the batch-check
-        # keying resolves tags back against cwd-resolved given paths —
-        # a relative tag (the pre-commit case: hooks pass repo-relative
-        # argv) would fall back to the basename and let two staged
-        # .json files with the same basename collide in file_results.
-        jf_abs = str(Path(jf).resolve())
+        # Tag with the file's URI, as input_file_name() tags the files
+        # Spark reads: absolute (hooks pass repo-relative argv) and
+        # percent-encoded, so the batch keying reads every tag back
+        # through one rule.
+        uri = Path(jf).resolve().as_uri()
         try:
             jdf, _schema = load_data(spark, jf)
         except Exception as exc:  # json.load failure → skipped file
             parts.append(
                 spark.createDataFrame(
-                    [(str(exc)[:200], f"file:{jf_abs}")],
+                    [(str(exc)[:200], uri)],
                     "_corrupt_record string, source_file string",
                 )
             )
             continue
-        parts.append(
-            jdf.withColumn("source_file", F.lit(f"file:{jf_abs}"))
-        )
+        parts.append(jdf.withColumn("source_file", F.lit(uri)))
     if csv_files:
         parts.append(
             spark.read.csv(csv_files, header=True, inferSchema=False)
@@ -211,30 +232,20 @@ def check_directory(
 
     Returns the BatchCheckResult shape: per-file totals, overall pass
     rate, passed_files (= files with zero ERROR failures), skipped
-    files (unreadable)."""
-    from datacheck_spark.engine import ValidationEngine, HAS_ERROR
-
-    engine = engine or ValidationEngine()
+    files (unreadable). Results are keyed by the path RELATIVE to
+    ``dir_path`` (reference keys the same way, ``checker.py:311-324``)
+    so same-named files in different subdirectories stay distinct."""
     root = Path(dir_path)
-
-    def _rel(source_file: str) -> str:
-        # input_file_name() yields file: URIs; driver-tagged rows use
-        # a plain "file:<path>" prefix. Key results by the path
-        # RELATIVE to dir_path (reference keys the same way,
-        # checker.py:311-324) so same-named files in different
-        # subdirectories stay distinct.
-        p = source_file
-        for prefix in ("file://", "file:"):
-            if p.startswith(prefix):
-                p = p[len(prefix):]
-                break
-        p = "/" + p.lstrip("/")
-        try:
-            return str(Path(p).relative_to(root.resolve()))
-        except ValueError:
-            return Path(p).name
     if not root.is_dir():
         return {"success": False, "error": f"not a directory: {dir_path}"}
+    base = root.resolve()
+
+    def _rel(source_file: str) -> str:
+        p = Path(key_to_path(uri_key(source_file)))
+        try:
+            return str(p.relative_to(base))
+        except ValueError:
+            return p.name
 
     df = load_glob(spark, dir_path, patterns)
     return _batch_check(df, _rel, engine, extra={"directory": str(root)})
@@ -250,52 +261,56 @@ def check_files(
     reference's ``.pre-commit-hooks.yaml:1-6`` hook surface). Same
     fused one-pass aggregation as :func:`check_directory`, with results
     keyed by the paths exactly as given."""
-    from datacheck_spark.engine import ValidationEngine
-
-    engine = engine or ValidationEngine()
     files = [Path(p) for p in paths]
-    unsupported = [
-        str(f) for f in files
-        if f.suffix.lower() not in SUPPORTED_EXTENSIONS or not f.is_file()
-    ]
-    supported = [
-        f for f in files
-        if f.suffix.lower() in SUPPORTED_EXTENSIONS and f.is_file()
-    ]
-    given = {str(f.resolve()): str(p) for f, p in zip(files, paths)}
+    ok = [f.is_file() and f.suffix.lower() in SUPPORTED_EXTENSIONS
+          for f in files]
+    supported = [f for f, good in zip(files, ok) if good]
+    unsupported = [str(f) for f, good in zip(files, ok) if not good]
+    given = {f.resolve(): str(p) for f, p in zip(files, paths)}
 
     def _key(source_file: str) -> str:
-        p = source_file
-        for prefix in ("file://", "file:"):
-            if p.startswith(prefix):
-                p = p[len(prefix):]
-                break
-        p = "/" + p.lstrip("/")
-        return given.get(str(Path(p).resolve()), Path(p).name)
+        p = Path(key_to_path(uri_key(source_file)))
+        return given.get(p.resolve(), p.name)
 
     df = load_file_list(spark, supported)
-    out = _batch_check(
+    return _batch_check(
         df, _key, engine,
         extra={"files": [str(p) for p in paths]},
         skipped=[f"{u}: unsupported or missing" for u in unsupported],
     )
-    return out
+
+
+#: a batch check's entry per file: these keys of its ``CheckResult.to_dict()``
+_FILE_KEYS = ("total_samples", "passed_samples", "failed_samples",
+              "pass_rate", "error_count", "warning_count")
+
+
+def _file_rollup(df: DataFrame, engine=None):
+    """A ``source_file``-tagged frame's compiled rules and the engine's
+    ``rollup`` of its verdicts by ``source_file``."""
+    from datacheck_spark.engine import ValidationEngine, rollup
+
+    engine = engine or ValidationEngine()
+    rules = engine.compile(df)
+    annotated = engine.annotate(df, rules=rules)
+    return rules, rollup(annotated, rules, by=["source_file"])
 
 
 def _batch_check(
     df: DataFrame,
-    rel_fn,
+    key_fn,
     engine,
     extra: Optional[Dict[str, Any]] = None,
     skipped: Optional[List[str]] = None,
 ) -> Dict[str, Any]:
     """Shared fused batch aggregation over a ``source_file``-tagged
-    frame: ONE rule pass + groupBy(source_file) — not a file loop."""
-    from datacheck_spark.engine import HAS_ERROR
+    frame: the rollup of :func:`_file_rollup`, each file's entry read
+    from its row by the engine's ``_counts`` — not a file loop.
+    ``key_fn`` maps a ``source_file`` tag to its result key."""
+    from datacheck_spark.engine import _counts
 
-    _rel = rel_fn
     skipped = list(skipped or [])
-    if "source_file" not in df.columns or not df.columns:
+    if "source_file" not in df.columns:
         return {
             "success": True,
             "total_files": 0,
@@ -311,7 +326,7 @@ def _batch_check(
         # as the docs prescribe
         df = df.cache()
         corrupt_per_file = {
-            _rel(r["source_file"]): r["n"]
+            key_fn(r["source_file"]): r["n"]
             for r in df.where(F.col("_corrupt_record").isNotNull())
             .groupBy("source_file")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -320,47 +335,18 @@ def _batch_check(
         skipped += [f"{name}: {n} corrupt records" for name, n in sorted(corrupt_per_file.items())]
         df = df.where(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
 
-    from datacheck_spark.rules.compiler import Severity
-    from datacheck_spark.engine import RULE_PREFIX
-
-    rules = engine.compile(df)
-    annotated = engine.annotate(df, rules=rules)
-
-    def _fail_count(severity) -> F.Column:
-        fails = [
-            (~F.col(RULE_PREFIX + r.rule_id)).cast("int")
-            for r in rules
-            if r.severity == severity
-        ]
-        return sum(fails[1:], fails[0]) if fails else F.lit(0)
-
-    per_file = (
-        annotated.groupBy("source_file")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum((~F.col(HAS_ERROR)).cast("long")).alias("passed"),
-            F.sum(_fail_count(Severity.ERROR)).alias("errors"),
-            F.sum(_fail_count(Severity.WARNING)).alias("warnings"),
-        )
-        .orderBy("source_file")
-        .collect()
-    )
-    file_results = {}
-    total = passed = errors = warnings = 0
-    for r in per_file:
-        name = _rel(r["source_file"])
-        file_results[name] = {
-            "total_samples": r["total"],
-            "passed_samples": r["passed"],
-            "failed_samples": r["total"] - r["passed"],
-            "pass_rate": round(r["passed"] / r["total"], 4) if r["total"] else 1.0,
-            "error_count": int(r["errors"] or 0),
-            "warning_count": int(r["warnings"] or 0),
-        }
-        total += r["total"]
-        passed += r["passed"]
-        errors += int(r["errors"] or 0)
-        warnings += int(r["warnings"] or 0)
+    rules, rollup = _file_rollup(df, engine)
+    # one row per file: ordered here, not by a range-partitioned sort
+    per_file = [
+        (key_fn(row["source_file"]), _counts(row, rules))
+        for row in sorted(rollup.collect(), key=lambda r: r["source_file"])
+    ]
+    file_results = {
+        key: {k: v for k, v in c.to_dict().items() if k in _FILE_KEYS}
+        for key, c in per_file
+    }
+    total = sum(c.total_samples for _, c in per_file)
+    passed = sum(c.passed_samples for _, c in per_file)
     return {
         "success": True,
         **(extra or {}),
@@ -370,8 +356,8 @@ def _batch_check(
         "total_passed_samples": passed,
         "total_failed_samples": total - passed,
         "overall_pass_rate": round(passed / total, 4) if total else 1.0,
-        "total_error_count": errors,
-        "total_warning_count": warnings,
+        "total_error_count": sum(c.error_count for _, c in per_file),
+        "total_warning_count": sum(c.warning_count for _, c in per_file),
         "passed_files": sum(
             1 for fr in file_results.values() if fr["failed_samples"] == 0
         ),

@@ -165,29 +165,28 @@ def compute_distribution(
     return distribution_from_values(df, cols, row["__total"], row.asDict())
 
 
-def per_file_distributions(spark, paths, engine=None):
+def per_file_distributions(spark, paths):
     """Per-file distribution summaries for N data files — the shared
     core of CLI ``compare`` and the ``compare_distributions`` MCP tool
     (reference ``cli.py:236-313``). Returns (frames, dists) where each
-    dist is ``{file, sample_count, distribution}``."""
+    dist is ``{file, sample_count, distribution}``: no rule runs, only
+    :func:`compute_distribution` over the columns ``check`` describes
+    (all but ``id`` and ``metadata``); an empty file gives ``{}``."""
     from datacheck_spark import sources as SRC
-    from datacheck_spark.engine import ValidationEngine
 
-    engine = engine or ValidationEngine()
     frames = []
     dists = []
     for p in paths:
         df, _ = SRC.load_data(spark, p)
         frames.append(df)
-        res = engine.check(
-            df, find_duplicates=False, find_near_duplicates=False,
-            detect_anomalies=False,
+        dist = compute_distribution(
+            df, [c for c in df.columns if c not in ("id", "metadata")]
         )
         dists.append(
             {
                 "file": p,
-                "sample_count": res.total_samples,
-                "distribution": res.distribution,
+                "sample_count": dist["total"],
+                "distribution": dist if dist["total"] else {},
             }
         )
     return frames, dists

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datacheck_spark.schema import Severity, TRANSCRIPT_ROLES, ValidationSchema
-from datacheck_spark.engine import ValidationEngine, HAS_ERROR, _unpivot
+from datacheck_spark.engine import ValidationEngine, _unpivot, rollup
 from datacheck_spark.rules.compiler import RuleDef, RuleSet
 from datacheck_spark.rules import text as T
 
@@ -211,28 +211,18 @@ def per_bucket_verdicts(
     """Per-partition pass/fail verdicts (the north-star contract:
     "emits ... exact per-partition pass/fail verdicts"): one row per
     conv_id hash bucket with totals, ERROR-failure count, pass rate,
-    and the boolean verdict against ``threshold``. One partial+final
-    aggregation over the already-annotated frame — at 10^12 turns this
-    is the per-partition quality scoreboard, computed from the rows
-    alone (no manifest or store is read or written)."""
-    return (
-        annotated.groupBy(bucket_col)
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col(HAS_ERROR).cast("long")).alias("failed"),
-        )
-        .select(
-            bucket_col,
-            "total",
-            "failed",
-            F.round(
-                (F.col("total") - F.col("failed")) / F.col("total"), 6
-            ).alias("pass_rate"),
-            (
-                (F.col("total") - F.col("failed")) / F.col("total")
-                >= threshold
-            ).alias("passed"),
-        )
+    and the boolean verdict against ``threshold``: columns of the
+    engine's ``rollup(annotated, (), by=[bucket_col])``, one
+    partial+final aggregation. At 10^12 turns this is the per-partition
+    quality scoreboard, computed from the rows alone (no manifest or
+    store is read or written)."""
+    rate = (F.col("__total") - F.col("__failed")) / F.col("__total")
+    return rollup(annotated, (), by=[bucket_col]).select(
+        bucket_col,
+        F.col("__total").alias("total"),
+        F.col("__failed").alias("failed"),
+        F.round(rate, 6).alias("pass_rate"),
+        (rate >= threshold).alias("passed"),
     )
 
 
@@ -256,9 +246,9 @@ def per_day_verdicts(
     The default DATE key follows the session timezone (the natural
     reporting surface).
 
-    Same single partial+final aggregation as the bucket verdicts; at
-    10^12 turns with ~10^3 distinct days the combine collapses to one
-    tiny final exchange.
+    The bucket verdicts over the day column, so the same one rollup;
+    at 10^12 turns with ~10^3 distinct days the combine collapses to
+    one tiny final exchange.
     """
     day = (
         F.floor(F.col(ts_col).cast("long") / F.lit(86400)).cast("long")

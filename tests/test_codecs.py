@@ -4,8 +4,12 @@ The decoders are implemented against the public format specs; the
 round-trip tests prove encoder+decoder agree, and the filter tests
 drive the PNG unfilter paths the encoder itself never emits."""
 
+import os
 import struct
+import subprocess
+import sys
 import zlib
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -291,6 +295,20 @@ class TestJpegFullCodec:
         m = codecs._DCT_M
         assert np.allclose(m @ m.T, np.eye(8), atol=1e-12)
 
+    def test_fixed_point_fdct_matches_float(self):
+        """The int64 FDCT stays within 1e-4 of the float transform it
+        replaces (its error bound is about 64 * 128 * 2**-32)."""
+        plane = np.random.default_rng(0).uniform(0, 255, size=(16, 24))
+        blocks = (
+            plane.reshape(2, 8, 3, 8).transpose(0, 2, 1, 3).reshape(-1, 64)
+            - 128.0
+        )
+        ref = (blocks @ np.kron(codecs._DCT_M, codecs._DCT_M).T)[
+            :, codecs._JPEG_ZZ
+        ]
+        got = codecs._fdct_blocks(plane).reshape(-1, 64)
+        assert np.abs(got - ref).max() < 1e-4
+
     def test_zigzag_is_spec_order(self):
         zz = codecs._JPEG_ZZ
         assert sorted(zz.tolist()) == list(range(64))
@@ -381,6 +399,41 @@ class TestJpegFullCodec:
             codecs.decode_jpeg(enc[:40])  # truncated mid-segment
         with pytest.raises(ValueError):
             codecs.decode_jpeg(b"not a jpeg at all")
+
+
+#: encode and decode the frames of synthetic_media's rows m_00041 and
+#: m_00008 (gray gradients with many DCT coefficients on a quantisation
+#: tie) and print one digest of each JPEG and its decoded pixels
+_FRAME_PROBE = """
+import hashlib
+import numpy as np
+from datacheck_spark import codecs
+from datacheck_spark.multimodal import _video_frame
+for i in (41, 8):
+    _, _, jpg = _video_frame(np.random.default_rng(42 * 1_000_003 + i))
+    px = codecs.decode_jpeg(jpg)["pixels"]
+    print(i, len(jpg), hashlib.sha256(jpg + px.tobytes()).hexdigest())
+"""
+
+
+def test_jpeg_codec_independent_of_blas_kernel():
+    """The transforms are exact integer matmuls, so the bytes and pixels
+    do not depend on the kernel OpenBLAS picks for the CPU: a float
+    matmul encoded m_00041's frame to 1010 bytes under SkylakeX and to
+    1012 under Haswell. (Without OpenBLAS the variable is ignored and
+    both runs agree trivially.)"""
+    outs = [
+        subprocess.run(
+            [sys.executable, "-c", _FRAME_PROBE],
+            env={**os.environ, "OPENBLAS_CORETYPE": core},
+            cwd=Path(__file__).resolve().parent.parent,
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        for core in ("Haswell", "SkylakeX")
+    ]
+    assert outs[0] == outs[1] and len(outs[0].splitlines()) == 2
 
 
 class TestAviFrameExtraction:

@@ -139,6 +139,43 @@ def test_violations_long_form(spark):
     assert ids == sorted(ids)
 
 
+def test_violations_without_rules_is_empty(spark):
+    """A frame no rule compiles for (no string column, default schema)
+    gives zero violation rows with the usual columns, as ``check`` on
+    it gives an all-pass result."""
+    df = spark.createDataFrame([Row(vec_id=1, x=0.5), Row(vec_id=2, x=1.5)])
+    engine = ValidationEngine()
+    assert engine.compile(df) == []
+    v = engine.violations(df, key_cols=["vec_id"])
+    assert v.columns == [
+        "vec_id", "rule_id", "rule_name", "severity", "observed"
+    ]
+    assert v.collect() == []
+
+
+def test_rollup_by_group_counts_each_group(spark):
+    """The grouped rollup's row for a group gives the counts
+    ``summarize`` gives over that group alone."""
+    from pyspark.sql import functions as F
+
+    from datacheck_spark.engine import _counts, rollup
+
+    engine = ValidationEngine(schema=SCHEMA)
+    df = sft_df(spark).withColumn("g", (F.col("id").cast("int") % 2))
+    rules = engine.compile(df)
+    annotated = engine.annotate(df, rules=rules)
+    rows = rollup(annotated, rules, by=["g"]).collect()
+    assert rows[0].asDict().keys() == {
+        "g", "__total", "__failed", *["f_" + r.rule_id for r in rules]
+    }
+    for row in rows:
+        alone = engine.summarize(
+            annotated.where(F.col("g") == row["g"]), rules,
+            collect_failed_ids=False,
+        )
+        assert _counts(row, rules) == alone
+
+
 def test_check_result_contract_shape(spark):
     engine = ValidationEngine(schema=SCHEMA)
     result = engine.check(sft_df(spark), find_near_duplicates=False, detect_anomalies=False)

@@ -15,11 +15,10 @@ from pyspark.sql import functions as F
 from datacheck_spark import incremental
 from datacheck_spark.incremental import (
     IncrementalValidator,
-    _norm_path,
     _stat,
-    key_to_path,
     list_data_files,
 )
+from datacheck_spark.sources import key_to_path, uri_key
 from datacheck_spark.transcripts import TranscriptChecker, generate_transcripts
 
 
@@ -37,7 +36,7 @@ def _vset(df):
 
 def _spark_keys(spark, table):
     """The data files Spark's reader reads, as manifest keys."""
-    return {_norm_path(f) for f in spark.read.parquet(str(table)).inputFiles()}
+    return {uri_key(f) for f in spark.read.parquet(str(table)).inputFiles()}
 
 
 @pytest.fixture(scope="module")

@@ -76,6 +76,37 @@ def test_check_directory(spark, tmp_path):
     assert out["overall_pass_rate"] == pytest.approx(2 / 3, abs=1e-4)
 
 
+def test_batch_keys_of_percent_encoded_paths(spark, tmp_path):
+    """Spark tags rows with percent-encoded URIs (``a%20b.jsonl``); the
+    batch keys decode them, so ``a b.jsonl`` and ``sub/a b.jsonl`` stay
+    two files, in a directory and in a file list alike (a driver-read
+    ``.json`` included)."""
+    root = tmp_path / "dir with space"
+    (root / "sub").mkdir(parents=True)
+    (root / "a b.jsonl").write_text(
+        '{"id": "1", "text": "fine content"}\n', encoding="utf-8"
+    )
+    (root / "sub" / "a b.jsonl").write_text(
+        '{"id": "2", "text": ""}\n{"id": "3", "text": "also fine"}\n',
+        encoding="utf-8",
+    )
+    (root / "sub" / "c%41 d.json").write_text(
+        json.dumps([{"id": "4", "text": "json row"}]), encoding="utf-8"
+    )
+    out = SRC.check_directory(spark, str(root))
+    assert sorted(out["file_results"]) == [
+        "a b.jsonl", "sub/a b.jsonl", "sub/c%41 d.json"
+    ]
+    assert out["total_files"] == 3 and out["total_samples"] == 4
+    assert out["file_results"]["sub/a b.jsonl"]["failed_samples"] == 1
+
+    given = [str(root / "a b.jsonl"), str(root / "sub" / "a b.jsonl"),
+             str(root / "sub" / "c%41 d.json")]
+    out = SRC.check_files(spark, given)
+    assert sorted(out["file_results"]) == sorted(given)
+    assert out["total_files"] == 3 and out["total_samples"] == 4
+
+
 def test_check_directory_corrupt_accounting(spark, tmp_path):
     (tmp_path / "good.jsonl").write_text(
         '{"id": "1", "text": "fine content"}\n', encoding="utf-8"

@@ -123,6 +123,49 @@ def main():
         ],
     )
 
+    # 4c. batch check: the engine's verdict rollup by source_file over
+    # the fused rule pass is one partial+final aggregation with one
+    # exchange (files are ordered on the driver, not by a range sort)
+    # and no Python node
+    import re as _re
+    import tempfile
+
+    from datacheck_spark import sources as SRC
+
+    no_python = (
+        "no Python evaluation node",
+        lambda p: not any(
+            s in p
+            for s in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "PythonUDF")
+        ),
+    )
+    with tempfile.TemporaryDirectory() as batch_dir:
+        (Path(batch_dir) / "sub").mkdir()
+        for name in ("a.jsonl", "sub/a.jsonl"):
+            (Path(batch_dir) / name).write_text(
+                '{"id": "1", "text": "fine content"}\n{"id": "2", "text": ""}\n',
+                encoding="utf-8",
+            )
+        _, batch_tally = SRC._file_rollup(SRC.load_glob(spark, batch_dir))
+    add(
+        "batch check (verdict rollup by source_file)",
+        batch_tally,
+        [
+            (
+                "one partial and one final aggregation, on source_file",
+                lambda p: len(_re.findall(r"\(\d+\) HashAggregate", p)) == 2
+                and len(_re.findall(r"Keys \[1\]: \[source_file#\d+\]", p))
+                == 2,
+            ),
+            (
+                "one exchange, hash-partitioned on source_file",
+                lambda p: len(_re.findall(r"\(\d+\) Exchange", p)) == 1
+                and "hashpartitioning(source_file" in p,
+            ),
+            no_python,
+        ],
+    )
+
     # 5. distribution agg: one scan, partial+final
     from datacheck_spark import stats as S  # noqa: F401
     agg_df = li.agg(
@@ -401,13 +444,6 @@ def main():
             and "collect_list" in p
         )
 
-    no_python = (
-        "no Python evaluation node",
-        lambda p: not any(
-            s in p
-            for s in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "PythonUDF")
-        ),
-    )
     rules = engine.compile(docs.select("doc_id", "text"))
     add(
         "per-rule failed ids (bounded take-k)",
