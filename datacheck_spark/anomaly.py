@@ -29,7 +29,8 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, NumericType, StringType
+
+from datacheck_spark import stats as S
 
 MIN_SAMPLES = 10  # anomaly.py:13
 
@@ -47,23 +48,16 @@ def _target_columns(
 ) -> List[tuple]:
     """[(field_key, source_expr, field_type)] — numerics directly,
     strings by length (``anomaly.py:122-132``); booleans excluded."""
+    names = [c for c in df.columns if cols is None or c in cols]
+    numbers = S.columns_for(df, "vavg", names)
+    strings = S.columns_for(df, "lavg", names)
     targets = []
-    for f in df.schema.fields:
-        if cols is not None and f.name not in cols:
-            continue
-        if isinstance(f.dataType, BooleanType):
-            continue
-        if isinstance(f.dataType, NumericType):
+    for c in names:
+        if c in numbers:
+            targets.append((c, F.col(c).try_cast("double"), "number"))
+        elif c in strings:
             targets.append(
-                (f.name, F.col(f.name).try_cast("double"), "number")
-            )
-        elif isinstance(f.dataType, StringType):
-            targets.append(
-                (
-                    f"{f.name} (长度)",
-                    F.length(F.col(f.name)).try_cast("double"),
-                    "length",
-                )
+                (f"{c} (长度)", F.length(F.col(c)).try_cast("double"), "length")
             )
     return targets
 

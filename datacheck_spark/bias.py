@@ -8,15 +8,20 @@ Reference: ``check_bias`` (``mcp_server.py:706-782``):
 - length bias: mean / population std / min / max of text length;
 - language bias: zh/en/other by CJK-vs-latin share of the first 500
   chars with 0.3 cutoffs (``mcp_server.py:756-775``).
+
+The label probe's and the length stats' aggregates are the shared
+``stats`` statistics (``lavg``, ``uniq``, ``lstd``, ``lmin``/``lmax``);
+the row count rides the length stats' aggregation.
 """
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+
+from datacheck_spark import stats as S
 
 #: literal-endpoint CJK class — valid in both Java regex and RE2
 CJK_CLASS = "[一-鿿]"
@@ -31,19 +36,14 @@ def detect_label_column(
 ) -> Optional[str]:
     """Short-string field with a small value vocabulary
     (``mcp_server.py:718-726``), probed on a bounded prefix."""
-    scols = [
-        f.name for f in df.schema.fields if isinstance(f.dataType, StringType)
-    ]
+    scols = S.columns_for(df, "uniq")
     if not scols:
         return None
     probe = df.select(*scols).limit(probe_rows)
-    row = probe.agg(
-        *[F.avg(F.length(c)).alias(f"len__{c}") for c in scols],
-        *[F.countDistinct(c).alias(f"u__{c}") for c in scols],
-    ).collect()[0]
+    row = S.profile(probe, S.profile_aggs(probe, ("lavg", "uniq")))
     for c in scols:
-        avg_len = row[f"len__{c}"] or 0
-        uniq = row[f"u__{c}"] or 0
+        avg_len = row[f"lavg__{c}"] or 0
+        uniq = row[f"uniq__{c}"] or 0
         if avg_len <= max_avg_len and min_uniques <= uniq <= max_uniques:
             return c
     return None
@@ -116,10 +116,21 @@ def check_bias(
     text_col: Optional[str] = None,
 ) -> Dict[str, Any]:
     """Full bias report: category imbalance + length stats + language
-    tally, three single-shuffle jobs."""
-    report: Dict[str, Any] = {"total_samples": df.count()}
-
+    tally. The row count rides on the length stats' aggregation."""
     label_col = label_col or detect_label_column(df)
+    if text_col is None:
+        text_col = next((c for c in S.columns_for(df, "lavg") if c != label_col), None)
+    # the length of a non-string text field is that of its string form
+    texts = df.select(
+        [F.col(text_col).cast("string").alias(text_col)] if text_col else []
+    )
+    row = S.profile(
+        texts,
+        S.profile_aggs(texts, ("lavg", "lstd", "lmin", "lmax")),
+        {"lavg": 4, "lstd": 4},
+    )
+    report: Dict[str, Any] = {"total_samples": row["__total"]}
+
     if label_col:
         counts = (
             df.where(F.col(label_col).isNotNull())
@@ -137,30 +148,16 @@ def check_bias(
                 "imbalance_ratio": round(mx / mn, 2) if mn else float("inf"),
             }
 
-    if text_col is None:
-        long_cols = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, StringType) and f.name != label_col
-        ]
-        text_col = long_cols[0] if long_cols else None
     if text_col:
-        c = F.col(text_col)
-        row = df.where(c.isNotNull()).agg(
-            F.round(F.avg(F.length(c)), 4).alias("mean"),
-            F.round(F.stddev_pop(F.length(c)), 4).alias("std"),
-            F.min(F.length(c)).alias("min"),
-            F.max(F.length(c)).alias("max"),
-        ).collect()[0]
         report["length_bias"] = {
             "text_field": text_col,
-            "mean": row["mean"],
-            "std": row["std"],
-            "min": row["min"],
-            "max": row["max"],
+            "mean": row[f"lavg__{text_col}"],
+            "std": row[f"lstd__{text_col}"],
+            "min": row[f"lmin__{text_col}"],
+            "max": row[f"lmax__{text_col}"],
         }
         langs = (
-            df.select(language_share(c).alias("lang"))
+            df.select(language_share(F.col(text_col)).alias("lang"))
             .groupBy("lang")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()

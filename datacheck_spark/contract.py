@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datacheck_spark.rules import text as T
+from datacheck_spark.stats import compute_distribution
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -178,18 +179,21 @@ def config_checks_events(spark, sf_dir):
     """,
 )
 def distribution_lineitem(spark, sf_dir):
-    """Distribution stats pass (SURVEY §2.5 op 27) — single fused agg."""
-    df = _t(spark, sf_dir, "lineitem")
-    q, p = F.col("l_quantity"), F.col("l_extendedprice")
-    return df.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.min(q).alias("qty_min"),
-        F.max(q).alias("qty_max"),
-        F.round(F.avg(q), 4).alias("qty_avg"),
-        F.min(p).alias("price_min"),
-        F.max(p).alias("price_max"),
-        F.round(F.avg(p), 4).alias("price_avg"),
-        F.sum(q.isNull().cast("long")).alias("qty_nulls"),
+    """Distribution stats pass (SURVEY §2.5 op 27): the values of
+    ``stats.compute_distribution``, rounded in Spark."""
+    dist = compute_distribution(
+        _t(spark, sf_dir, "lineitem"), ["l_quantity", "l_extendedprice"]
+    )
+    q = dist["fields"]["l_quantity"]
+    p = dist["fields"]["l_extendedprice"]["value_stats"]
+    return spark.createDataFrame(
+        [(dist["total"], *q["value_stats"].values(), *p.values(),
+          q["null_count"])],
+        "total bigint, qty_min double, qty_max double, qty_avg double, "
+        "price_min double, price_max double, price_avg double, "
+        "qty_nulls bigint",
+    ).withColumns(
+        {c: F.round(c, 4) for c in ("qty_avg", "price_avg")}
     )
 
 
@@ -206,17 +210,16 @@ def distribution_lineitem(spark, sf_dir):
     """,
 )
 def string_stats_docs(spark, sf_dir):
-    """String-field distribution stats (op 27, string branch)."""
-    df = _t(spark, sf_dir, "documents")
-    c = F.col("text")
-    return df.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(c.isNull().cast("long")).alias("null_count"),
-        F.min(F.length(c)).alias("len_min"),
-        F.max(F.length(c)).alias("len_max"),
-        F.round(F.avg(F.length(c)), 4).alias("len_avg"),
-        F.countDistinct(c).alias("unique_count"),
-    )
+    """String-field distribution stats (op 27, string branch): the
+    values of ``stats.compute_distribution``, rounded in Spark."""
+    dist = compute_distribution(_t(spark, sf_dir, "documents"), ["text"])
+    t = dist["fields"]["text"]
+    return spark.createDataFrame(
+        [(dist["total"], t["null_count"], *t["length_stats"].values(),
+          t["unique_count"])],
+        "total bigint, null_count bigint, len_min int, len_max int, "
+        "len_avg double, unique_count bigint",
+    ).withColumn("len_avg", F.round("len_avg", 4))
 
 
 @_q(

@@ -3,7 +3,9 @@ KS / PSI statistics over histogram sketches.
 
 Reference: ``check_drift`` (``mcp_server.py:570-631``) computes only
 summary deltas (count/mean/min/max per numeric field, top-20 category
-tables, avg text length). That is reproduced by ``drift_summary``.
+tables, avg text length). That is reproduced by ``drift_summary``, whose
+row counts, field classification and side stats are the shared
+``stats`` statistics, one ``stats.profile`` aggregation per side.
 
 The north_star requires an upgrade: per-partition KS / PSI over
 histogram sketches. ``ks_statistic`` computes the exact two-sample KS
@@ -17,48 +19,18 @@ shuffled. KS orders the distinct values globally, which is fine up to
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Optional, Sequence
+from typing import Any, Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import NumericType, BooleanType, StringType
+
+from datacheck_spark import stats as S
 
 
-def _classify_fields(
-    a: DataFrame, b: DataFrame, unique_ratio_cutoff: float = 0.3
-) -> Dict[str, str]:
-    """Shared-field classification like ``mcp_server.py:586-596``:
-    numeric columns → numeric; strings with low unique ratio →
-    categorical; other strings → text."""
-    shared = [c for c in a.columns if c in b.columns]
-    dtypes = {f.name: f.dataType for f in a.schema.fields}
-    out: Dict[str, str] = {}
-    string_cols = [
-        c for c in shared if isinstance(dtypes[c], StringType)
-    ]
-    ratios: Dict[str, float] = {}
-    if string_cols:
-        aggs = []
-        for c in string_cols:
-            aggs += [
-                F.countDistinct(c).alias(f"u__{c}"),
-                F.count(c).alias(f"n__{c}"),
-            ]
-        row = a.agg(*aggs).collect()[0]
-        for c in string_cols:
-            n = row[f"n__{c}"] or 0
-            ratios[c] = (row[f"u__{c}"] / n) if n else 1.0
-    for c in shared:
-        dt = dtypes[c]
-        if isinstance(dt, NumericType) and not isinstance(dt, BooleanType):
-            out[c] = "numeric"
-        elif isinstance(dt, StringType):
-            out[c] = (
-                "categorical"
-                if ratios.get(c, 1.0) < unique_ratio_cutoff
-                else "text"
-            )
-    return out
+#: drift's rounding of the means it reports, in Spark (HALF_UP)
+_DIGITS = {"vavg": 6, "lavg": 4}
+#: a numeric field's report entries and the statistics they read
+_NUMERIC = {"count": "nn", "mean": "vavg", "min": "vmin", "max": "vmax"}
 
 
 def drift_summary(
@@ -66,53 +38,52 @@ def drift_summary(
 ) -> Dict[str, Any]:
     """Reference-parity drift report (``mcp_server.py:570-631``):
     numeric → count/mean/min/max per side; categorical → top-k count
-    table per side; text → avg length per side."""
-    kinds = _classify_fields(a, b)
+    table per side; text → avg length per side.
+
+    Strings with an exact unique ratio under 0.3 on side ``a`` are
+    categorical (``mcp_server.py:586-596``). One ``stats.profile`` per
+    side holds its row count, stats and (on ``a``) that ratio."""
+    shared = [c for c in a.columns if c in b.columns]
+    numeric = S.columns_for(a, "vavg", shared)
+    strings = S.columns_for(a, "uniq", shared)
+    fields = [c for c in shared if c in numeric or c in strings]
+    ra = S.profile(
+        a, S.profile_aggs(a, ["uniq", "lavg", *_NUMERIC.values()], fields), _DIGITS
+    )
+    kinds: Dict[str, str] = {}
+    for c in fields:
+        if c in numeric:
+            kinds[c] = "numeric"
+        else:
+            n = ra[f"nn__{c}"]
+            ratio = ra[f"uniq__{c}"] / n if n else 1.0
+            kinds[c] = "categorical" if ratio < 0.3 else "text"
+    text = [c for c, k in kinds.items() if k == "text"]
+    rb = S.profile(
+        b,
+        {
+            **S.profile_aggs(b, list(_NUMERIC.values()), numeric),
+            **S.profile_aggs(b, ["lavg"], text),
+        },
+        _DIGITS,
+    )
     report: Dict[str, Any] = {
-        "count_a": a.count(),
-        "count_b": b.count(),
+        "count_a": ra["__total"],
+        "count_b": rb["__total"],
         "fields": {},
     }
-
-    def side_aggs(df: DataFrame):
-        aggs = []
-        for c, kind in kinds.items():
-            if kind == "numeric":
-                aggs += [
-                    F.count(c).alias(f"n__{c}"),
-                    F.round(F.avg(c), 6).alias(f"mean__{c}"),
-                    F.min(c).alias(f"min__{c}"),
-                    F.max(c).alias(f"max__{c}"),
-                ]
-            elif kind == "text":
-                aggs.append(
-                    F.round(F.avg(F.length(c)), 4).alias(f"avglen__{c}")
-                )
-        return df.agg(*aggs).collect()[0] if aggs else None
-
-    ra, rb = side_aggs(a), side_aggs(b)
     for c, kind in kinds.items():
         if kind == "numeric":
-            report["fields"][c] = {
-                "type": "numeric",
-                "a": {
-                    "count": ra[f"n__{c}"],
-                    "mean": ra[f"mean__{c}"],
-                    "min": ra[f"min__{c}"],
-                    "max": ra[f"max__{c}"],
-                },
-                "b": {
-                    "count": rb[f"n__{c}"],
-                    "mean": rb[f"mean__{c}"],
-                    "min": rb[f"min__{c}"],
-                    "max": rb[f"max__{c}"],
-                },
-            }
+            report["fields"][c] = {"type": "numeric"}
+            for side, r in (("a", ra), ("b", rb)):
+                report["fields"][c][side] = {
+                    k: r.get(f"{s}__{c}") for k, s in _NUMERIC.items()
+                }
         elif kind == "text":
             report["fields"][c] = {
                 "type": "text",
-                "a": {"avg_length": ra[f"avglen__{c}"]},
-                "b": {"avg_length": rb[f"avglen__{c}"]},
+                "a": {"avg_length": ra[f"lavg__{c}"]},
+                "b": {"avg_length": rb.get(f"lavg__{c}")},
             }
         else:
             tops = {}

@@ -423,11 +423,7 @@ class ValidationEngine:
             if find_near_duplicates:
                 result.near_duplicates = D.near_duplicate_groups(
                     annotated,
-                    text_cols=[
-                        c
-                        for c in data_cols
-                        if dict(annotated.dtypes).get(c) == "string"
-                    ],
+                    text_cols=S.columns_for(annotated, "lavg", data_cols),
                     id_col=id_col,
                     max_rows=near_duplicate_max_rows,
                 )

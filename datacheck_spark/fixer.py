@@ -16,14 +16,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from functools import reduce
-from typing import Any, Dict, List, Optional, Sequence, Tuple
+from typing import Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from datacheck_spark.rules.text import redact_pii
-from datacheck_spark.dedup import content_hash
+from datacheck_spark.stats import columns_for
 
 
 @dataclass
@@ -37,12 +36,6 @@ class FixResult:
     trimmed_count: int = 0
     near_duplicates_removed: int = 0
     pii_redacted_count: int = 0
-
-
-def _string_cols(df: DataFrame) -> List[str]:
-    return [
-        f.name for f in df.schema.fields if isinstance(f.dataType, StringType)
-    ]
 
 
 def _non_empty_pred(df: DataFrame) -> Column:
@@ -111,7 +104,7 @@ class DataFixer:
             key = id_col or ("id" if "id" in fixed.columns else None)
             if key is None:
                 raise ValueError("near_dedup requires an id column")
-            text_cols = [c for c in _string_cols(fixed) if c in data_cols]
+            text_cols = [c for c in columns_for(fixed, "lavg") if c in data_cols]
             before = fixed.count()
             if score_col is None:
                 fixed = fixed.withColumn(
@@ -129,7 +122,7 @@ class DataFixer:
                 fixed = fixed.drop("__nd_score")
             result.near_duplicates_removed = before - fixed.count()
 
-        scols = [c for c in _string_cols(fixed) if c in data_cols]
+        scols = [c for c in columns_for(fixed, "lavg") if c in data_cols]
 
         if trim and scols:
             # str.strip() parity: full Unicode whitespace, not F.trim

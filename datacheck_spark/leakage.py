@@ -17,22 +17,19 @@ from typing import Any, Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+
+from datacheck_spark import stats as S
 
 
 def detect_key_fields(df: DataFrame, min_chars: int = 10) -> List[str]:
     """String columns whose average length exceeds ``min_chars`` — the
     DataFrame reading of the reference's first-sample heuristic
     (``mcp_server.py:642-648``)."""
-    scols = [
-        f.name for f in df.schema.fields if isinstance(f.dataType, StringType)
-    ]
-    if not scols:
+    aggs = S.profile_aggs(df, ["lavg"])
+    if not aggs:
         return []
-    row = df.agg(
-        *[F.avg(F.length(c)).alias(c) for c in scols]
-    ).collect()[0]
-    return [c for c in scols if (row[c] or 0) > min_chars]
+    row = S.profile(df, aggs)
+    return [c for c in df.columns if (row.get(f"lavg__{c}") or 0) > min_chars]
 
 
 def exact_leakage(

@@ -18,6 +18,7 @@ instead of a driver loop.
 from __future__ import annotations
 
 import json
+import os
 import re
 from pathlib import Path
 from typing import Any, Dict, List, Optional, Sequence, Tuple
@@ -52,6 +53,14 @@ def key_to_path(key: str) -> str:
     return unquote(key)
 
 
+def _spark_path(path) -> str:
+    """``path`` for ``spark.read``: a URI (``s3a:``, ``file:``) as given,
+    a local path made absolute (Spark resolves a relative one against
+    the JVM's working directory, not this process's)."""
+    path = str(path)
+    return path if re.match(r"\w[\w+.-]*:", path) else os.path.abspath(path)
+
+
 def load_data(
     spark: SparkSession, path: str
 ) -> Tuple[DataFrame, Dict[str, Any]]:
@@ -68,17 +77,18 @@ def load_data(
     wrote (it holds ``_SUCCESS``) is read by its part files' format,
     whatever its own name."""
     suffix = _dataset_suffix(path)
+    read = _spark_path(path)
     if suffix == ".jsonl" or (suffix == ".json" and Path(path).is_dir()):
-        return spark.read.json(path), {}
+        return spark.read.json(read), {}
     if suffix == ".csv":
         # all-string typing preserved (reference DictReader semantics)
-        return spark.read.csv(path, header=True, inferSchema=False), {}
+        return spark.read.csv(read, header=True, inferSchema=False), {}
     if suffix == ".orc":
         # columnar beyond-reference format (Spark-native, typed)
-        return spark.read.orc(path), {}
+        return spark.read.orc(read), {}
     if suffix != ".json":
         return (
-            spark.read.option("recursiveFileLookup", "true").parquet(path),
+            spark.read.option("recursiveFileLookup", "true").parquet(read),
             {},
         )
     # .json: list or envelope; the envelope/schema sidecar is read on
@@ -160,9 +170,9 @@ def load_file_list(spark: SparkSession, files: Sequence[Path]) -> DataFrame:
     tagged with ``source_file`` — shared by :func:`load_glob`
     (directory discovery) and :func:`check_files` (the pre-commit hook
     entry, which receives the changed files as argv)."""
-    jsonl_files = [str(f) for f in files if f.suffix.lower() == ".jsonl"]
+    jsonl_files = [_spark_path(f) for f in files if f.suffix.lower() == ".jsonl"]
     json_files = [str(f) for f in files if f.suffix.lower() == ".json"]
-    csv_files = [str(f) for f in files if f.suffix.lower() == ".csv"]
+    csv_files = [_spark_path(f) for f in files if f.suffix.lower() == ".csv"]
     parts: List[DataFrame] = []
     if jsonl_files:
         # PERMISSIVE keeps malformed lines in _corrupt_record so the

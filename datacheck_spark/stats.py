@@ -6,13 +6,13 @@ Reference semantics: ``_compute_distribution``
 (``mcp_server.py:784-829``), ``_compare_distributions``
 (``checker.py:540-588``).
 
-All stats for all columns are computed in ONE ``df.agg`` pass (Spark's
-hash aggregate already does partial+final combine across executors —
-the treeAggregate shape BASELINE.json asks for). ``distribution_aggs``
-hands those expressions to callers that already run an aggregation:
-``ValidationEngine.check`` runs them inside its rule summary. Top-k
-value histograms use one extra unpivot → groupBy → window job for
-*all* numeric columns together instead of a job per column.
+Each per-column statistic is defined once, in :data:`STATS`; every
+profiler (here, ``suggest``, ``drift``, ``bias``, ``leakage``) runs
+them as ONE :func:`profile` aggregation (partial+final combine — the
+treeAggregate shape BASELINE.json asks for). ``distribution_aggs``
+hands them to ``ValidationEngine.check``'s rule summary. Top-k value
+histograms use one extra unpivot → groupBy → window job for *all*
+numeric columns together instead of a job per column.
 """
 
 from __future__ import annotations
@@ -24,14 +24,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
-    DoubleType,
-    FloatType,
     IntegralType,
     MapType,
     NumericType,
     StringType,
     StructType,
 )
+
+from datacheck_spark.rules import text as T
 
 
 def _dtype_map(df: DataFrame) -> Dict[str, Any]:
@@ -82,6 +82,95 @@ def _is_number(dt) -> bool:
     return isinstance(dt, NumericType) and not isinstance(dt, BooleanType)
 
 
+def _is_string(dt) -> bool:
+    return isinstance(dt, StringType)
+
+
+def _any(dt) -> bool:
+    return True
+
+
+def _rows(test: Column) -> Column:
+    return F.sum(test.cast("long"))
+
+
+#: Every per-column profile statistic, defined once: name -> (the
+#: column types it applies to, its aggregate over the column).
+STATS = {
+    "nn": (_any, F.count),
+    "null": (_any, lambda c: _rows(c.isNull())),
+    # Python ``str.strip() == ""`` (the suggested ``non_empty`` check)
+    "blank": (_is_string, lambda c: _rows(T.py_blank(c))),
+    # non-null with a non-space character (coverage's non-empty rate)
+    "nonempty": (
+        _is_string, lambda c: _rows(c.isNotNull() & (F.length(F.trim(c)) > 0))
+    ),
+    # non-null values that fail to parse as JSON
+    "nonjson": (
+        _is_string, lambda c: _rows(F.try_parse_json(c).isNull() & c.isNotNull())
+    ),
+    "lmin": (_is_string, lambda c: F.min(F.length(c))),
+    "lmax": (_is_string, lambda c: F.max(F.length(c))),
+    "lavg": (_is_string, lambda c: F.avg(F.length(c))),
+    "lstd": (_is_string, lambda c: F.stddev_pop(F.length(c))),
+    "vmin": (_is_number, F.min),
+    "vmax": (_is_number, F.max),
+    "vavg": (_is_number, F.avg),
+    "uniq": (_is_string, F.countDistinct),
+    "hll": (_any, F.approx_count_distinct),
+}
+
+
+def columns_for(
+    df: DataFrame, stat: str, cols: Optional[Sequence[str]] = None
+) -> List[str]:
+    """The columns of ``cols`` (default all), in order, that ``stat``
+    applies to."""
+    applies, dtypes = STATS[stat][0], _dtype_map(df)
+    return [c for c in (df.columns if cols is None else cols) if applies(dtypes[c])]
+
+
+def profile_aggs(
+    df: DataFrame, stats: Sequence[str], cols: Optional[Sequence[str]] = None
+) -> Dict[str, Column]:
+    """``{"<stat>__<col>": aggregate}`` for every column of ``cols``
+    (default all) and every statistic of ``stats`` that applies to its
+    type, column by column."""
+    dtypes = _dtype_map(df)
+    return {
+        f"{s}__{c}": STATS[s][1](F.col(c))
+        for c in (df.columns if cols is None else cols)
+        for s in stats
+        if STATS[s][0](dtypes[c])
+    }
+
+
+def profile_frame(
+    df: DataFrame, aggs: Dict[str, Column], digits: Optional[Dict[str, int]] = None
+) -> DataFrame:
+    """``aggs`` as ONE aggregation with ``count(*) AS __total``: a
+    one-row frame (partial+final combine). Each statistic named in
+    ``digits`` is rounded in Spark (HALF_UP, unlike Python's ``round``)
+    to that many places."""
+    digits = digits or {}
+
+    def column(name: str, e: Column) -> Column:
+        stat = name.split("__", 1)[0]
+        return (F.round(e, digits[stat]) if stat in digits else e).alias(name)
+
+    return df.agg(
+        F.count(F.lit(1)).alias("__total"),
+        *[column(name, e) for name, e in aggs.items()],
+    )
+
+
+def profile(
+    df: DataFrame, aggs: Dict[str, Column], digits: Optional[Dict[str, int]] = None
+) -> Dict[str, Any]:
+    """Run :func:`profile_frame`: its row as a dict."""
+    return profile_frame(df, aggs, digits).collect()[0].asDict()
+
+
 def distribution_aggs(
     df: DataFrame, cols: Optional[Sequence[str]] = None
 ) -> Dict[str, Column]:
@@ -90,20 +179,12 @@ def distribution_aggs(
     (``ValidationEngine.check`` folds them into the rule summary).
     None depends on the row count; the row count itself is the
     caller's. No ``cols`` means every column."""
-    dtypes = _dtype_map(df)
-    aggs: Dict[str, Column] = {}
-    for c in cols or df.columns:
-        aggs[f"null__{c}"] = F.sum(F.col(c).isNull().cast("long"))
-        if isinstance(dtypes[c], StringType):
-            aggs[f"lmin__{c}"] = F.min(F.length(c))
-            aggs[f"lmax__{c}"] = F.max(F.length(c))
-            aggs[f"lavg__{c}"] = F.avg(F.length(c))
-            aggs[f"uniq__{c}"] = F.countDistinct(c)
-            aggs[f"nn__{c}"] = F.count(c)
-        elif _is_number(dtypes[c]):
-            aggs[f"vmin__{c}"] = F.min(c)
-            aggs[f"vmax__{c}"] = F.max(c)
-            aggs[f"vavg__{c}"] = F.avg(c)
+    cols = cols or df.columns
+    aggs = profile_aggs(
+        df, ("null", "lmin", "lmax", "lavg", "uniq", "vmin", "vmax", "vavg"), cols
+    )
+    # unique_ratio's denominator, on the columns with a distinct count
+    aggs.update(profile_aggs(df, ["nn"], columns_for(df, "uniq", cols)))
     return aggs
 
 
@@ -120,14 +201,13 @@ def distribution_from_values(
     if total == 0:
         return distribution
     cols = cols or df.columns
-    dtypes = _dtype_map(df)
-    tops = _top_values(df, [c for c in cols if _is_number(dtypes[c])])
+    tops = _top_values(df, columns_for(df, "vavg", cols))
     for c in cols:
         fs: Dict[str, Any] = {
             "count": total,
             "null_count": values[f"null__{c}"],
         }
-        if isinstance(dtypes[c], StringType) and values[f"nn__{c}"] > 0:
+        if values.get(f"nn__{c}"):  # a string column with values
             fs["type"] = "string"
             fs["length_stats"] = {
                 "min": values[f"lmin__{c}"],
@@ -136,7 +216,7 @@ def distribution_from_values(
             }
             fs["unique_count"] = values[f"uniq__{c}"]
             fs["unique_ratio"] = values[f"uniq__{c}"] / values[f"nn__{c}"]
-        elif _is_number(dtypes[c]) and values[f"vavg__{c}"] is not None:
+        elif values.get(f"vavg__{c}") is not None:
             fs["type"] = "number"
             fs["value_stats"] = {
                 "min": values[f"vmin__{c}"],
@@ -157,12 +237,8 @@ def compute_distribution(
     min/max/avg + top-10 histogram. Booleans/complex: count + null_count
     only (the reference ignores them beyond counting).
     """
-    aggs = distribution_aggs(df, cols)
-    row = df.agg(
-        F.count(F.lit(1)).alias("__total"),
-        *[e.alias(name) for name, e in aggs.items()],
-    ).collect()[0]
-    return distribution_from_values(df, cols, row["__total"], row.asDict())
+    row = profile(df, distribution_aggs(df, cols))
+    return distribution_from_values(df, cols, row["__total"], row)
 
 
 def per_file_distributions(spark, paths):
@@ -254,7 +330,7 @@ def _infer_type_name(dt) -> str:
         return "boolean"
     if isinstance(dt, IntegralType):
         return "integer"
-    if isinstance(dt, (DoubleType, FloatType)) or isinstance(dt, NumericType):
+    if isinstance(dt, NumericType):
         return "number"
     if isinstance(dt, ArrayType):
         return "array"
@@ -313,35 +389,19 @@ def infer_schema(df: DataFrame, enum_max_uniques: int = 10) -> Dict[str, Any]:
       when the column has 1..``enum_max_uniques`` distinct values.
       Skipped when there are no candidates.
     """
-    dtypes = _dtype_map(df)
-    numeric_cols = [c for c in df.columns if _is_number(dtypes[c])]
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    for c in df.columns:
-        dt = dtypes[c]
-        aggs.append(F.count(c).alias(f"nn__{c}"))
-        if isinstance(dt, StringType):
-            aggs += [
-                F.min(F.length(c)).alias(f"lmin__{c}"),
-                F.max(F.length(c)).alias(f"lmax__{c}"),
-                F.avg(F.length(c)).alias(f"lavg__{c}"),
-            ]
-        elif c in numeric_cols:
-            aggs += [
-                F.min(c).alias(f"vmin__{c}"),
-                F.max(c).alias(f"vmax__{c}"),
-                F.approx_count_distinct(c).alias(f"uniq__{c}"),
-            ]
-    row = df.agg(*aggs).collect()[0]
+    numeric_cols = columns_for(df, "vmin")
+    aggs = profile_aggs(df, ("nn", "lmin", "lmax", "lavg", "vmin", "vmax"))
+    aggs.update(profile_aggs(df, ["hll"], numeric_cols))
+    row = profile(df, aggs)
     total = row["__total"]
     if total == 0:
         return {"fields": {}, "sample_count": 0}
     enums = _confirm_enums(
-        df, {c: row[f"uniq__{c}"] for c in numeric_cols}, enum_max_uniques
+        df, {c: row[f"hll__{c}"] for c in numeric_cols}, enum_max_uniques
     )
 
     fields: Dict[str, Any] = {}
-    for c in df.columns:
-        dt = dtypes[c]
+    for c, dt in _dtype_map(df).items():
         nn = row[f"nn__{c}"]
         field_def: Dict[str, Any] = {"type": _infer_type_name(dt) if nn else "string"}
         # presence of the *key* is static in a DataFrame; required iff
@@ -351,11 +411,11 @@ def infer_schema(df: DataFrame, enum_max_uniques: int = 10) -> Dict[str, Any]:
             field_def["required"] = True
         if nn < total:
             field_def["nullable"] = True
-        if isinstance(dt, StringType) and nn:
+        if f"lmin__{c}" in row and nn:
             field_def["min_length"] = row[f"lmin__{c}"]
             field_def["max_length"] = row[f"lmax__{c}"]
             field_def["avg_length"] = round(row[f"lavg__{c}"])
-        if c in numeric_cols and nn:
+        if f"vmin__{c}" in row and nn:
             field_def["min_value"] = row[f"vmin__{c}"]
             field_def["max_value"] = row[f"vmax__{c}"]
             if c in enums:
@@ -377,19 +437,7 @@ def check_coverage(
     ``mcp_server.py:806-807``).
     """
     cols = list(cols or df.columns)
-    dtypes = _dtype_map(df)
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    for c in cols:
-        aggs.append(F.count(c).alias(f"nn__{c}"))
-        if isinstance(dtypes[c], StringType):
-            nonempty = (F.col(c).isNotNull() & (F.length(F.trim(c)) > 0)).cast(
-                "long"
-            )
-        else:
-            nonempty = F.col(c).isNotNull().cast("long")
-        aggs.append(F.sum(nonempty).alias(f"ne__{c}"))
-        aggs.append(F.approx_count_distinct(c).alias(f"uniq__{c}"))
-    row = df.agg(*aggs).collect()[0]
+    row = profile(df, profile_aggs(df, ("nn", "nonempty", "hll"), cols))
     total = row["__total"]
     out: Dict[str, Any] = {"total_samples": total, "fields": {}}
     if total == 0:
@@ -397,13 +445,14 @@ def check_coverage(
     presences, nonempties = [], []
     for c in cols:
         presence = row[f"nn__{c}"] / total
-        nonempty = row[f"ne__{c}"] / total
+        # a column without an emptiness test is non-empty where non-null
+        nonempty = row.get(f"nonempty__{c}", row[f"nn__{c}"]) / total
         presences.append(presence)
         nonempties.append(nonempty)
         out["fields"][c] = {
             "presence_rate": round(presence, 4),
             "non_empty_rate": round(nonempty, 4),
-            "distinct_values": row[f"uniq__{c}"],
+            "distinct_values": row[f"hll__{c}"],
         }
     out["avg_presence_rate"] = round(sum(presences) / len(presences), 4)
     out["avg_non_empty_rate"] = round(sum(nonempties) / len(nonempties), 4)

@@ -12,62 +12,27 @@ the data it was profiled from. (The builtin dataset-level rules a
 default RuleSet adds on top make no such promise — they are what
 flagged the data's issues in the first place.)
 
-Scale shape: ONE full-scan aggregation job computes every per-column
-statistic (map-side partial aggregation, no shuffle beyond the final
-single-row agg), with HyperLogLog sketches for the distinct counts,
-plus at most one tiny follow-up job, ``stats._confirm_enums`` (shared
-with ``stats.infer_schema``), that collects slice-bounded value sets
-for the string columns whose sketch makes them enum candidates (2×
-margin). The true set size decides, so sketch error can never change
-which enums are emitted.
+Scale shape: ONE full-scan aggregation job, ``stats.profile`` of the
+shared per-column statistics (map-side partial aggregation, no shuffle
+beyond the final single-row agg), with HyperLogLog sketches for the
+distinct counts, plus at most one tiny follow-up job,
+``stats._confirm_enums`` (shared with ``stats.infer_schema``), that
+collects slice-bounded value sets for the string columns whose sketch
+makes them enum candidates (2× margin). The true set size decides, so
+sketch error can never change which enums are emitted.
 """
 
 from __future__ import annotations
 
 from typing import Any, Dict, List
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType, NumericType, StringType
+from pyspark.sql import Column, DataFrame, functions as F
 
-from datacheck_spark.rules import text as T
-from datacheck_spark.stats import _confirm_enums
+from datacheck_spark import stats as S
 
 # a column this complete is suggested as required (presence is static
 # in a fixed-schema DataFrame; this mirrors infer_schema's 95% bar)
 REQUIRED_THRESHOLD = 0.95
-
-
-def profile_agg_frame(df: DataFrame) -> DataFrame:
-    """The single full-scan aggregation behind :func:`profile_columns`:
-    one row with every per-column statistic, distinct counts as HLL
-    sketches (plan invariant in PLANS.md: one scan, partial+final
-    combine, no extra shuffle)."""
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    aggs: List[Any] = [F.count(F.lit(1)).alias("__total")]
-    for c in df.columns:
-        dt = dtypes[c]
-        aggs.append(F.count(c).alias(f"nn__{c}"))
-        if isinstance(dt, StringType):
-            aggs += [
-                F.sum(T.py_blank(F.col(c)).cast("long")).alias(f"blank__{c}"),
-                F.min(F.length(c)).alias(f"lmin__{c}"),
-                F.max(F.length(c)).alias(f"lmax__{c}"),
-                F.approx_count_distinct(c).alias(f"uniq__{c}"),
-                # JSON-payload detection: non-null values failing to parse
-                F.sum(
-                    (
-                        F.try_parse_json(F.col(c)).isNull()
-                        & F.col(c).isNotNull()
-                    ).cast("long")
-                ).alias(f"nonjson__{c}"),
-            ]
-        elif isinstance(dt, NumericType) and not isinstance(dt, BooleanType):
-            aggs += [
-                F.min(c).alias(f"vmin__{c}"),
-                F.max(c).alias(f"vmax__{c}"),
-                F.approx_count_distinct(c).alias(f"uniq__{c}"),
-            ]
-    return df.agg(*aggs)
 
 
 def profile_columns(df: DataFrame, enum_max_uniques: int = 20) -> Dict[str, Any]:
@@ -79,48 +44,56 @@ def profile_columns(df: DataFrame, enum_max_uniques: int = 20) -> Dict[str, Any]
     (non-boolean) columns carry ``non_null, min, max, distinct``; every
     other type carries ``non_null`` only.
 
-    Jobs: :func:`profile_agg_frame` (the row total rides along as
-    ``__total``, so no separate ``df.count()`` job), then
-    ``stats._confirm_enums`` over the string columns (skipped when no
-    sketch makes one a candidate). ``distinct`` is the HLL estimate,
-    except for confirmed enum columns, where it is the exact set size.
-    Enums are decided by the true set size, never by the sketch alone.
+    Jobs: one ``stats.profile`` aggregation of :func:`_profile_aggs`
+    (the row total rides along as ``__total``, so no separate
+    ``df.count()`` job), then ``stats._confirm_enums`` over the string
+    columns (skipped when no sketch makes one a candidate).
+    ``distinct`` is the HLL estimate, except for confirmed enum
+    columns, where it is the exact set size. Enums are decided by the
+    true set size, never by the sketch alone.
     """
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    row = profile_agg_frame(df).collect()[0]
+    row = S.profile(df, _profile_aggs(df))
     total = row["__total"]
     out: Dict[str, Any] = {"total": total, "columns": {}}
     if total == 0:
         return out
 
-    enums = _confirm_enums(
+    enums = S._confirm_enums(
         df,
-        {
-            c: row[f"uniq__{c}"]
-            for c in df.columns
-            if isinstance(dtypes[c], StringType)
-        },
+        {c: row[f"hll__{c}"] for c in S.columns_for(df, "lmin")},
         enum_max_uniques,
     )
 
     for c in df.columns:
-        dt = dtypes[c]
         st: Dict[str, Any] = {"non_null": row[f"nn__{c}"]}
-        if isinstance(dt, StringType):
+        if f"lmin__{c}" in row:  # a string column
             st["blank"] = row[f"blank__{c}"] or 0
             st["non_json"] = row[f"nonjson__{c}"] or 0
             st["len_min"] = row[f"lmin__{c}"]
             st["len_max"] = row[f"lmax__{c}"]
-            st["distinct"] = row[f"uniq__{c}"]
+            st["distinct"] = row[f"hll__{c}"]
             if c in enums:
                 st["enum_values"] = enums[c]
                 st["distinct"] = len(enums[c])
-        elif isinstance(dt, NumericType) and not isinstance(dt, BooleanType):
+        elif f"vmin__{c}" in row:  # a numeric column
             st["min"] = row[f"vmin__{c}"]
             st["max"] = row[f"vmax__{c}"]
-            st["distinct"] = row[f"uniq__{c}"]
+            st["distinct"] = row[f"hll__{c}"]
         out["columns"][c] = st
     return out
+
+
+def _profile_aggs(df: DataFrame) -> Dict[str, Column]:
+    """The ``stats.profile_aggs`` entries :func:`profile_columns` reads:
+    every column's non-null count; the string and numeric columns' own
+    statistics and an HLL sketch (``distinct``, enum candidates)."""
+    typed = S.columns_for(df, "lmin") + S.columns_for(df, "vmin")
+    return {
+        **S.profile_aggs(df, ["nn"]),
+        **S.profile_aggs(
+            df, ("blank", "nonjson", "lmin", "lmax", "vmin", "vmax", "hll"), typed
+        ),
+    }
 
 
 #: keys safe to embed in a '$.key' JSONPath literal
@@ -282,18 +255,18 @@ def suggestions_table(spark, config: Dict[str, Any]) -> DataFrame:
     carry the numeric parameter(s) and vals the comma-joined enum."""
     from pyspark.sql.types import (
         DoubleType,
-        StringType as S,
+        StringType,
         StructField,
         StructType,
     )
 
     schema = StructType(
         [
-            StructField("field", S()),
-            StructField("check", S()),
+            StructField("field", StringType()),
+            StructField("check", StringType()),
             StructField("p1", DoubleType()),
             StructField("p2", DoubleType()),
-            StructField("vals", S()),
+            StructField("vals", StringType()),
         ]
     )
     rows = []

@@ -33,6 +33,29 @@ def test_drift_summary(split_dfs):
     assert rep["fields"]["txt"]["b"]["avg_length"] > rep["fields"]["txt"]["a"]["avg_length"]
 
 
+def test_drift_summary_one_aggregation_per_side(spark, split_dfs, tmp_path):
+    """Row counts, classification and side stats come from one
+    aggregation per side: on two parquet sides with one categorical
+    column that is 3 jobs for side ``a`` (its exact distinct adds a
+    shuffle), 2 for ``b`` and 2 per side's top-k table. Counting the
+    row counts, the classification and the side stats apart took 15."""
+    a, b = split_dfs
+    a.write.parquet(str(tmp_path / "a"))
+    b.write.parquet(str(tmp_path / "b"))
+    a, b = (spark.read.parquet(str(tmp_path / s)) for s in ("a", "b"))
+    sc = spark.sparkContext
+    sc.setJobGroup("drift-summary-jobs", "drift_summary")
+    try:
+        rep = DR.drift_summary(a, b)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("drift-summary-jobs")
+    assert [f["type"] for f in rep["fields"].values()] == [
+        "categorical", "numeric", "text"
+    ]
+    assert len(jobs) <= 9, len(jobs)
+
+
 def test_ks_statistic(split_dfs):
     a, b = split_dfs
     # identical distributions -> 0

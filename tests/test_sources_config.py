@@ -107,6 +107,31 @@ def test_batch_keys_of_percent_encoded_paths(spark, tmp_path):
     assert out["total_files"] == 3 and out["total_samples"] == 4
 
 
+def test_relative_paths_follow_the_python_working_directory(
+    spark, tmp_path, monkeypatch
+):
+    """Spark resolves a relative path against the JVM's working
+    directory; the readers resolve it against this process's first, so
+    a path relative to a changed directory still opens."""
+    (tmp_path / "d2").mkdir()
+    (tmp_path / "d2" / "a.jsonl").write_text(
+        '{"id": "1", "text": "fine content"}\n{"id": "2", "text": ""}\n',
+        encoding="utf-8",
+    )
+    (tmp_path / "d2" / "b.csv").write_text(
+        "id,text\n3,also fine\n", encoding="utf-8"
+    )
+    monkeypatch.chdir(tmp_path)
+    out = SRC.check_files(spark, ["d2/a.jsonl", "d2/b.csv"])
+    assert sorted(out["file_results"]) == ["d2/a.jsonl", "d2/b.csv"]
+    assert out["total_samples"] == 3
+    assert out["file_results"]["d2/a.jsonl"]["failed_samples"] == 1
+    df, _ = SRC.load_data(spark, "d2/a.jsonl")
+    assert df.count() == 2
+    df, _ = SRC.load_data(spark, "d2/b.csv")
+    assert df.count() == 1
+
+
 def test_check_directory_corrupt_accounting(spark, tmp_path):
     (tmp_path / "good.jsonl").write_text(
         '{"id": "1", "text": "fine content"}\n', encoding="utf-8"

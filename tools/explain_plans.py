@@ -166,13 +166,11 @@ def main():
         ],
     )
 
-    # 5. distribution agg: one scan, partial+final
-    from datacheck_spark import stats as S  # noqa: F401
-    agg_df = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("l_quantity"), F.max("l_quantity"), F.avg("l_quantity"),
-        F.approx_count_distinct("l_partkey"),
-    )
+    # 5. distribution agg: the profile aggregation compute_distribution
+    # runs, one scan, partial+final
+    from datacheck_spark import stats as S
+
+    agg_df = S.profile_frame(li, S.distribution_aggs(li))
     add(
         "single-pass distribution agg (lineitem)",
         agg_df,
@@ -505,11 +503,12 @@ def main():
     # 12. rule-suggestion profile: every per-column stat, HLL distinct
     # counts included, rides ONE full-scan aggregation (partial+final),
     # not one job per column.
-    from datacheck_spark.suggest import profile_agg_frame
+    from datacheck_spark.suggest import _profile_aggs
 
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
     add(
         "rule-suggestion profile agg (events, HLL distinct counts)",
-        profile_agg_frame(spark.read.parquet(f"{sf_dir}/events.parquet")),
+        S.profile_frame(events, _profile_aggs(events)),
         [
             ("partial+final combine", lambda p: "partial_" in p),
             ("one scan", lambda p: p.count("Scan parquet") <= 2),
