@@ -191,9 +191,24 @@ def char_ngrams(col: Column, n: int = 3) -> Column:
     Mirrors ``compute_ngrams`` (``text_rules.py:11-16``): lower+strip;
     shorter-than-n text yields the whole text (or empty array for "").
     """
+    return _grams(_normalized(col), n)
+
+
+def _normalized(col: Column) -> Column:
+    """The text n-grams are cut from: ``col.strip().lower()``."""
     from datacheck_spark.rules.text import py_strip
 
-    t = F.lower(py_strip(col))
+    return F.lower(py_strip(col))
+
+
+def _grams(t: Column, n: int) -> Column:
+    """:func:`char_ngrams` of an already :func:`_normalized` column.
+
+    The expression is CodegenFallback (``transform``), and interpreted
+    eval has no common-subexpression elimination: every branch below
+    re-evaluates ``t``. Callers over many rows therefore project
+    ``_normalized`` into a column of its own first, so the strip regex
+    runs once per row, not once per reference."""
     ln = F.length(t)
 
     # Fast path: overlapping n-grams in ONE regex walk (zero-width
@@ -285,8 +300,8 @@ def near_duplicate_pairs_exact(
     )  # join of string fields, checker.py:454
     base = df.select(
         F.col(id_col).cast("string").alias("__id"),
-        char_ngrams(text, ngram_n).alias("__g"),
-    )
+        _normalized(text).alias("__t"),
+    ).select("__id", _grams(F.col("__t"), ngram_n).alias("__g"))
     # non-equi self-join ⇒ nested-loop with one side broadcast. The
     # input is small (≤ the 5000-row reference cap) so it lands in 1-2
     # partitions and the O(n²) pair evaluation would run on one core;
@@ -361,15 +376,22 @@ def _gram_hashes(
     preserved (distinct grams → distinct hashes; a 64-bit collision
     inside a few-hundred-gram set is ~1e-15), so the signatures and the
     exact Jaccard verify both work on long arrays, which
-    ``array_intersect`` compares without per-element string hashing."""
+    ``array_intersect`` compares without per-element string hashing.
+
+    A row has no gram iff its text is all whitespace, which the filter
+    tests on the raw text with no regex; the text is normalized once,
+    in a Project of its own below the gram step (see :func:`_grams`)."""
+    from datacheck_spark.rules.text import py_blank
+
     text = F.concat_ws(" ", *[F.col(c) for c in text_cols])
+    grams = _grams(F.col("__t"), ngram_n)
     return (
-        df.select(
+        df.where(~py_blank(text))
+        .select(
             F.col(id_col).cast("string").alias("__id"),
-            char_ngrams(text, ngram_n).alias("__g"),
+            _normalized(text).alias("__t"),
         )
-        .where(F.size("__g") > 0)
-        .select("__id", F.transform("__g", lambda g: F.xxhash64(g)).alias("__gh"))
+        .select("__id", F.transform(grams, lambda g: F.xxhash64(g)).alias("__gh"))
     )
 
 

@@ -22,10 +22,15 @@ Mechanics (all metadata is manifest-scale, never data-scale):
   the write but before the manifest commit is healed by the re-run
   overwriting the same batch dir (the manifest's ``next_batch`` only
   advances on commit, and readers only read committed batches).
-- Each violation row carries ``(src_file, batch)``; the live view
-  broadcast-semi-joins committed batch output against the manifest's
-  current file set, so a removed (or replaced) file's historical rows
-  vanish from the view without rewriting any parquet.
+- Each violation row carries ``(src_file, batch)``. The live view
+  reads the committed batch dirs with the violation-row schema the
+  manifest records at its first commit (no schema-inference job). In
+  an append-only history, and after a compaction, every committed
+  batch still holds all the files it was written with, so the view is
+  that read alone. Once a file is removed or replaced, the view
+  broadcast-semi-joins the batch output against the manifest's
+  current file set, so that file's historical rows vanish from the
+  view without rewriting any parquet.
 - :meth:`IncrementalValidator.compact` folds all live rows into one
   batch when the batch-dir count grows (the classic small-files
   cleanup), preserving the live view exactly.
@@ -52,13 +57,14 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections import Counter
 from pathlib import Path
 from typing import Any, Dict, List, Optional, Tuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from datacheck_spark.engine import HAS_ERROR, RULE_PREFIX
 from datacheck_spark.sources import key_to_path, uri_key, uri_key_col
@@ -148,6 +154,7 @@ class IncrementalValidator:
             data = json.loads(p.read_text(encoding="utf-8"))
             if data.get("rule_version") == self.rule_version:
                 return data
+        # a fresh manifest has no "schema": the first commit records it
         return {
             "rule_version": self.rule_version,
             "next_batch": 0,
@@ -196,7 +203,11 @@ class IncrementalValidator:
         for i in range(0, len(new), FILE_GROUP_SIZE):
             group = new[i : i + FILE_GROUP_SIZE]
             batch = int(state["next_batch"])
-            per_file = self._validate_group(spark, group, batch)
+            per_file, schema = self._validate_group(spark, group, batch)
+            # batch dirs read back all-nullable, as the reader would infer
+            state.setdefault("schema", StructType(
+                [StructField(f.name, f.dataType) for f in schema]
+            ).toDDL())
             for p in group:
                 per_file[p].update(current[p])  # size + mtime fingerprint
                 per_file[p]["batch"] = batch
@@ -222,12 +233,13 @@ class IncrementalValidator:
 
     def _validate_group(
         self, spark: SparkSession, paths: List[str], batch: int
-    ) -> Dict[str, Dict[str, Any]]:
+    ) -> Tuple[Dict[str, Dict[str, Any]], StructType]:
         """Validate one group of files into its batch dir in ONE Spark
         job, the write (after the group's schema read); returns per-file
-        {rows, violations, error_rows}, observed on that write:
-        ``error_rows`` counts the rows failing an ERROR-severity rule,
-        the unit of the report's ``failed_turns``."""
+        {rows, violations, error_rows}, observed on that write, and the
+        schema of the violation rows written: ``error_rows`` counts the
+        rows failing an ERROR-severity rule, the unit of the report's
+        ``failed_turns``."""
         frame, observed = self._group_frame(spark, paths, batch)
         # overwrite heals a previous killed run's uncommitted batch dir
         frame.write.mode("overwrite").parquet(self._batch_dir(batch))
@@ -242,7 +254,7 @@ class IncrementalValidator:
             c["rows"] += n
             c["violations"] += failed * n
             c["error_rows"] += has_error * n
-        return out
+        return out, frame.schema
 
     def _group_frame(
         self, spark: SparkSession, paths: List[str], batch: int
@@ -291,12 +303,18 @@ class IncrementalValidator:
     # --- live view ------------------------------------------------------
 
     def live_violations(self, spark: SparkSession) -> DataFrame:
-        """All committed violation rows filtered to the CURRENT file
-        set: a broadcast semi-join on (src_file, batch) — replaced or
-        removed files' historical rows drop out without any rewrite.
-        The driver-built frames here come from Arrow, so they plan as a
-        ``LocalRelation``; a list would plan a Python-RDD scan, which
-        starts its own Python worker pool next to the Arrow-UDF one."""
+        """All committed violation rows of the CURRENT file set.
+
+        The batch dirs are read with the manifest's recorded schema
+        (a manifest without one infers it, one more job). While every
+        committed batch still holds all the files it was written with
+        (append-only history, or a compacted store) that read is the
+        view. Otherwise a broadcast semi-join on (src_file, batch)
+        drops the rows of removed and replaced files without any
+        rewrite. The driver-built frames here come from Arrow, so they
+        plan as a ``LocalRelation``; a list would plan a Python-RDD
+        scan, which starts its own Python worker pool next to the
+        Arrow-UDF one."""
         state = self.load_state()
         dirs = [
             self._batch_dir(int(b))
@@ -314,8 +332,16 @@ class IncrementalValidator:
                 c: pa.array([], pa.int32() if c == "batch" else pa.string())
                 for c in cols
             }))
-        out = spark.read.parquet(*dirs)
+        reader = spark.read
+        if "schema" in state:
+            reader = reader.schema(state["schema"])
+        out = reader.parquet(*dirs)
         files = state["files"]
+        live_per_batch = Counter(str(m["batch"]) for m in files.values())
+        if all(
+            m["files"] == live_per_batch[b] for b, m in state["batches"].items()
+        ):
+            return out.select(*cols)
         live = spark.createDataFrame(
             pa.table({
                 "src_file": pa.array(list(files) or [""], pa.string()),

@@ -731,15 +731,16 @@ class TranscriptCheckReport:
 
 
 class TranscriptChecker:
-    """End-to-end transcript validation: ONE cached scan feeding
+    """End-to-end transcript validation over an uncached columnar source:
     (a) the fused rule projection + summary agg,
     (b) uniqueness on (conv_id, turn_idx),
     (c) the orphan-tool check, a conditional sum over the tool
         vocabulary folded into (a),
     (d) text-length anomaly detection.
 
-    This is the job shape the north rule prescribes; each consumer is a
-    single shuffle (or none).
+    Only (a) reads the rule columns, so Catalyst prunes the rule pass
+    from (b) and (d): each scans just its own columns, and no cache
+    build job runs. Each consumer is a single shuffle (or none).
     """
 
     # the turn key: violation rows, duplicate keys and the incremental
@@ -776,69 +777,62 @@ class TranscriptChecker:
         from datacheck_spark import dedup as D
 
         rules = self.engine.compile(df)
-        annotated = self.engine.annotate(df, rules=rules)
-        # after the fused pass only the text LENGTH is consumed (anomaly)
-        # — dropping the text payload shrinks the persisted frame ~4×
-        annotated = (
-            annotated.withColumn(
-                "__text_len", F.length("text").cast("double")
-            )
-            .drop("text")
-            .persist()
+        # no cache: only the summary reads the rule columns, so the
+        # duplicate-key and anomaly passes plan their own pruned scans
+        # of (conv_id, turn_idx) and (text, turn_idx)
+        annotated = self.engine.annotate(df, rules=rules).withColumn(
+            "__text_len", F.length("text").cast("double")
         )
-        try:
-            # the orphan-tool check broadcasts a tiny vocabulary, so it
-            # folds into the SAME summary aggregation as a conditional
-            # sum — no separate join job
-            orphan_expr = F.sum(
-                (
-                    F.col("tool").isNotNull()
-                    & ~F.col("tool").isin(self.tool_vocab)
-                ).cast("long")
-            )
-            base = self.engine.summarize(
-                annotated,
-                rules,
-                id_col=None,
-                collect_failed_ids=False,
-                extra_aggs={"orphan_tools": orphan_expr},
-            )
-            report = TranscriptCheckReport(
-                total_turns=base.total_samples,
-                passed_turns=base.passed_samples,
-                failed_turns=base.failed_samples,
-                pass_rate=base.pass_rate,
-                error_count=base.error_count,
-                warning_count=base.warning_count,
-                rule_results=base.rule_results,
-                orphan_tools=int(base.extras.get("orphan_tools") or 0),
-            )
-            if base.total_samples == 0:
-                return report
-
-            report.duplicate_keys = (
-                D.duplicate_key_rows(annotated, list(self.key_cols))
-                .agg(F.sum("dup_count"))
-                .collect()[0][0]
-                or 0
-            )
-
-            if detect_anomalies:
-                raw = A.detect_anomalies(
-                    annotated,
-                    cols=["__text_len", "turn_idx"],
-                    total=base.total_samples,
-                )
-                # present the precomputed length under the reference's
-                # field key / field_type (anomaly.py:130-132)
-                if "__text_len" in raw:
-                    entry = raw.pop("__text_len")
-                    entry["field_type"] = "length"
-                    raw["text (长度)"] = entry
-                report.anomalies = raw
-                report.anomaly_count = sum(
-                    a["outlier_count"] for a in report.anomalies.values()
-                )
+        # the orphan-tool check broadcasts a tiny vocabulary, so it
+        # folds into the SAME summary aggregation as a conditional
+        # sum — no separate join job
+        orphan_expr = F.sum(
+            (
+                F.col("tool").isNotNull()
+                & ~F.col("tool").isin(self.tool_vocab)
+            ).cast("long")
+        )
+        base = self.engine.summarize(
+            annotated,
+            rules,
+            id_col=None,
+            collect_failed_ids=False,
+            extra_aggs={"orphan_tools": orphan_expr},
+        )
+        report = TranscriptCheckReport(
+            total_turns=base.total_samples,
+            passed_turns=base.passed_samples,
+            failed_turns=base.failed_samples,
+            pass_rate=base.pass_rate,
+            error_count=base.error_count,
+            warning_count=base.warning_count,
+            rule_results=base.rule_results,
+            orphan_tools=int(base.extras.get("orphan_tools") or 0),
+        )
+        if base.total_samples == 0:
             return report
-        finally:
-            annotated.unpersist()
+
+        report.duplicate_keys = (
+            D.duplicate_key_rows(annotated, list(self.key_cols))
+            .agg(F.sum("dup_count"))
+            .collect()[0][0]
+            or 0
+        )
+
+        if detect_anomalies:
+            raw = A.detect_anomalies(
+                annotated,
+                cols=["__text_len", "turn_idx"],
+                total=base.total_samples,
+            )
+            # present the precomputed length under the reference's
+            # field key / field_type (anomaly.py:130-132)
+            if "__text_len" in raw:
+                entry = raw.pop("__text_len")
+                entry["field_type"] = "length"
+                raw["text (长度)"] = entry
+            report.anomalies = raw
+            report.anomaly_count = sum(
+                a["outlier_count"] for a in report.anomalies.values()
+            )
+        return report

@@ -423,7 +423,7 @@ def test_many_file_table_bounded_groups(
 
 def test_local_frames_are_local_relations(spark, tmp_path, table, checker):
     """The small driver-built frames (the live view before any commit,
-    the live-file frame of the live view, a small
+    the live-file frame of the live view after a file removal, a small
     ``connected_components`` result) are Arrow-built
     ``LocalRelation``s, not Python-RDD ``LogicalRDD``s: evaluating one
     of those starts a second Python worker pool."""
@@ -433,6 +433,8 @@ def test_local_frames_are_local_relations(spark, tmp_path, table, checker):
     empty = iv.live_violations(spark)  # nothing committed yet
     assert empty.count() == 0
     assert dict(empty.dtypes)["batch"] == "int"
+    iv.run(spark, str(table))
+    os.remove(key_to_path(sorted(list_data_files(spark, str(table)))[0]))
     iv.run(spark, str(table))
     pairs = spark.read.parquet(str(table)).select(
         F.col("conv_id").alias("id_a"), F.col("conv_id").alias("id_b")
@@ -472,6 +474,18 @@ def test_error_rows_count_failing_rows(spark, tmp_path, checker):
     assert m["violations"] == iv.live_violations(spark).count()
 
 
+def _jobs_of(spark, group, action):
+    """``action()`` and the ids of the Spark jobs it ran, counted by a
+    job group of its own (``group`` must be unique in the session)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_group_is_one_write_job(spark, tmp_path, table, checker):
     """One file group runs at most 2 Spark jobs, its schema read and
     the write of its violation rows, and every file of the group gets
@@ -486,13 +500,10 @@ def test_group_is_one_write_job(spark, tmp_path, table, checker):
     _write(clean, table / "clean", n_files=1)
     paths = sorted(list_data_files(spark, str(table)))
     iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
-    sc = spark.sparkContext
-    sc.setJobGroup("incremental-group-guard", "one file group")
-    try:
-        counts = iv._validate_group(spark, paths, 0)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("incremental-group-guard")
+    (counts, _), jobs = _jobs_of(
+        spark, "incremental-group-guard",
+        lambda: iv._validate_group(spark, paths, 0),
+    )
     assert 1 <= len(jobs) <= 2, jobs
     assert set(counts) == set(paths)
     for p in paths:
@@ -505,3 +516,110 @@ def test_group_is_one_write_job(spark, tmp_path, table, checker):
     assert sum(m["violations"] for m in counts.values()) == (
         spark.read.parquet(iv._batch_dir(0)).count()
     )
+
+
+def _append(spark, table, seed):
+    extra = generate_transcripts(
+        spark, n_convs=10, turns_per_conv=6, seed=seed
+    ).withColumn("conv_id", F.concat(F.lit(f"a{seed}_"), F.col("conv_id")))
+    _write(extra, table, n_files=1)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_append_only_view_is_one_read(
+    spark, tmp_path, table, checker, monkeypatch
+):
+    """In an append-only history every committed batch holds all its
+    files: the live view is the read of the batch dirs alone, with the
+    manifest's schema, so building it runs no schema-inference job and
+    its plan has no join (no broadcast) and no live-file frame."""
+    monkeypatch.setattr(incremental, "FILE_GROUP_SIZE", 2)
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
+    iv.run(spark, str(table))  # 2 batches
+    _append(spark, table, seed=41)
+    iv.run(spark, str(table))  # a third
+    assert len(iv.load_state()["batches"]) == 3
+    view, jobs = _jobs_of(
+        spark, "live-view-build", lambda: iv.live_violations(spark)
+    )
+    assert jobs == []
+    plan = _plan(view)
+    assert "Join" not in plan and "LocalRelation" not in plan, plan
+    assert view.count() == iv.summary()["violations"]
+    executed = view._jdf.queryExecution().executedPlan().toString()
+    assert "Broadcast" not in executed, executed
+    full = checker.violations(spark.read.parquet(str(table)))
+    assert _vset(view) == _vset(full)
+
+
+@pytest.mark.parametrize("change", ["removed", "replaced"])
+def test_superseded_file_brings_back_semi_join(
+    spark, tmp_path, table, checker, change
+):
+    """A removed or an in-place replaced file leaves its batch short of
+    the files it was written with: the view semi-joins the live-file
+    set again, and equals a from-scratch run. A compaction folds the
+    live rows into one whole batch, so the join goes again."""
+    import shutil
+
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
+    iv.run(spark, str(table))
+    victim = key_to_path(sorted(list_data_files(spark, str(table)))[0])
+    if change == "removed":
+        os.remove(victim)
+    else:
+        other = tmp_path / "other"
+        _append(spark, other, seed=43)
+        shutil.copyfile(next(other.glob("*.parquet")), victim)
+        # the writer's checksum sidecar no longer matches the bytes
+        crc = Path(victim).with_name(f".{Path(victim).name}.crc")
+        crc.unlink(missing_ok=True)
+    out = iv.run(spark, str(table))
+    assert out[f"{change}_files"] == 1
+    view = iv.live_violations(spark)
+    assert "LeftSemi" in _plan(view)
+    full = checker.violations(spark.read.parquet(str(table)))
+    assert _vset(view) == _vset(full)
+    iv.compact(spark)
+    compacted = iv.live_violations(spark)
+    assert "Join" not in _plan(compacted)
+    assert _vset(compacted) == _vset(full)
+
+
+def test_manifest_without_schema_infers_it(spark, tmp_path, table, checker):
+    """The first commit records the violation-row schema as a DDL
+    string; a manifest without it (written before it was recorded)
+    infers the schema from the batch dirs and reads the same rows."""
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
+    iv.run(spark, str(table))
+    state = iv.load_state()
+    assert state["schema"] == (
+        "conv_id STRING,turn_idx INT,src_file STRING,rule_id STRING,"
+        "rule_name STRING,severity STRING,observed STRING,batch INT"
+    )
+    stored = iv.live_violations(spark)
+    del state["schema"]
+    iv._save_state(state)
+    inferred, jobs = _jobs_of(
+        spark, "live-view-infer", lambda: iv.live_violations(spark)
+    )
+    assert jobs  # the schema-inference job
+    assert inferred.schema == stored.schema
+    assert sorted(inferred.collect()) == sorted(stored.collect())
+
+
+def test_rule_version_bump_clears_schema(spark, tmp_path, table, checker):
+    """A rule_version bump starts a fresh manifest: the stored schema
+    goes with the old batches, and the new first commit records it."""
+    iv = IncrementalValidator(str(tmp_path / "ckpt"), checker=checker)
+    iv.run(spark, str(table))
+    schema = iv.load_state()["schema"]
+    iv2 = IncrementalValidator(
+        str(tmp_path / "ckpt"), rule_version="v2", checker=checker
+    )
+    assert "schema" not in iv2.load_state()
+    iv2.run(spark, str(table))
+    assert iv2.load_state()["schema"] == schema

@@ -157,6 +157,34 @@ def test_run_anomalies_match_detect_anomalies(spark):
     assert report.anomaly_count == 1
 
 
+def test_run_caches_nothing(spark):
+    """``run`` persists no frame (its duplicate-key and anomaly passes
+    scan their own columns of the source), so it leaves the context's
+    persistent RDDs as it found them; the report on the committed
+    contract fixture is the one the cached verdict gave."""
+    from datacheck_spark.contract import transcripts_table
+
+    df = transcripts_table(spark)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    report = TranscriptChecker().run(df)
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert after == before
+    assert (
+        report.total_turns, report.passed_turns, report.failed_turns,
+        report.error_count, report.warning_count,
+    ) == (4037, 3992, 45, 45, 98)
+    assert {r: v["failed"] for r, v in report.rule_results.items()} == {
+        "key_present": 0, "turn_idx_nonneg": 0, "role_valid": 6,
+        "text_non_empty": 39, "text_length_bounds": 0, "pii_detection": 43,
+        "garbled_text": 21, "repetitive_text": 34,
+    }
+    assert (report.duplicate_keys, report.orphan_tools) == (36, 12)
+    assert report.anomaly_count == 155
+    assert report.anomalies["text (长度)"]["bounds"] == {
+        "lower": 58.5, "upper": 78.5,
+    }
+
+
 def test_contract_fixture_matches_generator(spark):
     """The committed contract fixture parquet must equal a fresh
     generate_transcripts run (the DuckDB oracles read the file; this

@@ -242,6 +242,32 @@ def main():
         ],
     )
 
+    # 6c. the store's live view in an append-only history: every
+    # committed batch holds all its files, so the view is one read of
+    # the batch dirs with the manifest's schema, with no semi-join
+    # against a driver-built live-file frame
+    import shutil
+
+    def _one_read(p: str) -> bool:
+        return (
+            len(_re.findall(r"\(\d+\) Scan parquet", p)) == 1
+            and "Join" not in p
+            and "LocalRelation" not in p
+            and "LocalTableScan" not in p
+        )
+
+    store_dir = tempfile.mkdtemp(prefix="live_view_")
+    try:
+        live_store = IncrementalValidator(store_dir)
+        live_store.run(spark, str(tr_path))
+        add(
+            "violation store live view (append-only)",
+            live_store.live_violations(spark),
+            [("one parquet scan, no join, no local relation", _one_read)],
+        )
+    finally:
+        shutil.rmtree(store_dir, ignore_errors=True)
+
     # 7. k-means IVF: cell-keyed broadcast join, no cartesian product
     from datacheck_spark.similarity import ivf_topk
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

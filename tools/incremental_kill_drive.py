@@ -64,8 +64,10 @@ print(
     "child rc:", r.returncode,
     "| committed batches at kill:", sorted(manifest["batches"]),
     "| orphan batch=1 dir on disk:", orphan,
+    "| violation schema recorded:", "schema" in manifest,
 )
 assert r.returncode == 137 and sorted(manifest["batches"]) == ["0"] and orphan
+assert "schema" in manifest  # the live view below reads with it
 
 from pyspark.sql import functions as F  # noqa: E402
 
